@@ -21,8 +21,32 @@ import org.apache.spark.sql.SparkSession
   *    We read it as BIGINT nanoseconds and convert explicitly at use sites
   *    (see SURVEY.md §1.3, §7.4.3) — cheaper than a timestamp decode and
   *    keeps the vectorized reader on the fast path.
+  *  - Codegen cache: Spark keeps generated classes in one JVM-wide cache,
+  *    bounded by the static conf `spark.sql.codegen.cache.maxEntries`
+  *    (Spark's default 100) and sized once, at `CodeGenerator`'s first
+  *    use. A query that hits the cache skips janino and runs classes the
+  *    JIT has already compiled. See [[CodegenCacheEntries]].
   */
 object Engine {
+
+  /** Bound of Spark's JVM-wide generated-class cache, set by [[configure]].
+    *
+    * Basis: the cache keys each generated class by its class loader, so a
+    * class compiled on the driver and loaded again by the tasks takes two
+    * entries. The SQL dashboard path (the `dashboard` workload in
+    * `perfbench/`: ten query kinds with varying literals, seed 11) holds
+    * 134 entries after its first pass and 174 after ten passes, so under
+    * Spark's default of 100 it evicts and recompiles on most queries. 512
+    * holds that working set about three times over: the cache is four LRU
+    * segments of a quarter of the bound each, and the headroom keeps
+    * every segment clear of eviction. One entry retains ~32-36 KiB of
+    * heap (measured by invalidating a full cache and collecting), so a
+    * full cache costs ~18 MiB.
+    *
+    * A caller overrides it by setting the same Spark conf on the builder
+    * after [[configure]]; it takes effect only if no query has generated
+    * code yet in this JVM. */
+  val CodegenCacheEntries: Int = 512
 
   /** Apply the engine's required configs to an arbitrary builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
@@ -55,6 +79,7 @@ object Engine {
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Standalone session for tests / interactive use. */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {

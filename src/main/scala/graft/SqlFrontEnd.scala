@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.matching.Regex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL string front-end over the engine's tables — the packaging of the
@@ -7,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * graphs run SQL against the provisioned file view
   * (`copy_from_template.py:14-16, 343-356`). The reference binds the
   * query's table reference via `entityMap = {"source_table": view_id}`;
-  * here the binding is temp-view registration of every dataset under its
+  * here the binding is temp-view registration of a dataset under its
   * bare table name, and execution is Spark's own SQL front-end —
   * SURVEY §3.4's "no SQL parser of our own" stands: parse, analysis,
   * optimization and execution are all Catalyst, so a SQL dashboard query
@@ -39,22 +40,35 @@ object SqlFrontEnd {
       case "embeddings" => Tables.embeddings(spark, dir)
     }
 
-  /** Bind all tables for `dir` as temp views, run `sql`, then DROP the
-    * views: the binding is scoped to the call. The per-call rebinding
-    * mirrors the reference's per-study entityMap substitution (the same
-    * query text targets whichever dataset directory is passed); dropping
-    * afterwards keeps bare names like `lineitem` from silently resolving
-    * to a stale directory in later, unrelated `spark.sql` text in the
-    * same session (a wrong-data trap in multi-SF runs). `spark.sql`
-    * analyzes eagerly, so the returned DataFrame stays valid after the
-    * drop. */
+  /** A table name as an identifier token: case-insensitive, with no
+    * identifier character (`[A-Za-z0-9_]`) on either side. */
+  private val tokens: Seq[(String, Regex)] = tableNames.map(n =>
+    n -> s"(?i)(?<![A-Za-z0-9_])$n(?![A-Za-z0-9_])".r)
+
+  /** The tables whose names occur in `sql` as identifier tokens. The scan
+    * over-approximates: a name inside a string literal or a comment is
+    * bound needlessly, but a referenced table — in a CTE, a subquery,
+    * backticks, any case — is never missed. */
+  private[graft] def referencedTables(sql: String): Seq[String] =
+    tokens.collect { case (n, re) if re.findFirstIn(sql).isDefined => n }
+
+  /** Bind the [[referencedTables]] of `sql` for `dir` as temp views, run
+    * `sql`, then DROP every [[tableNames]] view: the binding is scoped to
+    * the call. The per-call rebinding mirrors the reference's per-study
+    * entityMap substitution (the same query text targets whichever
+    * dataset directory is passed), and `dir` needs only the tables the
+    * text names. Dropping afterwards keeps bare names like `lineitem` from
+    * silently resolving to a stale directory in later, unrelated
+    * `spark.sql` text in the same session (a wrong-data trap in multi-SF
+    * runs). `spark.sql` analyzes eagerly, so the returned DataFrame stays
+    * valid after the drop. */
   def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
     // registration INSIDE the try: table loads are eager (path
     // resolution, the events footer sniff), so a failure partway must
     // still drop the views already bound — or they'd silently serve this
     // dir's data to later unrelated spark.sql text
     try {
-      tableNames.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+      referencedTables(sql).foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
       spark.sql(sql)
     } finally tableNames.foreach(spark.catalog.dropTempView(_))
   }

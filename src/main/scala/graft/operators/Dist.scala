@@ -50,7 +50,7 @@ object Dist {
     * sort-based aggregate keyed on `cols` consumes the checkpoint with
     * neither an exchange nor a sort — the bucketed-sorted-table shape,
     * paid once at the cut instead of once per consuming round. */
-  def byKeysCutVia(df: DataFrame, pre: DataFrame => DataFrame,
+  private[graft] def byKeysCutVia(df: DataFrame, pre: DataFrame => DataFrame,
       cols: String*): DataFrame =
     org.apache.spark.sql.graftbridge.DatasetBridge.declareHashPartitioning(
       Checkpointing.cut(pre(

@@ -32,6 +32,18 @@ object TextKernels {
   @inline private def isWs(b: Byte): Boolean =
     b == 0x20 || (b >= 0x09 && b <= 0x0D)
 
+  /** Largest key count [[tableCapacity]] accepts: its 2^30-slot table is
+    * the largest power-of-two size an `Int` holds. */
+  private[graft] final val MaxTableKeys = 1 << 29
+
+  /** Slots of an open-addressing table for `n` keys at load factor
+    * <= 0.5: the smallest power of two >= max(4, 2n). */
+  private[graft] def tableCapacity(n: Int): Int = {
+    require(n >= 0 && n <= MaxTableKeys,
+      s"open-addressing table for $n keys exceeds the $MaxTableKeys-key bound")
+    if (n <= 2) 4 else Integer.highestOneBit(2 * n - 1) << 1
+  }
+
   /** Token byte spans matching `split(str, "\\s+")` (limit -1) semantics:
     * maximal non-whitespace runs, plus an empty leading token when the
     * string starts with whitespace, an empty trailing token when it ends
@@ -272,9 +284,8 @@ object TextKernels {
       ti += 1; t += 2
     }
     val nG = nTok - n + 1
-    // open-addressing table at load factor <= 0.5; cnt == 0 marks empty
-    var cap = 4
-    while (cap < nG * 2) cap <<= 1
+    // cnt == 0 marks an empty slot
+    val cap = tableCapacity(nG)
     val mask = cap - 1
     val hkey = new Array[Long](cap)
     val hoff = new Array[Int](cap)
@@ -328,9 +339,8 @@ object TextKernels {
     var i = 0
     while (i < nBytes) { if ((b(i) & 0xC0) != 0x80) nCp += 1; i += 1 }
     val maxG = math.max(1, nCp - 2)
-    // open-addressing table at load factor <= 0.5; cnt == 0 marks empty
-    var cap = 4
-    while (cap < maxG * 2) cap <<= 1
+    // cnt == 0 marks an empty slot
+    val cap = tableCapacity(maxG)
     val mask = cap - 1
     val hkey = new Array[Long](cap)
     val hoff = new Array[Int](cap)

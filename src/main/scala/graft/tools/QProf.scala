@@ -3,15 +3,19 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import graft.{Engine, SparkEntry}
 
-/** Per-query fixed-cost profiler (round 16, VERDICT r15 asks #1/#3):
+/** Per-query fixed-cost profiler:
   * for each named query, reports — per repetition — the Spark JOB and
   * STAGE count, the dataframe-CONSTRUCTION time (which includes every
   * eager action the query builder runs: localCheckpoints, observes,
-  * collects) and the final noop-sink ACTION time, so a row's cost can
-  * be split into driver-blocking action train vs plan execution.
+  * collects), the final noop-sink ACTION time, and the janino compile
+  * count and time, so a row's cost can be split into driver-blocking
+  * action train vs plan execution vs code generation.
   *
   * Usage: runMain graft.tools.QProf <query> [query...] [--reps=N]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
@@ -41,21 +45,13 @@ object QProf {
         tasks.addAndGet(s.stageInfo.numTasks)
       }
     })
-    // whole-stage-codegen compile time (ms) accumulated by janino since
-    // session start — the Dropwizard histogram's count×mean tracks the
-    // total closely at this event volume, which is all the attribution
-    // needs (first-run vs re-run delta per query)
-    def codegenMs(): Double = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-      h.getCount * h.getSnapshot.getMean
-    }
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       for (rep <- 1 to reps) {
         spark.catalog.clearCache()
         if (spark.sparkContext.getPersistentRDDs.nonEmpty) System.gc()
         val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
-        val cg0 = codegenMs()
+        val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -66,15 +62,16 @@ object QProf {
         val tp = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t2 = System.nanoTime()
-        // listener events are async — give the bus a beat before reading
-        Thread.sleep(300)
+        // listener events are async: read the counters once all posted
+        // events have been delivered
+        ListenerBusBridge.drain(spark.sparkContext)
         val (j2, s2, k2) = (jobs.get, stages.get, tasks.get)
-        val cg1 = codegenMs()
+        val (c1, ns1) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         println(f"[qprof] $name%-28s rep=$rep " +
           f"cons=${(t1 - t0) / 1e9}%7.3f s (jobs=${j1 - j0}%3d stages=${s1 - s0}%3d tasks=${k1 - k0}%5d)  " +
           f"plan=${(tp - t1) / 1e9}%6.3f s  " +
           f"act=${(t2 - tp) / 1e9}%7.3f s (jobs=${j2 - j1}%3d stages=${s2 - s1}%3d tasks=${k2 - k1}%5d)  " +
-          f"codegen=${(cg1 - cg0) / 1e3}%6.3f s  total=${(t2 - t0) / 1e9}%7.3f s")
+          f"janino=${(ns1 - ns0) / 1e6}%7.1f ms (compiles=${c1 - c0}%3d)  total=${(t2 - t0) / 1e9}%7.3f s")
       }
     }
     spark.stop()

@@ -32,8 +32,9 @@ object DatasetBridge {
     * exchange's), and preserved by any narrow (non-shuffling) ops in
     * between. Declaring a partitioning the rows do not satisfy yields
     * silently wrong joins — keep this next to the shuffle that made it
-    * true. Session, origin stats and constraints are carried over
-    * unchanged (stats feed broadcast planning). */
+    * true. Each key must name exactly one output column; a missing or
+    * duplicated name fails. Session, origin stats and constraints are
+    * carried over unchanged (stats feed broadcast planning). */
   def declareHashPartitioning(df: DataFrame, keys: Seq[String],
       sortedWithin: Boolean = false): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, ExpressionSet, SortOrder}
@@ -42,9 +43,14 @@ object DatasetBridge {
     import org.apache.spark.sql.execution.LogicalRDD
     df.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val attrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
-          throw new IllegalArgumentException(
-            s"declareHashPartitioning: no column '$k' in ${lr.output.map(_.name)}")))
+        val attrs = keys.map { k =>
+          lr.output.filter(_.name == k) match {
+            case Seq(a) => a
+            case found => throw new IllegalArgumentException(
+              s"declareHashPartitioning: key '$k' matches ${found.size} columns " +
+                s"(need exactly one) in ${lr.output.map(_.name)}")
+          }
+        }
         val part = HashPartitioning(attrs, lr.rdd.getNumPartitions)
         // `sortedWithin` additionally declares ascending-nulls-first
         // within-partition ordering on `keys` — valid ONLY when the rows

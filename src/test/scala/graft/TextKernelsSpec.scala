@@ -228,4 +228,16 @@ class TextKernelsSpec extends SparkTestBase {
       TextExpressions.levenshteinWithin(col("ta"), col("tb"), 5),
       levenshtein(col("ta"), col("tb"), 5))
   }
+
+  test("tableCapacity: smallest power of two >= max(4, 2n), bounded below Int overflow") {
+    import graft.plans.TextKernels.{MaxTableKeys, tableCapacity}
+    def reference(n: Int): Long = { var c = 4L; while (c < 2L * n) c <<= 1; c }
+    (0 to 5000).foreach(n => assert(tableCapacity(n).toLong == reference(n), s"n=$n"))
+    assert(tableCapacity(MaxTableKeys) == (1 << 30))
+    assert(tableCapacity(MaxTableKeys - 1) == (1 << 30))
+    assert(tableCapacity((1 << 28) + 1) == (1 << 30))
+    Seq(MaxTableKeys + 1, Int.MaxValue, -1).foreach { n =>
+      intercept[IllegalArgumentException](tableCapacity(n))
+    }
+  }
 }
