@@ -52,6 +52,12 @@ object SqlFrontEnd {
   private[graft] def referencedTables(sql: String): Seq[String] =
     tokens.collect { case (n, re) if re.findFirstIn(sql).isDefined => n }
 
+  /** Serializes the bind → analyze → drop window of [[run]]: every call
+    * binds and drops the same view names, so an unserialized call could
+    * drop a view that a concurrent call has bound but not yet analyzed,
+    * or rebind it to another directory. */
+  private val bindLock = new Object
+
   /** Bind the [[referencedTables]] of `sql` for `dir` as temp views, run
     * `sql`, then DROP every [[tableNames]] view: the binding is scoped to
     * the call. The per-call rebinding mirrors the reference's per-study
@@ -61,15 +67,16 @@ object SqlFrontEnd {
     * silently resolving to a stale directory in later, unrelated
     * `spark.sql` text in the same session (a wrong-data trap in multi-SF
     * runs). `spark.sql` analyzes eagerly, so the returned DataFrame stays
-    * valid after the drop. */
+    * valid after the drop. Safe for concurrent calls on one session: the
+    * tables load outside the lock, and binding, analysis and the drop run
+    * under it. */
   def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    // registration INSIDE the try: table loads are eager (path
-    // resolution, the events footer sniff), so a failure partway must
-    // still drop the views already bound — or they'd silently serve this
-    // dir's data to later unrelated spark.sql text
-    try {
-      referencedTables(sql).foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-      spark.sql(sql)
-    } finally tableNames.foreach(spark.catalog.dropTempView(_))
+    val tables = referencedTables(sql).map(n => n -> load(spark, dir, n))
+    bindLock.synchronized {
+      try {
+        tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        spark.sql(sql)
+      } finally tableNames.foreach(spark.catalog.dropTempView(_))
+    }
   }
 }

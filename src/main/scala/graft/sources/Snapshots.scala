@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Manifest-versioned snapshot commits over a plain parquet directory —
@@ -78,12 +78,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: a commit touches only its OWN new files plus one
   * manifest write; `readSnapshot` hands Spark the frozen file list, so
-  * scan planning, pushdown and pruning are the ordinary parquet path.
-  * With no deletes the plan IS that plain scan (fast path); with
-  * deletes it adds one broadcast of the O(files) (path → version) map
-  * and one co-keyed left join against the per-key max delete version —
-  * the read-side cost merge-on-read trades for rewrite-free deletes,
-  * reclaimed by the next REPLACE. Manifests are O(files) text — the
+  * scan planning, pushdown and pruning are the ordinary parquet path,
+  * with read schemas taken from footers on the driver (no inference
+  * job). Deletes add one in-scan predicate that probes executor-cached
+  * key sets of the (broadcast-sized) delete files — no join, no
+  * exchange; that per-row probe is the read-side cost merge-on-read
+  * trades for rewrite-free deletes, reclaimed by the next REPLACE.
+  * Manifests are O(files) text — the
   * 100 TB failure mode (a million small files) is the existing
   * [[FileView.compact]] job's business, which composes: a REPLACE
   * commit whose data is the compacted rewrite.
@@ -990,6 +991,20 @@ object Snapshots {
     }
   }
 
+  /** Equality-delete keys must be of a type both read paths match
+    * exactly ([[graft.sources.v2.SnapshotDeleteSets.PrimitiveDdl]]:
+    * integral INT/BIGINT, floating, BOOLEAN, STRING, DATE, TIMESTAMP,
+    * TIMESTAMP_NTZ). Other types (DECIMAL, SMALLINT, BINARY, nested, …)
+    * fail here, before any file is written. */
+  private def checkDeleteKeyTypes(keys: org.apache.spark.sql.types.StructType,
+      what: String): Unit =
+    keys.fields.foreach { f =>
+      require(graft.sources.v2.SnapshotDeleteSets.PrimitiveDdl.contains(f.dataType.sql),
+        s"$what: delete key '${f.name}' has type ${f.dataType.sql}; equality-delete " +
+          "keys must be INT, BIGINT, FLOAT, DOUBLE, BOOLEAN, STRING, DATE, TIMESTAMP " +
+          "or TIMESTAMP_NTZ")
+    }
+
   /** Row-level DELETE commit (merge-on-read equality deletes): publish
     * `keys` (deduplicated; its columns ARE the equality key) as a
     * delete file. No data file is rewritten — [[readSnapshot]] applies
@@ -997,24 +1012,23 @@ object Snapshots {
     * re-insert of the same key survives (Iceberg v2 semantics). All
     * delete commits against one table must share the key schema. */
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame): Long = {
+    checkDeleteKeyTypes(keys.schema, "commitDelete")
     val delDir = new Path(root, s"deletes/c-$uuid8")
     keys.dropDuplicates().write.mode("overwrite").parquet(delDir.toString)
     val mine = dataFiles(spark, delDir)
     publish(spark, root) { (v, carried) =>
       require(carried.exists(_.kind == "A"), s"cannot delete from an empty table $root")
-      // keys must name current columns AND carry the current TYPES — the
-      // DSv2 in-task delete filter compares key tuples in the current type
-      // domain, and a narrower/wider key file would silently match
-      // nothing. UNTRACKED tables get the same check against the first
-      // data file's footer (round 14, ADVICE r13 medium #1: the natural
-      // Scala-literal shape `Seq(3L).toDF` against an INT column loaded
-      // as Long, matched nothing in the DSv2 path, and silently deleted
-      // nothing — while readSnapshot's join cast and DID delete).
+      // keys must name current columns AND carry the current TYPES — both
+      // read paths compare key tuples in the current type domain, and a
+      // narrower/wider key file would silently match nothing. UNTRACKED
+      // tables get the same check against the first data file's footer
+      // (ADVICE r13 medium #1: the natural Scala-literal shape
+      // `Seq(3L).toDF` against an INT column).
       val curTypes: Map[String, String] = currentSchema(carried) match {
         case Some((_, cur)) => cur.map(c => c.name -> c.typ).toMap
         case None =>
-          spark.read.parquet(carried.find(_.kind == "A").get.path)
-            .schema.fields.map(f => f.name -> f.dataType.sql).toMap
+          ParquetFooters.schema(spark, carried.find(_.kind == "A").get.path)
+            .fields.map(f => f.name -> f.dataType.sql).toMap
       }
       require(keys.columns.forall(curTypes.contains),
         s"delete key columns ${keys.columns.mkString(",")} must be current " +
@@ -1037,6 +1051,8 @@ object Snapshots {
     * file, and a reader either sees the whole merge or none of it. */
   def commitMerge(spark: SparkSession, root: String, updates: DataFrame,
       keyCols: Seq[String]): Long = {
+    checkDeleteKeyTypes(org.apache.spark.sql.types.StructType(
+      keyCols.map(k => updates.schema(k))), "commitMerge")
     val dataDir = new Path(root, s"data/c-$uuid8")
     updates.write.mode("overwrite").parquet(dataDir.toString)
     val delDir = new Path(root, s"deletes/c-$uuid8")
@@ -1120,7 +1136,7 @@ object Snapshots {
     * own commit. Files committed BEFORE this version (sid 0) resolve
     * against exactly this initial binding — which is only sound when
     * every pre-tracking file SHARES one schema, so that is CHECKED
-    * (one merged-footer pass, paid once at init): a table grown through
+    * (one driver-side footer per commit, paid once at init): a table grown through
     * the additive mergeSchema tier must be REPLACE-compacted first, or
     * the early files' missing columns would fail (or silently NULL)
     * under the single binding. Idempotent by failure: a second init
@@ -1130,9 +1146,8 @@ object Snapshots {
       require(carried.forall(_.kind != "S"), s"$root already tracks a schema")
       val data = carried.filter(_.kind == "A")
       require(data.nonEmpty, s"cannot init schema on empty table $root")
-      val one = spark.read.parquet(data.head.path).schema
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(data.map(_.path): _*).schema
+      val one = ParquetFooters.schema(spark, data.head.path)
+      val merged = ParquetFooters.merged(spark, commitRepresentatives(data).map(_._2))
       require(
         merged.fields.map(f => (f.name, f.dataType)).toSet ==
           one.fields.map(f => (f.name, f.dataType)).toSet,
@@ -1212,48 +1227,40 @@ object Snapshots {
       .map(_._2.map(c => (c.id, c.name, c.typ)))
   }
 
-  /** Scheme-and-authority stripper, applied IDENTICALLY to manifest
-    * paths (driver side, [[normPath]]) and to `_metadata.file_path`
-    * values (executor side, [[normPathCol]]): `file:/x`, `file:///x`,
-    * `hdfs://host:9000/x` and `s3a://bucket/x` all normalize to the
-    * bare path. One regex, two bindings — the round-10 form normalized
-    * the two sides DIFFERENTLY (`Path.toUri.getPath` drops the
-    * authority, the old file_path regexp kept it), so on
-    * authority-bearing filesystems the delete path's `__fp` join
-    * matched nothing and a snapshot with deletes silently read empty
-    * (ADVICE r10 #1). Within one table every file shares the root, so
-    * dropping the authority cannot alias two distinct files. */
+  /** Scheme-and-authority stripper for manifest paths: `file:/x`,
+    * `file:///x`, `hdfs://host:9000/x` and `s3a://bucket/x` all
+    * normalize to the bare path. The executor side
+    * ([[graft.plans.DeleteScope.barePath]]) decodes a
+    * `_metadata.file_path` URI to the same bare path. Within one table
+    * every file shares the root, so dropping the authority cannot alias
+    * two distinct files. */
   private[graft] val SchemeAuthorityRe = "^[a-z][a-zA-Z0-9+.-]*:(//[^/]*)?"
 
   private[graft] def normPath(p: String): String =
     p.replaceFirst(SchemeAuthorityRe, "")
 
-  /** [[normPath]] as a Spark expression — Java regex semantics on both
-    * sides (Spark's `regexp_replace` is java.util.regex too), asserted
-    * equal over an authority-bearing URI corpus in SnapshotsSpec. */
-  private[graft] def normPathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(c, SchemeAuthorityRe, "")
-
   /** Read the table AT a version (time travel); defaults to the current
     * version. The returned frame's file list is frozen at call time —
     * concurrent later commits cannot change what it reads. With no
     * delete files this is a PLAIN parquet scan (pushdown/pruning
-    * untouched); with deletes it applies the sequence-scoped equality
-    * anti-filter: keep a row iff no delete with version STRICTLY
-    * GREATER than the row's data-file version matches its key columns
-    * (same-version data survives its own commit's delete — what makes
-    * [[commitMerge]]'s single-commit upsert work).
+    * untouched); with deletes the scan applies the sequence-scoped
+    * equality anti-filter: keep a row iff no delete with version
+    * STRICTLY GREATER than the row's data-file version matches its key
+    * columns (same-version data survives its own commit's delete — what
+    * makes [[commitMerge]]'s single-commit upsert work). Deletes apply
+    * inside the scan through the key sets the DSv2 reader shares, and
+    * every schema comes from driver-side footers, so building the frame
+    * starts no Spark job ([[readEntries]]).
     *
     * SCHEMA EVOLUTION, two tiers:
     *  - additive-only (untracked tables): `mergeSchema = true` unions
-    *    the file footers' schemas, so a commit that ADDED columns
-    *    coexists with older files (their rows read NULL for the new
-    *    columns). Off by default: the merged-footer pass costs one
-    *    footer read per file and unevolved tables don't need it.
+    *    the file footers' schemas (one footer per commit), so a commit
+    *    that ADDED columns coexists with older files (their rows read
+    *    NULL for the new columns). Off by default: the read schema is
+    *    the first data file's.
     *  - FULL column-ID evolution (after [[initSchema]]): rename, drop,
     *    add and re-type all survive reads across commits — files are
-    *    resolved by column id via [[schemaRead]] (round 11; the
-    *    round-10 "out of scope" note retired).
+    *    resolved by column id via [[schemaRead]].
     */
   def readSnapshot(spark: SparkSession, root: String, version: Long = -1L,
       mergeSchema: Boolean = false): DataFrame = {
@@ -1323,7 +1330,7 @@ object Snapshots {
   /** The surviving data-file paths a pushdown-driven scan reads — the
     * [[graft.sources.v2.SnapshotBatchSource]] planning hook. Plain
     * append-only tables only (deletes and schema evolution need the
-    * join/projection machinery of [[readSnapshot]] — loud, not silent).
+    * full scan plan, [[fullScanSpecs]] — loud, not silent).
     * May be EMPTY (a fully-pruned scan plans zero partitions). */
   private[graft] def prunedDataFilesForScan(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
@@ -1413,7 +1420,6 @@ object Snapshots {
       requiredNames: Seq[String], tableCols: Seq[(String, String)],
       untrackedCols: Option[Map[Long, Set[String]]] = None)
       : Seq[FullScanFile] = {
-    import scala.jdk.CollectionConverters._
     val v = if (version >= 0) version else currentVersion(spark, root)
     val es = entries(spark, root, v)
     val data = pruneDataEntries(es, filters, keepAnchor = false)._1.filter(_.kind == "A")
@@ -1425,19 +1431,13 @@ object Snapshots {
     // identity-only — widenOk's `from == to` arm — anything else routes
     // to readSnapshot via the loud require below). DELETE KEYS stay
     // primitive: equality-key tuples hash in the primitive domain.
-    // each delete file carries its OWN equality-key columns (one driver
-    // footer read per delete file — O(delete files), they are few):
+    // each delete file carries its OWN equality-key columns (one memoized
+    // driver footer read per delete file — O(delete files), they are few):
     // delete commits with DIFFERENT keys compose soundly, each applied
     // by its own columns (the r13 in-round find: keying every file by
     // the FIRST file's schema silently over-deleted on mixed keys)
-    val delKeyCols: Seq[Seq[String]] = dels.map { e =>
-      val conf = spark.sessionState.newHadoopConf()
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(e.path), conf))
-      try r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
-      finally r.close()
-    }
+    val delKeyCols: Seq[Seq[String]] =
+      dels.map(e => ParquetFooters.schema(spark, e.path).fieldNames.toSeq)
     delKeyCols.flatten.distinct.foreach { k =>
       require(typeOf.contains(k),
         s"delete key column '$k' is not a current column of $root")
@@ -1684,10 +1684,12 @@ object Snapshots {
   private[graft] def untrackedVersionFiles(spark: SparkSession, root: String,
       version: Long = -1L): Seq[(Long, String)] = {
     val v = if (version >= 0) version else currentVersion(spark, root)
-    entries(spark, root, v).filter(_.kind == "A")
-      .groupBy(_.ver).toSeq.sortBy(_._1)
-      .map { case (ver, files) => ver -> files.head.path }
+    commitRepresentatives(entries(spark, root, v).filter(_.kind == "A"))
   }
+
+  /** One data file per committing version of `data`, ascending. */
+  private def commitRepresentatives(data: Seq[Entry]): Seq[(Long, String)] =
+    data.groupBy(_.ver).toSeq.sortBy(_._1).map { case (ver, files) => ver -> files.head.path }
 
   /** METADATA-ONLY aggregates — answered from the manifest alone, zero
     * data IO (the Iceberg "metadata table" capability: a 100 TB
@@ -1954,6 +1956,21 @@ object Snapshots {
     }
   }
 
+  /** The frame of a version's entries — the read behind [[readSnapshot]]
+    * and [[readSnapshotPruned]]. Contracts:
+    *  - every parquet read gets its schema from driver-side footers
+    *    ([[ParquetFooters]], memoized per immutable file), so building
+    *    the frame starts no Spark job;
+    *  - merge-on-read deletes apply INSIDE the data scan as one
+    *    codegen'd predicate ([[graft.plans.SnapshotDeleteFilter]]) over
+    *    `_metadata.file_path` and the key columns: no join, no exchange.
+    *    Key sets load through the executor-cached
+    *    [[graft.sources.v2.SnapshotDeleteSets]] and match by its rule,
+    *    the same the DSv2 reader applies. Each delete file's own columns
+    *    are its equality key, so deletes keyed on different columns
+    *    compose;
+    *  - the frame reads only data files (`inputFiles` lists exactly
+    *    them). */
   private def readEntries(spark: SparkSession, root: String, v: Long,
       es: Seq[Entry], mergeSchema: Boolean): DataFrame = {
     val data = es.filter(_.kind == "A")
@@ -1971,39 +1988,34 @@ object Snapshots {
     }
     val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
     val dels = es.filter(_.kind == "D")
-    def plainBase = spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(data.map(_.path): _*)
-    if (dels.isEmpty) {
-      if (sEntries.isEmpty) plainBase
-      else schemaRead(spark, data, sEntries, withFp = false)
-    } else {
-      import spark.implicits._
-      val base =
-        if (sEntries.isEmpty)
-          plainBase.withColumn("__fp", normPathCol(col("_metadata.file_path")))
-        else schemaRead(spark, data, sEntries, withFp = true)
-      val outCols = base.columns.toIndexedSeq.filterNot(_ == "__fp")
-      // per-KEY-SCHEMA delete groups (round 13): each delete file's own
-      // columns are its equality ids — commits keyed on different
-      // columns compose, each group applying its own sequence-scoped
-      // anti-filter (a row survives iff it survives EVERY group). The
-      // former single-union form required one shared key schema and
-      // unionByName threw on mixed keys.
-      val delFrames = dels.map(e =>
-        spark.read.parquet(e.path).withColumn("__dver", lit(e.ver)))
-      val groups = delFrames.groupBy(_.columns.filterNot(_ == "__dver").toSeq.sorted)
-        .toSeq.sortBy(_._1.mkString(","))
-      val fileVer = data.map(e => (normPath(e.path), e.ver)).toDF("__fp", "__ver")
-      var cur = base.join(broadcast(fileVer), Seq("__fp"))
-      for ((keyCols, frames) <- groups) {
-        val maxDel = frames.reduce(_ unionByName _)
-          .groupBy(keyCols.map(col): _*)
-          .agg(max(col("__dver")).as("__dver_max"))
-        cur = cur.join(maxDel, keyCols, "left")
-          .filter(col("__dver_max").isNull || col("__dver_max") <= col("__ver"))
-          .drop("__dver_max")
+    val delKeys = dels.map(e => ParquetFooters.schema(spark, e.path).fieldNames.toSeq)
+    val keyCols = delKeys.flatten.distinct
+    // the keep-predicate, given each key column's expression and DDL type
+    // in the frame it filters
+    def deleteFilter(keyCol: String => Column, keyTypes: Map[String, String]): Column = {
+      keyCols.foreach(k => require(keyTypes.contains(k),
+        s"delete key column '$k' is not a column of $root version $v"))
+      val specs = dels.zip(delKeys).map { case (e, kc) =>
+        e.ver -> DeleteSpec(e.path, kc, kc.map(keyTypes), kc.map(keyCols.indexOf))
       }
-      cur.drop("__fp", "__ver").select(outCols.map(col): _*)
+      val scope = new graft.plans.DeleteScope(
+        data.map(e => normPath(e.path) -> e.ver).toMap, specs.toArray,
+        graft.sources.v2.SnapshotReaderFactory.confToMap(spark.sessionState.newHadoopConf()))
+      graft.plans.SnapshotDeleteFilter.keep(col("_metadata.file_path"),
+        keyCols.map(keyCol), scope)
+    }
+    if (sEntries.nonEmpty) {
+      val typeOf = decodeSchema(sEntries.last.path).map(c => c.name -> c.typ).toMap
+      schemaRead(spark, data, sEntries,
+        Option.when(dels.nonEmpty)(deleteFilter(_, typeOf)))
+    } else {
+      val paths = data.map(_.path)
+      val schema =
+        if (mergeSchema) ParquetFooters.merged(spark, commitRepresentatives(data).map(_._2))
+        else ParquetFooters.schema(spark, paths.head)
+      val df = spark.read.schema(schema).parquet(paths: _*)
+      if (dels.isEmpty) df
+      else df.filter(deleteFilter(col, schema.fields.map(f => f.name -> f.dataType.sql).toMap))
     }
   }
 
@@ -2015,11 +2027,11 @@ object Snapshots {
     * old files, re-typed columns cast at the scan. One narrow
     * projection per group, unioned; pruning/pushdown reach each
     * group's parquet scan as usual (the projection is plain select).
-    * `withFp = true` also carries the normalized `_metadata.file_path`
-    * (computed BEFORE the union — file metadata is only resolvable on
-    * the scan relation) for the merge-on-read delete join. */
+    * `deleteFilter` builds the delete predicate from each key column's
+    * group-local expression; it filters the group's scan, where
+    * `_metadata.file_path` resolves. */
   private def schemaRead(spark: SparkSession, data: Seq[Entry],
-      sEntries: Seq[Entry], withFp: Boolean): DataFrame = {
+      sEntries: Seq[Entry], deleteFilter: Option[(String => Column) => Column]): DataFrame = {
     val schemas = sEntries.map(e => e.ver -> decodeSchema(e.path)).toMap
     val initVer = sEntries.head.ver
     val current = schemas(sEntries.last.ver)
@@ -2028,16 +2040,16 @@ object Snapshots {
         throw new IllegalStateException(
           s"manifest references unknown schema version $sid"))
       val byId = bound.map(c => c.id -> c.name).toMap
-      val df = spark.read.parquet(files.map(_.path): _*)
+      // one schema per sid: writes are checked against their binding,
+      // and initSchema checks the pre-tracking files share one
+      val df = spark.read.schema(ParquetFooters.schema(spark, files.head.path))
+        .parquet(files.map(_.path): _*)
       val cols = current.map { c =>
-        byId.get(c.id)
-          .map(n => col(n).cast(c.typ).as(c.name))
-          .getOrElse(lit(null).cast(c.typ).as(c.name))
+        c.name -> byId.get(c.id).map(n => col(n).cast(c.typ))
+          .getOrElse(lit(null).cast(c.typ))
       }
-      val all =
-        if (withFp) cols :+ normPathCol(col("_metadata.file_path")).as("__fp")
-        else cols
-      df.select(all: _*)
+      deleteFilter.fold(df)(f => df.filter(f(cols.toMap)))
+        .select(cols.map { case (n, e) => e.as(n) }: _*)
     }.reduce(_ unionByName _)
   }
 
@@ -2061,7 +2073,7 @@ object Snapshots {
     val to = if (toV >= 0) toV else currentVersion(spark, root)
     val added = appendedDataFiles(spark, root, sinceV, to)
     require(added.nonEmpty, s"no files were appended between $sinceV and $to")
-    spark.read.parquet(added: _*)
+    spark.read.schema(ParquetFooters.schema(spark, added.head)).parquet(added: _*)
   }
 
   /** Data files appended in `(sinceV, toV]` under the same append-only

@@ -223,7 +223,7 @@ private[v2] class SnapshotBatchTable(root: String, version: Long,
     * declines loudly — Spark reports the unsupported condition rather
     * than this table pretending. NULL semantics line up by
     * construction: SQL DELETE's predicate never matches NULL, and
-    * neither does the equality-delete join. */
+    * neither does equality-delete key matching. */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
     import org.apache.spark.sql.sources.{EqualTo, In}
     val cols = filters.collect {
@@ -690,9 +690,10 @@ private[v2] case class SnapshotFullPartition(
   * read to the file-local columns actually bound (from the file's OWN
   * footer — exact physical types), converts each value to its current
   * type (identity or a declared lossless widening), and drops rows
-  * whose delete-key tuple appears in any scoped delete set. Key tuples
-  * with a NULL component are always kept — SQL equality semantics, the
-  * same rows readSnapshot's left-join keeps. */
+  * whose delete-key tuple appears in any scoped delete set
+  * ([[ScopedDeletes]], the matcher readSnapshot's in-scan predicate
+  * shares). Key tuples with a NULL component are always kept — SQL
+  * equality semantics. */
 private[v2] class SnapshotFullReaderFactory(confEntries: Array[(String, String)])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
@@ -712,9 +713,7 @@ private[v2] class SnapshotFullReaderFactory(confEntries: Array[(String, String)]
     present.zipWithIndex.foreach { case ((_, rcIdx), projIdx) =>
       fieldIdx(rcIdx) = projIdx
     }
-    val deleteSets: Seq[(Snapshots.DeleteSpec, scala.collection.Set[Seq[Any]])] =
-      p.deletes.map(sp =>
-        sp -> SnapshotDeleteSets.get(sp.path, sp.keyCols, sp.keyTypes, confEntries))
+    val deletes = SnapshotDeleteSets.scope(p.deletes, confEntries)
     // nested (struct/array/map) columns read through the recursive Group
     // converter (round 14); identity-typed only (planning validated), so
     // the parsed CURRENT type is also the file's type. null = primitive.
@@ -749,11 +748,7 @@ private[v2] class SnapshotFullReaderFactory(confEntries: Array[(String, String)]
               }
             i += 1
           }
-          val deleted = deleteSets.exists { case (sp, set) =>
-            val key = sp.keyIdx.map(j => SnapshotDeleteSets.normKey(vals(j)))
-            !key.contains(null) && set.contains(key)
-          }
-          if (!deleted) {
+          if (!deletes.deletes(vals)) {
             cur = InternalRow.fromSeq(p.outIdx.map(vals))
             return true
           }
@@ -767,22 +762,66 @@ private[v2] class SnapshotFullReaderFactory(confEntries: Array[(String, String)]
   }
 }
 
+/** The delete sets scoped to one data file, grouped by key positions
+  * (delete files committed on the same key columns share one tuple
+  * per row). A row is deleted iff some group's sets hold its key
+  * tuple; a tuple with a NULL component never matches. */
+private[graft] final class ScopedDeletes private[v2] (
+    groups: Array[(Array[Int], Array[scala.collection.Set[Seq[Any]]])]) {
+  def isEmpty: Boolean = groups.isEmpty
+
+  /** `vals(keyIdx(i))` is the row's value of the group's i-th key, in
+    * the catalyst representation of the key's current type. */
+  def deletes(vals: Array[Any]): Boolean = {
+    var g = 0
+    while (g < groups.length) {
+      val (idx, sets) = groups(g)
+      val key = new Array[Any](idx.length)
+      var i = 0
+      var hasNull = false
+      while (i < idx.length && !hasNull) {
+        key(i) = SnapshotDeleteSets.normKey(vals(idx(i)))
+        hasNull = key(i) == null
+        i += 1
+      }
+      if (!hasNull) {
+        val tuple = scala.collection.immutable.ArraySeq.unsafeWrapArray(key)
+        if (sets.exists(_.contains(tuple))) return true
+      }
+      g += 1
+    }
+    false
+  }
+}
+
 /** Executor-side cache of equality-delete key sets, Iceberg's in-task
-  * delete application: a delete file loads ONCE per executor into a
-  * hash set of key tuples (in the CURRENT type domain, so widened
-  * columns compare correctly) and every file task sharing it probes the
-  * same set. Delete files are immutable, so the cache can never go
-  * stale; the crude size valve only costs a re-read, never wrongness.
-  * Key tuples containing NULL are dropped at load — SQL equality never
-  * matches NULL (the same contract as readSnapshot's join). */
-private[v2] object SnapshotDeleteSets {
+  * delete application, and the one key-matching rule both snapshot
+  * read paths apply ([[ScopedDeletes.deletes]]: this reader and
+  * `Snapshots.readSnapshot`'s in-scan predicate). A delete file loads
+  * ONCE per executor into a hash set of key tuples (in the CURRENT type
+  * domain, so widened columns compare correctly) and every file task
+  * sharing it probes the same set. Delete files are immutable, so the
+  * cache can never go stale; the crude size valve only costs a re-read,
+  * never wrongness. Key tuples containing NULL are dropped at load —
+  * SQL equality never matches NULL. */
+private[graft] object SnapshotDeleteSets {
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
   /** The primitive DDL domain of the positional readers — anything else
-    * is a nested type served by [[GroupConverters]] (round 14). */
+    * is a nested type served by [[GroupConverters]] (round 14). It is
+    * also the domain of equality-delete keys: `Snapshots.commitDelete`
+    * and `commitMerge` reject key columns of any other type. */
   val PrimitiveDdl: Set[String] = Set("BIGINT", "INT", "DOUBLE", "FLOAT",
     "BOOLEAN", "STRING", "DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
+
+  /** Load (or reuse) the sets of `specs` — the deletes in one data
+    * file's scope — grouped by key positions. */
+  def scope(specs: Seq[Snapshots.DeleteSpec],
+      confEntries: Array[(String, String)]): ScopedDeletes =
+    new ScopedDeletes(specs.groupBy(_.keyIdx).toArray.map { case (idx, sps) =>
+      idx.toArray -> sps.map(sp => get(sp.path, sp.keyCols, sp.keyTypes, confEntries)).toArray
+    })
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, scala.collection.Set[Seq[Any]]]()
@@ -825,7 +864,20 @@ private[v2] object SnapshotDeleteSets {
   private def readPrim(g: Group, fi: Int,
       pt: org.apache.parquet.schema.PrimitiveType): Any =
     pt.getPrimitiveTypeName match {
-      case INT64 => g.getLong(fi, 0)
+      case INT64 => pt.getLogicalTypeAnnotation match {
+        case ts: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+          if ts.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS =>
+          g.getLong(fi, 0) * 1000L // catalyst timestamps are micros
+        case _ => g.getLong(fi, 0)
+      }
+      // Spark's default TIMESTAMP encoding: 8 bytes nanos-of-day then 4
+      // bytes Julian day, little-endian — read back as epoch micros
+      case INT96 =>
+        val buf = java.nio.ByteBuffer.wrap(g.getInt96(fi, 0).getBytes)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val nanos = buf.getLong
+        val julianDay = buf.getInt
+        (julianDay - 2440588L) * 86400000000L + nanos / 1000L
       case INT32 => g.getInteger(fi, 0)
       case DOUBLE => g.getDouble(fi, 0)
       case FLOAT => g.getFloat(fi, 0)
@@ -870,10 +922,15 @@ private[v2] object SnapshotDeleteSets {
           "at commit time for tracked AND untracked tables)")
     }
 
-  /** -0.0 folds to 0.0 so boxed tuple equality matches SQL equality
-    * (Spark normalizes signed zero in join keys; NaN == NaN is already
-    * true under boxed equals, matching Spark's NaN semantics). */
+  /** Key tuples compare with Scala's numeric `==`, which already equates
+    * -0.0 and 0.0 (as SQL equality does) but never NaN with NaN, while
+    * SQL equality of join keys does: every NaN folds to one sentinel.
+    * Signed zero folds to 0.0 for a stable hash. */
+  private case object NaNKey
+
   def normKey(v: Any): Any = v match {
+    case d: java.lang.Double if d.isNaN => NaNKey
+    case f: java.lang.Float if f.isNaN => NaNKey
     case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(0.0)
     case f: java.lang.Float if f.floatValue == 0.0f => java.lang.Float.valueOf(0.0f)
     case x => x

@@ -43,6 +43,39 @@ class ConcurrencySpec extends SparkTestBase {
     assert(counts.forall(_ == expected), counts.toString)
   }
 
+  test("SqlFrontEnd.run serves dashboard texts concurrently over two directories") {
+    // every call binds and drops the same bare view names; without the
+    // bind -> analyze -> drop lock one call drops (or rebinds to the
+    // other directory) a view another call has not yet analyzed
+    val texts = Seq(
+      """SELECT n_name, count(*) AS n_orders,
+        |  floor(sum(o_totalprice) * 100 + 0.5) / 100 AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name LIMIT 5""".stripMargin,
+      """SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS users
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+      """SELECT source, lang, count(*) AS n_docs FROM documents
+        |GROUP BY ROLLUP (source, lang)
+        |ORDER BY source NULLS FIRST, lang NULLS FIRST""".stripMargin,
+      """SELECT l_returnflag, l_linestatus, CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
+        |  count(*) AS n
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)
+    val dirs = Seq(sf, sf.replace("sf0.001", "sf0.01"))
+    def run(text: String, dir: String): Seq[String] =
+      SqlFrontEnd.run(spark, dir, text).collect().map(_.toString).toSeq
+    val calls = for (t <- texts; d <- dirs) yield (t, d)
+    val expected = calls.map(c => c -> run(c._1, c._2)).toMap
+    texts.foreach(t => assert(expected((t, dirs(0))) != expected((t, dirs(1)))))
+    val concurrent = Await.result(Future.sequence(
+      (1 to 3).flatMap(_ => calls).map(c => Future(c -> run(c._1, c._2)))), 5.minutes)
+    concurrent.foreach { case ((t, d), got) =>
+      assert(got == expected((t, d)), s"$d diverged under concurrency:\n$t")
+    }
+  }
+
   test("the streaming harness's config override never bleeds across threads") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val fs = (1 to 3).map { _ =>

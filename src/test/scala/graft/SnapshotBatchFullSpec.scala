@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Snapshots
 
@@ -29,6 +30,36 @@ class SnapshotBatchFullSpec extends SparkTestBase {
     val b = Snapshots.readSnapshot(spark, root).orderBy(cols.map(col): _*)
       .collect().toSeq
     assert(a == b, s"DSv2 full read diverged from readSnapshot on $root")
+  }
+
+  /** Test-local reference for merge-on-read deletes, independent of the
+    * engine's key sets and read paths: the per-key-group left join the
+    * V1 read once ran, over rows the test tracks itself. `rows` carries
+    * each row's commit version in `__ver`; a row survives unless a
+    * delete committed at a STRICTLY later version holds its key tuple
+    * under SQL join equality (NULL never matches, -0.0 = 0.0, NaN = NaN).
+    * Each delete's own columns are its key. */
+  private def referenceRead(rows: DataFrame, deletes: Seq[(Long, DataFrame)]): DataFrame = {
+    val outCols = rows.columns.toSeq.filterNot(_ == "__ver")
+    deletes.groupBy(_._2.columns.toSeq.sorted).toSeq.sortBy(_._1.mkString(","))
+      .foldLeft(rows) { case (cur, (keyCols, ds)) =>
+        val maxDel = ds.map { case (v, keys) => keys.withColumn("__dver", lit(v)) }
+          .reduce(_ unionByName _)
+          .groupBy(keyCols.map(col): _*).agg(max("__dver").as("__dver_max"))
+        cur.join(maxDel, keyCols, "left")
+          .filter(col("__dver_max").isNull || col("__dver_max") <= col("__ver"))
+          .drop("__dver_max")
+      }.select(outCols.map(col): _*)
+  }
+
+  /** readSnapshot and the DSv2 read both equal the reference, rows
+    * ordered by every column (the leading `id` is unique among live rows). */
+  private def matchesReference(root: String, expected: DataFrame, what: String): Unit = {
+    val cols = expected.columns.toSeq.map(col)
+    def rows(df: DataFrame) = df.select(cols: _*).orderBy(cols: _*).collect().toSeq
+    val want = rows(expected)
+    assert(rows(Snapshots.readSnapshot(spark, root)) == want, s"readSnapshot: $what")
+    assert(rows(batchRead(root)) == want, s"DSv2: $what")
   }
 
   test("equality deletes apply in the reader: sequence scoping, merge, re-insert") {
@@ -180,32 +211,38 @@ class SnapshotBatchFullSpec extends SparkTestBase {
   }
 
   test("randomized equivalence: commits, deletes, renames, widens — DSv2 ≡ readSnapshot") {
+    // both paths against the test-local reference, not only each other:
+    // they share one key-matching implementation
     val rnd = new scala.util.Random(13)
     val root = freshRoot("fuzz")
-    Snapshots.commitAppend(spark, root,
-      (1 to 20).map(i => (i.toLong, rnd.nextInt(100), s"x$i")).toDF("id", "v", "tag")
-        .coalesce(1))
+    val first = (1 to 20).map(i => (i.toLong, rnd.nextInt(100), s"x$i"))
+    val v1 = Snapshots.commitAppend(spark, root, first.toDF("id", "v", "tag").coalesce(1))
     Snapshots.initSchema(spark, root)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, String)]
+    rows ++= first.map { case (i, v, t) => (v1, i, v, t) }
+    val deletes = scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
     var nextId = 21L
     var tagName = "tag"
     for (step <- 1 to 12) {
       rnd.nextInt(4) match {
         case 0 => // append a small batch under the current schema
-          val rows = (0 until 5).map { _ =>
+          val batch = (0 until 5).map { _ =>
             val i = nextId; nextId += 1; (i, rnd.nextInt(100), s"x$i")
           }
-          Snapshots.commitAppend(spark, root,
-            rows.toDF("id", "v", tagName).coalesce(1))
+          val v = Snapshots.commitAppend(spark, root,
+            batch.toDF("id", "v", tagName).coalesce(1))
+          rows ++= batch.map { case (i, x, t) => (v, i, x, t) }
         case 1 => // delete a random slice — alternating KEY COLUMNS, so
           // the fuzz also exercises mixed-key delete composition (the
           // r13 in-round find: per-delete-file key resolution)
           if (rnd.nextBoolean()) {
             val ids = (1L until nextId).filter(_ => rnd.nextInt(10) == 0)
-            if (ids.nonEmpty) Snapshots.commitDelete(spark, root, ids.toDF("id"))
+            if (ids.nonEmpty)
+              deletes += Snapshots.commitDelete(spark, root, ids.toDF("id")) -> ids.toDF("id")
           } else {
-            val vs = (0 until 100).filter(_ => rnd.nextInt(25) == 0).map(_.toString)
+            val vs = (0 until 100).filter(_ => rnd.nextInt(25) == 0)
             if (vs.nonEmpty)
-              Snapshots.commitDelete(spark, root, vs.map(_.toInt).toDF("v"))
+              deletes += Snapshots.commitDelete(spark, root, vs.toDF("v")) -> vs.toDF("v")
           }
         case 2 => // rename the tag column back and forth (blocked by pending deletes)
           val to = if (tagName == "tag") "label" else "tag"
@@ -213,12 +250,72 @@ class SnapshotBatchFullSpec extends SparkTestBase {
           catch { case _: IllegalArgumentException => () } // pending deletes: skip
         case 3 => () // no-op round
       }
-      val cols = Snapshots.readSnapshot(spark, root).columns.toSeq
-      val a = batchRead(root).orderBy(cols.map(col): _*).collect().toSeq
-      val b = Snapshots.readSnapshot(spark, root).orderBy(cols.map(col): _*)
-        .collect().toSeq
-      assert(a == b, s"step $step diverged")
+      matchesReference(root,
+        referenceRead(rows.toSeq.toDF("__ver", "id", "v", tagName), deletes.toSeq),
+        s"step $step")
     }
+  }
+
+  test("deletes against the reference: NULL / -0.0 / NaN keys, mixed keys, re-inserts, merge") {
+    val root = freshRoot("keys")
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[Double], Option[String])]
+    val deletes = scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
+    def append(batch: Seq[(Long, Option[Double], Option[String])]): Unit = {
+      val v = Snapshots.commitAppend(spark, root, batch.toDF("id", "score", "tag").coalesce(1))
+      rows ++= batch.map { case (i, sc, t) => (v, i, sc, t) }
+    }
+    def delete(keys: DataFrame): Unit = deletes += Snapshots.commitDelete(spark, root, keys) -> keys
+    def check(what: String): Unit = matchesReference(root,
+      referenceRead(rows.toSeq.toDF("__ver", "id", "score", "tag"), deletes.toSeq), what)
+    append(Seq((1L, Some(0.0), Some("t1")), (2L, Some(-0.0), Some("t2")),
+      (3L, Some(Double.NaN), Some("t3")), (4L, None, Some("t4")), (5L, Some(1.5), Some("t5")),
+      (6L, Some(2.5), None), (7L, Some(3.5), Some("t7")), (8L, Some(0.0), None)))
+    // -0.0 matches 0.0 and -0.0, NaN matches NaN, a NULL key matches nothing
+    delete(Seq(Some(-0.0), Some(Double.NaN), None).toDF("score"))
+    check("signed zero, NaN and NULL keys")
+    assert(Snapshots.readSnapshot(spark, root).count() == 4L)
+    // a two-column key beside the one-column one; NULL components never match
+    delete(Seq((5L, Option("t5")), (6L, Option.empty[String]), (7L, Option("nope")))
+      .toDF("id", "tag"))
+    check("mixed one- and two-column keys")
+    // re-inserted keys survive the earlier deletes
+    append(Seq((1L, Some(0.0), Some("t1b")), (5L, Some(1.5), Some("t5")),
+      (9L, Some(Double.NaN), None)))
+    check("re-inserts")
+    delete(Seq(5L).toDF("id"))
+    check("delete after re-insert")
+    // a merge's delete and data share one version: its own rows survive
+    val updates = Seq((1L, Some(9.0), Some("m1")), (10L, Some(-0.0), Some("m10")))
+    val vm = Snapshots.commitMerge(spark, root, updates.toDF("id", "score", "tag"), Seq("id"))
+    deletes += vm -> Seq(1L, 10L).toDF("id")
+    rows ++= updates.map { case (i, sc, t) => (vm, i, sc, t) }
+    check("merge")
+  }
+
+  test("deletes against the reference on a tracked table across renames") {
+    val root = freshRoot("tracked_keys")
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, Int)]
+    val deletes = scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
+    var names = Seq("id", "src", "n")
+    def append(batch: Seq[(Long, String, Int)]): Unit = {
+      val v = Snapshots.commitAppend(spark, root, batch.toDF(names: _*).coalesce(1))
+      rows ++= batch.map { case (i, s0, n) => (v, i, s0, n) }
+    }
+    def check(what: String): Unit = matchesReference(root,
+      referenceRead(rows.toSeq.toDF("__ver" +: names: _*), deletes.toSeq), what)
+    append((1L to 6L).map(i => (i, s"s${i % 3}", i.toInt)))
+    Snapshots.initSchema(spark, root)
+    Snapshots.renameColumn(spark, root, "src", "origin")
+    names = Seq("id", "origin", "n")
+    append((7L to 10L).map(i => (i, s"s${i % 3}", i.toInt)))
+    // a key on the renamed column reaches pre-rename files by column id
+    val k1 = Seq("s1").toDF("origin")
+    deletes += Snapshots.commitDelete(spark, root, k1) -> k1
+    check("delete on a renamed column")
+    append(Seq((11L, "s1", 11)))
+    val k2 = Seq((2L, 2), (8L, 0)).toDF("id", "n")
+    deletes += Snapshots.commitDelete(spark, root, k2) -> k2
+    check("two-column key after a re-insert of a deleted key value")
   }
 
   test("SQL catalog serves evolved tables through the same full scan") {

@@ -353,12 +353,12 @@ class SnapshotsSpec extends SparkTestBase {
   }
 
   test("normPath: driver side and executor expression normalize authority URIs identically") {
-    // ADVICE r10 #1: the two sides used DIFFERENT normalizations
-    // (Path.toUri.getPath drops the authority, the old file_path regexp
-    // kept it), so on hdfs://host / s3a://bucket paths the delete
-    // path's __fp join matched nothing and a snapshot with deletes
-    // read EMPTY. One regex now binds both sides; this corpus pins the
-    // authority-bearing shapes local tests can't exercise end-to-end.
+    // ADVICE r10 #1: the two sides used DIFFERENT normalizations, so on
+    // hdfs://host / s3a://bucket paths deletes matched nothing and a
+    // snapshot with deletes read EMPTY. The executor side sees each file
+    // as `_metadata.file_path`, a URL-encoded URI; this corpus pins the
+    // authority-bearing and escaped shapes local tests can't exercise
+    // end-to-end.
     val corpus = Seq(
       "file:/tmp/t/data/c-1/part-0.parquet",
       "file:///tmp/t/data/c-1/part-0.parquet",
@@ -366,11 +366,12 @@ class SnapshotsSpec extends SparkTestBase {
       "hdfs://nn-ha/warehouse/t/part.parquet",
       "s3a://my-bucket/lake/t/data/c-3/part-0.parquet",
       "abfss://cont@acct.dfs.core.windows.net/t/part.parquet",
+      "file:/tmp/a b/c%d+e/part-0.parquet",
       "/bare/local/path/part.parquet")
     val scalaSide = corpus.map(Snapshots.normPath)
-    val sparkSide = corpus.toDF("p")
-      .select(Snapshots.normPathCol(col("p"))).as[String].collect().toSeq
-    assert(scalaSide == sparkSide)
+    val executorSide = corpus.map(p =>
+      graft.plans.DeleteScope.barePath(new Path(p).toUri.toString))
+    assert(scalaSide == executorSide)
     // authority is gone on BOTH sides — the r10 bug class
     assert(scalaSide.forall(p => p.startsWith("/") && !p.contains(":")))
     assert(Snapshots.normPath("hdfs://namenode:9000/w/p.parquet") == "/w/p.parquet")
