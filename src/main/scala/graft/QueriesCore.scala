@@ -562,15 +562,13 @@ object QueriesCore {
       |  AND CAST(o_orderdate AS DATE) < DATE '1999-01-01'""".stripMargin
 
   /** scan_snapshot_orders: the DSv2 snapshot source over a table with
-    * TIME columns (round 13 — DATE and both TIMESTAMP forms now flow
-    * through inference, both Group readers, the writer, and the typed
-    * manifest stats; catalyst stores them as primitive ints/longs so
-    * the reads are identical): orders committed in four two-year
-    * windows, then an ORDINARY `.filter(o_orderdate < 1997-01-01)` —
-    * the pushed LocalDateTime predicate tests against the naive-micros
-    * 'v' stats and prunes to the first window's 2 files, pinned as the
-    * partition count. Before this round a snapshot table with a
-    * timestamp column could not use the declarative scan at all. */
+    * TIME columns (DATE and both TIMESTAMP forms flow through footer
+    * inference, the scan's parquet reader, the writer, and the typed
+    * manifest stats): orders committed in four two-year windows, then an
+    * ORDINARY `.filter(o_orderdate < 1997-01-01)` — the pushed
+    * LocalDateTime predicate tests against the naive-micros 'v' stats
+    * and prunes to the first window's 2 files, pinned as the partition
+    * count. */
   val scanSnapshotOrders: Q = (s, dir) => {
     import graft.sources.Snapshots
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_roundtrip/${scratchKey(dir)}/orders_dsv2time"
@@ -1123,11 +1121,10 @@ object QueriesCore {
       |FROM documents""".stripMargin
 
   /** scan_snapshot_nested: NON-PRIMITIVE columns through the DSv2
-    * snapshot scan (round 14, VERDICT r13 ask #4 — the last declared
-    * scope edge of the declarative path retired): a table with a STRUCT,
-    * an ARRAY and a MAP column plans through the same pushdown scan —
-    * the recursive Group converter ([[graft.sources.v2.GroupConverters]])
-    * serves the standard parquet LIST/MAP/struct layouts, manifest
+    * snapshot scan: a table with a STRUCT, an ARRAY and a MAP column
+    * plans through the same pushdown scan — Spark's own parquet row
+    * materializer ([[graft.sources.v2.SnapshotFileReader]]) decodes the
+    * LIST/MAP/struct layouts, manifest
     * pruning still bites on the primitive filter column (nested columns
     * carry no stats — sound by missing-means-keep), and the answer is
     * pinned identical to the `readSnapshot` API path. The reference's

@@ -1327,188 +1327,98 @@ object Snapshots {
     }
   }
 
-  /** The surviving data-file paths a pushdown-driven scan reads — the
-    * [[graft.sources.v2.SnapshotBatchSource]] planning hook. Plain
-    * append-only tables only (deletes and schema evolution need the
-    * full scan plan, [[fullScanSpecs]] — loud, not silent).
-    * May be EMPTY (a fully-pruned scan plans zero partitions). */
-  private[graft] def prunedDataFilesForScan(spark: SparkSession, root: String,
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    require(es.forall(e => e.kind == "A" || e.kind == "T"),
-      s"snapshot batch source reads plain append-only tables; $root version $v " +
-        "carries delete/schema entries — read it via Snapshots.readSnapshot")
-    pruneDataEntries(es, filters, keepAnchor = false)._1
-      .filter(_.kind == "A").map(_.path)
-  }
-
-  // ---------------------------------------------------------------------
-  // FULL DSv2 scan planning (round 13, VERDICT r12 ask #1): the batch
-  // source's former scope edge — "append-only, primitive columns,
-  // untracked schema" — retired. Merge-on-read deletes and column-ID
-  // schema resolution now run INSIDE the DSv2 reader: the planner
-  // resolves each file's columns by stable id against the current
-  // binding (rename/drop/re-add/widen all survive, same semantics as
-  // readSnapshot's schemaRead) and scopes each file's delete set by the
-  // sequence rule (only deletes with a STRICTLY LATER version apply —
-  // re-inserts survive). Executors apply deletes Iceberg-style: the
-  // relevant equality-delete files load into an in-task hash set
-  // (delete files are broadcast-sized by contract) and rows are
-  // filtered during the scan — no join, no shuffle, and file skipping
-  // still composes (a pushed filter can only REMOVE candidate rows, so
-  // pruning data files stays sound under deletes).
-  // ---------------------------------------------------------------------
-
   /** One equality-delete file scoped to a data file: its OWN key
     * columns (per-file equality ids, the Iceberg semantics — delete
     * commits against one table may use different keys), their current
-    * DDL types, and each key's index into the data file's `readCols`. */
+    * DDL types, and each key's index into the reader's columns. Built
+    * by [[graft.sources.v2.SnapshotDeleteSets.spec]], which checks the
+    * key types. */
   private[graft] final case class DeleteSpec(path: String,
       keyCols: Seq[String], keyTypes: Seq[String], keyIdx: Seq[Int])
 
-  /** One data file's scan plan: `readCols` are (file-local column name
-    * or "" = read NULL, file-written DDL type, current DDL type) for
-    * the required output columns followed by any delete-key columns not
-    * already required; `outIdx` indexes into it. */
-  private[graft] final case class FullScanFile(
-      path: String,
-      readCols: Seq[(String, String, String)],
-      outIdx: Seq[Int],
-      deletes: Seq[DeleteSpec])
+  /** One data file's scan plan: the file-local column bound to each
+    * read column ("" = the file predates it: NULL) and the delete files
+    * in its scope. */
+  private[graft] final case class FullScanFile(path: String,
+      fileCols: Seq[String], deletes: Seq[DeleteSpec])
 
-  /** The widenings the DSv2 reader performs in-scan (lossless in the
-    * Spark-cast sense; everything else routes to readSnapshot, loud). */
-  private def widenOk(from: String, to: String): Boolean =
-    from == to || ((from, to) match {
-      case ("INT", "BIGINT") | ("INT", "DOUBLE") | ("BIGINT", "DOUBLE") |
-           ("FLOAT", "DOUBLE") => true
-      case _ => false
-    })
+  /** The key columns of a version's delete files (each file's own
+    * footer columns), in first-seen order. */
+  private[graft] def deleteKeyColumns(spark: SparkSession, root: String,
+      version: Long): Seq[String] =
+    keyColumns(spark, entries(spark, root, version).filter(_.kind == "D"))
 
-  private val Dsv2Types = Set("BIGINT", "INT", "DOUBLE", "FLOAT", "BOOLEAN",
-    "STRING", "DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
+  private def keyColumns(spark: SparkSession, dels: Seq[Entry]): Seq[String] =
+    dels.flatMap(e => ParquetFooters.schema(spark, e.path).fieldNames).distinct
 
-  /** Can the DSv2 reader materialize a column of this DDL type? Leaves
-    * must be [[Dsv2Types]] members (exactly what
-    * [[graft.sources.v2.GroupConverters.read]] handles); STRUCT / ARRAY
-    * / MAP recurse. Validated at PLANNING (round 15, ADVICE r14 low #2)
-    * so an out-of-scope type — DECIMAL, BINARY, legacy layouts — fails
-    * on the driver with the routing message, never per-row in executors
-    * with a generic converter error. */
-  private[graft] def dsv2TypeSupported(ddl: String): Boolean = {
-    import org.apache.spark.sql.types._
-    def ok(dt: DataType): Boolean = dt match {
-      case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-           StringType | DateType | TimestampType | TimestampNTZType => true
-      case st: StructType => st.fields.forall(f => ok(f.dataType))
-      case at: ArrayType => ok(at.elementType)
-      case mt: MapType => ok(mt.keyType) && ok(mt.valueType)
-      case _ => false
-    }
-    try ok(DataType.fromDDL(ddl))
-    catch { case _: Exception => false }
-  }
-
-  /** Plan the full DSv2 scan: surviving (manifest-pruned) data files
-    * with per-file column bindings and scoped per-delete-file key
-    * specs. `tableCols` is the full current table schema (name → DDL)
-    * — delete-key columns may not be in `requiredNames`. */
+  /** Plan the DSv2 scan of a version: the surviving (manifest-pruned)
+    * data files, each with its column bindings and its scoped delete
+    * files. Contracts:
+    *  - `readNames` are the columns every file task reads (the required
+    *    ones, then the delete-key columns); `tableCols` is the full
+    *    current schema (name → DDL);
+    *  - a tracked table binds by column id, as [[schemaRead]] does:
+    *    renamed columns read under their current name, columns a file
+    *    predates read NULL, and a re-typed column casts from the type the
+    *    file was written under with Spark cast semantics under the
+    *    session's ANSI mode — any re-type `readSnapshot` serves; a cast
+    *    Spark refuses fails here, on the driver;
+    *  - an untracked table binds by committing version: columns absent
+    *    from a commit's footer (`untrackedCols`, evaluated only for
+    *    untracked tables) read NULL, exactly
+    *    `readSnapshot(mergeSchema = true)`;
+    *  - a data file is scoped by the deletes committed STRICTLY after
+    *    it; delete-key types are checked here
+    *    ([[graft.sources.v2.SnapshotDeleteSets.spec]]). */
   private[graft] def fullScanSpecs(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter], version: Long,
-      requiredNames: Seq[String], tableCols: Seq[(String, String)],
-      untrackedCols: Option[Map[Long, Set[String]]] = None)
-      : Seq[FullScanFile] = {
+      readNames: Seq[String], tableCols: Seq[(String, String)],
+      untrackedCols: => Map[Long, Set[String]]): Seq[FullScanFile] = {
+    import org.apache.spark.sql.types.DataType
     val v = if (version >= 0) version else currentVersion(spark, root)
     val es = entries(spark, root, v)
     val data = pruneDataEntries(es, filters, keepAnchor = false)._1.filter(_.kind == "A")
-    val dels = es.filter(_.kind == "D")
     val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
-    val typeOf = tableCols.toMap
-    // data columns may be ANY type since round 14 (nested columns read
-    // through the recursive Group converter; their evolution is
-    // identity-only — widenOk's `from == to` arm — anything else routes
-    // to readSnapshot via the loud require below). DELETE KEYS stay
-    // primitive: equality-key tuples hash in the primitive domain.
-    // each delete file carries its OWN equality-key columns (one memoized
-    // driver footer read per delete file — O(delete files), they are few):
-    // delete commits with DIFFERENT keys compose soundly, each applied
-    // by its own columns (the r13 in-round find: keying every file by
-    // the FIRST file's schema silently over-deleted on mixed keys)
-    val delKeyCols: Seq[Seq[String]] =
-      dels.map(e => ParquetFooters.schema(spark, e.path).fieldNames.toSeq)
-    delKeyCols.flatten.distinct.foreach { k =>
-      require(typeOf.contains(k),
-        s"delete key column '$k' is not a current column of $root")
-      require(Dsv2Types.contains(typeOf(k)),
-        s"delete key column '$k' must be a primitive type, got ${typeOf(k)}")
-    }
-    val allKeyCols = delKeyCols.flatten.distinct
-    val readNames = requiredNames ++ allKeyCols.filterNot(requiredNames.contains)
-    // planner-side type routing (round 15, ADVICE r14 low #2): every
-    // column this scan must materialize is validated HERE, so a type the
-    // Group converter cannot serve (DECIMAL, BINARY, …) keeps the former
-    // loud driver-side error instead of failing per-row in executors
-    readNames.filter(typeOf.contains).foreach { n =>
-      require(dsv2TypeSupported(typeOf(n)),
-        s"DSv2 snapshot scan cannot read column '$n' of type ${typeOf(n)} — " +
-          "read it via Snapshots.readSnapshot")
-    }
-    val outIdx = requiredNames.indices
-    val delSpecsAll: Seq[(Entry, DeleteSpec)] = dels.zip(delKeyCols).map {
-      case (e, kc) => e -> DeleteSpec(e.path, kc, kc.map(typeOf),
-        kc.map(readNames.indexOf))
-    }
-    val schemas = sEntries.map(e => e.ver -> decodeSchema(e.path)).toMap
-    val current = sEntries.lastOption.map(e => decodeSchema(e.path))
-    def bindingsFor(sid: Long): Seq[(String, String, String)] = current match {
+    val delSpecs = es.filter(_.kind == "D").map(e => e.ver ->
+      graft.sources.v2.SnapshotDeleteSets.spec(spark, e.path, tableCols.toMap, { k =>
+        require(readNames.contains(k), s"delete key column '$k' is not read by this scan")
+        readNames.indexOf(k)
+      }))
+    val fileColsOf: Entry => Seq[String] = sEntries.lastOption match {
       case None =>
-        // untracked, uniform-schema contract (the additive path binds
-        // per VERSION below, not per sid)
-        readNames.map(n => (n, typeOf(n), typeOf(n)))
-      case Some(cur) =>
-        val fileBind = schemas.getOrElse(if (sid == 0) sEntries.head.ver else sid,
-          throw new IllegalStateException(
-            s"manifest references unknown schema version $sid"))
-        val byId = fileBind.map(c => c.id -> c).toMap
-        readNames.map { n =>
-          val c = cur.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-            s"unknown column '$n' on $root"))
-          byId.get(c.id) match {
-            case None => ("", c.typ, c.typ) // added after this file: NULL
-            case Some(fc) =>
-              require(widenOk(fc.typ, c.typ),
-                s"DSv2 snapshot scan supports lossless numeric widenings " +
-                  s"(INT→BIGINT, INT/BIGINT/FLOAT→DOUBLE); column '$n' needs " +
-                  s"${fc.typ} → ${c.typ} — read via Snapshots.readSnapshot")
-              (fc.name, fc.typ, c.typ)
+        val colSets = untrackedCols
+        val byVer = data.map(_.ver).distinct.map { ver =>
+          val present = colSets.getOrElse(ver, readNames.toSet)
+          ver -> readNames.map(n => if (present.contains(n)) n else "")
+        }.toMap
+        e => byVer(e.ver)
+      case Some(last) =>
+        val schemas = sEntries.map(e => e.ver -> decodeSchema(e.path)).toMap
+        val current = schemas(last.ver)
+        val ansi = spark.sessionState.conf.ansiEnabled
+        def bind(sid: Long): Seq[String] = {
+          val byId = schemas.getOrElse(if (sid == 0) sEntries.head.ver else sid,
+            throw new IllegalStateException(
+              s"manifest references unknown schema version $sid"))
+            .map(c => c.id -> c).toMap
+          readNames.map { n =>
+            val c = current.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+              s"unknown column '$n' on $root"))
+            byId.get(c.id).fold("") { fc =>
+              val (from, to) = (DataType.fromDDL(fc.typ), DataType.fromDDL(c.typ))
+              require(from == to ||
+                (if (ansi) org.apache.spark.sql.catalyst.expressions.Cast.canAnsiCast(from, to)
+                 else org.apache.spark.sql.catalyst.expressions.Cast.canCast(from, to)),
+                s"column '$n' of $root cannot be cast from ${fc.typ} to ${c.typ}")
+              fc.name
+            }
           }
         }
+        val bySid = data.map(_.sid).distinct.map(sid => sid -> bind(sid)).toMap
+        e => bySid(e.sid)
     }
-    // binding resolution: tracked tables key by SCHEMA VERSION (column
-    // ids); untracked additive tables key by COMMITTING VERSION (each
-    // commit's footer column set, from the caller's O(commits) footer
-    // pass — round 15, VERDICT r14 ask #2): columns absent from a
-    // file's commit read NULL, exactly readSnapshot(mergeSchema=true)
-    val bindingOf: Entry => Seq[(String, String, String)] =
-      (current, untrackedCols) match {
-        case (None, Some(colSets)) =>
-          val byVer = data.map(_.ver).distinct.map { ver =>
-            val present = colSets.getOrElse(ver, readNames.toSet)
-            ver -> readNames.map(n =>
-              if (present.contains(n)) (n, typeOf(n), typeOf(n))
-              else ("", typeOf(n), typeOf(n)))
-          }.toMap
-          e => byVer(e.ver)
-        case _ =>
-          val bySid = data.map(_.sid).distinct.map(s0 => s0 -> bindingsFor(s0)).toMap
-          e => bySid(e.sid)
-      }
-    data.map { e =>
-      FullScanFile(e.path, bindingOf(e), outIdx,
-        delSpecsAll.collect { case (de, sp) if de.ver > e.ver => sp })
-    }
+    data.map(e => FullScanFile(e.path, fileColsOf(e),
+      delSpecs.collect { case (dv, sp) if dv > e.ver => sp }))
   }
 
   /** Per-data-file facts of a version for the `$files` METADATA TABLE
@@ -1604,26 +1514,6 @@ object Snapshots {
         s"(${times.head._2}) — the table did not exist yet, or that history " +
         "was vacuumed")
     times.filter(_._2 <= tsMillis).last._1
-  }
-
-  /** (has schema entries, has delete entries) at a version — the batch
-    * source's plain-vs-full dispatch. */
-  private[graft] def tableShape(spark: SparkSession, root: String,
-      version: Long): (Boolean, Boolean) = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    (es.exists(_.kind == "S"), es.exists(_.kind == "D"))
-  }
-
-  /** First data file of a version — the untracked batch source's schema
-    * anchor (all commits against one table share a schema; the
-    * additive mergeSchema tier stays on [[readSnapshot]], loud). */
-  private[graft] def firstDataFilePath(spark: SparkSession, root: String,
-      version: Long): String = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    entries(spark, root, v).find(_.kind == "A").getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot table $root version $v lists no data files")).path
   }
 
   /** Entries with non-matching data files removed. With `keepAnchor`,
@@ -1988,19 +1878,15 @@ object Snapshots {
     }
     val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
     val dels = es.filter(_.kind == "D")
-    val delKeys = dels.map(e => ParquetFooters.schema(spark, e.path).fieldNames.toSeq)
-    val keyCols = delKeys.flatten.distinct
+    val keyCols = keyColumns(spark, dels)
     // the keep-predicate, given each key column's expression and DDL type
     // in the frame it filters
     def deleteFilter(keyCol: String => Column, keyTypes: Map[String, String]): Column = {
-      keyCols.foreach(k => require(keyTypes.contains(k),
-        s"delete key column '$k' is not a column of $root version $v"))
-      val specs = dels.zip(delKeys).map { case (e, kc) =>
-        e.ver -> DeleteSpec(e.path, kc, kc.map(keyTypes), kc.map(keyCols.indexOf))
-      }
+      val specs = dels.map(e => e.ver ->
+        graft.sources.v2.SnapshotDeleteSets.spec(spark, e.path, keyTypes, keyCols.indexOf))
       val scope = new graft.plans.DeleteScope(
         data.map(e => normPath(e.path) -> e.ver).toMap, specs.toArray,
-        graft.sources.v2.SnapshotReaderFactory.confToMap(spark.sessionState.newHadoopConf()))
+        graft.sources.v2.SnapshotReaderFactory.readerConf(spark))
       graft.plans.SnapshotDeleteFilter.keep(col("_metadata.file_path"),
         keyCols.map(keyCol), scope)
     }

@@ -2,26 +2,15 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Snapshots
+import graft.sources.{ParquetFooters, Snapshots}
 
 /** Structured-Streaming **CDC source over the snapshot log** — the
   * snapshot table ([[graft.sources.Snapshots]]) as a streaming input,
@@ -33,24 +22,20 @@ import graft.sources.Snapshots
   *    race-free (a version is either fully visible or not at all);
   *  - each micro-batch `(start, end]` reads ONLY the data files those
   *    versions appended (`Snapshots.appendedDataFiles` — the same
-  *    file-diff contract as the batch CDC reader, enforced: a REPLACE
-  *    or delete commit inside the range fails the stream loudly rather
-  *    than silently double-reading or missing rows);
+  *    file-diff contract as the batch CDC reader, enforced: a REPLACE,
+  *    delete or schema-change commit inside the range fails the stream
+  *    loudly rather than silently double-reading or missing rows);
   *  - offsets live in the sink's checkpoint, so a restarted stream
   *    resumes from the last committed version — exactly-once delivery
   *    of every appended row composes from (immutable files, version
   *    offsets, checkpointed commit log).
   *
-  * At 100 TB this is the ingest-refresh loop as a STREAM: writers
-  * `commitAppend` continuously; the consumer never rescans committed
-  * data, and backpressure is per-version file batches. The executor
-  * reader is parquet-mr's Group API over one file per input partition —
-  * column pruning/pushdown deliberately stay upstream in Spark (a
-  * projection over this source prunes AFTER read; the declared contract
-  * is primitive-column tables: LONG/INT/DOUBLE/FLOAT/BOOLEAN/STRING
-  * plus DATE and both TIMESTAMP forms since round 13 — catalyst stores
-  * them as primitive ints/longs, so the Group reads are identical —
-  * checked loudly at schema inference, nested types out of scope).
+  * The schema is the first data file's footer schema
+  * ([[graft.sources.ParquetFooters]]), and each file reads through the
+  * batch scan's reader ([[SnapshotReaderFactory]]), Spark's own parquet
+  * row materializer: any type Spark reads from parquet streams here,
+  * and a file whose types match the schema emits the materializer's
+  * rows unprojected. Column pruning and filters stay upstream in Spark.
   *
   * Usage:
   * {{{
@@ -76,39 +61,17 @@ object SnapshotStreamSource {
       throw new IllegalArgumentException(
         "snapshot stream source requires .option(\"root\", tableRoot)"))
 
-  /** Schema = the parquet footer of the current version's first data
-    * file, restricted to primitive columns (loud on anything else).
-    * All commits against one table must share this schema — the writers
-    * in this codebase do; a production deployment would enforce it at
-    * commit time. */
+  /** Schema = the footer schema of the table's first data file. All
+    * commits the stream spans share one schema: a schema-change commit
+    * inside a batch's range fails the stream
+    * (`Snapshots.appendedDataFiles`). */
   private[graft] def inferFromLatest(spark: SparkSession, root: String): StructType = {
     val v = Snapshots.currentVersion(spark, root)
     require(v > 0, s"snapshot table $root has no committed version to infer a schema from")
     val first = Snapshots.appendedDataFiles(spark, root, 0, v).headOption.getOrElse(
       throw new IllegalArgumentException(s"snapshot table $root lists no data files"))
-    val conf = spark.sessionState.newHadoopConf()
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(first), conf))
-    try toSpark(reader.getFooter.getFileMetaData.getSchema)
-    finally reader.close()
+    ParquetFooters.schema(spark, first)
   }
-
-  /** Footer schema → Spark schema, recursive since round 14
-    * ([[GroupConverters.toSparkType]]): primitives as before — INT32/
-    * INT64 meanings decided by the LOGICAL annotation (DATE = epoch-day
-    * ints, both TIMESTAMP forms = micros longs, catalyst's own
-    * primitive representations) — plus STRUCT/ARRAY/MAP (VERDICT r13
-    * ask #4: the reference's data model is semi-structured, so the
-    * first real table carries them). Unsupported physical layouts stay
-    * loud. */
-  private[v2] def toSpark(mt: MessageType): StructType = StructType(
-    mt.getFields.asScala.map { f =>
-      require(f.getRepetition != PType.Repetition.REPEATED,
-        s"snapshot source: top-level repeated field '${f.getName}' uses the " +
-          "legacy list layout — read it via Snapshots.readSnapshot")
-      StructField(f.getName, GroupConverters.toSparkType(f),
-        f.getRepetition == PType.Repetition.OPTIONAL)
-    }.toSeq)
 }
 
 private[v2] class SnapshotStreamTable(root: String, tableSchema: StructType)
@@ -221,91 +184,12 @@ private[graft] class SnapshotMicroBatchStream(root: String, schema: StructType,
     val e = end.asInstanceOf[SnapshotOffset].v
     if (e <= s) Array.empty
     else Snapshots.appendedDataFiles(spark, root, s, e)
-      .map(SnapshotFilePartition(_): InputPartition).toArray
+      .map(SnapshotFilePartition(_, schema.fieldNames.toSeq): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // the driver's resolved Hadoop conf travels to the executors, so
-    // non-default filesystems (s3a credentials, hdfs nameservices)
-    // resolve in the readers — closes the round-10 "declared: fresh
-    // default conf on the executor" gap
-    new SnapshotReaderFactory(schema,
-      SnapshotReaderFactory.confToMap(spark.sessionState.newHadoopConf()))
+    new SnapshotReaderFactory(schema, schema.length, SnapshotReaderFactory.readerConf(spark))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-private[v2] case class SnapshotFilePartition(path: String) extends InputPartition
-
-private[v2] class SnapshotReaderFactory(schema: StructType,
-    confEntries: Array[(String, String)]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = partition.asInstanceOf[SnapshotFilePartition].path
-    new PartitionReader[InternalRow] {
-      // the factory carries the DRIVER's resolved conf as a plain
-      // serializable entry list (SerializableConfiguration is
-      // private[spark]) — rebuilt here so s3a/hdfs settings reach the
-      // parquet reader on real clusters (round 11; was a fresh default
-      // conf, declared local-only)
-      private val reader: ParquetReader[Group] =
-        ParquetReader.builder(new GroupReadSupport(), new Path(path))
-          .withConf(SnapshotReaderFactory.mapToConf(confEntries)).build()
-      private var cur: Group = _
-      override def next(): Boolean = { cur = reader.read(); cur != null }
-      override def get(): InternalRow = SnapshotReaderFactory.convert(cur, schema)
-      override def close(): Unit = reader.close()
-    }
-  }
-}
-
-private[graft] object SnapshotReaderFactory {
-  /** Driver side: flatten the resolved conf to a serializable entry
-    * list (Configuration itself is not java-serializable). */
-  def confToMap(conf: Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val b = Array.newBuilder[(String, String)]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.result()
-  }
-
-  /** Executor side: rebuild — executor-classpath defaults LOAD first
-    * (heterogeneous clusters carry executor-local core-site/hdfs-site
-    * entries the driver never saw: endpoints, codecs, short-circuit
-    * paths; `loadDefaults = false` would silently drop them), then the
-    * driver's resolved entries overlay them, driver winning on
-    * conflicts. */
-  def mapToConf(entries: Array[(String, String)]): Configuration = {
-    val c = new Configuration()
-    entries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  /** One Group → InternalRow, by position (the schema came from these
-    * files' own footer, so field order matches). Primitive columns keep
-    * the direct reads; STRUCT/ARRAY/MAP recurse through
-    * [[GroupConverters.read]] (round 14). */
-  def convert(g: Group, schema: StructType): InternalRow = {
-    val n = schema.length
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      vals(i) =
-        if (g.getFieldRepetitionCount(i) == 0) null
-        else schema(i).dataType match {
-          case LongType => g.getLong(i, 0)
-          case IntegerType => g.getInteger(i, 0)
-          case DoubleType => g.getDouble(i, 0)
-          case FloatType => g.getFloat(i, 0)
-          case BooleanType => g.getBoolean(i, 0)
-          case StringType => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-          // catalyst stores DATE as epoch-day Int and both timestamp
-          // forms as micros Long — identical physical reads
-          case DateType => g.getInteger(i, 0)
-          case TimestampType | TimestampNTZType => g.getLong(i, 0)
-          case nested => GroupConverters.read(g, i, 0, nested)
-        }
-      i += 1
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
 }

@@ -164,8 +164,16 @@ private[v2] class SnapshotDataWriterFactory(commitDir: String,
       private val parquetSchema: MessageType = SnapshotDataWriterFactory.toParquet(cols)
       // LAZY: an empty partition writes no file at all (file counts
       // stay meaningful; the commit lists only files that exist)
-      private var writer: org.apache.parquet.hadoop.ParquetWriter[
-        org.apache.parquet.example.data.Group] = _
+      private var opened = false
+      private lazy val writer = {
+        opened = true
+        val conf = SnapshotReaderFactory.mapToConf(confEntries)
+        GroupWriteSupport.setSchema(parquetSchema, conf)
+        ExampleParquetWriter.builder(path)
+          .withConf(conf)
+          .withCompressionCodec(CompressionCodecName.SNAPPY)
+          .build()
+      }
       private lazy val factory = new SimpleGroupFactory(parquetSchema)
       // ROW-LEVEL (ReplaceData) layout: when the connector declares no
       // metadata attributes, Spark's group-based rewrite hands the
@@ -177,17 +185,7 @@ private[v2] class SnapshotDataWriterFactory(commitDir: String,
       // silently shifted columns.
       private val off = if (opColumn) 1 else 0
 
-      private def open(): Unit = if (writer == null) {
-        val conf = SnapshotReaderFactory.mapToConf(confEntries)
-        GroupWriteSupport.setSchema(parquetSchema, conf)
-        writer = ExampleParquetWriter.builder(path)
-          .withConf(conf)
-          .withCompressionCodec(CompressionCodecName.SNAPPY)
-          .build()
-      }
-
       override def write(row: InternalRow): Unit = {
-        open()
         if (opColumn) {
           require(row.numFields == cols.length + 1,
             s"row-level write expected [__row_operation | ${cols.length} columns], " +
@@ -219,10 +217,10 @@ private[v2] class SnapshotDataWriterFactory(commitDir: String,
       }
 
       override def commit(): WriterCommitMessage =
-        if (writer == null) SnapshotWriteMessage(Nil)
+        if (!opened) SnapshotWriteMessage(Nil)
         else { writer.close(); SnapshotWriteMessage(Seq(path.toString)) }
 
-      override def abort(): Unit = if (writer != null) {
+      override def abort(): Unit = if (opened) {
         writer.close()
         val conf = SnapshotReaderFactory.mapToConf(confEntries)
         path.getFileSystem(conf).delete(path, false)

@@ -184,7 +184,7 @@ class SnapshotBatchFullSpec extends SparkTestBase {
     assert(e.getMessage.contains("conflicting types"), e.getMessage)
   }
 
-  test("lossless widening casts in-scan; non-widening re-types stay loud") {
+  test("re-types cast in-scan as readSnapshot casts them") {
     val root = freshRoot("widen")
     Snapshots.commitAppend(spark, root,
       (1 to 5).map(i => (i.toLong, i)).toDF("id", "v").coalesce(1)) // v: INT
@@ -196,64 +196,95 @@ class SnapshotBatchFullSpec extends SparkTestBase {
     assert(out.schema("v").dataType == org.apache.spark.sql.types.LongType)
     assert(out.agg(sum("v")).head.getLong(0) == 15L + 600000000000L)
     sameAsReadSnapshot(root)
-    // a non-widening re-type (INT history → DOUBLE is fine, → STRING is
-    // not) fails at PLANNING with the route to readSnapshot
+    // a re-type outside the lossless widenings reads with Spark cast
+    // semantics, as readSnapshot reads it
     val root2 = freshRoot("widenbad")
     Snapshots.commitAppend(spark, root2,
       Seq((1L, 5)).toDF("id", "v").coalesce(1))
     Snapshots.initSchema(spark, root2)
     Snapshots.alterColumnType(spark, root2, "v", "STRING")
-    val e = intercept[Exception] { batchRead(root2).collect() }
-    assert(e.getMessage.contains("readSnapshot"),
-      s"non-widening re-type must route to readSnapshot: ${e.getMessage}")
-    // ...and readSnapshot itself still serves it (Spark cast semantics)
+    assert(batchRead(root2).head.getString(1) == "5")
     assert(Snapshots.readSnapshot(spark, root2).head.getString(1) == "5")
+    sameAsReadSnapshot(root2)
   }
+
+  private type R = (Long, Int, String, java.sql.Timestamp, Long) // id, v, tag, ts, w
 
   test("randomized equivalence: commits, deletes, renames, widens — DSv2 ≡ readSnapshot") {
     // both paths against the test-local reference, not only each other:
-    // they share one key-matching implementation
+    // they share one key-matching implementation. Rows are tracked with
+    // v and w in their first types; the reference casts them to the
+    // current types, as the read paths do
     val rnd = new scala.util.Random(13)
     val root = freshRoot("fuzz")
-    val first = (1 to 20).map(i => (i.toLong, rnd.nextInt(100), s"x$i"))
-    val v1 = Snapshots.commitAppend(spark, root, first.toDF("id", "v", "tag").coalesce(1))
-    Snapshots.initSchema(spark, root)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, String)]
-    rows ++= first.map { case (i, v, t) => (v1, i, v, t) }
-    val deletes = scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
-    var nextId = 21L
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def ts(): java.sql.Timestamp = new java.sql.Timestamp(t0 + rnd.nextInt(50) * 3600000L)
+    def row(i: Long): R = (i, rnd.nextInt(100), s"x$i", ts(), rnd.nextInt(1000) * 1000000007L)
     var tagName = "tag"
+    var vType = "INT"
+    var wType = "BIGINT"
+    // re-types outside the lossless widenings, each applied once
+    val retypes = scala.collection.mutable.Queue(
+      "v" -> (if (rnd.nextBoolean()) "STRING" else "DECIMAL(20,0)"), "w" -> "STRING")
+    def typed(df: DataFrame): DataFrame = df
+      .withColumn("v", col("v").cast(vType)).withColumn("w", col("w").cast(wType))
+    def frame(batch: Seq[R]): DataFrame =
+      typed(batch.toDF("id", "v", tagName, "ts", "w")).coalesce(1)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, R)]
+    val deletes = scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame)]
+    def reference(): DataFrame = referenceRead(
+      typed(rows.toSeq.map { case (ver, (i, v, t, s0, w)) => (ver, i, v, t, s0, w) }
+        .toDF("__ver", "id", "v", tagName, "ts", "w")), deletes.toSeq)
+    // a REPLACE of the live rows materializes pending deletes, which
+    // schema evolution requires
+    def materialize(): Unit = if (deletes.nonEmpty) {
+      val live = reference().select("id").as[Long].collect().toSet
+      val kept = rows.map(_._2).filter(r => live(r._1)).toSeq
+      val vr = Snapshots.commitReplace(spark, root, frame(kept))
+      rows.clear(); rows ++= kept.map(vr -> _); deletes.clear()
+    }
+    def evolve(): Unit = {
+      materialize()
+      if (retypes.nonEmpty && rnd.nextBoolean()) {
+        val (c, t) = retypes.dequeue()
+        Snapshots.alterColumnType(spark, root, c, t)
+        if (c == "v") vType = t else wType = t
+      } else {
+        val to = if (tagName == "tag") "label" else "tag"
+        Snapshots.renameColumn(spark, root, tagName, to); tagName = to
+      }
+    }
+    val first = (1L to 20L).map(row)
+    val v1 = Snapshots.commitAppend(spark, root, frame(first))
+    Snapshots.initSchema(spark, root)
+    rows ++= first.map(v1 -> _)
+    var nextId = 21L
+    def check(what: String): Unit = matchesReference(root, reference(), what)
     for (step <- 1 to 12) {
       rnd.nextInt(4) match {
         case 0 => // append a small batch under the current schema
-          val batch = (0 until 5).map { _ =>
-            val i = nextId; nextId += 1; (i, rnd.nextInt(100), s"x$i")
-          }
-          val v = Snapshots.commitAppend(spark, root,
-            batch.toDF("id", "v", tagName).coalesce(1))
-          rows ++= batch.map { case (i, x, t) => (v, i, x, t) }
+          val batch = (0 until 5).map { _ => val r = row(nextId); nextId += 1; r }
+          val v = Snapshots.commitAppend(spark, root, frame(batch))
+          rows ++= batch.map(v -> _)
         case 1 => // delete a random slice — alternating KEY COLUMNS, so
           // the fuzz also exercises mixed-key delete composition (the
           // r13 in-round find: per-delete-file key resolution)
-          if (rnd.nextBoolean()) {
-            val ids = (1L until nextId).filter(_ => rnd.nextInt(10) == 0)
-            if (ids.nonEmpty)
-              deletes += Snapshots.commitDelete(spark, root, ids.toDF("id")) -> ids.toDF("id")
-          } else {
-            val vs = (0 until 100).filter(_ => rnd.nextInt(25) == 0)
-            if (vs.nonEmpty)
-              deletes += Snapshots.commitDelete(spark, root, vs.toDF("v")) -> vs.toDF("v")
+          val keys = rnd.nextInt(3) match {
+            case 0 => (1L until nextId).filter(_ => rnd.nextInt(10) == 0).toDF("id")
+            case 1 if !vType.startsWith("DECIMAL") => // DECIMAL is no key type
+              typed((0 until 100).filter(_ => rnd.nextInt(25) == 0).map(v => (v, 0L))
+                .toDF("v", "w")).select("v")
+            case _ => rows.map(_._2._4).distinct.filter(_ => rnd.nextInt(8) == 0).toSeq.toDF("ts")
           }
-        case 2 => // rename the tag column back and forth (blocked by pending deletes)
-          val to = if (tagName == "tag") "label" else "tag"
-          try { Snapshots.renameColumn(spark, root, tagName, to); tagName = to }
-          catch { case _: IllegalArgumentException => () } // pending deletes: skip
+          if (!keys.isEmpty) deletes += Snapshots.commitDelete(spark, root, keys) -> keys
+        case 2 => evolve()
         case 3 => () // no-op round
       }
-      matchesReference(root,
-        referenceRead(rows.toSeq.toDF("__ver", "id", "v", tagName), deletes.toSeq),
-        s"step $step")
+      check(s"step $step")
     }
+    while (retypes.nonEmpty) { evolve(); check(s"$vType / $wType") }
+    assert(batchRead(root).schema.map(_.dataType.sql) ==
+      Seq("BIGINT", vType, "STRING", "TIMESTAMP", "STRING"))
   }
 
   test("deletes against the reference: NULL / -0.0 / NaN keys, mixed keys, re-inserts, merge") {

@@ -18,7 +18,9 @@ import graft.sources.Snapshots
   * `readSnapshot` / `readSnapshotPruned` frame starts no Spark job
   * (schemas come from footers on the driver), deletes apply inside the
   * scan as one codegen'd predicate whose answer does not depend on the
-  * physical regime, and the frame reads exactly the live data files. */
+  * physical regime, and the frame reads exactly the live data files.
+  * The DSv2 read of an evolved table with deletes is regime-independent
+  * too. */
 class SnapshotReadPlanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -44,6 +46,24 @@ class SnapshotReadPlanSpec extends SparkTestBase {
       Seq("id"))
     r
   }
+
+  /** A tracked table whose `grp` column was re-typed INT → STRING
+    * between two appends, with deletes keyed on `id` and on `grp`. */
+  private lazy val evolved: String = {
+    val r = freshRoot("evolved")
+    Snapshots.commitAppend(spark, r, (1 to 300).map(i => (i.toLong, i % 7, s"t$i"))
+      .toDF("id", "grp", "tag").repartition(2))
+    Snapshots.initSchema(spark, r)
+    Snapshots.alterColumnType(spark, r, "grp", "STRING")
+    Snapshots.commitAppend(spark, r, (301 to 500).map(i => (i.toLong, s"g${i % 5}", s"t$i"))
+      .toDF("id", "grp", "tag").repartition(2))
+    Snapshots.commitDelete(spark, r, (1L to 500L by 7).toDF("id"))
+    Snapshots.commitDelete(spark, r, Seq("3", "g2").toDF("grp"))
+    r
+  }
+
+  private def dsv2(root: String): DataFrame =
+    spark.read.format("graft.sources.v2.SnapshotBatchSource").option("root", root).load()
 
   private val pruned = Seq(GreaterThanOrEqual("id", 150L), LessThanOrEqual("id", 420L))
 
@@ -75,6 +95,9 @@ class SnapshotReadPlanSpec extends SparkTestBase {
     val wantPruned = sorted(Snapshots.readSnapshotPruned(spark, root, pruned))
     // 600 rows, 67 deleted, 53 more replaced by the merge's 60
     assert(want.size == 540 && wantPruned.nonEmpty)
+    val wantDsv2 = sorted(dsv2(evolved))
+    assert(wantDsv2 == sorted(Snapshots.readSnapshot(spark, evolved)))
+    assert(wantDsv2.nonEmpty && wantDsv2.size < 500)
     val regimes = Seq(
       Map("spark.sql.adaptive.enabled" -> "false"),
       Map("spark.sql.shuffle.partitions" -> "1"),
@@ -87,6 +110,7 @@ class SnapshotReadPlanSpec extends SparkTestBase {
         assert(sorted(Snapshots.readSnapshot(spark, root)) == want, conf.toString)
         assert(sorted(Snapshots.readSnapshotPruned(spark, root, pruned)) == wantPruned,
           conf.toString)
+        assert(sorted(dsv2(evolved)) == wantDsv2, s"DSv2 $conf")
       } finally before.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

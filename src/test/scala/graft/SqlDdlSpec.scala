@@ -138,21 +138,16 @@ class SqlDdlSpec extends SparkTestBase {
     assert(Snapshots.currentVersion(spark, root) == 1L)
   }
 
-  test("a DSv2-unreadable column type fails at PLANNING with the routing message") {
-    // round 15, ADVICE r14 low #2: a tracked DECIMAL column used to plan
-    // fine and die per-row in executors with a generic converter error;
-    // now the driver declines loudly and names the readSnapshot route
+  test("a DECIMAL column reads through SQL as through readSnapshot") {
     val root = freshRoot("decimalplan")
     Snapshots.createTable(spark, root,
       Seq("id" -> "BIGINT", "amt" -> "DECIMAL(10,2)"))
-    // the SQL INSERT path already refuses DECIMAL; load through the API
+    // the SQL INSERT path refuses DECIMAL; load through the API
     Snapshots.commitAppend(spark, root,
       spark.sql("SELECT CAST(1 AS BIGINT) AS id, CAST(1.50 AS DECIMAL(10,2)) AS amt")
         .coalesce(1))
-    val e = intercept[Exception] {
-      spark.sql(s"SELECT id, amt FROM snap.`$root`").collect()
-    }
-    assert(e.getMessage.contains("readSnapshot"),
-      s"planner-side routing message expected, got: ${e.getMessage}")
+    val got = spark.sql(s"SELECT id, amt FROM snap.`$root`").collect().toSeq
+    assert(got == Snapshots.readSnapshot(spark, root).select("id", "amt").collect().toSeq)
+    assert(got.map(_.getDecimal(1)) == Seq(new java.math.BigDecimal("1.50")))
   }
 }

@@ -88,10 +88,10 @@ class SnapshotIsolationSpec extends SparkTestBase {
     val file = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
       .filter(_.endsWith(".parquet")).head
-    val conf = SnapshotReaderFactory.confToMap(spark.sessionState.newHadoopConf())
-    val e = intercept[IllegalStateException] {
-      SnapshotDeleteSets.get(file, Seq("id"), Seq("INT"), conf)
-    }
+    val conf = SnapshotReaderFactory.readerConf(spark)
+    def load(f: String, declared: String) = SnapshotDeleteSets.get(
+      SnapshotDeleteSets.spec(spark, f, Map("id" -> declared), _ => 0), conf)
+    val e = intercept[IllegalStateException] { load(file, "INT") }
     assert(e.getMessage.contains("does not widen losslessly"))
     // the declared widenings still load: INT32 keys read as BIGINT
     val dir2 = freshRoot("widen2")
@@ -99,7 +99,7 @@ class SnapshotIsolationSpec extends SparkTestBase {
     val file2 = new Path(dir2).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir2)).map(_.getPath.toString)
       .filter(_.endsWith(".parquet")).head
-    assert(SnapshotDeleteSets.get(file2, Seq("id"), Seq("BIGINT"), conf) ==
+    assert(load(file2, "BIGINT") ==
       Set(Seq(3L), Seq(7L)))
   }
 
