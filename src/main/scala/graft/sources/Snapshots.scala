@@ -110,7 +110,7 @@ object Snapshots {
     * (round 12) carries the file's per-column min/max STATISTICS
     * ([[encodeStats]]) — what lets a selective read skip whole files
     * WITHOUT opening their footers ([[readSnapshotPruned]]). */
-  private final case class Entry(kind: String, ver: Long, path: String,
+  private[graft] final case class Entry(kind: String, ver: Long, path: String,
       sid: Long = 0L, stats: String = "") {
     def line: String =
       if (kind == "A" && stats.nonEmpty) s"$kind\t$ver\t$path\t$sid\t$stats"
@@ -157,16 +157,16 @@ object Snapshots {
     }
 
   // ---------------------------------------------------------------------
-  // Manifest-level column statistics + file skipping (round 12, VERDICT
-  // r11 ask #1 — the Iceberg/Delta idea that makes a selective scan at
-  // 100 TB not open a million parquet footers: each data file's manifest
-  // line carries per-column min/max, so the PLANNER skips files from the
-  // manifest text alone; only surviving files reach Spark's scan).
+  // Manifest-level column statistics + file skipping (the Iceberg/Delta
+  // idea that makes a selective scan at 100 TB not open a million
+  // parquet footers): each data file's manifest line carries per-column
+  // min/max, so the PLANNER skips files from the manifest text alone;
+  // only surviving files reach Spark's scan.
   //
-  // Collection: one distributed footer pass over the commit's OWN files
-  // (executors aggregate row-group statistics to file min/max — no data
-  // pages are read), collected as a tiny O(files × columns) frame on the
-  // driver and embedded in the manifest lines at publish.
+  // Collection: each write task aggregates the row-group statistics of
+  // the footer it just closed to file min/max ([[statsOfOneFooter]]) and
+  // returns them with the file; the publish embeds them in the manifest
+  // lines. No commit re-opens a footer.
   //
   // Keying: on a schema-tracked table stats are keyed by the column's
   // STABLE ID ("#17"), so renames never orphan them and a re-added
@@ -221,33 +221,7 @@ object Snapshots {
       urlDec(parts(0)) -> ColStats(parts(1).head, urlDec(parts(2)), urlDec(parts(3)))
     }.toMap
 
-  /** Stats collection toggle — on by default; a bulk-load that will
-    * never be read selectively can turn the footer pass off. */
-  private def statsEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.snapshots.stats").forall(_.toBoolean)
-
-  /** Per-file (column, tag, lo, hi) items for a commit's own files —
-    * metadata only, adaptive execution: small commits read footers
-    * DIRECTLY on the driver (a handful of local opens beats a Spark
-    * job's dispatch latency — measured ~1 s/commit at test scale);
-    * large commits run ONE distributed job (at 100 TB a 10k-file commit
-    * is 10k parallel footer opens across executors, not a driver loop).
-    * The result is O(files × columns) bound strings either way. */
-  private def collectRawStats(spark: SparkSession,
-      files: Seq[String]): Map[String, Seq[(String, Char, String, String)]] =
-    if (files.isEmpty || !statsEnabled(spark)) Map.empty
-    else {
-      val confMap = graft.sources.v2.SnapshotReaderFactory.confToMap(
-        spark.sessionState.newHadoopConf())
-      if (files.size <= 16)
-        files.map(p => p -> statsOfOneFooter(p, confMap)).toMap
-      else
-        spark.sparkContext.parallelize(files, math.min(files.size, 32))
-          .map(p => p -> Snapshots.statsOfOneFooter(p, confMap))
-          .collect().toMap
-    }
-
-  /** Executor side: aggregate one parquet file's row-group statistics
+  /** Write-task side: aggregate one parquet file's row-group statistics
     * to file-level min/max per top-level primitive column. A column is
     * dropped (no stat) when any populated row group lacks statistics,
     * when a floating bound is NaN, when a string bound exceeds 64 chars,
@@ -274,14 +248,20 @@ object Snapshots {
           val st = cc.getStatistics
           val chunk: Option[Option[(Char, Any, Any)]] =
             if (st == null || st.isEmpty) Some(None) // poison
-            else if (!st.hasNonNullValue) Some(Some(('n', "", ""))) // all-NULL chunk
+            // all-NULL only when every value is a null: parquet keeps a
+            // null count but no min/max for INT96, so a chunk with
+            // values and no bounds is unknown
+            else if (!st.hasNonNullValue)
+              if (st.isNumNullsSet && st.getNumNulls == cc.getValueCount)
+                Some(Some(('n', "", "")))
+              else Some(None)
             else cc.getPrimitiveType.getPrimitiveTypeName match {
               // The LOGICAL type annotation decides what an INT32/INT64
-              // physically stores (ADVICE r12 high: DECIMAL(p<=18) is
-              // stored as its UNSCALED integer — tagging it 'l' recorded
-              // unscaled bounds, and a pushed BigDecimal predicate
-              // compared against them could wrongly EXCLUDE files, i.e.
-              // silently wrong results). Plain ints stay 'l'; DATE gets
+              // physically stores (DECIMAL(p<=18) is stored as its
+              // UNSCALED integer — tagging it 'l' would record unscaled
+              // bounds, and a pushed BigDecimal predicate compared
+              // against them could wrongly EXCLUDE files, i.e. silently
+              // wrong results). Plain ints stay 'l'; DATE gets
               // 't' (epoch days), TIMESTAMP 'u' (micros), DECIMAL 'm'
               // (exact plain-string decimal — never rounded through a
               // double); anything unrecognized drops the stat (keep).
@@ -389,8 +369,8 @@ object Snapshots {
         }
       case d: DecimalLogicalTypeAnnotation =>
         // the physical value is the UNSCALED integer — rescale to the
-        // exact decimal (ADVICE r12: comparing a pushed BigDecimal
-        // against unscaled bounds wrongly excluded files)
+        // exact decimal (comparing a pushed BigDecimal against
+        // unscaled bounds would wrongly exclude files)
         Some(Some(('m', java.math.BigDecimal.valueOf(lo, d.getScale),
           java.math.BigDecimal.valueOf(hi, d.getScale))))
       case _ => Some(None) // unsigned ints, TIME, … — never guess
@@ -435,7 +415,12 @@ object Snapshots {
     finally in.close()
   }
 
-  private def entries(spark: SparkSession, root: String, v: Long): Seq[Entry] =
+  /** The parsed manifest of version `v`: one read. A caller asking
+    * several questions of one version (a DSv2 scan plan) reads it once
+    * and passes the entries down; versions are immutable, but a table
+    * root can be dropped and re-created, so nothing caches them across
+    * calls. */
+  private[graft] def entries(spark: SparkSession, root: String, v: Long): Seq[Entry] =
     readManifest(spark, root, v).map(parseEntry)
 
   private def writeManifest(spark: SparkSession, root: String, v: Long,
@@ -661,11 +646,41 @@ object Snapshots {
 
   private def uuid8 = java.util.UUID.randomUUID.toString.take(8)
 
-  /** The parquet files a commit just wrote under its private subdir. */
-  private def dataFiles(spark: SparkSession, dir: Path): Seq[String] = {
-    val f = fs(spark, dir)
-    f.listStatus(dir).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).sorted.toSeq
+  // ---------------------------------------------------------------------
+  // Commits. Every commit writes its files through the lake's one writer
+  // ([[graft.sources.v2.SnapshotFileWriter]]: Spark's parquet output
+  // under the session's write settings) into a commit-private directory
+  // `data/c-<uuid>` or `deletes/c-<uuid>`, with no committer rename and
+  // no `_SUCCESS` marker. Each write task returns its file with the
+  // stats of the footer it just closed, so the publish neither lists a
+  // directory nor re-reads a footer. The `commit*Files` publishers take
+  // those written files; the manifest publish is the commit point.
+  // ---------------------------------------------------------------------
+
+  /** Write `df` under `dir` (relative to `root`), one file per task, in
+    * one Spark job: the `FileFormatWriter` file-set rule — task 0 writes
+    * a file even when empty (so an empty frame keeps its schema in a
+    * footer), other empty tasks write none, and a frame with no
+    * partitions runs one empty task. Returns the files sorted by path. */
+  private def writeFiles(spark: SparkSession, root: String, dir: String,
+      df: DataFrame): Seq[graft.sources.v2.WrittenFile] = {
+    val writer = graft.sources.v2.SnapshotFileWriter(spark, s"$root/$dir/c-$uuid8", df.schema)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(df.queryExecution,
+        Some("snapshot commit")) {
+      val rows = df.queryExecution.toRdd
+      val tasks =
+        if (rows.getNumPartitions > 0) rows
+        else spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
+      tasks.mapPartitionsWithIndex((i, it) => writer.write(i, it, always = i == 0).iterator)
+        .collect().toSeq.sortBy(_.path)
+    }
+  }
+
+  /** The manifest line of data file `f` committed at version `v`. */
+  private def dataLine(v: Long, carried: Seq[Entry])(f: graft.sources.v2.WrittenFile): String = {
+    val schema = currentSchema(carried)
+    Entry("A", v, f.path, schema.map(_._1).getOrElse(0L),
+      encodeStats(f.stats, statKeyer(schema))).line
   }
 
   /** Latest tracked schema among `carried`'s S entries, if any. */
@@ -682,13 +697,16 @@ object Snapshots {
   private def checkWriteSchema(carried: Seq[Entry],
       written: org.apache.spark.sql.types.StructType, what: String): Unit =
     currentSchema(carried).foreach { case (_, cur) =>
-      val got = written.fields.map(f => f.name -> f.dataType.sql).toMap
+      val got = written.fields.map(f => f.name -> f.dataType).toMap
       require(got.keySet == cur.map(_.name).toSet,
         s"$what columns ${got.keySet.toSeq.sorted.mkString(",")} must match the " +
           s"tracked schema ${cur.map(_.name).sorted.mkString(",")}")
+      // nullability is no type difference: a NOT NULL nested field (a
+      // SQL write keeps its query's) is a valid value of the nullable one
       cur.foreach { c =>
-        require(got(c.name) == c.typ,
-          s"$what column '${c.name}' has type ${got(c.name)} but the tracked " +
+        require(org.apache.spark.sql.graftbridge.SchemaBridge.equalsIgnoreCompatibleNullability(
+            got(c.name), org.apache.spark.sql.types.DataType.fromDDL(c.typ)),
+          s"$what column '${c.name}' has type ${got(c.name).sql} but the tracked " +
             s"schema requires ${c.typ}")
       }
     }
@@ -698,44 +716,34 @@ object Snapshots {
     * On a schema-tracked table the new files are stamped with the
     * current schema version and the column names are checked loudly.
     * Returns the committed version number. */
-  def commitAppend(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val dataDir = new Path(root, s"data/c-$uuid8")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    commitAppendFiles(spark, root, dataFiles(spark, dataDir), df.schema)
-  }
+  def commitAppend(spark: SparkSession, root: String, df: DataFrame): Long =
+    commitAppendFiles(spark, root, writeFiles(spark, root, "data", df), df.schema)
 
-  /** APPEND of ALREADY-WRITTEN parquet files (the DSv2 write path,
-    * round 13): executors wrote the files under a commit-private
-    * directory; this is the driver-side publish — stats footer pass +
-    * the ordinary claim-serialized manifest commit. `written` is the
-    * files' schema, checked loudly against a tracked binding exactly
-    * like [[commitAppend]]. */
+  /** APPEND of written files (the DSv2 write path and [[commitAppend]]):
+    * the claim-serialized manifest publish. `written` is the files'
+    * schema, checked loudly against a tracked binding. */
   private[graft] def commitAppendFiles(spark: SparkSession, root: String,
-      mine: Seq[String], written: org.apache.spark.sql.types.StructType): Long = {
-    val raw = collectRawStats(spark, mine)
+      mine: Seq[graft.sources.v2.WrittenFile],
+      written: org.apache.spark.sql.types.StructType): Long =
     publish(spark, root) { (v, carried) =>
       checkWriteSchema(carried, written, "commitAppend")
-      val sid = currentSchema(carried).map(_._1).getOrElse(0L)
-      val keyer = statKeyer(currentSchema(carried))
-      carried.map(_.line) ++ mine.map(p =>
-        Entry("A", v, p, sid, encodeStats(raw.getOrElse(p, Nil), keyer)).line)
+      carried.map(_.line) ++ mine.map(dataLine(v, carried))
     }
-  }
 
-  /** [[commitAppendFiles]] with an ATOMIC idempotence marker (round 14
-    * — the streaming sink's exactly-once handshake): the transaction id
+  /** [[commitAppendFiles]] with an ATOMIC idempotence marker (the
+    * streaming sink's exactly-once handshake): the transaction id
     * is committed as a `T` manifest entry IN THE SAME atomic version as
     * the data files, so there is no marker-after-commit crash window
     * (the [[commitMergeOnce]] side-file design has one; merge semantics
     * make it benign there — append semantics would not). A replayed
     * epoch whose id is already carried returns the current version and
     * publishes nothing. Markers are carried by EVERY commit kind —
-    * appends, deletes, rewrites AND replaces (round 15, ADVICE r14: a
-    * compaction running concurrently with a live stream must not reopen
-    * the exactly-once window) — and die only with the table.
+    * appends, deletes, rewrites AND replaces (a compaction running
+    * concurrently with a live stream must not reopen the exactly-once
+    * window) — and die only with the table.
     *
-    * Marker GROWTH is bounded to ONE PER WRITER (round 15, ADVICE r14
-    * medium #2 — the Delta `SetTransaction` model): ids of the shape
+    * Marker GROWTH is bounded to ONE PER WRITER (the Delta
+    * `SetTransaction` model): ids of the shape
     * `<writer>-e<epoch>` (the streaming sink's `sq-<queryId>-e<n>`) are
     * parsed, the dedupe check is `carried epoch >= this epoch` (epochs
     * are monotone per writer), and publishing DROPS the writer's older
@@ -770,13 +778,12 @@ object Snapshots {
   }
 
   private[graft] def commitAppendFilesOnce(spark: SparkSession, root: String,
-      mine: Seq[String], written: org.apache.spark.sql.types.StructType,
-      txnId: String): Long = {
+      mine: Seq[graft.sources.v2.WrittenFile],
+      written: org.apache.spark.sql.types.StructType, txnId: String): Long = {
     require(txnId.matches("[A-Za-z0-9._-]+"), s"unsafe txn id: $txnId")
     val writer = parseTxnId(txnId).map(_._1)
     val cur = currentVersion(spark, root)
     if (cur > 0 && txnCommitted(entries(spark, root, cur), txnId)) return cur
-    val raw = collectRawStats(spark, mine)
     final class AlreadyCommitted extends RuntimeException
     try publish(spark, root) { (v, carried) =>
       // re-check under the claim (the marker may have landed between the
@@ -784,22 +791,15 @@ object Snapshots {
       // the claim and we answer with the committed version
       if (txnCommitted(carried, txnId)) throw new AlreadyCommitted
       checkWriteSchema(carried, written, "commitAppend")
-      val sid = currentSchema(carried).map(_._1).getOrElse(0L)
-      val keyer = statKeyer(currentSchema(carried))
       // one marker per writer: this epoch's marker REPLACES the writer's
       // previous one (strictly older — the committed check above threw
       // otherwise); foreign writers' markers are untouched
       val kept = carried.filterNot(e => e.kind == "T" &&
         writer.exists(w => parseTxnId(e.path).exists(_._1 == w)))
-      kept.map(_.line) ++ (Entry("T", v, txnId).line +: mine.map(p =>
-        Entry("A", v, p, sid, encodeStats(raw.getOrElse(p, Nil), keyer)).line))
+      kept.map(_.line) ++ (Entry("T", v, txnId).line +: mine.map(dataLine(v, carried)))
     } catch { case _: AlreadyCommitted => currentVersion(spark, root) }
   }
 
-  /** REPLACE with already-written files — the INSERT OVERWRITE half of
-    * the DSv2 write path: one atomic version listing only the new
-    * files, schema entries carried, pending deletes materialized away
-    * (the [[commitReplace]] semantics). */
   /** A read-modify-write commit (clustering, UPDATE/MERGE rewrites)
     * found that the table changed between its read and its claim —
     * publishing would silently DROP the concurrent commit's entries.
@@ -809,15 +809,18 @@ object Snapshots {
       s"table $root changed between a rewrite's read and its publish — the " +
         "rewrite must re-read and retry (its commit-private files are unused)")
 
+  /** REPLACE with written files (INSERT OVERWRITE and [[commitReplace]]):
+    * one atomic version listing only the new files, schema entries and
+    * idempotence markers carried, pending deletes materialized away. */
   private[graft] def commitReplaceFiles(spark: SparkSession, root: String,
-      mine: Seq[String], written: org.apache.spark.sql.types.StructType,
-      expectCarried: Option[Set[String]] = None): Long = {
-    val raw = collectRawStats(spark, mine)
+      mine: Seq[graft.sources.v2.WrittenFile],
+      written: org.apache.spark.sql.types.StructType,
+      expectCarried: Option[Set[String]] = None): Long =
     publish(spark, root) { (v, carried) =>
-      // READ-SET VALIDATION (round 14, ADVICE r13 medium #2): a REPLACE
-      // whose content was DERIVED from a read of the table (clustering
-      // compaction) is a read-modify-write — an append/merge that
-      // committed between the read and this claim is present in
+      // READ-SET VALIDATION: a REPLACE whose content was DERIVED from a
+      // read of the table (clustering compaction) is a read-modify-write
+      // — an append/merge that committed between the read and this
+      // claim is present in
       // `carried` but would be dropped by the replace, a silent lost
       // update. When the caller passes the data/delete entry lines its
       // read consumed, any difference aborts the publish (the claim is
@@ -830,19 +833,15 @@ object Snapshots {
         if (now != exp) throw new ConcurrentTableChangeException(root)
       }
       checkWriteSchema(carried, written, "commitReplace")
-      val sid = currentSchema(carried).map(_._1).getOrElse(0L)
-      val keyer = statKeyer(currentSchema(carried))
-      // T idempotence markers are CARRIED through a replace (round 15,
-      // ADVICE r14 medium #1): a compaction/INSERT OVERWRITE that lands
-      // between a streaming epoch's commit and its checkpoint write must
+      // T idempotence markers are CARRIED through a replace: a
+      // compaction/INSERT OVERWRITE that lands between a streaming
+      // epoch's commit and its checkpoint write must
       // not reopen the exactly-once window — markers are metadata lines,
       // not data files, and cost nothing to keep. They die only with the
       // table (DROP) — there is no separate truncate verb.
       carried.filter(e => e.kind == "S" || e.kind == "T").map(_.line) ++
-        mine.map(p =>
-          Entry("A", v, p, sid, encodeStats(raw.getOrElse(p, Nil), keyer)).line)
+        mine.map(dataLine(v, carried))
     }
-  }
 
   /** REPLACE commit: new version lists ONLY `df`'s files (compaction /
     * rewrite), dropping carried delete files too — a replace
@@ -850,15 +849,12 @@ object Snapshots {
     * compaction does not forget the table's column identity). Prior
     * versions keep reading their own files — nothing is deleted until
     * [[vacuum]]. */
-  def commitReplace(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val dataDir = new Path(root, s"data/c-$uuid8")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    commitReplaceFiles(spark, root, dataFiles(spark, dataDir), df.schema)
-  }
+  def commitReplace(spark: SparkSession, root: String, df: DataFrame): Long =
+    commitReplaceFiles(spark, root, writeFiles(spark, root, "data", df), df.schema)
 
-  /** CLUSTERING compaction (round 13, VERDICT r12 ask #4): a REPLACE
-    * commit that RE-SORTS the table by `sortCols` into `numFiles`
-    * range-partitioned, internally-sorted files and regenerates the
+  /** CLUSTERING compaction: a REPLACE commit that RE-SORTS the table
+    * by `sortCols` into `numFiles` range-partitioned, internally-sorted
+    * files and regenerates the
     * manifest statistics — the snapshot-native form of
     * `OPTIMIZE … ZORDER`/`rewrite_data_files(sort)`. On a table whose
     * ingest order scatters values across every file, per-file min/max
@@ -882,9 +878,9 @@ object Snapshots {
     require(sortCols.nonEmpty, "clustering needs at least one sort column")
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val cols = sortCols.map(col)
-    // VALIDATED read-modify-write (round 14, ADVICE r13 medium #2): pin
-    // the version the rewrite reads, remember exactly the data/delete
-    // entries it consumed, and let commitReplaceFiles abort the publish
+    // VALIDATED read-modify-write: pin the version the rewrite reads,
+    // remember exactly the data/delete entries it consumed, and let
+    // commitReplaceFiles abort the publish
     // if the table changed in between — then re-read and retry, so a
     // concurrent append/merge is never silently dropped by the replace.
     // Retries are bounded: each one consumes a full re-read + re-sort,
@@ -894,7 +890,7 @@ object Snapshots {
       cur.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*))
   }
 
-  /** Z-ORDER clustering compaction (round 14): a REPLACE that re-lays
+  /** Z-ORDER clustering compaction: a REPLACE that re-lays
     * the table on the MORTON interleave of two keys
     * ([[FileView.zOrdered]] — min-max-normalized bit interleave, pure
     * codegen'd arithmetic), so each rewritten file covers a compact
@@ -912,7 +908,7 @@ object Snapshots {
   }
 
   /** The VALIDATED read-modify-write REPLACE loop shared by the layout
-    * rewrites (ADVICE r13 medium #2): pin the version the rewrite
+    * rewrites: pin the version the rewrite
     * reads, remember exactly the data/delete entries it consumed, let
     * [[commitReplaceFiles]] abort the publish if the table changed in
     * between — then re-read and retry, so a concurrent append/merge is
@@ -927,17 +923,19 @@ object Snapshots {
       val consumed = entries(spark, root, v0)
         .filter(e => e.kind == "A" || e.kind == "D").map(_.line).toSet
       val cur = readSnapshot(spark, root, v0)
-      val dataDir = new Path(root, s"data/c-$uuid8")
-      xform(cur).write.mode("overwrite").parquet(dataDir.toString)
+      val mine = writeFiles(spark, root, "data", xform(cur))
       try {
-        return commitReplaceFiles(spark, root, dataFiles(spark, dataDir),
-          cur.schema, expectCarried = Some(consumed))
+        return commitReplaceFiles(spark, root, mine, cur.schema,
+          expectCarried = Some(consumed))
       } catch {
         case _: ConcurrentTableChangeException if attempt < 5 =>
           // the losing attempt's commit-private files are unreferenced
           // by any manifest — reclaim them now rather than waiting for
           // the orphan sweep
-          fs(spark, dataDir).delete(dataDir, true)
+          mine.headOption.foreach { f =>
+            val dir = new Path(f.path).getParent
+            fs(spark, dir).delete(dir, true)
+          }
           attempt += 1
       }
     }
@@ -945,7 +943,7 @@ object Snapshots {
   }
 
   /** REWRITE commit — the storage half of copy-on-write SQL UPDATE /
-    * MERGE INTO / non-equality DELETE (round 14, VERDICT r13 ask #3):
+    * MERGE INTO / non-equality DELETE:
     * atomically swap exactly `removed` data files for `added` ones, in
     * ONE version. Everything else is carried: untouched data files,
     * schema entries, and delete entries up to `readVersion` (they still
@@ -963,9 +961,8 @@ object Snapshots {
     * of other files (snapshot-isolation semantics, the Iceberg
     * validate-and-retry posture). */
   private[graft] def commitRewriteFiles(spark: SparkSession, root: String,
-      removed: Seq[String], added: Seq[String],
-      written: org.apache.spark.sql.types.StructType, readVersion: Long): Long = {
-    val raw = collectRawStats(spark, added)
+      removed: Seq[String], added: Seq[graft.sources.v2.WrittenFile],
+      written: org.apache.spark.sql.types.StructType, readVersion: Long): Long =
     publish(spark, root) { (v, carried) =>
       val dataPaths = carried.filter(_.kind == "A").map(_.path).toSet
       val removedSet = removed.toSet
@@ -975,21 +972,17 @@ object Snapshots {
       checkWriteSchema(carried, written, "commitRewrite")
       // a SCHEMA-TRACKED table may legally end up with zero data files —
       // readEntries serves it as an empty frame with the tracked schema
-      // (round 15, ADVICE r14 medium #3: an all-rows rewrite DELETE on a
-      // tracked table is valid). Untracked tables keep >= 1 file: their
+      // (an all-rows rewrite DELETE on a tracked table is valid).
+      // Untracked tables keep >= 1 file: their
       // schema lives only in their data files' footers.
       require(currentSchema(carried).isDefined ||
           carried.count(_.kind == "A") - removedSet.size + added.size > 0,
         s"rewrite would leave UNTRACKED table $root with no data files (its " +
           "schema lives in the files) — an all-rows DELETE on an untracked " +
           "table should commitReplace a new table instead")
-      val sid = currentSchema(carried).map(_._1).getOrElse(0L)
-      val keyer = statKeyer(currentSchema(carried))
       carried.filterNot(e => e.kind == "A" && removedSet(e.path)).map(_.line) ++
-        added.map(p =>
-          Entry("A", v, p, sid, encodeStats(raw.getOrElse(p, Nil), keyer)).line)
+        added.map(dataLine(v, carried))
     }
-  }
 
   /** Equality-delete keys must be of a type both read paths match
     * exactly ([[graft.sources.v2.SnapshotDeleteSets.PrimitiveDdl]]:
@@ -1013,17 +1006,15 @@ object Snapshots {
     * delete commits against one table must share the key schema. */
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame): Long = {
     checkDeleteKeyTypes(keys.schema, "commitDelete")
-    val delDir = new Path(root, s"deletes/c-$uuid8")
-    keys.dropDuplicates().write.mode("overwrite").parquet(delDir.toString)
-    val mine = dataFiles(spark, delDir)
+    val mine = writeFiles(spark, root, "deletes", keys.dropDuplicates())
     publish(spark, root) { (v, carried) =>
       require(carried.exists(_.kind == "A"), s"cannot delete from an empty table $root")
       // keys must name current columns AND carry the current TYPES — both
       // read paths compare key tuples in the current type domain, and a
       // narrower/wider key file would silently match nothing. UNTRACKED
       // tables get the same check against the first data file's footer
-      // (ADVICE r13 medium #1: the natural Scala-literal shape
-      // `Seq(3L).toDF` against an INT column).
+      // (the natural Scala-literal shape `Seq(3L).toDF` against an INT
+      // column).
       val curTypes: Map[String, String] = currentSchema(carried) match {
         case Some((_, cur)) => cur.map(c => c.name -> c.typ).toMap
         case None =>
@@ -1038,7 +1029,7 @@ object Snapshots {
           s"delete key '${f.name}' has type ${f.dataType.sql} but the table " +
             s"column is ${curTypes(f.name)}")
       }
-      carried.map(_.line) ++ mine.map(p => Entry("D", v, p).line)
+      carried.map(_.line) ++ mine.map(f => Entry("D", v, f.path).line)
     }
   }
 
@@ -1053,22 +1044,14 @@ object Snapshots {
       keyCols: Seq[String]): Long = {
     checkDeleteKeyTypes(org.apache.spark.sql.types.StructType(
       keyCols.map(k => updates.schema(k))), "commitMerge")
-    val dataDir = new Path(root, s"data/c-$uuid8")
-    updates.write.mode("overwrite").parquet(dataDir.toString)
-    val delDir = new Path(root, s"deletes/c-$uuid8")
-    updates.select(keyCols.map(col): _*).dropDuplicates()
-      .write.mode("overwrite").parquet(delDir.toString)
-    val dels = dataFiles(spark, delDir)
-    val adds = dataFiles(spark, dataDir)
-    val raw = collectRawStats(spark, adds)
+    val adds = writeFiles(spark, root, "data", updates)
+    val dels = writeFiles(spark, root, "deletes",
+      updates.select(keyCols.map(col): _*).dropDuplicates())
     publish(spark, root) { (v, carried) =>
       require(carried.exists(_.kind == "A"), s"cannot merge into an empty table $root")
       checkWriteSchema(carried, updates.schema, "commitMerge")
-      val sid = currentSchema(carried).map(_._1).getOrElse(0L)
-      val keyer = statKeyer(currentSchema(carried))
-      carried.map(_.line) ++ dels.map(p => Entry("D", v, p).line) ++
-        adds.map(p =>
-          Entry("A", v, p, sid, encodeStats(raw.getOrElse(p, Nil), keyer)).line)
+      carried.map(_.line) ++ dels.map(f => Entry("D", v, f.path).line) ++
+        adds.map(dataLine(v, carried))
     }
   }
 
@@ -1344,16 +1327,15 @@ object Snapshots {
 
   /** The key columns of a version's delete files (each file's own
     * footer columns), in first-seen order. */
-  private[graft] def deleteKeyColumns(spark: SparkSession, root: String,
-      version: Long): Seq[String] =
-    keyColumns(spark, entries(spark, root, version).filter(_.kind == "D"))
+  private[graft] def deleteKeyColumns(spark: SparkSession, es: Seq[Entry]): Seq[String] =
+    keyColumns(spark, es.filter(_.kind == "D"))
 
   private def keyColumns(spark: SparkSession, dels: Seq[Entry]): Seq[String] =
     dels.flatMap(e => ParquetFooters.schema(spark, e.path).fieldNames).distinct
 
-  /** Plan the DSv2 scan of a version: the surviving (manifest-pruned)
-    * data files, each with its column bindings and its scoped delete
-    * files. Contracts:
+  /** Plan the DSv2 scan of one version's entries `es`: the surviving
+    * (manifest-pruned) data files, each with its column bindings and its
+    * scoped delete files. Contracts:
     *  - `readNames` are the columns every file task reads (the required
     *    ones, then the delete-key columns); `tableCols` is the full
     *    current schema (name → DDL);
@@ -1370,13 +1352,11 @@ object Snapshots {
     *  - a data file is scoped by the deletes committed STRICTLY after
     *    it; delete-key types are checked here
     *    ([[graft.sources.v2.SnapshotDeleteSets.spec]]). */
-  private[graft] def fullScanSpecs(spark: SparkSession, root: String,
-      filters: Seq[org.apache.spark.sql.sources.Filter], version: Long,
+  private[graft] def fullScanSpecs(spark: SparkSession, root: String, es: Seq[Entry],
+      filters: Seq[org.apache.spark.sql.sources.Filter],
       readNames: Seq[String], tableCols: Seq[(String, String)],
       untrackedCols: => Map[Long, Set[String]]): Seq[FullScanFile] = {
     import org.apache.spark.sql.types.DataType
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
     val data = pruneDataEntries(es, filters, keepAnchor = false)._1.filter(_.kind == "A")
     val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
     val delSpecs = es.filter(_.kind == "D").map(e => e.ver ->
@@ -1424,7 +1404,7 @@ object Snapshots {
   /** Per-data-file facts of a version for the `$files` METADATA TABLE
     * (round 13 — Iceberg's `table.files` inspection surface): (path,
     * committing version, schema version, row count, on-disk bytes),
-    * the last two None when the file predates stats or had them off.
+    * the last two None when the file was published without stats.
     * O(files) manifest text, zero data IO. */
   private[graft] def fileInfos(spark: SparkSession, root: String,
       version: Long): Seq[(String, Long, Long, Option[Long], Option[Long])] = {
@@ -1571,11 +1551,8 @@ object Snapshots {
     * VERSION — O(commits), not O(files) — is enough to know every
     * column the table ever carried; at 100 TB that is the difference
     * between reading tens of footers and a million. */
-  private[graft] def untrackedVersionFiles(spark: SparkSession, root: String,
-      version: Long = -1L): Seq[(Long, String)] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    commitRepresentatives(entries(spark, root, v).filter(_.kind == "A"))
-  }
+  private[graft] def untrackedVersionFiles(es: Seq[Entry]): Seq[(Long, String)] =
+    commitRepresentatives(es.filter(_.kind == "A"))
 
   /** One data file per committing version of `data`, ascending. */
   private def commitRepresentatives(data: Seq[Entry]): Seq[(Long, String)] =
@@ -1584,7 +1561,7 @@ object Snapshots {
   /** METADATA-ONLY aggregates — answered from the manifest alone, zero
     * data IO (the Iceberg "metadata table" capability: a 100 TB
     * count(*) or min/max in one manifest read). Defined only when EVERY
-    * data file carries the needed stat; any gap (stats-off commits,
+    * data file carries the needed stat; any gap (stats-less files,
     * unsupported type, over-long string bounds) returns None — a caller
     * falls back to the scan, never to a wrong answer. All-NULL files
     * (tag 'n') are known to contribute no values and don't break
@@ -1712,11 +1689,8 @@ object Snapshots {
     * sizes, Spark's own join strategy can auto-broadcast a selective
     * read of a huge table. Either component is None when any surviving
     * file lacks the reserved stat (never a guess). */
-  private[graft] def prunedScanEstimate(spark: SparkSession, root: String,
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      version: Long = -1L): (Option[Long], Option[Long]) = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
+  private[graft] def prunedScanEstimate(es: Seq[Entry],
+      filters: Seq[org.apache.spark.sql.sources.Filter]): (Option[Long], Option[Long]) = {
     val kept = pruneDataEntries(es, filters, keepAnchor = false)._1
       .filter(_.kind == "A")
     def total(key: String): Option[Long] = {

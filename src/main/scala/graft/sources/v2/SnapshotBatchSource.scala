@@ -46,11 +46,16 @@ import graft.sources.{ParquetFooters, Snapshots}
   *    task probes its sequence-scoped delete sets
   *    ([[SnapshotDeleteSets]]) — no join, no shuffle, and file skipping
   *    still composes (a filter only removes candidate rows).
+  *  - Writes (`INSERT INTO`, `INSERT OVERWRITE`, the streaming sink,
+  *    `UPDATE`/`MERGE`) go through the lake's one writer
+  *    ([[SnapshotFileWriter]]), the one `Snapshots.commitAppend` uses:
+  *    every column type the table holds is written as
+  *    `df.write.parquet` writes it, and the manifest stats come from
+  *    the write task.
   * Edges that stay loud: delete files whose key types do not widen
   * losslessly to the current column types fail at planning; an
   * untracked column re-typed across commits is not additive and fails
-  * at planning; the SQL write path is primitive-only (nested tables are
-  * written through `commitAppend`).
+  * at planning.
   * Reference anchor: the reference's bulk data surface is a
   * raw S3 prefix (src/copy_from_template.py:316-327); this is that
   * prefix read as a planned table. */
@@ -88,7 +93,8 @@ private[v2] object SnapshotBatchSource {
           org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
       })
       case None =>
-        val shape = untrackedShape(spark, root, version)
+        val v = if (version >= 0) version else Snapshots.currentVersion(spark, root)
+        val shape = untrackedShape(spark, root, v, Snapshots.entries(spark, root, v))
         StructType(shape.mergedCols.map { case (n, t) =>
           org.apache.spark.sql.types.StructField(n,
             org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
@@ -110,13 +116,12 @@ private[v2] object SnapshotBatchSource {
   private val shapeCache =
     new java.util.concurrent.ConcurrentHashMap[String, UntrackedShape]()
 
-  private[v2] def untrackedShape(spark: SparkSession, root: String,
-      version: Long): UntrackedShape = {
-    val v = if (version >= 0) version else Snapshots.currentVersion(spark, root)
+  private[v2] def untrackedShape(spark: SparkSession, root: String, v: Long,
+      es: => Seq[Snapshots.Entry]): UntrackedShape = {
     val key = s"$root@$v"
     val hit = shapeCache.get(key)
     if (hit != null) return hit
-    val reps = Snapshots.untrackedVersionFiles(spark, root, v)
+    val reps = Snapshots.untrackedVersionFiles(es)
     require(reps.nonEmpty, s"snapshot table $root has no data files at version $v")
     val perVer: Seq[(Long, Seq[(String, String)])] = reps.map { case (ver, path) =>
       ver -> ParquetFooters.schema(spark, path).fields.map(f => f.name -> f.dataType.sql).toSeq
@@ -161,8 +166,8 @@ private[v2] class SnapshotBatchTable(root: String, version: Long,
       longOpt("maxVersionsPerTrigger"), longOpt("maxFilesPerTrigger"))
   }
   /** INSERT INTO → append commit; INSERT OVERWRITE → replace commit
-    * (round 13, [[SnapshotWriteBuilder]]). A version-pinned read is a
-    * snapshot, not a table — writing to one is refused loudly. */
+    * ([[SnapshotWriteBuilder]]). A version-pinned read is a snapshot,
+    * not a table — writing to one is refused loudly. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -492,6 +497,8 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
   // scan, exactly like readSnapshot's frozen file list)
   private lazy val resolvedVersion: Long =
     if (version >= 0) version else Snapshots.currentVersion(spark, root)
+  // the pinned version's manifest, read once for every planning call
+  private lazy val entries = Snapshots.entries(spark, root, resolvedVersion)
   // RUNTIME file pruning (dynamic-partition-pruning shape): when this
   // scan is the fact side of a join, Spark delivers the dim side's key
   // set as an In filter AT EXECUTION — files whose ranges miss every
@@ -526,8 +533,8 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
     * broadcast join unaided. Unknown components stay empty (Spark
     * falls back to its defaults), never a guess. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val (rows, bytes) = Snapshots.prunedScanEstimate(spark, root,
-      (pushed ++ runtime).toIndexedSeq, resolvedVersion)
+    val (rows, bytes) = Snapshots.prunedScanEstimate(entries,
+      (pushed ++ runtime).toIndexedSeq)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         bytes.fold(java.util.OptionalLong.empty)(java.util.OptionalLong.of)
@@ -563,14 +570,14 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
   // the columns each file task reads: the required ones, then the
   // delete-key columns the scoped deletes probe
   private lazy val readNames: Seq[String] =
-    required.fieldNames.toSeq ++ Snapshots.deleteKeyColumns(spark, root, resolvedVersion)
+    required.fieldNames.toSeq ++ Snapshots.deleteKeyColumns(spark, entries)
       .filterNot(required.fieldNames.contains)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val specs = Snapshots.fullScanSpecs(spark, root,
-      (pushed ++ runtime).toIndexedSeq, resolvedVersion, readNames,
+    val specs = Snapshots.fullScanSpecs(spark, root, entries,
+      (pushed ++ runtime).toIndexedSeq, readNames,
       tableSchema.fields.map(f => f.name -> f.dataType.sql).toSeq,
-      SnapshotBatchSource.untrackedShape(spark, root, resolvedVersion).colsByVersion)
+      SnapshotBatchSource.untrackedShape(spark, root, resolvedVersion, entries).colsByVersion)
     // row-level rewrite: the write's commit swaps EXACTLY these files
     rowLevel.foreach { op =>
       op.scannedPaths = specs.map(_.path); op.scanVersion = resolvedVersion
@@ -633,8 +640,8 @@ private[graft] object SnapshotDeleteSets {
 
   /** The primitive DDL domain of equality-delete keys:
     * `Snapshots.commitDelete` and `commitMerge` reject key columns of
-    * any other type, and the SQL row-level write path serves only
-    * tables of these types. */
+    * any other type, and runtime file pruning acts only on columns of
+    * these types. */
   val PrimitiveDdl: Set[String] = Set("BIGINT", "INT", "DOUBLE", "FLOAT",
     "BOOLEAN", "STRING", "DATE", "TIMESTAMP", "TIMESTAMP_NTZ")
 

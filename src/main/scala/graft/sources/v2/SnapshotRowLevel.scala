@@ -1,17 +1,16 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.Snapshots
 
-/** GROUP-BASED copy-on-write row-level operations for the snapshot lake
-  * (round 14, VERDICT r13 ask #3): implementing
-  * `SupportsRowLevelOperations` on [[SnapshotBatchTable]] lets Spark's
+/** GROUP-BASED copy-on-write row-level operations for the snapshot
+  * lake: implementing `SupportsRowLevelOperations` on
+  * [[SnapshotBatchTable]] lets Spark's
   * own analyzer rewrites (`RewriteUpdateTable`, `RewriteMergeIntoTable`,
   * `RewriteDeleteFromTable`) serve the two DML verbs the catalog was
   * missing —
@@ -33,7 +32,8 @@ import graft.sources.Snapshots
   *    files whose range contains X, never the table), applies the
   *    update/merge expressions to matching rows and passes the others
   *    through, and writes the groups' NEW content through
-  *    [[RowLevelOperation.newWriteBuilder]];
+  *    [[RowLevelOperation.newWriteBuilder]] — the lake's one writer
+  *    ([[SnapshotFileWriter]]), so tables of any column type rewrite;
   *  - this operation object is the scan↔write link: the scan records
   *    the files it actually planned and the version it pinned; the
   *    write's commit swaps EXACTLY those files for the written ones in
@@ -82,66 +82,24 @@ private[v2] class SnapshotRowLevelOperation(root: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
+        // the write half: ReplaceData rows lead with __row_operation;
+        // the commit swaps the scanned files for the written ones
         override def toBatch: BatchWrite = {
-          // refuse nested tables HERE — at plan time, with the routing
-          // named — not as a raw writer error deep in an executor task
-          // after the whole scan ran (round-14 review). Equality-shaped
-          // DELETEs are unaffected: the metadata-delete optimization
-          // replaces the plan before any batch write is constructed.
-          val bad = info.schema().fields.filterNot(f =>
-            SnapshotDeleteSets.PrimitiveDdl.contains(f.dataType.sql))
-          require(bad.isEmpty,
-            s"row-level SQL DML (UPDATE / MERGE / rewrite DELETE) supports " +
-              s"primitive-column tables; column(s) " +
-              s"${bad.map(_.name).mkString(", ")} are nested — use the API " +
-              "path (Snapshots.readSnapshot + commitReplace/commitMerge)")
-          new SnapshotRewriteBatchWrite(root, info.schema(),
-            SnapshotRowLevelOperation.this)
+          val schema = info.schema()
+          new SnapshotBatchWrite(root, schema, opColumn = true)({ files =>
+            require(scannedPaths != null,
+              "row-level write committed before its scan planned any files")
+            // every candidate file pruned away = the condition matched
+            // nothing: the table is untouched, publish no version
+            if (scannedPaths.nonEmpty || files.nonEmpty)
+              Snapshots.commitRewriteFiles(SparkSession.active, root, scannedPaths,
+                files, schema, scanVersion)
+          })
         }
       }
     }
 
   override def description(): String = s"snapshot($root) $cmd copy-on-write"
-}
-
-/** The write half of the copy-on-write rewrite: executors write the
-  * affected groups' new content under a commit-private directory (the
-  * ordinary [[SnapshotDataWriterFactory]]); the driver's commit swaps
-  * the scanned files for the written ones through the claim-serialized,
-  * read-set-validated [[graft.sources.Snapshots.commitRewriteFiles]]. */
-private[v2] class SnapshotRewriteBatchWrite(root: String, schema: StructType,
-    op: SnapshotRowLevelOperation) extends BatchWrite {
-
-  private val commitDir =
-    s"$root/data/c-${java.util.UUID.randomUUID.toString.take(8)}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo) =
-    new SnapshotDataWriterFactory(commitDir,
-      schema.fields.map(f => (f.name, f.dataType.sql, f.nullable)),
-      SnapshotReaderFactory.confToMap(
-        SparkSession.active.sessionState.newHadoopConf()),
-      opColumn = true) // ReplaceData rows lead with __row_operation
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    require(op.scannedPaths != null,
-      "row-level write committed before its scan planned any files")
-    val files = messages.flatMap {
-      case SnapshotWriteMessage(fs) => fs
-      case other => throw new IllegalStateException(s"unexpected message $other")
-    }.sorted.toSeq
-    // every candidate file pruned away = the condition matched nothing:
-    // the table is untouched, publish no version
-    if (op.scannedPaths.nonEmpty || files.nonEmpty)
-      Snapshots.commitRewriteFiles(spark, root, op.scannedPaths, files,
-        schema, op.scanVersion)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val p = new Path(commitDir)
-    p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-      .delete(p, true) // commit-private: nothing else lives here
-  }
 }
 
 private[v2] object SnapshotRowLevel {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 
 import graft.sources.Snapshots
+import graft.sources.v2.WrittenFile
 
 /** Round-14 hardening of the snapshot commit/prune layer (VERDICT r13
   * ask #5 + ADVICE r13):
@@ -87,7 +88,7 @@ class SnapshotHardeningSpec extends SparkTestBase {
       .write.parquet(dir)
     val mine = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+      .filter(_.endsWith(".parquet")).toSeq.map(WrittenFile(_, Nil))
     intercept[Snapshots.ConcurrentTableChangeException] {
       Snapshots.commitReplaceFiles(spark, root, mine,
         Snapshots.readSnapshot(spark, root).schema, Some(consumed))
@@ -114,11 +115,11 @@ class SnapshotHardeningSpec extends SparkTestBase {
       val st = it.next()
       if (st.isFile) fs.setTimes(st.getPath, 1000L, -1)
     }
-    // the only sweepable aged files are Spark's _SUCCESS markers (never
-    // referenced by a manifest); every DATA file is referenced by SOME
-    // version and must survive — proven by both versions still reading
+    // commits leave no marker files, and every DATA file is referenced
+    // by SOME version and must survive — proven by both versions
+    // still reading
     val swept = Snapshots.removeOrphanFiles(spark, root, graceMs = 1L)
-    assert(swept == 2L, s"only the two _SUCCESS markers sweep, got $swept")
+    assert(swept == 0L, s"nothing unreferenced to sweep, got $swept")
     assert(Snapshots.readSnapshot(spark, root, 1).count() == 10L)
     assert(Snapshots.readSnapshot(spark, root).count() == 10L)
     assert(Snapshots.removeOrphanFiles(spark, root, graceMs = 1L) == 0L,

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -133,6 +133,19 @@ class SnapshotReadPlanSpec extends SparkTestBase {
       plan.toString)
   }
 
+  test("a DSv2 scan plan reads its pinned manifest once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[ManifestCountingFs].getName)
+    for (r <- Seq(root, evolved)) {
+      // the same table through a scheme that counts manifest opens
+      val df = dsv2(s"countfs://$r").filter(col("id") >= 150L).select("id", "tag")
+      ManifestCountingFs.opens.set(0)
+      val got = sorted(df)
+      assert(ManifestCountingFs.opens.get == 1, s"$r: manifest opens")
+      assert(got == sorted(dsv2(r).filter(col("id") >= 150L).select("id", "tag")))
+    }
+  }
+
   test("inputFiles lists exactly the live data files") {
     for (v <- Seq(3L, 5L)) {
       val live = Snapshots.fileInfos(spark, root, v).map(f => Snapshots.normPath(f._1)).toSet
@@ -140,4 +153,18 @@ class SnapshotReadPlanSpec extends SparkTestBase {
       assert(read == live, s"v$v")
     }
   }
+}
+
+/** The local file system under the scheme `countfs`, counting opens of
+  * manifest (`.list`) files. */
+class ManifestCountingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.endsWith(".list")) ManifestCountingFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object ManifestCountingFs {
+  val opens = new AtomicInteger(0)
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sources.Snapshots
+import graft.sources.v2.WrittenFile
 
 /** The manifest-versioned commit protocol, exercised directly: append /
   * replace visibility, snapshot isolation under concurrent commits,
@@ -20,6 +21,16 @@ class SnapshotsSpec extends SparkTestBase {
 
   private def table(n: Int, tag: String) =
     (1 to n).map(i => (i.toLong, tag)).toDF("id", "tag")
+
+  /** Append `df` as one file published WITHOUT manifest stats. */
+  private def appendStatsless(root: String, name: String,
+      df: org.apache.spark.sql.DataFrame): Long = {
+    val dir = s"$root/data/c-$name"
+    df.coalesce(1).write.parquet(dir)
+    val file = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(new Path(dir)).map(_.getPath.toString).filter(_.endsWith(".parquet")).head
+    Snapshots.commitAppendFiles(spark, root, Seq(WrittenFile(file, Nil)), df.schema)
+  }
 
   test("append carries prior files; replace starts a fresh list; both read back exactly") {
     val root = freshRoot("basic")
@@ -601,9 +612,7 @@ class SnapshotsSpec extends SparkTestBase {
 
   test("file skipping: stats-off commits are never pruned (conservative)") {
     val root = freshRoot("skipoff")
-    spark.conf.set("spark.graft.snapshots.stats", "false")
-    try Snapshots.commitAppend(spark, root, table(10, "a").coalesce(1))
-    finally spark.conf.unset("spark.graft.snapshots.stats")
+    appendStatsless(root, "nostats", table(10, "a"))
     Snapshots.commitAppend(spark, root, table(5, "b").coalesce(1)) // stats on
     val f = Seq[org.apache.spark.sql.sources.Filter](FGt("id", 100L))
     val (kept, total) = Snapshots.pruneCounts(spark, root, f)
@@ -698,10 +707,8 @@ class SnapshotsSpec extends SparkTestBase {
     Snapshots.commitAppend(spark, root, table(5, "b").coalesce(1))
     assert(Snapshots.metadataRowCount(spark, root).contains(15L))
     assert(Snapshots.metadataMinMaxLong(spark, root, "id").contains((1L, 10L)))
-    // a stats-off commit makes the answers unavailable — never wrong
-    spark.conf.set("spark.graft.snapshots.stats", "false")
-    try Snapshots.commitAppend(spark, root, table(3, "c").coalesce(1))
-    finally spark.conf.unset("spark.graft.snapshots.stats")
+    // a stats-less file makes the answers unavailable — never wrong
+    appendStatsless(root, "nostats", table(3, "c"))
     assert(Snapshots.metadataRowCount(spark, root).isEmpty)
     assert(Snapshots.metadataMinMaxLong(spark, root, "id").isEmpty)
     // time travel still answers at the fully-statted version
@@ -912,14 +919,18 @@ class SnapshotsSpec extends SparkTestBase {
     val root = freshRoot("datestats")
     def day(s: String) = java.sql.Date.valueOf(s)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    Snapshots.commitAppend(spark, root,
-      Seq((1L, day("2026-01-05"), ts("2026-01-05 10:00:00")),
-        (2L, day("2026-01-20"), ts("2026-01-20 10:00:00")))
-        .toDF("id", "d", "t").coalesce(1))
-    Snapshots.commitAppend(spark, root,
-      Seq((3L, day("2026-02-10"), ts("2026-02-10 10:00:00")),
-        (4L, day("2026-02-25"), ts("2026-02-25 10:00:00")))
-        .toDF("id", "d", "t").coalesce(1))
+    // INT64 micros carry bounds; the INT96 default keeps none (never prunes)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      Snapshots.commitAppend(spark, root,
+        Seq((1L, day("2026-01-05"), ts("2026-01-05 10:00:00")),
+          (2L, day("2026-01-20"), ts("2026-01-20 10:00:00")))
+          .toDF("id", "d", "t").coalesce(1))
+      Snapshots.commitAppend(spark, root,
+        Seq((3L, day("2026-02-10"), ts("2026-02-10 10:00:00")),
+          (4L, day("2026-02-25"), ts("2026-02-25 10:00:00")))
+          .toDF("id", "d", "t").coalesce(1))
+    } finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
     // date predicate prunes to the February file
     val feb = Seq[org.apache.spark.sql.sources.Filter](
       GreaterThanOrEqual("d", day("2026-02-01")))

@@ -142,10 +142,7 @@ class SqlDdlSpec extends SparkTestBase {
     val root = freshRoot("decimalplan")
     Snapshots.createTable(spark, root,
       Seq("id" -> "BIGINT", "amt" -> "DECIMAL(10,2)"))
-    // the SQL INSERT path refuses DECIMAL; load through the API
-    Snapshots.commitAppend(spark, root,
-      spark.sql("SELECT CAST(1 AS BIGINT) AS id, CAST(1.50 AS DECIMAL(10,2)) AS amt")
-        .coalesce(1))
+    spark.sql(s"INSERT INTO snap.`$root` VALUES (1, 1.50)")
     val got = spark.sql(s"SELECT id, amt FROM snap.`$root`").collect().toSeq
     assert(got == Snapshots.readSnapshot(spark, root).select("id", "amt").collect().toSeq)
     assert(got.map(_.getDecimal(1)) == Seq(new java.math.BigDecimal("1.50")))

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.sources.Snapshots
+import graft.sources.v2.WrittenFile
 
 /** SQL UPDATE / MERGE INTO over the snapshot catalog (round 14, VERDICT
   * r13 ask #3): group-based copy-on-write through Spark's own row-level
@@ -156,7 +157,7 @@ class SqlRowLevelSpec extends SparkTestBase {
     (1L to 10L).map(i => (i, i + 1)).toDF("id", "v").coalesce(1).write.parquet(dir)
     val mine = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+      .filter(_.endsWith(".parquet")).toSeq.map(WrittenFile(_, Nil))
     val schema = Snapshots.readSnapshot(spark, root).schema
     // (a) a concurrent DELETE after the pinned version → abort (the
     // rewrite's pre-image does not reflect it)

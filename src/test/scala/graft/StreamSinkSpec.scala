@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.sources.Snapshots
+import graft.sources.v2.WrittenFile
 
 /** The NATIVE streaming sink of the snapshot lake (round 14):
   * `df.writeStream.toTable("snap.`root`")` — one atomic append commit
@@ -58,7 +59,7 @@ class StreamSinkSpec extends SparkTestBase {
     Seq((2L, 2L)).toDF("id", "v").coalesce(1).write.parquet(dir)
     val files = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+      .filter(_.endsWith(".parquet")).toSeq.map(WrittenFile(_, Nil))
     val schema = Snapshots.readSnapshot(spark, root).schema
     val v1 = Snapshots.commitAppendFilesOnce(spark, root, files, schema, "sq-q1-e7")
     // the replay: same txn id → same version back, no new commit, no
@@ -100,7 +101,7 @@ class StreamSinkSpec extends SparkTestBase {
     Seq((2L, 2L)).toDF("id", "v").coalesce(1).write.parquet(dir)
     val files = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+      .filter(_.endsWith(".parquet")).toSeq.map(WrittenFile(_, Nil))
     val schema = Snapshots.readSnapshot(spark, root).schema
     Snapshots.commitAppendFilesOnce(spark, root, files, schema, "sq-mk-e1")
     val vMarked = Snapshots.currentVersion(spark, root)
@@ -144,7 +145,7 @@ class StreamSinkSpec extends SparkTestBase {
     Seq((2L, 2L)).toDF("id", "v").coalesce(1).write.parquet(dir)
     val files = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(new Path(dir)).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+      .filter(_.endsWith(".parquet")).toSeq.map(WrittenFile(_, Nil))
     val schema = Snapshots.readSnapshot(spark, root).schema
     (1 to 8).foreach(e =>
       Snapshots.commitAppendFilesOnce(spark, root, files, schema, s"sq-long-e$e"))
