@@ -9,19 +9,18 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Snapshots
+import graft.sources.{SnapshotRead, Snapshots}
 import graft.sources.v2.{ScopedDeletes, SnapshotDeleteSets}
 
 /** The merge-on-read delete scope of one snapshot read, baked into
   * [[SnapshotDeleteFilter]] (the [[CentroidIndex]] reference-object
-  * pattern): each data file's committing version, keyed by its bare
-  * path ([[Snapshots.normPath]]), and the read's equality-delete files
-  * with their versions. A data file is scoped by the deletes committed
-  * STRICTLY after it; their key sets load through the executor-cached
-  * [[SnapshotDeleteSets]], the same loader and matcher the DSv2 reader
-  * uses. `DeleteSpec.keyIdx` indexes the filter's key children. */
-final class DeleteScope(fileVersions: Map[String, Long],
-    deletes: Array[(Long, Snapshots.DeleteSpec)],
+  * pattern): each data file's scoped deletes as the read plan gives
+  * them ([[SnapshotRead.plan]]), keyed by the file's bare path
+  * ([[Snapshots.normPath]]). Their key sets load through the
+  * executor-cached [[SnapshotDeleteSets]], the same loader and matcher
+  * the DSv2 reader uses. `DeleteSpec.keyIdx` indexes the filter's key
+  * children. */
+final class DeleteScope(fileDeletes: Map[String, Seq[SnapshotRead.DeleteSpec]],
     confEntries: Array[(String, String)]) extends Serializable {
 
   // the last file seen and its scope: rows arrive file by file, so the
@@ -33,17 +32,16 @@ final class DeleteScope(fileVersions: Map[String, Long],
   def scoped(filePath: UTF8String): ScopedDeletes = {
     val l = last
     if (l != null && l._1 == filePath) return l._2
-    val ver = fileVersions.getOrElse(DeleteScope.barePath(filePath.toString),
-      throw new IllegalStateException(
-        s"$filePath is not a data file of this snapshot read"))
-    val s = SnapshotDeleteSets.scope(
-      deletes.toSeq.collect { case (dv, sp) if dv > ver => sp }, confEntries)
+    val s = SnapshotDeleteSets.scope(fileDeletes.getOrElse(
+      DeleteScope.barePath(filePath.toString), throw new IllegalStateException(
+        s"$filePath is not a data file of this snapshot read")), confEntries)
     last = (filePath.clone(), s)
     s
   }
 
   override def toString: String =
-    s"DeleteScope(${fileVersions.size} data files, ${deletes.length} delete files)"
+    s"DeleteScope(${fileDeletes.size} data files, " +
+      s"${fileDeletes.values.flatten.toSet.size} delete files)"
 }
 
 object DeleteScope {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Manifest-versioned snapshot commits over a plain parquet directory —
@@ -150,7 +150,7 @@ object Snapshots {
     cols.map(c => s"${c.id};${c.name};${c.typ}").mkString("|")
   }
 
-  private def decodeSchema(payload: String): Seq[SchemaCol] =
+  private[graft] def decodeSchema(payload: String): Seq[SchemaCol] =
     payload.split('|').toSeq.map { s =>
       val Array(id, name, typ) = s.split(';')
       SchemaCol(id.toInt, name, typ)
@@ -684,7 +684,7 @@ object Snapshots {
   }
 
   /** Latest tracked schema among `carried`'s S entries, if any. */
-  private def currentSchema(carried: Seq[Entry]): Option[(Long, Seq[SchemaCol])] =
+  private[graft] def currentSchema(carried: Seq[Entry]): Option[(Long, Seq[SchemaCol])] =
     carried.filter(_.kind == "S").sortBy(_.ver).lastOption
       .map(e => e.ver -> decodeSchema(e.path))
 
@@ -971,7 +971,7 @@ object Snapshots {
         throw new ConcurrentTableChangeException(root)
       checkWriteSchema(carried, written, "commitRewrite")
       // a SCHEMA-TRACKED table may legally end up with zero data files —
-      // readEntries serves it as an empty frame with the tracked schema
+      // readSnapshot serves it as an empty frame with the tracked schema
       // (an all-rows rewrite DELETE on a tracked table is valid).
       // Untracked tables keep >= 1 file: their
       // schema lives only in their data files' footers.
@@ -1130,7 +1130,7 @@ object Snapshots {
       val data = carried.filter(_.kind == "A")
       require(data.nonEmpty, s"cannot init schema on empty table $root")
       val one = ParquetFooters.schema(spark, data.head.path)
-      val merged = ParquetFooters.merged(spark, commitRepresentatives(data).map(_._2))
+      val merged = ParquetFooters.merged(spark, SnapshotRead.commitRepresentatives(data).map(_._2))
       require(
         merged.fields.map(f => (f.name, f.dataType)).toSet ==
           one.fields.map(f => (f.name, f.dataType)).toSet,
@@ -1230,10 +1230,9 @@ object Snapshots {
     * equality anti-filter: keep a row iff no delete with version
     * STRICTLY GREATER than the row's data-file version matches its key
     * columns (same-version data survives its own commit's delete — what
-    * makes [[commitMerge]]'s single-commit upsert work). Deletes apply
-    * inside the scan through the key sets the DSv2 reader shares, and
-    * every schema comes from driver-side footers, so building the frame
-    * starts no Spark job ([[readEntries]]).
+    * makes [[commitMerge]]'s single-commit upsert work). Planning and
+    * the frame are [[SnapshotRead]]'s; building the frame starts no
+    * Spark job.
     *
     * SCHEMA EVOLUTION, two tiers:
     *  - additive-only (untracked tables): `mergeSchema = true` unions
@@ -1243,46 +1242,37 @@ object Snapshots {
     *    the first data file's.
     *  - FULL column-ID evolution (after [[initSchema]]): rename, drop,
     *    add and re-type all survive reads across commits — files are
-    *    resolved by column id via [[schemaRead]].
+    *    resolved by column id.
     */
   def readSnapshot(spark: SparkSession, root: String, version: Long = -1L,
-      mergeSchema: Boolean = false): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    readEntries(spark, root, v, entries(spark, root, v), mergeSchema)
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    readSnapshotPruned(spark, root, Nil, version, mergeSchema)
 
-  /** [[readSnapshot]] with MANIFEST-LEVEL FILE SKIPPING (round 12):
-    * before Spark sees any file, each data file's manifest statistics
-    * are tested against `filters` (the public
-    * `org.apache.spark.sql.sources.Filter` ADT — the same representation
-    * DSv2 pushdown hands a source) and files whose ranges cannot
-    * contain a match are dropped from the scan. The filters are ALSO
-    * applied to the surviving rows, so the result equals
-    * `readSnapshot(...).filter(...)` exactly — skipping is pure
-    * optimization, proven by answer-invariance in the gate.
+  /** [[readSnapshot]] with MANIFEST-LEVEL FILE SKIPPING: before Spark
+    * sees any file, each data file's manifest statistics are tested
+    * against `filters` (the public `org.apache.spark.sql.sources.Filter`
+    * ADT — the same representation DSv2 pushdown hands a source) and
+    * files whose ranges cannot contain a match are dropped from the
+    * scan. The filters are ALSO applied to the surviving rows, so the
+    * result equals `readSnapshot(...).filter(...)` exactly — skipping is
+    * pure optimization.
     *
     * Supported for pruning: EqualTo / EqualNullSafe / GreaterThan(OrEq)
     * / LessThan(OrEq) / In / And / Or over integral, floating, string,
-    * date, timestamp and decimal columns (the last three since round
-    * 13). Anything else (IsNull, StringStartsWith, Not, …)
-    * prunes nothing but still filters rows. Files with no stats for a
-    * referenced column (pre-round-12 commits, nested/unsupported types,
-    * over-long string bounds) are always kept. On a schema-tracked
-    * table filter columns resolve through the CURRENT binding's stable
-    * ids, so pruning keeps working across renames — and never
-    * mis-prunes a dropped-then-re-added name against old ranges.
-    *
-    * At 100 TB this is the difference between a selective query opening
-    * a million footers and reading one manifest: O(files) driver-side
-    * string compares, zero data IO for skipped files. */
+    * date, timestamp and decimal columns. Anything else (IsNull,
+    * StringStartsWith, Not, …) prunes nothing but still filters rows.
+    * Files with no stats for a referenced column (stats-less commits,
+    * nested/unsupported types, over-long string bounds) are always
+    * kept. On a schema-tracked table filter columns resolve through the
+    * CURRENT binding's stable ids, so pruning keeps working across
+    * renames — and never mis-prunes a dropped-then-re-added name
+    * against old ranges. A selective read costs O(files) driver-side
+    * string compares and no data IO for skipped files. */
   def readSnapshotPruned(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
       version: Long = -1L, mergeSchema: Boolean = false): DataFrame = {
     val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    val (kept, _) = pruneDataEntries(es, filters)
-    val cond = filters.map(filterToColumn).reduceOption(_ && _).getOrElse(lit(true))
-    readEntries(spark, root, v, kept, mergeSchema).filter(cond)
+    SnapshotRead.frame(spark, root, entries(spark, root, v), filters, mergeSchema)
   }
 
   /** (files kept, files total) that [[readSnapshotPruned]] would scan —
@@ -1292,113 +1282,8 @@ object Snapshots {
       version: Long = -1L): (Long, Long) = {
     val v = if (version >= 0) version else currentVersion(spark, root)
     val es = entries(spark, root, v)
-    val (kept, total) = pruneDataEntries(es, filters)
-    (kept.count(_.kind == "A").toLong, total)
-  }
-
-  /** Is `f` a filter kind the stats pruner can act on? (What a DSv2
-    * scan reports as "pushed" — everything else is pure residual.) */
-  private[graft] def prunableFilter(f: org.apache.spark.sql.sources.Filter): Boolean = {
-    import org.apache.spark.sql.sources._
-    f match {
-      case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual |
-           _: LessThan | _: LessThanOrEqual | _: In => true
-      case EqualNullSafe(_, v) => v != null
-      case And(l, r) => prunableFilter(l) && prunableFilter(r)
-      case Or(l, r) => prunableFilter(l) && prunableFilter(r)
-      case _ => false
-    }
-  }
-
-  /** One equality-delete file scoped to a data file: its OWN key
-    * columns (per-file equality ids, the Iceberg semantics — delete
-    * commits against one table may use different keys), their current
-    * DDL types, and each key's index into the reader's columns. Built
-    * by [[graft.sources.v2.SnapshotDeleteSets.spec]], which checks the
-    * key types. */
-  private[graft] final case class DeleteSpec(path: String,
-      keyCols: Seq[String], keyTypes: Seq[String], keyIdx: Seq[Int])
-
-  /** One data file's scan plan: the file-local column bound to each
-    * read column ("" = the file predates it: NULL) and the delete files
-    * in its scope. */
-  private[graft] final case class FullScanFile(path: String,
-      fileCols: Seq[String], deletes: Seq[DeleteSpec])
-
-  /** The key columns of a version's delete files (each file's own
-    * footer columns), in first-seen order. */
-  private[graft] def deleteKeyColumns(spark: SparkSession, es: Seq[Entry]): Seq[String] =
-    keyColumns(spark, es.filter(_.kind == "D"))
-
-  private def keyColumns(spark: SparkSession, dels: Seq[Entry]): Seq[String] =
-    dels.flatMap(e => ParquetFooters.schema(spark, e.path).fieldNames).distinct
-
-  /** Plan the DSv2 scan of one version's entries `es`: the surviving
-    * (manifest-pruned) data files, each with its column bindings and its
-    * scoped delete files. Contracts:
-    *  - `readNames` are the columns every file task reads (the required
-    *    ones, then the delete-key columns); `tableCols` is the full
-    *    current schema (name → DDL);
-    *  - a tracked table binds by column id, as [[schemaRead]] does:
-    *    renamed columns read under their current name, columns a file
-    *    predates read NULL, and a re-typed column casts from the type the
-    *    file was written under with Spark cast semantics under the
-    *    session's ANSI mode — any re-type `readSnapshot` serves; a cast
-    *    Spark refuses fails here, on the driver;
-    *  - an untracked table binds by committing version: columns absent
-    *    from a commit's footer (`untrackedCols`, evaluated only for
-    *    untracked tables) read NULL, exactly
-    *    `readSnapshot(mergeSchema = true)`;
-    *  - a data file is scoped by the deletes committed STRICTLY after
-    *    it; delete-key types are checked here
-    *    ([[graft.sources.v2.SnapshotDeleteSets.spec]]). */
-  private[graft] def fullScanSpecs(spark: SparkSession, root: String, es: Seq[Entry],
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      readNames: Seq[String], tableCols: Seq[(String, String)],
-      untrackedCols: => Map[Long, Set[String]]): Seq[FullScanFile] = {
-    import org.apache.spark.sql.types.DataType
-    val data = pruneDataEntries(es, filters, keepAnchor = false)._1.filter(_.kind == "A")
-    val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
-    val delSpecs = es.filter(_.kind == "D").map(e => e.ver ->
-      graft.sources.v2.SnapshotDeleteSets.spec(spark, e.path, tableCols.toMap, { k =>
-        require(readNames.contains(k), s"delete key column '$k' is not read by this scan")
-        readNames.indexOf(k)
-      }))
-    val fileColsOf: Entry => Seq[String] = sEntries.lastOption match {
-      case None =>
-        val colSets = untrackedCols
-        val byVer = data.map(_.ver).distinct.map { ver =>
-          val present = colSets.getOrElse(ver, readNames.toSet)
-          ver -> readNames.map(n => if (present.contains(n)) n else "")
-        }.toMap
-        e => byVer(e.ver)
-      case Some(last) =>
-        val schemas = sEntries.map(e => e.ver -> decodeSchema(e.path)).toMap
-        val current = schemas(last.ver)
-        val ansi = spark.sessionState.conf.ansiEnabled
-        def bind(sid: Long): Seq[String] = {
-          val byId = schemas.getOrElse(if (sid == 0) sEntries.head.ver else sid,
-            throw new IllegalStateException(
-              s"manifest references unknown schema version $sid"))
-            .map(c => c.id -> c).toMap
-          readNames.map { n =>
-            val c = current.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-              s"unknown column '$n' on $root"))
-            byId.get(c.id).fold("") { fc =>
-              val (from, to) = (DataType.fromDDL(fc.typ), DataType.fromDDL(c.typ))
-              require(from == to ||
-                (if (ansi) org.apache.spark.sql.catalyst.expressions.Cast.canAnsiCast(from, to)
-                 else org.apache.spark.sql.catalyst.expressions.Cast.canCast(from, to)),
-                s"column '$n' of $root cannot be cast from ${fc.typ} to ${c.typ}")
-              fc.name
-            }
-          }
-        }
-        val bySid = data.map(_.sid).distinct.map(sid => sid -> bind(sid)).toMap
-        e => bySid(e.sid)
-    }
-    data.map(e => FullScanFile(e.path, fileColsOf(e),
-      delSpecs.collect { case (dv, sp) if dv > e.ver => sp }))
+    (SnapshotRead.prune(es, filters, keepAnchor = true).size.toLong,
+      es.count(_.kind == "A").toLong)
   }
 
   /** Per-data-file facts of a version for the `$files` METADATA TABLE
@@ -1496,68 +1381,6 @@ object Snapshots {
     times.filter(_._2 <= tsMillis).last._1
   }
 
-  /** Entries with non-matching data files removed. With `keepAnchor`,
-    * keeps at least ONE data file even when everything prunes (a
-    * DataFrame scan needs a schema anchor; the row filter still yields
-    * the correct empty result — a DSv2 scan passes false and plans
-    * zero partitions instead). */
-  private def pruneDataEntries(es: Seq[Entry],
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      keepAnchor: Boolean = true): (Seq[Entry], Long) = {
-    val keyForEntry = entryKeyer(es)
-    val total = es.count(_.kind == "A").toLong
-    val surviving = es.filter { e =>
-      e.kind != "A" || e.stats.isEmpty || {
-        val st = decodeStats(e.stats)
-        val keyFor = keyForEntry(e)
-        filters.forall(f => mayMatch(st, keyFor, f))
-      }
-    }
-    if (!keepAnchor || surviving.exists(_.kind == "A")) (surviving, total)
-    else (surviving ++ es.find(_.kind == "A"), total)
-  }
-
-  /** Per-FILE stat keying: on tracked tables, files written under
-    * tracking carry "#id" stats; PRE-tracking files (sid 0) carry
-    * name-keyed stats, and since initSchema proves all such files share
-    * the initial binding, the id's INITIAL name finds them soundly. A
-    * column id unknown to the initial binding (added later) resolves to
-    * no key — conservative, exactly like the read path's NULL. */
-  private def entryKeyer(es: Seq[Entry]): Entry => String => Option[String] = {
-    val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
-    // a DATA column literally named `__rows`/`__bytes` must never
-    // resolve to a stats key: the write side deliberately skips statting
-    // `__`-prefixed data columns, so the only `__` keys in a manifest are
-    // the RESERVED file facts — resolving a same-named attribute to them
-    // would prune a `__rows = k` data predicate against file row counts,
-    // a wrong-answer risk (round 14, ADVICE r12 low #1). None = keep.
-    def unreserved(k: String): Option[String] = Some(k).filterNot(_.startsWith("__"))
-    if (sEntries.isEmpty) _ => n => unreserved(n)
-    else {
-      val cur = decodeSchema(sEntries.last.path)
-      val idToInitName = decodeSchema(sEntries.head.path)
-        .map(c => c.id -> c.name).toMap
-      e => n => cur.find(_.name == n).flatMap { c =>
-        if (e.sid == 0L) idToInitName.get(c.id).flatMap(unreserved)
-        else Some("#" + c.id)
-      }
-    }
-  }
-
-  /** One REPRESENTATIVE data-file path per distinct committing version
-    * of an UNTRACKED table, ascending (round 15, VERDICT r14 ask #2 —
-    * the additive-mergeSchema DSv2 tier). Files within one commit share
-    * a schema (they are one writer job's output), so one footer per
-    * VERSION — O(commits), not O(files) — is enough to know every
-    * column the table ever carried; at 100 TB that is the difference
-    * between reading tens of footers and a million. */
-  private[graft] def untrackedVersionFiles(es: Seq[Entry]): Seq[(Long, String)] =
-    commitRepresentatives(es.filter(_.kind == "A"))
-
-  /** One data file per committing version of `data`, ascending. */
-  private def commitRepresentatives(data: Seq[Entry]): Seq[(Long, String)] =
-    data.groupBy(_.ver).toSeq.sortBy(_._1).map { case (ver, files) => ver -> files.head.path }
-
   /** METADATA-ONLY aggregates — answered from the manifest alone, zero
     * data IO (the Iceberg "metadata table" capability: a 100 TB
     * count(*) or min/max in one manifest read). Defined only when EVERY
@@ -1591,7 +1414,7 @@ object Snapshots {
     // same delete guard as the row count: a delete may have removed
     // exactly the extreme row, so file ranges no longer bound the table
     if (es.exists(_.kind == "D")) return None
-    val keyFor = entryKeyer(es)
+    val keyFor = SnapshotRead.entryKeyer(es)
     val perFile = es.filter(_.kind == "A").map { e =>
       keyFor(e)(column).flatMap(decodeStats(e.stats).get)
     }
@@ -1626,7 +1449,7 @@ object Snapshots {
     // same delete guard as the ungrouped forms: merge-on-read deletes
     // make every file-level fact an over-count / stale bound
     if (es.exists(_.kind == "D")) return None
-    val keyFor = entryKeyer(es)
+    val keyFor = SnapshotRead.entryKeyer(es)
     val perFile = es.filter(_.kind == "A").map { e =>
       val st = decodeStats(e.stats)
       keyFor(e)(groupCol).flatMap(st.get) match {
@@ -1662,7 +1485,7 @@ object Snapshots {
       : Option[Seq[(Option[String], Option[(Long, Long)])]] = {
     val v = if (version >= 0) version else currentVersion(spark, root)
     val es = entries(spark, root, v)
-    val keyFor = entryKeyer(es)
+    val keyFor = SnapshotRead.entryKeyer(es)
     singleValuedFiles(spark, root, groupCol, v).flatMap { fs =>
       // re-walk the SAME files for the value column (fs preserves file
       // order; re-derive the per-file keyer by zipping against entries)
@@ -1681,236 +1504,6 @@ object Snapshots {
         if (rs.isEmpty) None else Some((rs.map(_._1).min, rs.map(_._2).max))
       }.toSeq.sortBy(_._1))
     }
-  }
-
-  /** (rows, bytes) the PRUNED scan will actually touch, from the
-    * manifest alone — the planner-statistics feed for
-    * [[graft.sources.v2.SnapshotBatchSource]]: with accurate post-prune
-    * sizes, Spark's own join strategy can auto-broadcast a selective
-    * read of a huge table. Either component is None when any surviving
-    * file lacks the reserved stat (never a guess). */
-  private[graft] def prunedScanEstimate(es: Seq[Entry],
-      filters: Seq[org.apache.spark.sql.sources.Filter]): (Option[Long], Option[Long]) = {
-    val kept = pruneDataEntries(es, filters, keepAnchor = false)._1
-      .filter(_.kind == "A")
-    def total(key: String): Option[Long] = {
-      val per = kept.map(e => decodeStats(e.stats).get(key).map(_.lo.toLong))
-      if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
-    }
-    (total("__rows"), total("__bytes"))
-  }
-
-  /** Could a file whose per-column ranges are `st` contain a row
-    * matching `f`? Missing/incomparable information always answers
-    * true (keep). NULL semantics are sound by construction: ranges
-    * cover non-null values only, and every prunable comparison is
-    * not-true on NULL — so a file excluded by range holds no matching
-    * row, null or not; a column KNOWN all-NULL (tag 'n') fails every
-    * comparison outright. */
-  private[graft] def mayMatch(st: Map[String, ColStats],
-      keyFor: String => Option[String],
-      f: org.apache.spark.sql.sources.Filter): Boolean = {
-    import org.apache.spark.sql.sources._
-    def rng(attr: String): Option[ColStats] = keyFor(attr).flatMap(st.get)
-    f match {
-      case EqualTo(a, v) => rng(a).forall(cs => cs.tag != 'n' &&
-        cmpBound(cs.tag, cs.lo, v).forall(_ <= 0) &&
-          cmpBound(cs.tag, cs.hi, v).forall(_ >= 0))
-      case EqualNullSafe(a, v) if v != null => mayMatch(st, keyFor, EqualTo(a, v))
-      case GreaterThan(a, v) => rng(a).forall(cs => cs.tag != 'n' &&
-        cmpBound(cs.tag, cs.hi, v).forall(_ > 0))
-      case GreaterThanOrEqual(a, v) => rng(a).forall(cs => cs.tag != 'n' &&
-        cmpBound(cs.tag, cs.hi, v).forall(_ >= 0))
-      case LessThan(a, v) => rng(a).forall(cs => cs.tag != 'n' &&
-        cmpBound(cs.tag, cs.lo, v).forall(_ < 0))
-      case LessThanOrEqual(a, v) => rng(a).forall(cs => cs.tag != 'n' &&
-        cmpBound(cs.tag, cs.lo, v).forall(_ <= 0))
-      case In(a, vs) => vs.isEmpty || vs.exists(v => mayMatch(st, keyFor, EqualTo(a, v)))
-      case And(l, r) => mayMatch(st, keyFor, l) && mayMatch(st, keyFor, r)
-      case Or(l, r) => mayMatch(st, keyFor, l) || mayMatch(st, keyFor, r)
-      case _ => true // IsNull / StartsWith / Not / … — never prune on these
-    }
-  }
-
-  /** sign(bound - v), or None when the pair is incomparable (type
-    * mismatch, unparseable bound, non-literal) — None always ends in
-    * "keep". Numeric compares go through BigDecimal (exact, no double
-    * rounding surprises at long extremes); strings compare in unsigned
-    * UTF-8 byte order, matching how the bounds were computed. */
-  private def cmpBound(tag: Char, bound: String, v: Any): Option[Int] =
-    try {
-      (tag, v) match {
-        // STALE-STAT FENCE (round 14, ADVICE r13 low #1): manifests
-        // committed BEFORE the logical-type-aware tagging fix carry
-        // 'l'-tagged UNSCALED decimal bounds for DECIMAL columns. The
-        // predicate value's own type identifies those comparisons — a
-        // DECIMAL column's pushed literal arrives as a BigDecimal, and
-        // a genuine integral column's never does — so an ('l',
-        // BigDecimal) pairing is exactly "decimal predicate vs possibly-
-        // unscaled bounds": answer None (keep the file), degrading
-        // pre-fix manifests to keep-everything instead of unsound
-        // pruning. Fresh commits tag decimals 'm' and compare exactly.
-        case ('l', _: java.math.BigDecimal) => None
-        case ('l', _: scala.math.BigDecimal) => None
-        case ('l', _: java.math.BigInteger) => None
-        // 'm' (exact decimal) joins the numeric compare: both sides go
-        // through BigDecimal, so a pushed decimal predicate compares in
-        // VALUE space — never against an unscaled integer (ADVICE r12)
-        case ('l' | 'd' | 'm', n: java.lang.Number) =>
-          Some(BigDecimal(bound).compare(BigDecimal(n.toString)))
-        case ('s', sv: String) => Some(utf8Cmp(bound, sv))
-        // DATE bounds are epoch days; Spark pushes java.sql.Date (or
-        // LocalDate under the java8 datetime API)
-        case ('t', d: java.sql.Date) =>
-          Some(java.lang.Long.compare(bound.toLong, d.toLocalDate.toEpochDay))
-        case ('t', d: java.time.LocalDate) =>
-          Some(java.lang.Long.compare(bound.toLong, d.toEpochDay))
-        // TIMESTAMP bounds are micros, with the tag keyed to the
-        // STORAGE semantics: 'u' = instant micros (UTC-adjusted files;
-        // Timestamp/Instant predicates), 'v' = naive wall-clock micros
-        // (NTZ files; LocalDateTime predicates). A cross pairing (e.g.
-        // an NTZ file read through a legacy LTZ session) falls to the
-        // None default — keep, never compare across a zone offset.
-        case ('u', ts: java.sql.Timestamp) =>
-          val i = ts.toInstant
-          Some(java.lang.Long.compare(bound.toLong,
-            math.addExact(math.multiplyExact(i.getEpochSecond, 1000000L),
-              i.getNano / 1000L)))
-        case ('u', i: java.time.Instant) =>
-          Some(java.lang.Long.compare(bound.toLong,
-            math.addExact(math.multiplyExact(i.getEpochSecond, 1000000L),
-              i.getNano / 1000L)))
-        case ('v', ldt: java.time.LocalDateTime) =>
-          Some(java.lang.Long.compare(bound.toLong,
-            math.addExact(math.multiplyExact(
-              ldt.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
-              ldt.getNano / 1000L)))
-        case _ => None
-      }
-    } catch {
-      case _: NumberFormatException => None
-      case _: ArithmeticException => None // overflow at the time extremes
-    }
-
-  /** The row-level form of a pushable filter — applied on top of the
-    * pruned scan so [[readSnapshotPruned]] is exact, not approximate.
-    * Loud on filter kinds with no Column form here (callers pick from
-    * the documented subset). */
-  private def filterToColumn(f: org.apache.spark.sql.sources.Filter):
-      org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.sources._
-    f match {
-      case EqualTo(a, v) => col(a) === lit(v)
-      case EqualNullSafe(a, v) => col(a) <=> lit(v)
-      case GreaterThan(a, v) => col(a) > lit(v)
-      case GreaterThanOrEqual(a, v) => col(a) >= lit(v)
-      case LessThan(a, v) => col(a) < lit(v)
-      case LessThanOrEqual(a, v) => col(a) <= lit(v)
-      case In(a, vs) => col(a).isin(vs.toIndexedSeq: _*)
-      case IsNull(a) => col(a).isNull
-      case IsNotNull(a) => col(a).isNotNull
-      case StringStartsWith(a, p) => col(a).startsWith(p)
-      case StringEndsWith(a, p) => col(a).endsWith(p)
-      case StringContains(a, p) => col(a).contains(p)
-      case And(l, r) => filterToColumn(l) && filterToColumn(r)
-      case Or(l, r) => filterToColumn(l) || filterToColumn(r)
-      case Not(c) => !filterToColumn(c)
-      case other => throw new IllegalArgumentException(
-        s"readSnapshotPruned cannot express filter $other as a row predicate")
-    }
-  }
-
-  /** The frame of a version's entries — the read behind [[readSnapshot]]
-    * and [[readSnapshotPruned]]. Contracts:
-    *  - every parquet read gets its schema from driver-side footers
-    *    ([[ParquetFooters]], memoized per immutable file), so building
-    *    the frame starts no Spark job;
-    *  - merge-on-read deletes apply INSIDE the data scan as one
-    *    codegen'd predicate ([[graft.plans.SnapshotDeleteFilter]]) over
-    *    `_metadata.file_path` and the key columns: no join, no exchange.
-    *    Key sets load through the executor-cached
-    *    [[graft.sources.v2.SnapshotDeleteSets]] and match by its rule,
-    *    the same the DSv2 reader applies. Each delete file's own columns
-    *    are its equality key, so deletes keyed on different columns
-    *    compose;
-    *  - the frame reads only data files (`inputFiles` lists exactly
-    *    them). */
-  private def readEntries(spark: SparkSession, root: String, v: Long,
-      es: Seq[Entry], mergeSchema: Boolean): DataFrame = {
-    val data = es.filter(_.kind == "A")
-    // a CREATEd-but-not-yet-loaded table is a real (empty) table: its
-    // tracked schema is the read schema (round 14). Untracked empty
-    // versions stay loud — there is no schema to serve.
-    if (data.isEmpty) {
-      val (_, cur) = currentSchema(es).getOrElse(throw new IllegalArgumentException(
-        s"snapshot version $v of $root lists no files"))
-      val schema = org.apache.spark.sql.types.StructType(cur.map(c =>
-        org.apache.spark.sql.types.StructField(c.name,
-          org.apache.spark.sql.types.DataType.fromDDL(c.typ), nullable = true)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
-    val dels = es.filter(_.kind == "D")
-    val keyCols = keyColumns(spark, dels)
-    // the keep-predicate, given each key column's expression and DDL type
-    // in the frame it filters
-    def deleteFilter(keyCol: String => Column, keyTypes: Map[String, String]): Column = {
-      val specs = dels.map(e => e.ver ->
-        graft.sources.v2.SnapshotDeleteSets.spec(spark, e.path, keyTypes, keyCols.indexOf))
-      val scope = new graft.plans.DeleteScope(
-        data.map(e => normPath(e.path) -> e.ver).toMap, specs.toArray,
-        graft.sources.v2.SnapshotReaderFactory.readerConf(spark))
-      graft.plans.SnapshotDeleteFilter.keep(col("_metadata.file_path"),
-        keyCols.map(keyCol), scope)
-    }
-    if (sEntries.nonEmpty) {
-      val typeOf = decodeSchema(sEntries.last.path).map(c => c.name -> c.typ).toMap
-      schemaRead(spark, data, sEntries,
-        Option.when(dels.nonEmpty)(deleteFilter(_, typeOf)))
-    } else {
-      val paths = data.map(_.path)
-      val schema =
-        if (mergeSchema) ParquetFooters.merged(spark, commitRepresentatives(data).map(_._2))
-        else ParquetFooters.schema(spark, paths.head)
-      val df = spark.read.schema(schema).parquet(paths: _*)
-      if (dels.isEmpty) df
-      else df.filter(deleteFilter(col, schema.fields.map(f => f.name -> f.dataType.sql).toMap))
-    }
-  }
-
-  /** The column-ID-resolved read of a schema-tracked table: data files
-    * grouped by the schema version they were written under (`sid`; 0 =
-    * pre-tracking, resolved against the INITIAL binding), each group
-    * projected to the CURRENT binding by id — renamed columns read
-    * under their new name, dropped-then-re-added names read NULL from
-    * old files, re-typed columns cast at the scan. One narrow
-    * projection per group, unioned; pruning/pushdown reach each
-    * group's parquet scan as usual (the projection is plain select).
-    * `deleteFilter` builds the delete predicate from each key column's
-    * group-local expression; it filters the group's scan, where
-    * `_metadata.file_path` resolves. */
-  private def schemaRead(spark: SparkSession, data: Seq[Entry],
-      sEntries: Seq[Entry], deleteFilter: Option[(String => Column) => Column]): DataFrame = {
-    val schemas = sEntries.map(e => e.ver -> decodeSchema(e.path)).toMap
-    val initVer = sEntries.head.ver
-    val current = schemas(sEntries.last.ver)
-    data.groupBy(_.sid).toSeq.sortBy(_._1).map { case (sid, files) =>
-      val bound = schemas.getOrElse(if (sid == 0) initVer else sid,
-        throw new IllegalStateException(
-          s"manifest references unknown schema version $sid"))
-      val byId = bound.map(c => c.id -> c.name).toMap
-      // one schema per sid: writes are checked against their binding,
-      // and initSchema checks the pre-tracking files share one
-      val df = spark.read.schema(ParquetFooters.schema(spark, files.head.path))
-        .parquet(files.map(_.path): _*)
-      val cols = current.map { c =>
-        c.name -> byId.get(c.id).map(n => col(n).cast(c.typ))
-          .getOrElse(lit(null).cast(c.typ))
-      }
-      deleteFilter.fold(df)(f => df.filter(f(cols.toMap)))
-        .select(cols.map { case (n, e) => e.as(n) }: _*)
-    }.reduce(_ unionByName _)
   }
 
   /** Number of DATA files version `v` lists — the observable the gate

@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{ParquetFooters, Snapshots}
+import graft.sources.{ParquetFooters, SnapshotRead, Snapshots}
 
 /** BATCH DSv2 read of a snapshot table with pushdown-driven file
   * skipping — the declarative form of `Snapshots.readSnapshotPruned`:
@@ -35,13 +35,13 @@ import graft.sources.{ParquetFooters, Snapshots}
   *    parquet reads here (INT96 and rebased timestamps, DECIMAL, nested
   *    and legacy list layouts), the same reader the stream source and
   *    the delete-key loader use.
-  *  - Schema evolution resolves per file at planning
-  *    ([[graft.sources.Snapshots.fullScanSpecs]]): renamed columns read
-  *    under their current name, columns a file predates read NULL, and
-  *    re-typed columns cast with Spark cast semantics under the
-  *    session's ANSI mode — the same casts `readSnapshot` applies. An
-  *    untracked table that grew a column serves the additive union
-  *    schema ([[SnapshotBatchSource.untrackedShape]]).
+  *  - Schema, bindings and delete scopes come from the one read
+  *    planner, [[graft.sources.SnapshotRead]], the one `readSnapshot`
+  *    uses: renamed columns read under their current name, columns a
+  *    file predates read NULL, re-typed columns cast with Spark cast
+  *    semantics under the session's ANSI mode, and an untracked table
+  *    serves Spark's additive merge of its commit footers — exactly
+  *    `readSnapshot(mergeSchema = true)`'s schema.
   *  - Merge-on-read equality deletes apply inside the reader: each file
   *    task probes its sequence-scoped delete sets
   *    ([[SnapshotDeleteSets]]) — no join, no shuffle, and file skipping
@@ -54,8 +54,9 @@ import graft.sources.{ParquetFooters, Snapshots}
   *    the write task.
   * Edges that stay loud: delete files whose key types do not widen
   * losslessly to the current column types fail at planning; an
-  * untracked column re-typed across commits is not additive and fails
-  * at planning.
+  * untracked column re-typed across commits fails Spark's schema merge
+  * at schema inference; a file column Spark cannot cast to its read
+  * type (an untracked struct that gained a field) fails at planning.
   * Reference anchor: the reference's bulk data surface is a
   * raw S3 prefix (src/copy_from_template.py:316-327); this is that
   * prefix read as a planned table. */
@@ -80,69 +81,12 @@ private[v2] object SnapshotBatchSource {
       throw new IllegalArgumentException(
         "snapshot batch source requires .option(\"root\", tableRoot)"))
 
-  /** Schema at a version: the tracked column-ID binding when the table
-    * has one (names/types follow renames and re-types); otherwise the
-    * additive merge of the table's commit footers ([[untrackedShape]]):
-    * a table that grew a column serves the union schema, old files
-    * reading NULL, exactly `readSnapshot(mergeSchema = true)`. */
+  /** Schema at a version: [[graft.sources.SnapshotRead.readSchema]]
+    * with `mergeSchema`, the schema the scan plans with. */
   private[v2] def inferSchemaAt(spark: SparkSession, root: String,
-      version: Long): StructType =
-    Snapshots.trackedSchema(spark, root, version) match {
-      case Some(cols) => StructType(cols.map { case (_, n, t) =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
-      })
-      case None =>
-        val v = if (version >= 0) version else Snapshots.currentVersion(spark, root)
-        val shape = untrackedShape(spark, root, v, Snapshots.entries(spark, root, v))
-        StructType(shape.mergedCols.map { case (n, t) =>
-          org.apache.spark.sql.types.StructField(n,
-            org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
-        })
-    }
-
-  /** The footer shape of an UNTRACKED table: the additively-merged
-    * column list (first-seen order; same-name columns must agree on
-    * type — a conflicting re-type is not additive and fails loudly) and
-    * each commit version's own column set. Cost is one memoized footer
-    * per commit, not per file
-    * ([[graft.sources.Snapshots.untrackedVersionFiles]] — files within
-    * a commit are one writer job's output); memoized per (root,
-    * version) because versions are immutable. */
-  private[v2] final case class UntrackedShape(
-      mergedCols: Seq[(String, String)],
-      colsByVersion: Map[Long, Set[String]])
-
-  private val shapeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, UntrackedShape]()
-
-  private[v2] def untrackedShape(spark: SparkSession, root: String, v: Long,
-      es: => Seq[Snapshots.Entry]): UntrackedShape = {
-    val key = s"$root@$v"
-    val hit = shapeCache.get(key)
-    if (hit != null) return hit
-    val reps = Snapshots.untrackedVersionFiles(es)
-    require(reps.nonEmpty, s"snapshot table $root has no data files at version $v")
-    val perVer: Seq[(Long, Seq[(String, String)])] = reps.map { case (ver, path) =>
-      ver -> ParquetFooters.schema(spark, path).fields.map(f => f.name -> f.dataType.sql).toSeq
-    }
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    perVer.foreach { case (_, cols) =>
-      cols.foreach { case (n, t) =>
-        merged.get(n) match {
-          case None => merged(n) = t
-          case Some(t0) => require(t0 == t,
-            s"untracked column '$n' of $root has conflicting types $t0 and $t " +
-              "across commits — not additive evolution; read it via " +
-              "Snapshots.readSnapshot")
-        }
-      }
-    }
-    val shape = UntrackedShape(merged.toSeq,
-      perVer.map { case (ver, cols) => ver -> cols.map(_._1).toSet }.toMap)
-    if (shapeCache.size > 64) shapeCache.clear() // versions immutable: re-read is pure cost
-    shapeCache.putIfAbsent(key, shape)
-    shape
+      version: Long): StructType = {
+    val v = if (version >= 0) version else Snapshots.currentVersion(spark, root)
+    SnapshotRead.readSchema(spark, root, Snapshots.entries(spark, root, v), mergeSchema = true)
   }
 }
 
@@ -177,9 +121,9 @@ private[v2] class SnapshotBatchTable(root: String, version: Long,
     new SnapshotWriteBuilder(root, info)
   }
 
-  /** SQL UPDATE / MERGE INTO / non-equality DELETE (round 14, VERDICT
-    * r13 ask #3): group-based copy-on-write through Spark's own
-    * row-level rewrites — see [[SnapshotRowLevelOperation]]. Equality-
+  /** SQL UPDATE / MERGE INTO / non-equality DELETE: group-based
+    * copy-on-write through Spark's own row-level rewrites — see
+    * [[SnapshotRowLevelOperation]]. Equality-
     * shaped DELETEs still take the cheap merge-on-read path below
     * (Spark's OptimizeMetadataOnlyDeleteFromTable converts them back to
     * [[deleteWhere]] when [[canDeleteWhere]] accepts). */
@@ -192,9 +136,9 @@ private[v2] class SnapshotBatchTable(root: String, version: Long,
     SnapshotRowLevel.builder(root, tableSchema, info)
   }
 
-  /** `DELETE FROM … WHERE` lands as a MERGE-ON-READ equality delete
-    * (round 13): a conjunction of equality / IN predicates over
-    * distinct columns IS a key-tuple set — exactly what
+  /** `DELETE FROM … WHERE` lands as a MERGE-ON-READ equality delete: a
+    * conjunction of equality / IN predicates over distinct columns IS a
+    * key-tuple set — exactly what
     * [[graft.sources.Snapshots.commitDelete]] publishes, so the SQL
     * DELETE costs one tiny key file + one manifest commit, never a
     * rewrite. Anything else (ranges, nulls, OR trees, no WHERE)
@@ -251,15 +195,11 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
   private var required: StructType = tableSchema
   private var aggValues: Option[(StructType, Seq[Seq[Any]], String)] = None
 
-  // SNAPSHOT PIN for aggregate pushdown (round 14, VERDICT r13 ask #2 /
-  // ADVICE r12 medium): every metadata walk of ONE compiled aggregation
-  // must read ONE version. The former form passed the raw `version`
-  // member (-1 = current) into each metadata call, which each resolved
-  // currentVersion independently — a concurrent commit between the
-  // count(*) walk and the min/max walk could mix count@v with
-  // min/max@v+1 in one pushed result row. Resolved ONCE, lazily (a scan
-  // that never compiles an aggregate never resolves it here — the
-  // non-agg path pins its own version in SnapshotBatchScan).
+  // SNAPSHOT PIN for aggregate pushdown: every metadata walk of ONE
+  // compiled aggregation reads ONE version, so a concurrent commit
+  // cannot mix count@v with min/max@v+1 in one pushed result row.
+  // Resolved once, lazily (the non-agg path pins its own version in
+  // SnapshotBatchScan).
   private lazy val aggVersion: Long =
     if (version >= 0) version
     else Snapshots.currentVersion(SparkSession.active, root)
@@ -275,7 +215,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
     * Spark must keep the row-level predicate. (Returning a filter both
     * ways is the documented DSv2 contract for "advisory" pushdown.) */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(Snapshots.prunableFilter)
+    pushed = filters.filter(SnapshotRead.prunableFilter)
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -298,7 +238,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
     * `df.agg(...)` / `df.groupBy(g).agg(...)` doing it declaratively).
     * GROUP BY one int/long/string column is accepted when that column
     * is SINGLE-VALUED per file in the manifest stats (lo == hi — the
-    * partition-shaped-ingest layout; round 13, VERDICT r12 ask #3).
+    * partition-shaped-ingest layout).
     * Accepted ONLY when every file carries the needed stat — any gap,
     * a residual filter, a multi-valued group file, or a non-integral
     * agg column declines and the ordinary scan computes. */
@@ -373,7 +313,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
           (StructType(fs), Seq(vs.toSeq), ds.mkString(", "))
         }
 
-      // GROUPED pushdown (round 13, VERDICT r12 ask #3): one group
+      // GROUPED pushdown: one group
       // column whose manifest stats are SINGLE-VALUED per file (lo==hi
       // — the partition-shaped-ingest layout). The grouped manifest
       // walks decline on any gap, so acceptance here is exactly
@@ -524,7 +464,7 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
     // whose not-matched-by-source rows a MERGE must rewrite — group
     // completeness beats the optimization (compile-time condition
     // pruning still applies; it is sound for UPDATE/DELETE groups)
-    if (rowLevel.isEmpty) runtime = filters.filter(Snapshots.prunableFilter)
+    if (rowLevel.isEmpty) runtime = filters.filter(SnapshotRead.prunableFilter)
   /** POST-PRUNE planner statistics from the manifest's reserved
     * `__rows`/`__bytes` keys: the optimizer sees the size of what the
     * scan will actually read, so a selective read of a huge table
@@ -533,8 +473,7 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
     * broadcast join unaided. Unknown components stay empty (Spark
     * falls back to its defaults), never a guess. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val (rows, bytes) = Snapshots.prunedScanEstimate(entries,
-      (pushed ++ runtime).toIndexedSeq)
+    val (rows, bytes) = SnapshotRead.scanEstimate(entries, (pushed ++ runtime).toIndexedSeq)
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         bytes.fold(java.util.OptionalLong.empty)(java.util.OptionalLong.of)
@@ -569,26 +508,27 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
 
   // the columns each file task reads: the required ones, then the
   // delete-key columns the scoped deletes probe
+  private lazy val keyCols = SnapshotRead.keyColumns(spark, entries)
   private lazy val readNames: Seq[String] =
-    required.fieldNames.toSeq ++ Snapshots.deleteKeyColumns(spark, entries)
-      .filterNot(required.fieldNames.contains)
+    required.fieldNames.toSeq ++ keyCols.filterNot(required.fieldNames.contains)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val specs = Snapshots.fullScanSpecs(spark, root, entries,
-      (pushed ++ runtime).toIndexedSeq, readNames,
-      tableSchema.fields.map(f => f.name -> f.dataType.sql).toSeq,
-      SnapshotBatchSource.untrackedShape(spark, root, resolvedVersion, entries).colsByVersion)
+    val plan = SnapshotRead.plan(spark, root, entries, (pushed ++ runtime).toIndexedSeq,
+      mergeSchema = true, keepAnchor = false)
+    val pos = readNames.map(plan.schema.fieldIndex)
     // row-level rewrite: the write's commit swaps EXACTLY these files
     rowLevel.foreach { op =>
-      op.scannedPaths = specs.map(_.path); op.scanVersion = resolvedVersion
+      op.scannedPaths = plan.files.map(_.entry.path); op.scanVersion = resolvedVersion
     }
-    specs.map(s => SnapshotFilePartition(s.path, s.fileCols, s.deletes): InputPartition).toArray
+    plan.files.map(f =>
+      SnapshotFilePartition(f.entry.path, pos.map(f.fileCols), f.deletes): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SnapshotReaderFactory(
       StructType(required.fields ++ readNames.drop(required.length).map(tableSchema(_))),
-      required.length, SnapshotReaderFactory.readerConf(spark))
+      required.length, keyCols.map(readNames.indexOf).toArray,
+      SnapshotReaderFactory.readerConf(spark))
 }
 
 /** The delete sets scoped to one data file, grouped by key positions
@@ -647,13 +587,13 @@ private[graft] object SnapshotDeleteSets {
 
   /** Driver side: the spec of delete file `path`, whose own columns are
     * its equality key, read at their current types `currentType` and
-    * positioned by `keyIdx`. Each key's footer type must equal its
+    * indexed by `keyIdx` into the plan's key columns. Each key's footer type must equal its
     * current type or widen losslessly to it (INT→BIGINT,
     * INT/BIGINT/FLOAT→DOUBLE): a wider-typed key file — BIGINT keys
     * against an INT column — would otherwise match no row and the
     * delete would be silently ignored. */
   def spec(spark: SparkSession, path: String, currentType: Map[String, String],
-      keyIdx: String => Int): Snapshots.DeleteSpec = {
+      keyIdx: String => Int): SnapshotRead.DeleteSpec = {
     val cols = ParquetFooters.schema(spark, path).fields.toSeq
     cols.foreach { f =>
       val to = currentType.getOrElse(f.name, throw new IllegalArgumentException(
@@ -666,7 +606,7 @@ private[graft] object SnapshotDeleteSets {
           "checks this at commit time)")
     }
     val names = cols.map(_.name)
-    Snapshots.DeleteSpec(path, names, names.map(currentType), names.map(keyIdx))
+    SnapshotRead.DeleteSpec(path, names, names.map(currentType), names.map(keyIdx))
   }
 
   private val LosslessWidenings =
@@ -674,7 +614,7 @@ private[graft] object SnapshotDeleteSets {
 
   /** Load (or reuse) the sets of `specs` — the deletes in one data
     * file's scope — grouped by key positions. */
-  def scope(specs: Seq[Snapshots.DeleteSpec],
+  def scope(specs: Seq[SnapshotRead.DeleteSpec],
       confEntries: Array[(String, String)]): ScopedDeletes =
     new ScopedDeletes(specs.groupBy(_.keyIdx).toArray.map { case (idx, sps) =>
       idx.toArray -> sps.map(get(_, confEntries)).toArray
@@ -683,7 +623,7 @@ private[graft] object SnapshotDeleteSets {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, scala.collection.Set[Seq[Any]]]()
 
-  def get(sp: Snapshots.DeleteSpec,
+  def get(sp: SnapshotRead.DeleteSpec,
       confEntries: Array[(String, String)]): scala.collection.Set[Seq[Any]] = {
     val k = s"${sp.path}|${sp.keyCols.mkString(",")}|${sp.keyTypes.mkString(",")}"
     val hit = cache.get(k)
@@ -694,7 +634,7 @@ private[graft] object SnapshotDeleteSets {
     set
   }
 
-  private def load(sp: Snapshots.DeleteSpec,
+  private def load(sp: SnapshotRead.DeleteSpec,
       confEntries: Array[(String, String)]): scala.collection.Set[Seq[Any]] = {
     val schema = StructType(sp.keyCols.zip(sp.keyTypes).map { case (n, t) =>
       org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{ParquetFooters, Snapshots}
+import graft.sources.{ParquetFooters, SnapshotRead}
 
 /** One parquet file of a snapshot read, decoded by Spark's own row
   * materializer (`ParquetReadSupport`, the reader Spark itself uses when
@@ -85,18 +85,19 @@ private[graft] final class SnapshotFileReader(path: String, fileCols: Seq[String
   * column bound to each column of the factory's read schema ("" =
   * NULL) and the delete files scoped to it. */
 private[v2] case class SnapshotFilePartition(path: String, fileCols: Seq[String],
-    deletes: Seq[Snapshots.DeleteSpec] = Nil) extends InputPartition
+    deletes: Seq[SnapshotRead.DeleteSpec] = Nil) extends InputPartition
 
 /** The one reader of snapshot data files, for the batch scan and the
   * stream alike. Each file reads through [[SnapshotFileReader]] bound to
   * `schema` (the output columns, then any delete-key columns not among
-  * them); rows whose key tuple a scoped delete holds are dropped
+  * them); `keyPos(i)` is the read column of the plan's i-th delete key.
+  * Rows whose key tuple a scoped delete holds are dropped
   * ([[ScopedDeletes]], the matcher `readSnapshot` shares; a NULL
   * component never matches), and the first `outWidth` columns are
   * emitted. A file whose binding is the identity emits the
   * materializer's rows unprojected. */
 private[v2] class SnapshotReaderFactory(schema: StructType, outWidth: Int,
-    confEntries: Array[(String, String)]) extends PartitionReaderFactory {
+    keyPos: Array[Int], confEntries: Array[(String, String)]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SnapshotFilePartition]
     val file = new SnapshotFileReader(p.path, p.fileCols, schema,
@@ -105,9 +106,9 @@ private[v2] class SnapshotReaderFactory(schema: StructType, outWidth: Int,
       if (file.identity(outWidth)) r => r else UnsafeProjection.create(file.columns.take(outWidth))
     val deletes = SnapshotDeleteSets.scope(p.deletes, confEntries)
     val keyIdx = p.deletes.flatMap(_.keyIdx).distinct.toArray
-    val keys = new Array[Any](schema.length)
+    val keys = new Array[Any](keyPos.length)
     def deleted(row: InternalRow): Boolean = !deletes.isEmpty && {
-      keyIdx.foreach(i => keys(i) = file.columns(i).eval(row))
+      keyIdx.foreach(i => keys(i) = file.columns(keyPos(i)).eval(row))
       deletes.deletes(keys)
     }
     new PartitionReader[InternalRow] {

@@ -188,7 +188,8 @@ private[graft] class SnapshotMicroBatchStream(root: String, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, schema.length, SnapshotReaderFactory.readerConf(spark))
+    new SnapshotReaderFactory(schema, schema.length, Array.empty,
+      SnapshotReaderFactory.readerConf(spark))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

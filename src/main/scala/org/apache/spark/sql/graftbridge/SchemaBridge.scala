@@ -7,11 +7,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * under `mergeSchema = true`, and
   * `DataType.equalsIgnoreCompatibleNullability`, true when a `from`
   * value is a valid `to` value as is (same type, `from` no more
-  * nullable). Visibility shim only. */
+  * nullable), and `asNullable`, the nullability a file source reads a
+  * data schema with. Visibility shim only. */
 object SchemaBridge {
   def merge(a: StructType, b: StructType, caseSensitive: Boolean): StructType =
     a.merge(b, caseSensitive)
 
   def equalsIgnoreCompatibleNullability(from: DataType, to: DataType): Boolean =
     DataType.equalsIgnoreCompatibleNullability(from, to)
+
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -175,13 +175,80 @@ class SnapshotBatchFullSpec extends SparkTestBase {
     assert(batchRead(root).orderBy("id").collect().toSeq ==
       Snapshots.readSnapshot(spark, root, mergeSchema = true)
         .select("id", "tag", "score").orderBy("id").collect().toSeq)
-    // a CONFLICTING re-type across commits is not additive — loud, with
-    // the readSnapshot route named
+    // a CONFLICTING re-type across commits is not additive — Spark's
+    // schema merge refuses it loudly on both paths
     val bad = freshRoot("grow_conflict")
     Snapshots.commitAppend(spark, bad, Seq((1L, 1L)).toDF("id", "v").coalesce(1))
     Snapshots.commitAppend(spark, bad, Seq((2L, "s")).toDF("id", "v").coalesce(1))
     val e = intercept[Exception] { batchRead(bad).collect() }
-    assert(e.getMessage.contains("conflicting types"), e.getMessage)
+    assert(e.getMessage.contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"), e.getMessage)
+    val e1 = intercept[Exception] { Snapshots.readSnapshot(spark, bad, mergeSchema = true) }
+    assert(e1.getMessage.contains("CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE"), e1.getMessage)
+  }
+
+  test("a root deleted and re-committed reads its new schema through DSv2 and SQL") {
+    val root = freshRoot("recreated")
+    spark.conf.set("spark.sql.catalog.snap", "graft.sources.v2.SnapshotCatalog")
+    def sql = spark.sql(s"SELECT * FROM snap.`$root`")
+    Snapshots.commitAppend(spark, root, Seq((1L, "a1")).toDF("id", "a").coalesce(1))
+    for (df <- Seq(batchRead(root), sql)) {
+      assert(df.columns.toSeq == Seq("id", "a"))
+      assert(df.collect().length == 1)
+    }
+    val p = new Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // the re-created table reuses version 1
+    assert(Snapshots.commitAppend(spark, root,
+      Seq((2L, "b2"), (3L, "b3")).toDF("id", "b").coalesce(1)) == 1L)
+    for ((what, df) <- Seq("DSv2" -> batchRead(root), "SQL" -> sql)) {
+      assert(df.columns.toSeq == Seq("id", "b"), what)
+      assert(df.orderBy("id").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq ==
+        Seq(2L -> "b2", 3L -> "b3"), what)
+    }
+  }
+
+  test("untracked DECIMAL widening reads through DSv2 as readSnapshot(mergeSchema = true)") {
+    val root = freshRoot("decwiden")
+    def commit(id: Long, d: String, typ: String): Unit = Snapshots.commitAppend(spark, root,
+      Seq((id, d)).toDF("id", "d").select(col("id"), col("d").cast(typ)).coalesce(1))
+    commit(1L, "1.25", "DECIMAL(10,2)")
+    commit(2L, "1234567890.50", "DECIMAL(12,2)")
+    val dsv2 = batchRead(root)
+    for (vectorized <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      try {
+        val merged = Snapshots.readSnapshot(spark, root, mergeSchema = true)
+        assert(merged.schema("d").dataType.sql == "DECIMAL(12,2)")
+        assert(dsv2.schema == merged.schema)
+        assert(dsv2.orderBy("id").collect().toSeq == merged.orderBy("id").collect().toSeq,
+          s"vectorized=$vectorized")
+        assert(merged.orderBy("id").collect().map(_.getDecimal(1).toPlainString).toSeq ==
+          Seq("1.25", "1234567890.50"))
+      } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    }
+  }
+
+  test("untracked struct growth: one schema, DSv2 refuses the struct cast at planning") {
+    // Cast.canCast is false for a struct that gained a field, so the one
+    // binding rule refuses it on the driver, naming the column, while
+    // readSnapshot(mergeSchema = true) serves it through the parquet
+    // reader's by-name struct resolution
+    val root = freshRoot("structgrow")
+    Snapshots.commitAppend(spark, root,
+      spark.sql("SELECT 1L AS id, named_struct('a', 1) AS s").coalesce(1))
+    Snapshots.commitAppend(spark, root,
+      spark.sql("SELECT 2L AS id, named_struct('a', 2, 'b', 'x') AS s").coalesce(1))
+    val merged = Snapshots.readSnapshot(spark, root, mergeSchema = true)
+    assert(merged.schema("s").dataType.sql == "STRUCT<a: INT, b: STRING>")
+    assert(merged.orderBy("id").select("s.a", "s.b").collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq == Seq((1, None), (2, Some("x"))))
+    val dsv2 = batchRead(root)
+    assert(dsv2.schema == merged.schema)
+    val e = intercept[Exception](dsv2.collect())
+    val refused = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i }
+    assert(refused.exists(_.getMessage.contains("column 's'")), e.toString)
+    assert(!e.getMessage.contains("stage failure"), "the refusal must come before any task")
   }
 
   test("re-types cast in-scan as readSnapshot casts them") {
@@ -259,7 +326,10 @@ class SnapshotBatchFullSpec extends SparkTestBase {
     Snapshots.initSchema(spark, root)
     rows ++= first.map(v1 -> _)
     var nextId = 21L
-    def check(what: String): Unit = matchesReference(root, reference(), what)
+    def check(what: String): Unit = {
+      assert(batchRead(root).schema == Snapshots.readSnapshot(spark, root).schema, what)
+      matchesReference(root, reference(), what)
+    }
     for (step <- 1 to 12) {
       rnd.nextInt(4) match {
         case 0 => // append a small batch under the current schema

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 
-import graft.sources.Snapshots
+import graft.sources.{SnapshotRead, Snapshots}
 import graft.sources.v2.WrittenFile
 
 /** Round-14 hardening of the snapshot commit/prune layer (VERDICT r13
@@ -138,15 +138,15 @@ class SnapshotHardeningSpec extends SparkTestBase {
     // the pair is now incomparable by decree (keep)
     val stale = Map("d" -> Snapshots.ColStats('l', "12345", "12345"))
     val keyer: String => Option[String] = n => Some(n)
-    assert(Snapshots.mayMatch(stale, keyer, EqualTo("d", new java.math.BigDecimal("1.2345"))),
+    assert(SnapshotRead.mayMatch(stale, keyer, EqualTo("d", new java.math.BigDecimal("1.2345"))),
       "a decimal predicate against 'l' bounds must KEEP the file")
-    assert(Snapshots.mayMatch(stale, keyer, EqualTo("d", BigDecimal("999999"))))
+    assert(SnapshotRead.mayMatch(stale, keyer, EqualTo("d", BigDecimal("999999"))))
     // genuine longs still compare (and prune) exactly
-    assert(!Snapshots.mayMatch(stale, keyer, EqualTo("d", 999L)))
-    assert(Snapshots.mayMatch(stale, keyer, EqualTo("d", 12345L)))
+    assert(!SnapshotRead.mayMatch(stale, keyer, EqualTo("d", 999L)))
+    assert(SnapshotRead.mayMatch(stale, keyer, EqualTo("d", 12345L)))
     // fresh 'm' stats compare decimals in value space
     val fresh = Map("d" -> Snapshots.ColStats('m', "1.10", "2.20"))
-    assert(Snapshots.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("1.50"))))
-    assert(!Snapshots.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("9.99"))))
+    assert(SnapshotRead.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("1.50"))))
+    assert(!SnapshotRead.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("9.99"))))
   }
 }
