@@ -1,32 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.functions.Num.r8
 import scala.util.chaining._
 
-/** Iterative graph traversal — the capability SQL expresses with
-  * `WITH RECURSIVE` and Spark has no built-in for: breadth-first
-  * shortest-hop distances over an edge list, by frontier expansion.
+/** Graph kernels over edge lists (`src`, `dst` — or `left`, `right` for
+  * the bipartite link-prediction pair): breadth-first distances, the
+  * fixed-round walks and votes (PageRank, personalized PageRank, Katz,
+  * label propagation, k-core, HITS), triangle counts and one-scalar
+  * structural audits.
   *
-  * Scale shape (the same discipline as [[Components]]): the edge list is
-  * partitioned on the join key and persisted once; each round joins the
-  * CURRENT FRONTIER (shrinks toward the fringe) against it, anti-joins
-  * the visited set to keep only newly reached nodes, and checkpoints
-  * eagerly so plans stay O(1) deep. The driver sees one observe-metric
-  * fingerprint per round, never rows. Rounds = min(graph eccentricity
-  * from the seed, maxDepth); each round's shuffles carry (node, dist)
-  * pairs only.
+  * Every iterative kernel runs a FIXED round count (BFS: a depth cap), so
+  * its result is a deterministic function of the edge list that a plain
+  * SQL oracle recomputes by unrolling the same rounds. Every value that
+  * crosses a merge is integral — LONG-quantized sums, micro-unit scores —
+  * so results are bit-identical under any partition count, merge order
+  * or join strategy; the only floats are single IEEE divisions re-gridded
+  * to 1e-8 ([[graft.functions.Num.r8]]).
   *
-  * ONE hop per round is deliberate (round-8 measurement): a two-hop
-  * variant — both depths fused into one checkpointed action, hop-2
-  * anti-joining visited ∪ hop-1 — was implemented and measured
-  * consistently SLOWER at every SF (two-hop 1.08–1.19/1.36–1.69/
-  * 4.20–4.29 s vs one-hop 0.86–0.99/1.25–1.33/3.27–3.41 s at
-  * sf0.001/0.01/0.1), with or without persisting the hop-1 frame: the
-  * per-round fixed cost is per SHUFFLE STAGE, not per action, and the
-  * fused round serializes the same stages while adding a union and a
-  * wider anti-join. SCALE.md "graph_bfs two-hop experiment" records
-  * the numbers.
+  * Scale shape: the edge list is hash-distributed on the join key and cut
+  * ONCE ([[Dist.byKeysCut]] re-declares that partitioning on the cut);
+  * each round joins a |V|-row state frame against it and shuffles
+  * (node, value) pairs only — never edges twice, never attributes.
+  * Scalars the driver needs (|V|, id ranges, a renormalizing max) ride
+  * the cut's job as observe metrics instead of separate actions.
+  *
+  * The cut rule ([[rounds]]): a fixed small round count stays LAZY by
+  * default — the rounds compose into one DAG, AQE plans every stage and
+  * the scheduler floor is paid once; `checkpointEvery = c` cuts the
+  * state frame after every c-th round, for long loops that want bounded
+  * plans and restartable state. A kernel whose per-round frame feeds TWO
+  * consumers cuts every round by default (k-core) or eagerly per
+  * half-round (HITS): uncut, each consumer re-derives the whole upstream
+  * chain, doubling per round.
   */
 object Graph {
 
@@ -35,223 +42,158 @@ object Graph {
     * (node, dist) including (seed, 0). Undirected graphs pass a
     * symmetrized edge list. `maxDepth` bounds the loop on BOTH engines
     * (the DuckDB oracle caps its recursive CTE identically), so results
-    * are well-defined even on cyclic graphs. */
+    * are well-defined even on cyclic graphs.
+    *
+    * Scale shape (the same discipline as [[Components]]): the edge list
+    * is partitioned on `src` and persisted for the call; each round joins
+    * the CURRENT FRONTIER against it, anti-joins the visited set to keep
+    * only newly reached nodes, and cuts eagerly, so the driver sees one
+    * observe-metric count per round, never rows, and the loop stops at
+    * the first empty frontier. ONE hop per round: a fused two-hop round
+    * serializes the same shuffle stages plus a union and a wider
+    * anti-join, and measured slower at every SF (SCALE.md "graph_bfs
+    * two-hop experiment"). The persisted edge list is released however
+    * the loop ends. */
   def bfs(edges: DataFrame, seed: Long, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
     val e = Dist.byKeys(edges.select(col("src"), col("dst")), col("src")).persist()
-    var visited = Seq((seed, 0)).toDF("node", "dist").pipe(Checkpointing.cut)
-    var frontier = visited
-    var depth = 0
-    var done = false
-    while (depth < maxDepth && !done) {
-      val obs = new org.apache.spark.sql.Observation(s"bfs_$depth")
-      // dist rides as a COLUMN (frontier dist + 1), not a per-round
-      // literal: a lit(depth+1) is constant-folded into the generated
-      // code, so every round would compile a fresh whole-stage-codegen
-      // plan; the column form keeps round plans structurally identical
-      // and the codegen cache hot (measured: shaves the per-round
-      // compile share of the fixed floor)
-      val next = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node"), (frontier("dist") + lit(1)).as("dist"))
-        .distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .observe(obs, count(lit(1)).as("n"))
-        .pipe(Checkpointing.cut)
-      done = obs.get("n").asInstanceOf[Long] == 0
-      if (!done) {
-        // no checkpoint on visited: it's a union of ≤ maxDepth frames that
-        // are EACH checkpointed, so the plan stays shallow and re-reading
-        // it is a cache scan (round time is dominated by the
-        // join/distinct/anti-join jobs either way — the same ~0.5 s/round
-        // toy-SF floor as the CC loop, amortizing with data size)
-        visited = visited.unionAll(next)
-        frontier = next
+    try {
+      var visited = Seq((seed, 0)).toDF("node", "dist").pipe(Checkpointing.cut)
+      var frontier = visited
+      var depth = 0
+      var done = false
+      while (depth < maxDepth && !done) {
+        val obs = new Observation(s"bfs_$depth")
+        // dist rides as a COLUMN (frontier dist + 1), not a per-round
+        // literal: a literal is constant-folded into the generated code,
+        // so every round would compile a fresh whole-stage-codegen plan
+        val next = frontier.join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node"), (frontier("dist") + lit(1)).as("dist"))
+          .distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .observe(obs, count(lit(1)).as("n"))
+          .pipe(Checkpointing.cut)
+        done = obs.get("n").asInstanceOf[Long] == 0
+        if (!done) {
+          // visited is a union of ≤ maxDepth frames that are EACH cut, so
+          // its plan stays shallow without a cut of its own
+          visited = visited.unionAll(next)
+          frontier = next
+        }
+        depth += 1
       }
-      depth += 1
-    }
-    e.unpersist()
-    visited
+      visited
+    } finally e.unpersist()
   }
+
+  /** `iters` applications of `step(state, round)` (rounds 1-based) to
+    * `init`, composed lazily into one plan, with the state cut after
+    * every `cutEvery`-th round (0 = never) — the cut rule of every
+    * fixed-round kernel. */
+  private def rounds(init: DataFrame, iters: Int, cutEvery: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init) { (x, i) =>
+      step(x, i).pipe(y => if (cutEvery > 0 && i % cutEvery == 0) Checkpointing.cut(y) else y)
+    }
 
   /** PageRank by power iteration over DIRECTED edges (`src`, `dst`) —
     * the web-graph quality signal pretraining pipelines rank crawl
-    * sources with. A fixed iteration count (not a convergence test)
-    * keeps the result a deterministic function of the input so a plain
-    * SQL oracle can recompute it by unrolling the same rounds.
-    *
-    * Per round: rank(v) ← (1−d)/N + d·Σ_{u→v} rank(u)/outdeg(u).
-    * Dangling mass (nodes with no out-edges) is dropped, identically on
-    * both engines; callers wanting mass conservation symmetrize or add
-    * self-loops upstream.
-    *
-    * Scale shape (same discipline as [[bfs]]/[[Components]]): the
-    * degree-annotated edge list is partitioned on `src` and persisted
-    * ONCE; each round joins the current rank frame against it, shuffles
-    * (dst, contribution) pairs only — never edges, never text — and
-    * checkpoints the |V|-row rank frame so plans stay O(1) deep.
-    * Ranks are rounded ([[graft.functions.Num.r8]] — 1e-8; the r4 grid
-    * zeroes O(1/N) ranks past ~10⁴ nodes) each round, which
-    * both pins cross-engine agreement (the next round's input is
-    * bit-identical on both sides) and stops float-association noise
-    * accumulating across rounds. */
+    * sources with. Per round:
+    * rank(v) ← (1−d)/N + d·Σ_{u→v} rank(u)/outdeg(u), N the observed
+    * node count. Dangling mass (nodes with no out-edges) is dropped,
+    * identically on both engines; callers wanting mass conservation
+    * symmetrize or add self-loops upstream. See [[walk]] for the
+    * exactness contract and the plan shape. */
   def pagerank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      checkpointEvery: Int = 0): DataFrame = {
-    import graft.functions.Num.r8
+      checkpointEvery: Int = 0): DataFrame =
+    walk(edges, iters, damping, checkpointEvery)(
+      n => lit(1.0 - damping) / lit(n.toDouble), n => r8(lit(1.0) / lit(n.toDouble)))
+
+  /** Personalized PageRank — random walk with restart to a SEED set
+    * (Haveliwala 2002; the similar-item / trust-propagation workhorse):
+    * [[pagerank]]'s walk with the teleport mass landing only on `seeds`,
+    * (1−d)/|S| each, so ranks measure proximity TO the seeds instead of
+    * global centrality. Non-seed nodes with no in-edges sit at exactly
+    * 0.0; seeds should be graph nodes (a seed absent from the edge set
+    * contributes no mass — caller's contract) and must be distinct (a
+    * repeated seed would spread (1−d)/|S| over fewer nodes and lose
+    * mass). The seed test is an `isin` literal — no extra join, no extra
+    * exchange vs [[pagerank]]. */
+  def personalizedPagerank(edges: DataFrame, seeds: Seq[Long], iters: Int,
+      damping: Double = 0.85, checkpointEvery: Int = 0): DataFrame = {
+    require(iters >= 0 && seeds.nonEmpty)
+    require(seeds.distinct.size == seeds.size, "personalizedPagerank: seeds must be " +
+      s"distinct; repeated: ${seeds.diff(seeds.distinct).distinct.mkString(", ")}")
+    val isSeed = col("node").isin(seeds: _*)
+    val k = lit(seeds.size.toDouble)
+    walk(edges, iters, damping, checkpointEvery)(
+      _ => when(isSeed, lit(1.0 - damping) / k).otherwise(lit(0.0)),
+      _ => when(isSeed, r8(lit(1.0) / k)).otherwise(lit(0.0)))
+  }
+
+  /** The random walk behind [[pagerank]] and [[personalizedPagerank]]:
+    * rank(v) ← r8(teleport(v) + d·Σ_{u→v} rank(u)/outdeg(u)) from the
+    * start ranks, where `teleport(n)` and `start(n)` are per-node columns
+    * given the observed node count n.
+    *
+    * Exactness: each contribution is quantized to the 1e-8 grid,
+    * floor(rank·1e8/outdeg + 0.5), BEFORE the sum, and summed as a LONG —
+    * associative and commutative, so the per-node total is bit-identical
+    * under any partition count or merge order, where a double sum's
+    * accumulation order would differ between Spark's partial aggregation
+    * and a single-threaded oracle and could flip an r8 grid step. Ranks
+    * are re-gridded with r8 every round (1e-8; a coarser grid zeroes
+    * O(1/N) ranks on large graphs), so the next round's input is
+    * bit-identical on both engines. The oracle applies the identical
+    * quantization before ITS sum.
+    *
+    * Plan shape: setup is two eager materializations — the
+    * degree-annotated, src-partitioned edge cut every round joins, and
+    * the node frame derived from it, whose has-inbound flag and counts
+    * (|V|, |no-inbound|) ride the same job as observe metrics. Nodes with
+    * no in-edges hold the constant r8(teleport) from the first round on,
+    * so their contributions are a constant frame unioned BELOW each
+    * round's exchange (sum(s ∪ consts) ≡ sum(s) + consts exactly in
+    * LONG): the loop-carried frame stays a pure aggregate output,
+    * hash-partitioned on `node` and co-partitioned with the edge cut, so
+    * a sort-merge join never re-exchanges it. Their rank rows rejoin the
+    * output once after the loop. A symmetrized graph observes no such
+    * nodes and skips both unions. One exchange per round plus the
+    * output's; rounds follow the [[rounds]] cut rule. */
+  private def walk(edges: DataFrame, iters: Int, damping: Double, cutEvery: Int)(
+      teleport: Long => Column, start: Long => Column): DataFrame = {
     require(iters >= 0)
     val e = edges.select(col("src"), col("dst")).distinct()
-    // Setup is TWO eager materializations, not four (round-9: the iters=0
-    // probe showed setup at ~60% of the toy-SF total, dominated by
-    // per-job scheduling floors; interleaved A/B read 5.4 s vs 7.5 s at
-    // sf0.1 for the four-checkpoint form):
-    //  1. `ed` — the degree-annotated, src-partitioned edge list every
-    //     round joins (localCheckpoint(true): blocks reclaimed by the
-    //     ContextCleaner when the frame is GC'd, unlike persist()).
-    //  2. `nodes` — derived FROM ed's cached blocks (the inner degree
-    //     join preserves every edge row, so ed's endpoint set ≡ e's),
-    //     with the has-inbound flag folded INTO the same endpoint
-    //     aggregate: the old separate noRecv anti-join checkpoint — and
-    //     the tempting lazy alternative, which turned out to re-plan a
-    //     full |E| dst-distinct EVERY round (per-round expression ids
-    //     defeat exchange reuse) — both collapse into a per-round
-    //     NARROW FILTER over these cached blocks.
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val ed = Dist.byKeysCut(e.join(outdeg, "src"), "src")
-    // |V| rides the checkpoint job as an observe metric (round 15) —
-    // the old separate nodes.count() action was one more full scheduler
-    // round-trip for a scalar the same job already knows
-    val nObs = new org.apache.spark.sql.Observation()
+    val obs = new Observation()
     val nodes = ed.select(col("src").as("node"), lit(false).as("recv"))
       .unionAll(ed.select(col("dst").as("node"), lit(true).as("recv")))
       .groupBy("node").agg(bool_or(col("recv")).as("recv"))
-      .observe(nObs, count(lit(1)).as("n"),
+      .observe(obs, count(lit(1)).as("n"),
         count(when(!col("recv"), lit(1))).as("n_norecv"))
       .localCheckpoint(true)
-    val n = nObs.get("n").asInstanceOf[Long]
-    // |noRecv| rides the same cut: a SYMMETRIZED graph (every query's
-    // shape, and the common production one) has NO no-inbound nodes, and
-    // knowing that on the driver lets the loop skip the noRecv machinery
-    // entirely — see below (round 16)
-    val hasNoRecv = nObs.get("n_norecv").asInstanceOf[Long] > 0L
-    var ranks = nodes.select(col("node"), r8(lit(1.0) / lit(n.toDouble)).as("rank"))
-    val base = lit(1.0 - damping) / lit(n.toDouble)
-    // Nodes with NO in-edges never receive contributions — their rank is
-    // the constant base from round 1 on, so their per-round
-    // out-contributions are a CONSTANT frame. Round 16 reshapes the old
-    // per-round rank-row union two ways:
-    //  - the constant contributions union BELOW the exchange (into the
-    //    aggregate input — the katz round-15 move), so the loop-carried
-    //    frame stays a pure aggregate output: hashpartitioned on `node`,
-    //    co-partitioned with the src-keyed edge checkpoint. The old
-    //    rank-row union destroyed that partitioning — invisible at toy
-    //    SFs where AQE broadcast-converts the join, but at the ~sf1
-    //    synth slice the SMJ re-exchanged the rank frame every round.
-    //    sum(s ∪ consts) ≡ sum(s) + consts exactly in LONG and the
-    //    constant rows carry the identical floor(r8(base)·1e8/outdeg
-    //    + 0.5) quantization, so results are bit-identical; the
-    //    no-inbound rank ROWS re-join the output once after the loop.
-    //  - when the observed |noRecv| is ZERO the union is the identity,
-    //    so the loop skips it (and the final row union) outright — no
-    //    per-round empty-frame join/broadcast stages at all.
+    val n = obs.get("n").asInstanceOf[Long]
+    val hasNoRecv = obs.get("n_norecv").asInstanceOf[Long] > 0L
+    val base = teleport(n)
     val noRecv = nodes.filter(!col("recv")).select(col("node"), r8(base).as("rank"))
     def quantized(r: DataFrame): DataFrame =
       r.join(ed, r("node") === ed("src"))
         .select(col("dst").as("node"),
           floor(col("rank") * lit(100000000L) / col("outdeg") + lit(0.5)).cast("long").as("wq"))
     val noRecvContrib = quantized(noRecv)
-    for (i <- 1 to iters) {
-      // Contributions are quantized to the 1e-8 grid BEFORE the sum and
-      // summed as LONGs (ADVICE r8): long addition is associative and
-      // commutative, so the per-node total is bit-identical under ANY
-      // partition count or merge order — a double sum's accumulation
-      // order differs between Spark partial aggregation and a
-      // single-threaded oracle, and a total landing within an ulp of a
-      // rounding boundary would flip the r8 grid step and cascade
-      // through later rounds. The oracle applies the identical
-      // floor(rank·1e8/outdeg + 0.5) before ITS sum.
-      // Round 1's input is the FULL initial frame (every node at 1/N);
-      // later rounds carry the aggregate output (nodes WITH in-edges)
-      // plus the constant no-inbound contributions.
-      val fromRanks = quantized(ranks)
-      val contrib = (if (i == 1 || !hasNoRecv) fromRanks
-        else fromRanks.unionAll(noRecvContrib))
-        .groupBy("node").agg(sum(col("wq")).as("wq"))
-      ranks = contrib
-        .select(col("node"),
-          r8(base + lit(damping) * (col("wq").cast("double") / lit(100000000.0))).as("rank"))
-      // Unlike the while-driven BFS/CC loops, a FIXED small round count
-      // needs no per-round action at all: left lazy, the rounds compose
-      // into ONE DAG — AQE plans every stage, nothing materializes
-      // per-round, and the scheduler floor is paid once (measured at
-      // sf0.1 warm: 5-7 s eager-per-round → ~4.5 s lazy-with-left-join
-      // → the union form plans exactly one exchange per round plus the
-      // output sort — 7 total for 6 rounds). `checkpointEvery`
-      // (default off) restores the cut for LONG loops — a 50-round run
-      // on a 1000-executor cluster wants bounded plans and restartable
-      // state more than single-DAG scheduling.
-      if (checkpointEvery > 0 && i % checkpointEvery == 0)
-        ranks = Checkpointing.cut(ranks)
-    }
-    if (iters >= 1 && hasNoRecv) ranks.unionAll(noRecv) else ranks
-  }
-
-  /** Personalized PageRank — random walk with restart to a SEED set
-    * (Haveliwala 2002; the similar-item / trust-propagation workhorse):
-    * identical discipline to [[pagerank]] (degree-annotated checkpointed
-    * edge list, contributions LONG-quantized on the 1e-8 grid BEFORE the
-    * sum, one r8-gridded IEEE division per round), but the teleport mass
-    * lands only on `seeds` — (1−d)/|S| each — so ranks measure proximity
-    * TO the seeds instead of global centrality. Non-seed nodes with no
-    * in-edges sit at exactly 0.0; seeds should be graph nodes (a seed
-    * absent from the edge set contributes no mass — caller's contract).
-    * The seed test rides every round as a broadcast `isin` literal —
-    * no extra join, no extra exchange vs [[pagerank]]. */
-  def personalizedPagerank(edges: DataFrame, seeds: Seq[Long], iters: Int,
-      damping: Double = 0.85, checkpointEvery: Int = 0): DataFrame = {
-    import graft.functions.Num.r8
-    require(iters >= 0 && seeds.nonEmpty)
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ed = Dist.byKeysCut(e.join(outdeg, "src"), "src")
-    val nrObs = new org.apache.spark.sql.Observation()
-    val nodes = ed.select(col("src").as("node"), lit(false).as("recv"))
-      .unionAll(ed.select(col("dst").as("node"), lit(true).as("recv")))
-      .groupBy("node").agg(bool_or(col("recv")).as("recv"))
-      .observe(nrObs, count(lit(1)).as("n"),
-        count(when(!col("recv"), lit(1))).as("n_norecv"))
-      .localCheckpoint(true)
-    val hasNoRecv = nrObs.get("n_norecv").asInstanceOf[Long] > 0L
-    val isSeed = col("node").isin(seeds: _*)
-    val base = lit(1.0 - damping) / lit(seeds.size.toDouble)
-    var ranks = nodes.select(col("node"),
-      when(isSeed, r8(lit(1.0) / lit(seeds.size.toDouble)))
-        .otherwise(lit(0.0)).as("rank"))
-    val noRecv = nodes.filter(!col("recv")).select(col("node"),
-      when(isSeed, r8(base)).otherwise(lit(0.0)).as("rank"))
-    def quantized(r: DataFrame): DataFrame =
-      r.join(ed, r("node") === ed("src"))
-        .select(col("dst").as("node"),
-          floor(col("rank") * lit(100000000L) / col("outdeg") + lit(0.5)).cast("long").as("wq"))
-    // same co-partitioning move as [[pagerank]] (round 16): no-inbound
-    // nodes hold a constant rank from round 2 on (r8(base) for seeds,
-    // exactly 0.0 otherwise — a 0.0 source quantizes to wq = 0, kept so
-    // the summed row sets match the old form exactly), so their
-    // contributions union BELOW the exchange and the loop-carried frame
-    // stays a pure aggregate output, co-partitioned with the edge list;
-    // a symmetrized graph observes |noRecv| = 0 and skips the machinery.
-    val noRecvContrib = quantized(noRecv)
-    for (i <- 1 to iters) {
-      val fromRanks = quantized(ranks)
-      val contrib = (if (i == 1 || !hasNoRecv) fromRanks
-        else fromRanks.unionAll(noRecvContrib))
-        .groupBy("node").agg(sum(col("wq")).as("wq"))
-      ranks = contrib
-        .select(col("node"),
-          r8(when(isSeed, base).otherwise(lit(0.0)) +
-            lit(damping) * (col("wq").cast("double") / lit(100000000.0))).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0)
-        ranks = Checkpointing.cut(ranks)
+    // the first round's input is the FULL start frame (every node); later
+    // rounds carry the aggregate output (nodes WITH in-edges) plus the
+    // constant no-inbound contributions
+    val ranks = rounds(nodes.select(col("node"), start(n).as("rank")), iters, cutEvery) {
+      (r, i) =>
+        val fromRanks = quantized(r)
+        (if (i == 1 || !hasNoRecv) fromRanks else fromRanks.unionAll(noRecvContrib))
+          .groupBy("node").agg(sum(col("wq")).as("wq"))
+          .select(col("node"),
+            r8(base + lit(damping) * (col("wq").cast("double") / lit(100000000.0))).as("rank"))
     }
     if (iters >= 1 && hasNoRecv) ranks.unionAll(noRecv) else ranks
   }
@@ -261,22 +203,18 @@ object Graph {
     * fixed round count in 1e8 micro-units: the per-round update is
     * `1e8 + (Σ incoming) div attenuationDiv`, pure BIGINT floor
     * division, so there is NO floating-point operation anywhere in the
-    * chain (stronger even than pagerank's one r8 division per round).
-    * Counts walks of all lengths attenuated by α^len — the centrality
-    * that sees beyond the 1-hop degree without pagerank's stochastic
-    * normalization. Convergence/overflow contract: α·maxInDegree < 1
-    * keeps values bounded (fixture supplier degree ~24 ≪ 64); values ≤
-    * 1e8/(1−α·d) fit LONG by orders of magnitude.
+    * chain. Counts walks of all lengths attenuated by α^len — the
+    * centrality that sees beyond the 1-hop degree without pagerank's
+    * stochastic normalization. Convergence/overflow contract:
+    * α·maxInDegree < 1 keeps values bounded (fixture supplier degree
+    * ~24 ≪ 64); values ≤ 1e8/(1−α·d) fit LONG by orders of magnitude.
     *
-    * Scale shape: [[pagerank]]'s discipline — src-partitioned
-    * checkpointed edge list, one exchange per round shipping (node,
-    * LONG) pairs, lazy single-DAG for small fixed round counts. Nodes
-    * without in-edges are kept by UNIONING a zero-contribution row per
-    * node INTO the per-round sum (round 15) instead of a per-round
-    * |V|⋈|V| left-outer join: sum(s ∪ {0}) ≡ coalesce(sum(s), 0)
-    * exactly (LONG addition), the |V| extra rows ride the same
-    * exchange, and the old join was planning as a SortMergeJoin — one
-    * exchange plus three sorts per round gone. */
+    * Scale shape: [[walk]]'s — src-partitioned edge cut, one exchange
+    * per round shipping (node, LONG) pairs, the [[rounds]] cut rule.
+    * Nodes without in-edges keep their row because a zero-contribution
+    * row per node is unioned INTO the per-round sum: sum(s ∪ {0}) ≡
+    * coalesce(sum(s), 0) exactly (LONG addition), and the |V| extra rows
+    * ride the same exchange instead of a per-round |V|⋈|V| outer join. */
   def katzCentrality(edges: DataFrame, iters: Int,
       attenuationDiv: Long = 64L, checkpointEvery: Int = 0): DataFrame = {
     require(iters >= 0 && attenuationDiv >= 2)
@@ -287,19 +225,31 @@ object Graph {
       .distinct().localCheckpoint(true)
     val unit = lit(100000000L)
     val zeroes = nodes.select(col("node"), lit(0L).as("katz_u"))
-    var x = nodes.select(col("node"), unit.as("katz_u"))
-    for (i <- 1 to iters) {
-      x = x.join(ed, x("node") === ed("src"))
+    rounds(nodes.select(col("node"), unit.as("katz_u")), iters, checkpointEvery) { (x, _) =>
+      x.join(ed, x("node") === ed("src"))
         .select(col("dst").as("node"), col("katz_u"))
         .unionAll(zeroes)
         .groupBy("node").agg(sum(col("katz_u")).as("s"))
         .select(col("node"),
           (unit + expr(s"CAST(s DIV $attenuationDiv AS BIGINT)")).as("katz_u"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0)
-        x = Checkpointing.cut(x)
-    }
-    x.select(col("node"), col("katz_u"),
-      graft.functions.Num.r8(col("katz_u").cast("double") / lit(100000000.0)).as("katz"))
+    }.select(col("node"), col("katz_u"),
+      r8(col("katz_u").cast("double") / lit(100000000.0)).as("katz"))
+  }
+
+  /** Observes the min and max endpoint id of `df`'s (src, dst) rows into
+    * `obs` as `lo`/`hi`, on whatever job evaluates `df`. */
+  private def observeIds(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs, min(least(col("src"), col("dst"))).cast("long").as("lo"),
+      max(greatest(col("src"), col("dst"))).cast("long").as("hi"))
+
+  /** Fails LOUDLY unless every id [[observeIds]] saw lies in [0, bound):
+    * `who`'s id order-embedding is exact only there, and an id outside it
+    * would decode silently to a wrong answer. An empty frame passes. */
+  private def requireIdsBelow(obs: Observation, bound: Long, who: String): Unit = {
+    val (lo, hi) = (obs.get("lo"), obs.get("hi"))
+    require(lo == null || (lo.asInstanceOf[Long] >= 0L && hi.asInstanceOf[Long] < bound),
+      s"$who: node ids must lie in [0, $bound) for its exact id order-embedding " +
+        s"(observed [$lo, $hi]); pass a larger id bound")
   }
 
   /** Synchronous label propagation over DIRECTED edges (`src`, `dst`) —
@@ -314,54 +264,33 @@ object Graph {
     * rounds). Undirected graphs pass a symmetrized edge list, which also
     * guarantees every node receives votes each round.
     *
-    * Scale shape (the [[pagerank]] discipline): the edge list is
-    * src-partitioned and checkpointed ONCE; each round joins the |V|-row
-    * label frame against it and shuffles (node, label) pairs only —
-    * never edges twice. ONE exchange per round (round 15): the vote
-    * pairs are hash-distributed by `node` alone — HashPartitioning(node)
-    * satisfies the clustered distribution of BOTH downstream aggregates
-    * (every (node, label) group lives in node's partition), so the
-    * per-(node, label) count and the per-node argmax run back to back in
-    * the same stage where the old groupBy(node, label) → groupBy(node)
-    * chain paid two exchanges. The argmax itself is a plain LONG max
-    * over the order-embedding cnt·idBound + (idBound−1−label) — highest
-    * count, then smallest label — instead of max(struct(cnt, −label)):
-    * struct max is not hash-aggregable and was planning as a
-    * SortAggregate pair with three per-round sorts; the long form keeps
-    * every round in whole-stage-codegen HashAggregates with zero sorts.
-    * `idBound` caps node ids so the embedding is exact (same declared
-    * contract as [[triangleCounts]]'s nodeIdBound; cnt·idBound must fit
-    * a LONG — at the default 2³¹ that allows 4.3·10⁹ same-label
-    * in-votes per node). Rounds stay lazy in one DAG; `checkpointEvery`
-    * restores the cut for long loops. */
+    * Scale shape: the edge list is src-partitioned and cut ONCE; each
+    * round joins the |V|-row label frame against it and makes ONE
+    * exchange of (node, label) vote pairs, hash-distributed by `node`
+    * alone — that satisfies both downstream aggregates (every
+    * (node, label) group lives in node's partition), so the per-(node,
+    * label) count and the per-node argmax run back to back in one stage.
+    * The argmax is a plain LONG max over the order-embedding
+    * cnt·idBound + (idBound−1−label) — highest count, then smallest
+    * label — which keeps every round in codegen'd hash aggregates with
+    * no sorts (a struct max is not hash-aggregable). `idBound` caps node
+    * ids so the embedding is exact: ids outside [0, idBound) fail loudly
+    * (checked on the edge cut's job), and cnt·idBound must fit a LONG —
+    * at the default 2³¹ that allows 4.3·10⁹ same-label in-votes per
+    * node; a larger idBound shrinks that to 2⁶³/idBound. Rounds follow
+    * the [[rounds]] cut rule. */
   def labelPropagation(edges: DataFrame, iters: Int,
       checkpointEvery: Int = 0, idBound: Long = 1L << 31): DataFrame = {
     require(iters >= 1)
     require(idBound >= 2, s"labelPropagation: idBound must be >= 2, got $idBound")
     val e = edges.select(col("src"), col("dst")).distinct()
-    // id-range guard (ADVICE r15 medium): the argmax order-embedding
-    // cnt·idBound + (idBound−1−label) is exact ONLY for ids in
-    // [0, idBound) — an out-of-range id would silently decode to a wrong
-    // label where the old struct-max was correct for any LONG. The check
-    // rides the edge checkpoint as an observe metric (no extra job) and
-    // fails LOUDLY before any result escapes. At 100 TB, synthetic keys
-    // past 2³¹ must pass an explicit larger idBound (which shrinks the
-    // safe per-label vote count to 2⁶³/idBound — documented contract).
-    val idObs = new org.apache.spark.sql.Observation()
-    val ed = Dist.byKeysCutVia(e,
-      _.observe(idObs, min(least(col("src"), col("dst"))).cast("long").as("lo"),
-        max(greatest(col("src"), col("dst"))).cast("long").as("hi")),
-      "src")
-    val idLo = idObs.get("lo")
-    require(idLo == null || (idLo.asInstanceOf[Long] >= 0L &&
-        idObs.get("hi").asInstanceOf[Long] < idBound),
-      s"labelPropagation: node ids must lie in [0, $idBound) for the exact " +
-        s"argmax order-embedding (observed [${idLo}, ${idObs.get("hi")}]); " +
-        "pass a larger idBound")
-    var labels = ed.select(col("src").as("node")).distinct()
+    val idObs = new Observation()
+    val ed = Dist.byKeysCutVia(e, observeIds(_, idObs), "src")
+    requireIdsBelow(idObs, idBound, "labelPropagation")
+    val init = ed.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (i <- 1 to iters) {
-      labels = Dist.byKeys(
+    rounds(init, iters, checkpointEvery) { (labels, _) =>
+      Dist.byKeys(
           labels.join(ed, labels("node") === ed("src"))
             .select(col("dst").as("node"), col("label")),
           col("node"))
@@ -371,10 +300,7 @@ object Graph {
           + (lit(idBound - 1L) - col("label"))).as("m"))
         .select(col("node"),
           (lit(idBound - 1L) - pmod(col("m"), lit(idBound))).as("label"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0)
-        labels = Checkpointing.cut(labels)
     }
-    labels
   }
 
   /** Fixed-round k-core peeling over a SYMMETRIZED edge list: each round
@@ -392,37 +318,38 @@ object Graph {
     * degrees and is PRESERVED by each round's two-sided restriction.
     *
     * Scale shape: each round is ONE map-side-combined degree aggregate
-    * (k-row filter output ≤ |V|) plus two semi-joins restricting the
-    * edge list — shuffles carry (node) keys and edge pairs, never
-    * attributes. The edge frame is hash-distributed by `src` ONCE up
-    * front (round 15): HashPartitioning(src) satisfies the distinct,
-    * every round's degree aggregate, and the final degree output, and
-    * it survives the (runtime-broadcast) semi-joins and each round's
-    * checkpoint — so the per-round degree exchange disappears and the
-    * only shuffle in the whole peel is that one setup exchange. UNLIKE
-    * pagerank's lazy DAG, every round's edge frame is CUT by default
-    * (`checkpointEvery = 1`): the frame feeds TWO consumers per round
-    * (its own degree aggregate and the next restriction), so a lazy
-    * composition re-derives the whole peel prefix per consumer —
-    * measured as a stall at the ~sf1 probe where the eager form is
-    * seconds. Pass 0 to opt back into the lazy DAG for small fixed
-    * peels. */
+    * plus two semi-joins restricting the edge list. The edge frame is
+    * hash-distributed by `src` ONCE up front: that partitioning satisfies
+    * the distinct, every round's degree aggregate and the final degree
+    * output, and survives the (broadcast) semi-joins and each round's
+    * cut, so the setup exchange is the only shuffle of the peel. Every
+    * round's edge frame is CUT by default (`checkpointEvery = 1`): it
+    * feeds TWO consumers per round (its degree aggregate and the next
+    * restriction), so a lazy composition re-derives the whole peel prefix
+    * per consumer. Pass 0 for the lazy DAG on small fixed peels. */
   def kcore(edges: DataFrame, k: Int, rounds: Int,
       checkpointEvery: Int = 1): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = Dist.byKeys(edges.select(col("src"), col("dst")), col("src"))
-      .distinct()
-    for (i <- 1 to rounds) {
+    val init = Dist.byKeys(edges.select(col("src"), col("dst")), col("src")).distinct()
+    Graph.rounds(init, rounds, checkpointEvery) { (e, _) =>
       val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select("node")
-      e = e.join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
+      e.join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0)
-        e = Checkpointing.cut(e)
-    }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    }.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
+
+  /** The undirected edge set of a directed edge list: one (u, v) row per
+    * unordered endpoint pair, u < v, self-loops dropped. */
+  private def undirected(edges: DataFrame): DataFrame = edges
+    .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+    .filter(col("u") =!= col("v")).distinct()
+
+  /** (node, deg) — each node's degree in an [[undirected]] edge set. */
+  private def undirectedDegrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("node")).unionAll(und.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("deg"))
 
   /** Exact per-node triangle counts over an UNDIRECTED graph given as a
     * directed edge list (symmetry not required — edges are canonicalized;
@@ -440,7 +367,8 @@ object Graph {
     * frame; per-node attribution explodes 3 rows per triangle, then one
     * count aggregate. `nodeIdBound` caps ids so the (deg, id) order
     * collapses into one scalar key (deg·bound + id) — a plain long
-    * column both engines compare identically. */
+    * column both engines compare identically; ids outside
+    * [0, nodeIdBound) fail loudly, checked on the orientation cut's job. */
   def triangleCounts(edges: DataFrame, nodeIdBound: Long = 1000000L): DataFrame =
     triangleCountsWithDeg(edges, nodeIdBound).select(col("node"), col("n_tri"))
 
@@ -451,20 +379,10 @@ object Graph {
       nodeIdBound: Long = 1000000L): DataFrame = {
     require(nodeIdBound >= 1,
       s"triangleCounts: nodeIdBound must be >= 1, got $nodeIdBound")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val deg = und.select(col("u").as("node")).unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .select(col("node"), col("deg"),
-        (col("deg") * nodeIdBound + col("node")).as("ok"))
-    // id-range guard (ADVICE r15 / VERDICT r15 #6, same class as
-    // labelPropagation's): the (deg, id) order-collapse key
-    // deg·nodeIdBound + node is exact only for ids in [0, nodeIdBound).
-    // Rides the existing orientation checkpoint as an observe metric —
-    // no extra job; throws before any mis-oriented wedge escapes.
-    val idObs = new org.apache.spark.sql.Observation()
+    val und = undirected(edges)
+    val deg = undirectedDegrees(und)
+      .select(col("node"), col("deg"), (col("deg") * nodeIdBound + col("node")).as("ok"))
+    val idObs = new Observation()
     val oriented = und
       .join(deg.select(col("node").as("u"), col("ok").as("u_ok")), "u")
       .join(deg.select(col("node").as("v"), col("ok").as("v_ok")), "v")
@@ -472,15 +390,9 @@ object Graph {
         when(col("u_ok") < col("v_ok"), col("u")).otherwise(col("v")).as("src"),
         when(col("u_ok") < col("v_ok"), col("v")).otherwise(col("u")).as("dst"),
         greatest(col("u_ok"), col("v_ok")).as("dst_ok"))
-      .observe(idObs, min(least(col("src"), col("dst"))).cast("long").as("lo"),
-        max(greatest(col("src"), col("dst"))).cast("long").as("hi"))
+      .pipe(observeIds(_, idObs))
       .localCheckpoint(true)
-    val idLo = idObs.get("lo")
-    require(idLo == null || (idLo.asInstanceOf[Long] >= 0L &&
-        idObs.get("hi").asInstanceOf[Long] < nodeIdBound),
-      s"triangleCounts: node ids must lie in [0, $nodeIdBound) for the exact " +
-        s"(deg, id) orientation key (observed [${idLo}, ${idObs.get("hi")}]); " +
-        "pass a larger nodeIdBound")
+    requireIdsBelow(idObs, nodeIdBound, "triangleCounts")
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst_ok") < col("e2.dst_ok"))
@@ -507,7 +419,7 @@ object Graph {
   def clusteringCoeff(edges: DataFrame, nodeIdBound: Long = 1000000L): DataFrame =
     triangleCountsWithDeg(edges, nodeIdBound)
       .select(col("node"), col("deg"), col("n_tri"),
-        when(col("deg") >= 2, graft.functions.Num.r8(
+        when(col("deg") >= 2, r8(
             (col("n_tri") * 2L).cast("double")
               / (col("deg") * (col("deg") - 1L)).cast("double")))
           .otherwise(lit(0.0)).as("coeff"))
@@ -533,10 +445,7 @@ object Graph {
     * then ONE global aggregate combined to a single row. No windows, no
     * self-joins, no collects. */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = undirected(edges)
     val both = und.select(col("u").as("s"), col("v").as("d"))
       .unionAll(und.select(col("v").as("s"), col("u").as("d")))
     val deg = both.groupBy(col("s").as("node")).agg(count(lit(1)).as("deg"))
@@ -551,7 +460,7 @@ object Graph {
         (col("m2") * col("s_j2") - col("s_j") * col("s_j")).as("r_den"))
       .select(col("m2"), col("s_j"), col("s_jk"), col("s_j2"),
         col("r_num"), col("r_den"),
-        when(col("r_den") > 0, graft.functions.Num.r8(
+        when(col("r_den") > 0, r8(
             col("r_num").cast("double") / col("r_den").cast("double")))
           .otherwise(lit(0.0)).as("assortativity"))
   }
@@ -573,14 +482,7 @@ object Graph {
     * Scale shape: one degree aggregate, one tiny value-count aggregate,
     * one window + one final aggregate over the distinct-degree frame. */
   def degreeGini(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val deg = und.select(col("u").as("node"))
-      .unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val dist = deg.groupBy("deg").agg(count(lit(1)).as("c"))
+    val dist = undirectedDegrees(undirected(edges)).groupBy("deg").agg(count(lit(1)).as("c"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("deg")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     dist
@@ -595,7 +497,7 @@ object Graph {
       .select(col("n"), col("sum_deg"), col("s1_x2"),
         (col("s1_x2") - (col("n") + 1L) * col("sum_deg")).as("g_num"))
       .select(col("n"), col("sum_deg"), col("s1_x2"), col("g_num"),
-        when(col("n") * col("sum_deg") > 0, graft.functions.Num.r8(
+        when(col("n") * col("sum_deg") > 0, r8(
             col("g_num").cast("double")
               / (col("n") * col("sum_deg")).cast("double")))
           .otherwise(lit(0.0)).as("gini"))
@@ -620,10 +522,35 @@ object Graph {
     e.agg(count(lit(1)).as("n_edges"))
       .crossJoin(mutual.agg(count(lit(1)).as("n_recip")))
       .select(col("n_edges"), col("n_recip"),
-        when(col("n_edges") > 0, graft.functions.Num.r8(
+        when(col("n_edges") > 0, r8(
             col("n_recip").cast("double") / col("n_edges").cast("double")))
           .otherwise(lit(0.0)).as("reciprocity"))
   }
+
+  /** The hub-guarded center frame of a BIPARTITE edge list (left, right):
+    * its distinct edges whose center `right` has 2 ≤ degree ≤ `maxDeg`
+    * (degree column named `deg`), each carrying its center's
+    * `ctrCols(degree)`, cut once so both sides of [[centerPairs]]'s
+    * self-join read one materialization. */
+  private def guardedCenters(edges: DataFrame, maxDeg: Long, deg: String)(
+      ctrCols: Column => Seq[Column]): DataFrame = {
+    val e = edges.select(col("left"), col("right")).distinct()
+    val ctr = e.groupBy("right").agg(count(lit(1)).as(deg))
+      .filter(col(deg) >= 2 && col(deg) <= maxDeg)
+      .select(col("right") +: ctrCols(col(deg)): _*)
+    e.join(ctr, "right").localCheckpoint(true)
+  }
+
+  /** Left-node pairs u < v sharing ≥ `minCn` centers of a
+    * [[guardedCenters]] frame: (u, v, cn, aggs...), the aggregates taken
+    * over the shared centers' rows on side `a`. One center-keyed shuffle
+    * feeds the self-join; the pair aggregate is map-side combined. */
+  private def centerPairs(t: DataFrame, minCn: Long, aggs: Column*): DataFrame =
+    t.as("a").join(t.as("b"),
+        col("a.right") === col("b.right") && col("a.left") < col("b.left"))
+      .groupBy(col("a.left").as("u"), col("b.left").as("v"))
+      .agg(count(lit(1)).as("cn"), aggs: _*)
+      .filter(col("cn") >= minCn)
 
   /** Adamic–Adar link prediction over a BIPARTITE edge list
     * (left, right): for every pair of left nodes sharing ≥ `minCn`
@@ -645,22 +572,11 @@ object Graph {
     * a viral hub center contributes C(deg,2) ≈ deg² wedges and ~zero AA
     * weight apiece; dropping centers past the cap is the standard
     * hub-filter, part of the declared contract and mirrored by the
-    * oracle). One shuffle keys the (edge ⋈ center-weight) frame by the
-    * center for the self-join; the localCheckpoint feeds BOTH sides
-    * from one materialization; the pair aggregate is map-side combined. */
+    * oracle). */
   def adamicAdar(edges: DataFrame, maxDeg: Long = 1000L, minCn: Long = 1L): DataFrame = {
-    val e = edges.select(col("left"), col("right")).distinct()
-    val ctr = e.groupBy("right").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= 2 && col("deg") <= maxDeg)
-      .select(col("right"),
-        floor(lit(100000000.0) / log(col("deg").cast("double")) + 0.5)
-          .cast("long").as("aa_unit"))
-    val tagged = e.join(ctr, "right").localCheckpoint(true)
-    tagged.as("a").join(tagged.as("b"),
-        col("a.right") === col("b.right") && col("a.left") < col("b.left"))
-      .groupBy(col("a.left").as("u"), col("b.left").as("v"))
-      .agg(count(lit(1)).as("cn"), sum(col("a.aa_unit")).as("aa_micro"))
-      .filter(col("cn") >= minCn)
+    val tagged = guardedCenters(edges, maxDeg, "deg")(d =>
+      Seq(floor(lit(100000000.0) / log(d.cast("double")) + 0.5).cast("long").as("aa_unit")))
+    centerPairs(tagged, minCn, sum(col("a.aa_unit")).as("aa_micro"))
       .select(col("u"), col("v"), col("cn"), col("aa_micro"),
         (col("aa_micro").cast("double") / 100000000.0).as("aa"))
   }
@@ -676,28 +592,17 @@ object Graph {
     * guarded subgraph on both engines); J is ONE IEEE division on the
     * 1e-8 grid.
     *
-    * Scale shape = [[adamicAdar]]: one center-keyed shuffle, a
-    * localCheckpoint feeding both self-join sides, the pair aggregate
-    * map-side combined; wedge mass Σ C(deg, 2) bounded by the hub
-    * guard; the two degree attachments are joins against the
-    * |left-nodes|-row frame, co-keyed on each pair endpoint. */
+    * Scale shape = [[adamicAdar]]'s, plus two degree attachments: joins
+    * against the |left-nodes|-row frame, co-keyed on each pair endpoint. */
   def jaccardPairs(edges: DataFrame, maxDeg: Long = 1000L,
       minCn: Long = 1L): DataFrame = {
-    val e = edges.select(col("left"), col("right")).distinct()
-    val ctr = e.groupBy("right").agg(count(lit(1)).as("d"))
-      .filter(col("d") >= 2 && col("d") <= maxDeg)
-      .select(col("right"))
-    val t = e.join(ctr, "right").localCheckpoint(true)
+    val t = guardedCenters(edges, maxDeg, "d")(_ => Nil)
     val deg = t.groupBy("left").agg(count(lit(1)).as("deg"))
-    t.as("a").join(t.as("b"),
-        col("a.right") === col("b.right") && col("a.left") < col("b.left"))
-      .groupBy(col("a.left").as("u"), col("b.left").as("v"))
-      .agg(count(lit(1)).as("cn"))
-      .filter(col("cn") >= minCn)
+    centerPairs(t, minCn)
       .join(deg.select(col("left").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("left").as("v"), col("deg").as("dv")), "v")
       .select(col("u"), col("v"), col("cn"), col("du"), col("dv"),
-        graft.functions.Num.r8(col("cn").cast("double")
+        r8(col("cn").cast("double")
           / (col("du") + col("dv") - col("cn")).cast("double")).as("jac"))
   }
 
@@ -723,10 +628,9 @@ object Graph {
     * one-row broadcast, never a driver collect. Both inputs are
     * referenced more than once (edges by deg/intra/m2, labels by the
     * two intra tags and dTot), so a LIVE computation is cut once before
-    * use (round 15 — the [[Components]] discipline): without the cut, a
-    * label frame fed by [[labelPropagation]] replanned its whole
-    * fixed-round chain per reference (the 35-exchange plan of the r14
-    * verdict); bare scans stay uncut, a pushed-down re-read being
+    * use (the [[Components]] discipline): uncut, a label frame fed by
+    * [[labelPropagation]] would replan its whole fixed-round chain per
+    * reference; bare scans stay uncut, a pushed-down re-read being
     * cheaper than copying 100 TB into block storage. */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     def once(df: DataFrame): DataFrame =
@@ -748,7 +652,7 @@ object Graph {
       .crossJoin(broadcast(m2))
       .select(col("label"), col("n_nodes"), col("intra2"), col("d_tot"),
         (col("m2") * col("intra2") - col("d_tot") * col("d_tot")).as("q_num"),
-        graft.functions.Num.r8(
+        r8(
           (col("m2") * col("intra2") - col("d_tot") * col("d_tot")).cast("double")
             / (col("m2") * col("m2")).cast("double")).as("q_contrib"))
   }
@@ -769,38 +673,20 @@ object Graph {
     * sequence in any engine — the oracle unrolls the identical rounds
     * as CTEs, no rounding-grid slack needed.
     *
-    * Scale shape (the [[pagerank]] discipline): the edge list is
-    * partitioned and checkpointed ONCE PER DIRECTION (src-keyed for the
-    * hub→auth half-round, dst-keyed for auth→hub); each half-round
-    * joins a |V|-row unit frame against its co-keyed edge copy and
-    * shuffles (node, unit) contribution pairs only. The per-round max
-    * is a one-row aggregate riding a broadcast cross join — never a
-    * driver collect. Every src has out-edges and every dst in-edges by
-    * construction of the edge list, so no node ever loses its score
-    * row.
+    * Scale shape: the edge list is partitioned and cut ONCE PER
+    * DIRECTION (src-keyed for the hub→auth half-round, dst-keyed for
+    * auth→hub); each half-round joins a |V|-row unit frame against its
+    * co-keyed edge copy and shuffles (node, unit) contribution pairs
+    * only. Every src has out-edges and every dst in-edges by construction
+    * of the edge list, so no node ever loses its score row.
     *
-    * Unlike [[pagerank]], the rounds do NOT stay lazy: each half-round's
-    * raw-sum frame feeds TWO consumers (the max aggregate and the
-    * renormalized select) — the kcore lesson applies, a lazy DAG
-    * re-derives the whole upstream chain per consumer and the doubling
-    * compounds to 2^(2·iters) recomputations of the base join (measured
-    * here exactly as in the oracle's CTE-inlining analog: ~32 s FLAT at
-    * every SF before the cut, sub-second after). Each |V|-row raw frame
-    * is therefore eagerly localCheckpoint'd — 2·iters cuts of node-sized
-    * frames, the bounded-plan shape a long-loop cluster run wants
-    * anyway.
-    *
-    * Round 16 tried the obvious next cut — renormalize the AUTH half
-    * IN-PLAN via `crossJoin(broadcast(agg(max)))` so only the hub half
-    * pays an eager cut (actions 2·iters → iters). MEASURED WORSE and
-    * reverted: AQE reuses only the shuffle MAP output between the
-    * broadcast-max subquery and the main chain, so every round re-ran
-    * the post-exchange aggregate stage for the max (+34 tasks, +3 jobs
-    * per round: 30→41 jobs, 408→543 tasks, wall 3.87→4.10 s warm at
-    * sf0.1/local[32]) — the saved action was cheaper than the re-run
-    * stage. The renorm max therefore stays an action barrier per
-    * half-round; the per-half-round cut is the minimal shape
-    * (OPTIMIZATION_r16.md records the numbers). */
+    * Unlike [[walk]], the rounds do NOT stay lazy: each half-round's
+    * raw-sum frame feeds TWO consumers (its max and the renormalized
+    * select), so every |V|-row raw frame is cut eagerly — 2·iters cuts —
+    * and the max rides that cut's job as an observe metric, returning as
+    * a literal. The per-half-round cut is the minimal shape: renormalizing
+    * in-plan against a broadcast max re-runs the aggregate stage for the
+    * max every round and measured slower (OPTIMIZATION_r16.md). */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val e = edges.select(col("src"), col("dst")).distinct()
@@ -811,28 +697,19 @@ object Graph {
       .select(col("node"), unit.as("unit"))
     var auth: DataFrame = null
     def renorm(raw0: DataFrame): DataFrame = {
-      // the max rides the checkpoint job as an observe metric (round 15)
-      // and comes back as a broadcast-free literal: the old
-      // crossJoin(broadcast(agg(max))) re-scanned the checkpointed frame
-      // and built one broadcast relation per half-round — 2·iters extra
-      // jobs for a scalar the cut job already knows. Same IEEE chain
-      // (long max, exact in double), bit-identical units.
-      val mObs = new org.apache.spark.sql.Observation()
+      val mObs = new Observation()
       val raw = raw0.observe(mObs, max(col("raw")).as("m"))
         .localCheckpoint(true) // single eval for both consumers
       mObs.get("m") match {
-        // an EMPTY graph observes a null max (zero rows): return the
-        // empty frame with the unit column in place instead of NPE-ing
-        // on the cast (ADVICE r15 — the pre-r15 broadcast form
-        // null-propagated to an empty result; same degenerate contract,
-        // made explicit)
+        // an EMPTY graph observes a null max (zero rows): the empty frame
+        // with the unit column in place
         case null => raw.select(col("node"), col("raw").as("unit"))
         case m => raw.select(col("node"),
           floor(col("raw").cast("double") / lit(m.asInstanceOf[Long]).cast("double")
             * lit(100000000.0) + lit(0.5)).cast("long").as("unit"))
       }
     }
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       auth = renorm(
         hub.join(edSrc, hub("node") === edSrc("src"))
           .groupBy(col("dst").as("node")).agg(sum("unit").as("raw")))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph, Search}
 
@@ -441,6 +442,69 @@ class SearchGraphSpec extends SparkTestBase {
     // the triangle itself IS a 2-core
     val two = Graph.kcore(e, k = 2, rounds = 2).as[(Long, Long)].collect().toMap
     assert(two === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+  }
+
+  // ---- input contracts and physical regimes ---------------------------------
+
+  test("personalized pagerank: a repeated seed fails loudly, naming it") {
+    // (1−d)/|S| over 3 listed seeds but 2 distinct nodes would lose mass
+    val e = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    val ex = intercept[IllegalArgumentException] {
+      Graph.personalizedPagerank(e, seeds = Seq(1L, 1L, 2L), iters = 2)
+    }
+    assert(ex.getMessage.contains("repeated: 1"), ex.getMessage)
+  }
+
+  test("bfs releases its persisted edge list when a round fails") {
+    spark.catalog.clearCache()
+    val bad = spark.range(0, 20).select(col("id").as("src"),
+      when(col("id") > 5L, raise_error(lit("bad edge"))).otherwise(col("id") + 1).as("dst"))
+    intercept[Exception](Graph.bfs(bad, seed = 0L, maxDepth = 3))
+    assert(spark.sharedState.cacheManager.isEmpty, "bfs left its edge list cached")
+  }
+
+  test("graph kernels give identical rows under every physical regime") {
+    // a seeded 60-node digraph: nodes 0..54 draw 2–3 out-edges among
+    // 0..54 and the five nodes 55..59 point into it with no in-edges (the
+    // walks' no-inbound path); the symmetrized copy feeds the undirected
+    // kernels
+    val rnd = new scala.util.Random(20261020L)
+    val inner = for {
+      s <- 0L until 55L
+      _ <- 1 to 2 + rnd.nextInt(2)
+    } yield (s, rnd.nextInt(55).toLong)
+    val directed = (inner ++ (55L until 60L).map(s => (s, s - 50L))).distinct
+    val d = directed.toDF("src", "dst")
+    val sym = (directed ++ directed.map(_.swap)).distinct.toDF("src", "dst")
+    val kernels: Seq[(String, () => DataFrame)] = Seq(
+      "bfs" -> (() => Graph.bfs(d, seed = 55L, maxDepth = 6)),
+      "pagerank" -> (() => Graph.pagerank(d, iters = 5)),
+      "ppr" -> (() => Graph.personalizedPagerank(d, Seq(1L, 2L, 57L), iters = 5)),
+      "katz" -> (() => Graph.katzCentrality(d, iters = 4)),
+      "labelPropagation" -> (() => Graph.labelPropagation(sym, iters = 4)),
+      "kcore" -> (() => Graph.kcore(sym, k = 3, rounds = 4)),
+      "hits" -> (() => Graph.hits(d, iters = 3)),
+      "triangleCounts" -> (() => Graph.triangleCounts(sym, nodeIdBound = 64L)))
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    val want = kernels.map { case (name, run) => name -> rows(run()) }.toMap
+    assert(want.values.forall(_.nonEmpty))
+    assert(want("pagerank").size == 60 && want("bfs").size > 10, want("bfs"))
+    val regimes = Seq(
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      Map("spark.sql.adaptive.enabled" -> "false"),
+      Map("spark.sql.shuffle.partitions" -> "1"),
+      Map("spark.sql.shuffle.partitions" -> "7"),
+      Map("spark.sql.codegen.wholeStage" -> "false"))
+    for (conf <- regimes) {
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try kernels.foreach { case (name, run) =>
+        assert(rows(run()) === want(name), s"$name under $conf")
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("modularity: two bridged triangles score the textbook Q = 5/14 per side") {

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
-"""Count non-blank, non-comment Scala lines per directory.
+"""Count non-blank, non-comment Scala lines per directory or file.
 
-  python3 tools/codelines.py [DIR ...]      # default: src/main/scala/graft/sources
+  python3 tools/codelines.py [PATH ...]     # default: src/main/scala/graft/sources
 
 A line counts when it holds at least one character outside a comment.
 Line comments (`//`), block and scaladoc comments (`/* */`, nested as
 Scala nests them) are skipped; comment markers inside string literals
 (`"..."`, `\"\"\"...\"\"\"`, char literals) are not comments. Prints one
-line per directory (recursive over `*.scala`) and, for several
-directories, a total.
+line per PATH — a single `.scala` file, or a directory counted
+recursively over its `*.scala` files — and, for several paths, a total.
 """
 import os
 import sys
@@ -66,27 +66,30 @@ def code_lines(text):
     return n
 
 
+def count_file(f):
+    with open(f, encoding="utf-8") as fh:
+        return code_lines(fh.read())
+
+
 def count_dir(d):
-    total = 0
-    for root, _, files in os.walk(d):
-        for f in files:
-            if f.endswith(".scala"):
-                with open(os.path.join(root, f), encoding="utf-8") as fh:
-                    total += code_lines(fh.read())
-    return total
+    return sum(count_file(os.path.join(root, f))
+               for root, _, files in os.walk(d) for f in files if f.endswith(".scala"))
 
 
 def main(argv):
-    dirs = argv or ["src/main/scala/graft/sources"]
+    paths = argv or ["src/main/scala/graft/sources"]
     grand = 0
-    for d in dirs:
-        path = d if os.path.isabs(d) else os.path.join(REPO, d)
-        if not os.path.isdir(path):
-            sys.exit(f"codelines: no such directory: {d}")
-        n = count_dir(path)
+    for p in paths:
+        path = p if os.path.isabs(p) else os.path.join(REPO, p)
+        if os.path.isdir(path):
+            n = count_dir(path)
+        elif os.path.isfile(path) and path.endswith(".scala"):
+            n = count_file(path)
+        else:
+            sys.exit(f"codelines: no such directory or .scala file: {p}")
         grand += n
-        print(f"{n:7d}  {d}")
-    if len(dirs) > 1:
+        print(f"{n:7d}  {p}")
+    if len(paths) > 1:
         print(f"{grand:7d}  total")
 
 
