@@ -1196,7 +1196,7 @@ object QueriesCore {
       Snapshots.commitAppend(s, root,
         d.filter(pmod(col("doc_id"), lit(4)) === k).coalesce(1))
     s.conf.set("spark.sql.catalog.snap", "graft.sources.v2.SnapshotCatalog")
-    val times = Snapshots.commitTimesMillis(s, root).map(_._2)
+    val times = graft.sources.Manifest.commitTimesMillis(s, root).map(_._2)
     def fmt(ms: Long): String =
       java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter

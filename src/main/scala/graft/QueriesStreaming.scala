@@ -853,7 +853,8 @@ object QueriesStreaming {
   /** stream_lake_upsert_live: the streaming SINK half of the lake —
     * `foreachBatch` + [[graft.sources.Snapshots.commitMergeOnce]]
     * (idempotent single-commit upserts keyed by the epoch id, the
-    * exactly-once recipe Delta spells `txnAppId`/`txnVersion`). Base
+    * exactly-once recipe Delta spells `txnAppId`/`txnVersion`; ids of
+    * the form `upsert-e<id>` keep one marker per writer). Base
     * table = the %3==0 docs; batch 1 upserts the %3==1 docs as 'b1';
     * batch 2 upserts the %3==2 docs as 'b2' PLUS re-upserts the even
     * %3==1 docs as 'b2u' — latest-wins must leave exactly one row per
@@ -883,7 +884,7 @@ object QueriesStreaming {
       in.toDF().toDF("doc_id", "source").writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           Snapshots.commitMergeOnce(s, root, batch.repartition(2),
-            Seq("doc_id"), s"upsert-$id")
+            Seq("doc_id"), s"upsert-e$id")
           ()
         })
     try {
@@ -899,9 +900,8 @@ object QueriesStreaming {
     * atomic append commit whose idempotence marker (a `T` manifest
     * entry keyed by the stream's stable query id + epoch) is committed
     * IN the same manifest version as the files — exactly-once with NO
-    * marker-vs-commit crash window (the `commitMergeOnce` side-file
-    * design has one; merge semantics make it benign there, append
-    * semantics would not). One catalog name now serves batch SQL,
+    * marker-vs-commit crash window (`commitMergeOnce` commits its marker
+    * the same way). One catalog name now serves batch SQL,
     * INSERT, DML, DDL, the stream SOURCE and the stream SINK. The
     * driver-side collect is the replay harness feeding MemoryStream,
     * not the operator. Gate: three-batch feed → full content vs the

@@ -109,7 +109,7 @@ object Graph {
   def pagerank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       checkpointEvery: Int = 0): DataFrame =
     walk(edges, iters, damping, checkpointEvery)(
-      n => lit(1.0 - damping) / lit(n.toDouble), n => r8(lit(1.0) / lit(n.toDouble)))
+      n => lit(teleportMass(damping)) / lit(n.toDouble), n => r8(lit(1.0) / lit(n.toDouble)))
 
   /** Personalized PageRank — random walk with restart to a SEED set
     * (Haveliwala 2002; the similar-item / trust-propagation workhorse):
@@ -129,9 +129,17 @@ object Graph {
     val isSeed = col("node").isin(seeds: _*)
     val k = lit(seeds.size.toDouble)
     walk(edges, iters, damping, checkpointEvery)(
-      _ => when(isSeed, lit(1.0 - damping) / k).otherwise(lit(0.0)),
+      _ => when(isSeed, lit(teleportMass(damping)) / k).otherwise(lit(0.0)),
       _ => when(isSeed, r8(lit(1.0) / k)).otherwise(lit(0.0)))
   }
+
+  /** The teleport mass 1 − d, subtracted in decimal as SQL subtracts two
+    * decimal literals (1.0 − 0.85 = 0.15 exactly, where the double
+    * subtraction gives 0.15000000000000002), then read as a double: a
+    * one-ulp larger teleport flips an r8 step whenever a rank lands on a
+    * half grid step. */
+  private def teleportMass(damping: Double): Double =
+    (BigDecimal(1) - BigDecimal(damping)).toDouble
 
   /** The random walk behind [[pagerank]] and [[personalizedPagerank]]:
     * rank(v) ← r8(teleport(v) + d·Σ_{u→v} rank(u)/outdeg(u)) from the

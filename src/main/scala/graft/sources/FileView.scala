@@ -222,9 +222,9 @@ object FileView {
       numFiles: Int, bits: Int = 16, mode: String = "overwrite"): Unit =
     zOrdered(df, keyA, keyB, numFiles, bits).write.mode(mode).parquet(root)
 
-  /** The z-order LAYOUT as a frame transform (round 14 — factored out so
-    * the snapshot lake's `commitReplaceZOrdered` reuses the identical
-    * kernel): min-max-normalize both keys, Morton-interleave, range-
+  /** The z-order LAYOUT as a frame transform (the snapshot lake's
+    * `commitReplaceZOrdered` reuses the identical kernel):
+    * min-max-normalize both keys, Morton-interleave, range-
     * partition + sort on the code, drop the layout column. Degenerate
     * input (empty frame / all-NULL key) returns the frame unchanged. */
   private[graft] def zOrdered(df: DataFrame, keyA: String, keyB: String,

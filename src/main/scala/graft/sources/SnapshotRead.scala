@@ -8,7 +8,8 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.plans.{DeleteScope, SnapshotDeleteFilter}
-import graft.sources.Snapshots.{ColStats, Entry}
+import graft.sources.FileStats.ColStats
+import graft.sources.Manifest.Entry
 import graft.sources.v2.{SnapshotDeleteSets, SnapshotReaderFactory}
 
 /** Read planning of one snapshot version: the one planner behind
@@ -86,7 +87,7 @@ private[graft] object SnapshotRead {
   /** The read schema of a version's entries (see the object contracts). */
   def readSchema(spark: SparkSession, root: String, es: Seq[Entry],
       mergeSchema: Boolean): StructType =
-    Snapshots.currentSchema(es) match {
+    Manifest.currentSchema(es) match {
       case Some((_, cols)) =>
         StructType(cols.map(c => StructField(c.name, DataType.fromDDL(c.typ))))
       case None =>
@@ -118,7 +119,7 @@ private[graft] object SnapshotRead {
       }.toMap
       e => byVer(e.ver)
     } else {
-      val schemas = sEntries.map(e => e.ver -> Snapshots.decodeSchema(e.path)).toMap
+      val schemas = sEntries.map(e => e.ver -> Manifest.decodeSchema(e.path)).toMap
       val current = schemas(sEntries.last.ver)
       val bySid = data.map(_.sid).distinct.map { sid =>
         val byId = schemas.getOrElse(if (sid == 0) sEntries.head.ver else sid,
@@ -165,7 +166,7 @@ private[graft] object SnapshotRead {
         p.keyCols.map(keyCol), scope))
     }
     val read =
-      if (Snapshots.currentSchema(es).isEmpty) scan(p.files, p.schema, col)
+      if (Manifest.currentSchema(es).isEmpty) scan(p.files, p.schema, col)
       else p.files.groupBy(_.entry.sid).toSeq.sortBy(_._1).map { case (_, files) =>
         val cols = p.schema.fields.toSeq.zip(files.head.fileCols).map {
           case (f, "") => f.name -> lit(null).cast(f.dataType)
@@ -182,10 +183,10 @@ private[graft] object SnapshotRead {
   /** The data entries of `es` whose statistics may match every filter;
     * with `keepAnchor`, at least one when `es` has any. */
   def prune(es: Seq[Entry], filters: Seq[Filter], keepAnchor: Boolean): Seq[Entry] = {
-    val keyFor = entryKeyer(es)
+    val keyFor = FileStats.keyer(es)
     val data = es.filter(_.kind == "A")
     val kept = if (filters.isEmpty) data else data.filter(e => e.stats.isEmpty || {
-      val (st, k) = (Snapshots.decodeStats(e.stats), keyFor(e))
+      val (st, k) = (FileStats.decodeStats(e.stats), keyFor(e))
       filters.forall(mayMatch(st, k, _))
     })
     if (kept.isEmpty && keepAnchor) data.take(1) else kept
@@ -197,31 +198,10 @@ private[graft] object SnapshotRead {
   def scanEstimate(es: Seq[Entry], filters: Seq[Filter]): (Option[Long], Option[Long]) = {
     val kept = prune(es, filters, keepAnchor = false)
     def total(key: String): Option[Long] = {
-      val per = kept.map(e => Snapshots.decodeStats(e.stats).get(key).map(_.lo.toLong))
+      val per = kept.map(e => FileStats.decodeStats(e.stats).get(key).map(_.lo.toLong))
       if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
     }
     (total("__rows"), total("__bytes"))
-  }
-
-  /** Per-file statistics keying. Untracked tables key by column name.
-    * On a tracked table a file written under tracking keys by stable id
-    * ("#17"); a pre-tracking file (sid 0) keys by the column's name in
-    * the initial binding, which `initSchema` proves all such files
-    * share; a column added after tracking began has no key in them.
-    * Reserved `__`-prefixed keys carry file facts and never resolve for
-    * a data column. None = keep. */
-  def entryKeyer(es: Seq[Entry]): Entry => String => Option[String] = {
-    val sEntries = es.filter(_.kind == "S").sortBy(_.ver)
-    def unreserved(k: String): Option[String] = Some(k).filterNot(_.startsWith("__"))
-    if (sEntries.isEmpty) _ => unreserved
-    else {
-      val cur = Snapshots.decodeSchema(sEntries.last.path)
-      val idToInitName = Snapshots.decodeSchema(sEntries.head.path).map(c => c.id -> c.name).toMap
-      e => n => cur.find(_.name == n).flatMap { c =>
-        if (e.sid == 0L) idToInitName.get(c.id).flatMap(unreserved)
-        else Some("#" + c.id)
-      }
-    }
   }
 
   /** Is `f` a filter kind [[mayMatch]] can act on? What a DSv2 scan
@@ -284,7 +264,7 @@ private[graft] object SnapshotRead {
         case ('l', _: java.math.BigInteger) => None
         case ('l' | 'd' | 'm', n: java.lang.Number) =>
           Some(BigDecimal(bound).compare(BigDecimal(n.toString)))
-        case ('s', sv: String) => Some(Snapshots.utf8Cmp(bound, sv))
+        case ('s', sv: String) => Some(FileStats.utf8Cmp(bound, sv))
         // DATE bounds are epoch days
         case ('t', d: java.sql.Date) =>
           Some(java.lang.Long.compare(bound.toLong, d.toLocalDate.toEpochDay))

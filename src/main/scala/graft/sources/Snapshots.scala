@@ -4,647 +4,49 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Manifest-versioned snapshot commits over a plain parquet directory —
-  * the minimal ACID story a 100 TB lake deployment eventually needs
-  * (round 10; VERDICT r9 "what's missing" #4). The reference's surface
-  * is a raw S3 prefix plus a file view (`src/copy_from_template.py:
-  * 316-327`, `synapseformation_templates/default.yaml:5-10`); this is
-  * the table-format discipline layered on exactly that kind of prefix,
-  * the same commit design (data files are immutable, a tiny pointer
-  * file is the unit of atomicity) that Iceberg/Delta formalize.
+import graft.sources.FileStats.ColStats
+import graft.sources.Manifest.{Entry, SchemaCol}
+import graft.sources.v2.WrittenFile
+
+/** The snapshot lake: manifest-versioned tables over a plain parquet
+  * prefix, the table format over the kind of S3 prefix the reference
+  * provisions (`src/copy_from_template.py:316-327`,
+  * `synapseformation_templates/default.yaml:5-10`). Data files are
+  * immutable and a small manifest per version is the unit of
+  * atomicity, the design Iceberg and Delta formalize. This object holds
+  * the public verbs: commits, schema DDL, reads, metadata and
+  * maintenance. The manifest format and its reads are [[Manifest]]'s,
+  * the commit protocol [[Commit]]'s, file statistics [[FileStats]]'s
+  * and read planning [[SnapshotRead]]'s.
   *
-  * Layout:
-  * {{{
-  *   root/data/c-<uuid>/part-*.parquet    -- immutable once committed
-  *   root/deletes/c-<uuid>/part-*.parquet -- equality-delete key files
-  *   root/_manifests/v<N>.list            -- entries (see below)
-  *   root/_manifests/v<N>.claim           -- commit-arbitration marker
-  * }}}
-  *
-  * Manifest entries are one line per file, `KIND\tVER\tPATH` where KIND
-  * is `A` (data added at version VER), `D` (equality-delete keys
-  * committed at VER) or `S` (a schema binding for column-ID evolution;
-  * its PATH field carries the encoded column list). Data lines on a
-  * schema-tracked table append a fourth field, the schema version the
-  * file was written under. A bare path parses as `A\t0\tPATH` (legacy).
-  * Entries are immutable once written — an APPEND carries the prior
-  * version's lines verbatim, so manifest-set diffs identify exactly
-  * what a version changed (the CDC reader builds on this).
-  *
-  * Commit protocol (optimistic, multi-writer): data files are written
-  * FIRST under a commit-private uuid directory (never visible to any
-  * manifest until the pointer lands, and never rewritten on retry).
-  * Publication then loops: read the highest published version `cur`,
-  * CLAIM `cur+1` by atomically creating `_manifests/v<cur+1>.claim`
-  * (local FS: `File.createNewFile`, O_CREAT|O_EXCL; HDFS-likes:
-  * `create(path, overwrite=false)`; object stores: the conditional-put
-  * substitution), and on success write the manifest via tmp + RENAME —
-  * one single-file rename is the entire visibility switch. A claim at
-  * `cur+1` can only be won while `cur` is published, so carried file
-  * lists always extend the latest committed state: concurrent appends
-  * serialize correctly and none is lost. A writer that loses the claim
-  * backs off and retries against the new current version; its data
-  * files are reused as-is. CRASH RECOVERY (round 11 — the former
-  * known gap, closed): claims carry a LEASE
-  * (`spark.graft.snapshots.claimLeaseMs`, default 30 s), aged by each
-  * competitor's OWN monotonic clock from when it first observes the
-  * claim unchanged (round 12 — no filesystem mtime, so cross-host
-  * clock skew can never make a fresh claim look expired). A claim that
-  * stays unchanged for a full locally-observed lease with no manifest
-  * is an orphan of a crashed writer; any competitor breaks it and
-  * re-claims — exactly one wins (the claim create is atomic) — so a
-  * crash between claim and publish stalls writers for at most ~two
-  * leases, with zero manual cleanup. A paused-not-crashed original
-  * waking past its lease is FENCED: the manifest publish is ATOMIC
-  * no-overwrite (a hard link on local FS, a rename that refuses an
-  * existing destination on HDFS-likes, a conditional put on object
-  * stores — declared), so the zombie can never clobber the competitor's
-  * committed manifest — it observes the loss and REBASES (round 12):
-  * re-reads the new current version, re-claims, re-builds on the fresh
-  * carried entries, reusing its commit-private data files. The
-  * multi-writer contract is therefore: ANY number of live writers may
-  * commit concurrently; each commit lands exactly once, at some
-  * version, in claim-serialized order, and no committed state is ever
-  * lost (model-tested with racing writers and crash interleavings).
-  *
-  * Row-level deletes are MERGE-ON-READ equality deletes with sequence
-  * scoping, the Iceberg v2 semantics: [[commitDelete]] publishes a
-  * parquet file of key tuples; [[readSnapshot]] drops a data row iff
-  * some delete with a LATER version than the row's data file matches
-  * its key. Re-inserting a deleted key therefore works (the new file's
-  * version exceeds the delete's), and a REPLACE commit materializes
-  * deletes away. A reader pinned before the delete still sees the rows
-  * (snapshot isolation covers deletes too).
-  *
-  * Scale shape: a commit touches only its OWN new files plus one
-  * manifest write; `readSnapshot` hands Spark the frozen file list, so
-  * scan planning, pushdown and pruning are the ordinary parquet path,
-  * with read schemas taken from footers on the driver (no inference
-  * job). Deletes add one in-scan predicate that probes executor-cached
-  * key sets of the (broadcast-sized) delete files — no join, no
-  * exchange; that per-row probe is the read-side cost merge-on-read
-  * trades for rewrite-free deletes, reclaimed by the next REPLACE.
-  * Manifests are O(files) text — the
-  * 100 TB failure mode (a million small files) is the existing
-  * [[FileView.compact]] job's business, which composes: a REPLACE
-  * commit whose data is the compacted rewrite.
-  */
+  * Contracts:
+  *  - **Isolation.** A commit writes its files into a commit-private
+  *    directory first, then publishes one manifest version; a reader
+  *    pinned at a version reads that version's frozen file list, so
+  *    later commits never change what it reads.
+  *  - **Concurrency and fencing.** Any number of writers may commit
+  *    concurrently: each commit lands exactly once, at some version, in
+  *    claim order, and no committed state is lost ([[Commit]]).
+  *    Read-modify-write commits (layout rewrites, copy-on-write
+  *    UPDATE/MERGE) validate what they read and abort with
+  *    [[ConcurrentTableChangeException]] instead of dropping a
+  *    concurrent commit.
+  *  - **Idempotence.** [[commitMergeOnce]] and the streaming sink's
+  *    appends commit a transaction id in the same version as their
+  *    files; a replayed id publishes nothing.
+  *  - **Deletes.** Row-level deletes are merge-on-read equality deletes
+  *    with Iceberg v2 sequence scoping: a delete removes matching rows
+  *    of data files committed strictly before it, so a re-inserted key
+  *    survives and a commit's own delete spares its own rows. A REPLACE
+  *    materializes pending deletes away.
+  *  - **Skip safety.** File skipping and metadata answers use manifest
+  *    statistics only when every needed fact is known; any gap keeps
+  *    the file or declines the answer, never a wrong result. */
 object Snapshots {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def manifestDir(root: String) = new Path(root, "_manifests")
-
-  private def manifestPath(root: String, v: Long) =
-    new Path(manifestDir(root), f"v$v%05d.list")
-
-  /** One manifest line. `A`=data file, `D`=equality-delete file, each
-    * stamped with the version that committed it; `S`=schema entry whose
-    * `path` field carries the encoded column list (column-ID schema
-    * evolution, round 11). Data lines on a schema-tracked table carry a
-    * fourth field — the schema version (`sid`) they were written under
-    * — so the read path can resolve their columns BY ID, not by name.
-    * `sid = 0` means "written before schema tracking began": those
-    * files resolve against the INITIAL schema entry. A fifth field
-    * (round 12) carries the file's per-column min/max STATISTICS
-    * ([[encodeStats]]) — what lets a selective read skip whole files
-    * WITHOUT opening their footers ([[readSnapshotPruned]]). */
-  private[graft] final case class Entry(kind: String, ver: Long, path: String,
-      sid: Long = 0L, stats: String = "") {
-    def line: String =
-      if (kind == "A" && stats.nonEmpty) s"$kind\t$ver\t$path\t$sid\t$stats"
-      else if (kind == "A" && sid != 0L) s"$kind\t$ver\t$path\t$sid"
-      else s"$kind\t$ver\t$path"
-  }
-
-  private def parseEntry(line: String): Entry = line.split('\t') match {
-    case Array(k, v, p, s, st) if k == "A" => Entry(k, v.toLong, p, s.toLong, st)
-    case Array(k, v, p, s) if k == "A" => Entry(k, v.toLong, p, s.toLong)
-    // T = idempotence marker (round 14): its `path` field carries a
-    // TRANSACTION ID committed atomically with its version's files —
-    // the exactly-once handshake of the streaming sink
-    case Array(k, v, p) if k == "A" || k == "D" || k == "S" || k == "T" =>
-      Entry(k, v.toLong, p)
-    case Array(p) => Entry("A", 0L, p) // legacy bare-path line
-    case _ => throw new IllegalArgumentException(s"bad manifest line: $line")
-  }
-
-  /** One column of a tracked schema: a STABLE id (never reused — what
-    * makes rename and drop/re-add-same-name sound), its current name,
-    * and its Spark DDL type. */
-  private[graft] final case class SchemaCol(id: Int, name: String, typ: String)
-
-  /** Schema payload codec: `id;name;type|id;name;type|…`. Names and
-    * rendered DDL types are validated free of the delimiters at commit
-    * time, so the encoding is unambiguous without a JSON dependency. */
-  private def encodeSchema(cols: Seq[SchemaCol]): String = {
-    cols.foreach { c =>
-      require(!c.name.exists(ch => ch == ';' || ch == '|' || ch == '\t' || ch == '\n'),
-        s"column name '${c.name}' contains a schema-encoding delimiter")
-      require(!c.typ.exists(ch => ch == ';' || ch == '|' || ch == '\t' || ch == '\n'),
-        s"column type '${c.typ}' contains a schema-encoding delimiter")
-    }
-    require(cols.map(_.id).distinct.size == cols.size, "duplicate column id")
-    require(cols.map(_.name).distinct.size == cols.size, "duplicate column name")
-    cols.map(c => s"${c.id};${c.name};${c.typ}").mkString("|")
-  }
-
-  private[graft] def decodeSchema(payload: String): Seq[SchemaCol] =
-    payload.split('|').toSeq.map { s =>
-      val Array(id, name, typ) = s.split(';')
-      SchemaCol(id.toInt, name, typ)
-    }
-
-  // ---------------------------------------------------------------------
-  // Manifest-level column statistics + file skipping (the Iceberg/Delta
-  // idea that makes a selective scan at 100 TB not open a million
-  // parquet footers): each data file's manifest line carries per-column
-  // min/max, so the PLANNER skips files from the manifest text alone;
-  // only surviving files reach Spark's scan.
-  //
-  // Collection: each write task aggregates the row-group statistics of
-  // the footer it just closed to file min/max ([[statsOfOneFooter]]) and
-  // returns them with the file; the publish embeds them in the manifest
-  // lines. No commit re-opens a footer.
-  //
-  // Keying: on a schema-tracked table stats are keyed by the column's
-  // STABLE ID ("#17"), so renames never orphan them and a re-added
-  // same-name column never inherits the dropped column's ranges;
-  // untracked tables key by name. Missing stats always mean "cannot
-  // exclude" — pruning is strictly an optimization, never a filter.
-  // ---------------------------------------------------------------------
-
-  /** Stats payload codec: `key;tag;lo;hi|…` — key and bounds
-    * URL-encoded (arbitrary data values can hold any delimiter), tag
-    * `l`=integral (stored as Long), `d`=floating (as Double),
-    * `s`=string (UTF-8; bounds longer than 64 chars are DROPPED rather
-    * than truncated — a truncated upper bound would wrongly exclude),
-    * `t`=DATE (epoch days), `u`=TIMESTAMP (instant micros),
-    * `v`=TIMESTAMP_NTZ (naive wall-clock micros), `m`=DECIMAL
-    * (exact plain decimal strings — the ADVICE r12 fix: an INT32/INT64
-    * physical chunk is tagged by its LOGICAL type, never blindly 'l',
-    * so unscaled decimal storage can no longer masquerade as a long),
-    * `n`=the column is entirely NULL in this file (a POSITIVE fact:
-    * every comparison predicate prunes the file, and metadata
-    * aggregates know the file contributes no values — distinct from a
-    * MISSING stat, which always means "unknown, keep"). Reserved keys:
-    * `__rows` carries the file's row count, `__bytes` its on-disk size
-    * (lo = hi = the value) — the planner-statistics feed
-    * ([[graft.sources.v2.SnapshotBatchSource]] reports the PRUNED
-    * scan's true size, so a selective read of a huge table can
-    * auto-broadcast). Data columns literally named `__rows`/`__bytes`
-    * are never statted (ambiguity is dropped, not guessed). */
-  private def urlEnc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def urlDec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  private[graft] final case class ColStats(tag: Char, lo: String, hi: String)
-
-  private def encodeStats(items: Seq[(String, Char, String, String)],
-      keyer: String => Option[String]): String =
-    items.flatMap { case (name, tag, lo, hi) =>
-      // reserved keys ("__rows") bypass the schema keyer — they are
-      // file facts, not column bindings
-      val key = if (name.startsWith("__")) Some(name) else keyer(name)
-      key.map(k => s"${urlEnc(k)};$tag;${urlEnc(lo)};${urlEnc(hi)}")
-    }.mkString("|")
-
-  private[graft] def decodeStats(payload: String): Map[String, ColStats] =
-    if (payload.isEmpty) Map.empty
-    else payload.split('|').toSeq.map { s =>
-      // limit -1: tag-'n' items end in empty bounds ("k;n;;") and
-      // Java's default split would drop the trailing empties
-      val parts = s.split(";", -1)
-      require(parts.length == 4, s"bad stats item: $s")
-      urlDec(parts(0)) -> ColStats(parts(1).head, urlDec(parts(2)), urlDec(parts(3)))
-    }.toMap
-
-  /** Write-task side: aggregate one parquet file's row-group statistics
-    * to file-level min/max per top-level primitive column. A column is
-    * dropped (no stat) when any populated row group lacks statistics,
-    * when a floating bound is NaN, when a string bound exceeds 64 chars,
-    * or when every row group is all-NULL — dropping is always safe
-    * (missing = keep the file). */
-  private[graft] def statsOfOneFooter(path: String,
-      confMap: Array[(String, String)]): Seq[(String, Char, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val conf = graft.sources.v2.SnapshotReaderFactory.mapToConf(confMap)
-    val inFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inFile)
-    try {
-      val md = reader.getFooter
-      // accumulate per column: None = poisoned (missing stats somewhere);
-      // tag 'n' = every populated chunk so far was all-NULL
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[String, Option[(Char, Any, Any)]]
-      for (block <- md.getBlocks.asScala; cc <- block.getColumns.asScala) {
-        val pathParts = cc.getPath.toArray
-        if (pathParts.length == 1 && !pathParts(0).startsWith("__")) { // top-level primitives only
-          val name = pathParts(0)
-          val st = cc.getStatistics
-          val chunk: Option[Option[(Char, Any, Any)]] =
-            if (st == null || st.isEmpty) Some(None) // poison
-            // all-NULL only when every value is a null: parquet keeps a
-            // null count but no min/max for INT96, so a chunk with
-            // values and no bounds is unknown
-            else if (!st.hasNonNullValue)
-              if (st.isNumNullsSet && st.getNumNulls == cc.getValueCount)
-                Some(Some(('n', "", "")))
-              else Some(None)
-            else cc.getPrimitiveType.getPrimitiveTypeName match {
-              // The LOGICAL type annotation decides what an INT32/INT64
-              // physically stores (DECIMAL(p<=18) is stored as its
-              // UNSCALED integer — tagging it 'l' would record unscaled
-              // bounds, and a pushed BigDecimal predicate compared
-              // against them could wrongly EXCLUDE files, i.e. silently
-              // wrong results). Plain ints stay 'l'; DATE gets
-              // 't' (epoch days), TIMESTAMP 'u' (micros), DECIMAL 'm'
-              // (exact plain-string decimal — never rounded through a
-              // double); anything unrecognized drops the stat (keep).
-              case INT64 => intStat(cc.getPrimitiveType,
-                st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-              case INT32 => intStat(cc.getPrimitiveType,
-                st.genericGetMin.asInstanceOf[java.lang.Integer].longValue,
-                st.genericGetMax.asInstanceOf[java.lang.Integer].longValue)
-              case DOUBLE =>
-                val lo = st.genericGetMin.asInstanceOf[java.lang.Double].doubleValue
-                val hi = st.genericGetMax.asInstanceOf[java.lang.Double].doubleValue
-                if (lo.isNaN || hi.isNaN) Some(None) else Some(Some(('d', lo, hi)))
-              case FLOAT =>
-                val lo = st.genericGetMin.asInstanceOf[java.lang.Float].doubleValue
-                val hi = st.genericGetMax.asInstanceOf[java.lang.Float].doubleValue
-                if (lo.isNaN || hi.isNaN) Some(None) else Some(Some(('d', lo, hi)))
-              case BINARY
-                if cc.getPrimitiveType.getLogicalTypeAnnotation ==
-                  org.apache.parquet.schema.LogicalTypeAnnotation.stringType() =>
-                val lo = st.genericGetMin
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
-                val hi = st.genericGetMax
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
-                if (lo.length > 64 || hi.length > 64) Some(None)
-                else Some(Some(('s', lo, hi)))
-              case _ => Some(None) // unsupported physical type
-            }
-          chunk.foreach { c =>
-            val merged = (acc.get(name), c) match {
-              case (Some(None), _) | (_, None) => None
-              case (None, v) => v // first sighting of this column
-              // 'n' is the identity of the merge: an all-NULL chunk
-              // constrains nothing but poisons nothing either
-              case (Some(Some(('n', _, _))), v) => v
-              case (Some(prev), Some(('n', _, _))) => prev
-              case (Some(Some((t1, lo1, hi1))), Some((t2, lo2, hi2))) if t1 == t2 =>
-                (t1: @unchecked) match {
-                  case 'l' | 't' | 'u' | 'v' => Some((t1,
-                    math.min(lo1.asInstanceOf[Long], lo2.asInstanceOf[Long]),
-                    math.max(hi1.asInstanceOf[Long], hi2.asInstanceOf[Long])))
-                  case 'm' =>
-                    val a1 = lo1.asInstanceOf[java.math.BigDecimal]
-                    val a2 = lo2.asInstanceOf[java.math.BigDecimal]
-                    val b1 = hi1.asInstanceOf[java.math.BigDecimal]
-                    val b2 = hi2.asInstanceOf[java.math.BigDecimal]
-                    Some(('m', if (a1.compareTo(a2) <= 0) a1 else a2,
-                      if (b1.compareTo(b2) >= 0) b1 else b2))
-                  case 'd' => Some(('d',
-                    math.min(lo1.asInstanceOf[Double], lo2.asInstanceOf[Double]),
-                    math.max(hi1.asInstanceOf[Double], hi2.asInstanceOf[Double])))
-                  case 's' =>
-                    val l1 = lo1.asInstanceOf[String]; val l2 = lo2.asInstanceOf[String]
-                    val h1 = hi1.asInstanceOf[String]; val h2 = hi2.asInstanceOf[String]
-                    Some(('s', if (utf8Cmp(l1, l2) <= 0) l1 else l2,
-                      if (utf8Cmp(h1, h2) >= 0) h1 else h2))
-                }
-              case _ => None
-            }
-            acc.update(name, merged)
-          }
-        } else acc.update(pathParts.mkString("."), None) // nested: never stat
-      }
-      val rows = md.getBlocks.asScala.map(_.getRowCount).sum
-      val bytes = inFile.getLength
-      acc.toSeq.collect { case (name, Some((tag, lo, hi))) =>
-        // decimals render as PLAIN strings — BigDecimal.toString can go
-        // scientific ("1E-7"), and while BigDecimal re-parses it, plain
-        // form keeps the manifest greppable and codec-stable
-        def render(v: Any): String = v match {
-          case d: java.math.BigDecimal => d.toPlainString
-          case other => other.toString
-        }
-        (name, tag, render(lo), render(hi))
-      } :+ ("__rows", 'l', rows.toString, rows.toString) :+
-        ("__bytes", 'l', bytes.toString, bytes.toString)
-    } finally reader.close()
-  }
-
-  /** Tag + bounds for an INT32/INT64 column chunk, decided by the
-    * parquet LOGICAL type over the raw (widened-to-long) physical
-    * bounds. None = annotation we don't model — drop the stat, which
-    * always means "keep the file". */
-  private def intStat(pt: org.apache.parquet.schema.PrimitiveType,
-      lo: Long, hi: Long): Option[Option[(Char, Any, Any)]] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation._
-    pt.getLogicalTypeAnnotation match {
-      case null => Some(Some(('l', lo, hi))) // plain INT32/INT64
-      case i: IntLogicalTypeAnnotation if i.isSigned =>
-        Some(Some(('l', lo, hi))) // TINYINT/SMALLINT/INT/BIGINT
-      case _: DateLogicalTypeAnnotation => Some(Some(('t', lo, hi)))
-      case ts: TimestampLogicalTypeAnnotation =>
-        // normalize to MICROS; NANOS would need floor/ceil asymmetry to
-        // stay sound, and Spark never writes it — drop instead. The
-        // UTC-adjusted flag picks the tag: 'u' bounds are INSTANT micros
-        // (Timestamp/Instant predicates), 'v' bounds are NAIVE
-        // wall-clock micros (LocalDateTime predicates, the NTZ type) —
-        // collapsing the two would compare across a timezone offset
-        // whenever a session's zone is not UTC
-        val tag = if (ts.isAdjustedToUTC) 'u' else 'v'
-        ts.getUnit match {
-          case TimeUnit.MICROS => Some(Some((tag, lo, hi)))
-          case TimeUnit.MILLIS => Some(Some((tag, lo * 1000L, hi * 1000L)))
-          case _ => Some(None)
-        }
-      case d: DecimalLogicalTypeAnnotation =>
-        // the physical value is the UNSCALED integer — rescale to the
-        // exact decimal (comparing a pushed BigDecimal against
-        // unscaled bounds would wrongly exclude files)
-        Some(Some(('m', java.math.BigDecimal.valueOf(lo, d.getScale),
-          java.math.BigDecimal.valueOf(hi, d.getScale))))
-      case _ => Some(None) // unsigned ints, TIME, … — never guess
-    }
-  }
-
-  /** Unsigned UTF-8 byte comparison — the order parquet BINARY
-    * statistics are computed in (Java String.compareTo differs on
-    * supplementary characters, which would make pruning unsound). */
-  private[graft] def utf8Cmp(a: String, b: String): Int =
-    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-
-  /** The stat keyer a commit uses: column NAME on untracked tables,
-    * stable "#id" on schema-tracked ones (rename-proof; a dropped-then-
-    * re-added name gets a fresh id and can never inherit old ranges). */
-  private def statKeyer(schema: Option[(Long, Seq[SchemaCol])]): String => Option[String] =
-    schema match {
-      case None => n => Some(n)
-      case Some((_, cols)) => n => cols.find(_.name == n).map(c => "#" + c.id)
-    }
-
-  /** Highest committed version, or 0 when the table has none. `.tmp`
-    * leftovers of a writer killed mid-commit are invisible (their
-    * rename never happened, so their data files were never published —
-    * crash safety falls out of the protocol). */
-  def currentVersion(spark: SparkSession, root: String): Long = {
-    val dir = manifestDir(root)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".list"))
-      .map(n => n.stripPrefix("v").stripSuffix(".list").toLong)
-      .foldLeft(0L)(math.max)
-  }
-
-  private def readManifest(spark: SparkSession, root: String, v: Long): Seq[String] = {
-    val mp = manifestPath(root, v)
-    val f = fs(spark, mp)
-    require(f.exists(mp), s"snapshot version $v does not exist under $root")
-    val in = f.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
-    finally in.close()
-  }
-
-  /** The parsed manifest of version `v`: one read. A caller asking
-    * several questions of one version (a DSv2 scan plan) reads it once
-    * and passes the entries down; versions are immutable, but a table
-    * root can be dropped and re-created, so nothing caches them across
-    * calls. */
-  private[graft] def entries(spark: SparkSession, root: String, v: Long): Seq[Entry] =
-    readManifest(spark, root, v).map(parseEntry)
-
-  private def writeManifest(spark: SparkSession, root: String, v: Long,
-      files: Seq[String]): Unit = {
-    val mp = manifestPath(root, v)
-    val tmp = new Path(mp.toString + ".tmp-" + uuid8)
-    val f = fs(spark, mp)
-    f.mkdirs(manifestDir(root))
-    val out = f.create(tmp, true)
-    try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    // ZOMBIE FENCE (round 11; made ATOMIC in round 12 — ADVICE r11
-    // medium): a writer paused past its claim lease may wake after a
-    // competitor broke the claim and published this very version — it
-    // must FAIL here, never silently clobber the committed manifest.
-    // POSIX rename overwrites, so on the `file` scheme the publish is a
-    // HARD LINK instead: Files.createLink(dest, tmp) is atomic, fails
-    // with FileAlreadyExists if the destination exists, and the content
-    // is fully durable before the link lands — the check-then-rename
-    // window (two zombies both passing !exists, one silently replacing
-    // the other's committed manifest) is gone. Non-file schemes keep
-    // rename: HDFS's rename is atomic and REFUSES an existing
-    // destination file (returns false), so the fence holds there too;
-    // an object store substitutes a conditional put (declared).
-    if (f.getUri.getScheme == "file") {
-      val dst = java.nio.file.Paths.get(mp.toUri.getPath)
-      val src = java.nio.file.Paths.get(tmp.toUri.getPath)
-      try java.nio.file.Files.createLink(dst, src)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false)
-          throw new CommitLostException(v)
-      }
-      f.delete(tmp, false)
-    } else {
-      if (f.exists(mp)) throw new CommitLostException(v)
-      if (!f.rename(tmp, mp)) throw new CommitLostException(v)
-    }
-  }
-
-  /** The fence fired: a competitor published this version first (only
-    * possible after a lease takeover). Nothing from the loser became
-    * visible; [[publish]] catches this and REBASES — re-reads the new
-    * current version and retries the claim with the same data files. */
-  private final class CommitLostException(v: Long) extends RuntimeException(
-    s"version $v was published by a competitor after a lease takeover")
-
-  /** Atomically claim the right to publish version `v`, writing this
-    * writer's identity into the claim. Local FS gets a true
-    * O_CREAT|O_EXCL create; other stores use Hadoop's no-overwrite
-    * create (atomic on HDFS; an object-store deployment substitutes a
-    * conditional put — declared). Claim files persist past publish:
-    * deleting one after publish would let a straggler that read a stale
-    * `currentVersion` re-claim and clobber a published manifest. */
-  private def tryClaim(spark: SparkSession, root: String, v: Long,
-      owner: String): Boolean = {
-    val cp = claimPath(root, v)
-    val f = fs(spark, cp)
-    f.mkdirs(manifestDir(root))
-    // the identity travels IN the exclusive create itself (CREATE_NEW =
-    // O_CREAT|O_EXCL), so a winner can never later clobber a claim that
-    // was broken and re-claimed in between — there is no second write
-    if (f.getUri.getScheme == "file")
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(cp.toUri.getPath),
-          owner.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch { case _: java.io.IOException => false }
-    else
-      try {
-        val out = f.create(cp, false)
-        try out.write(owner.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-  }
-
-  /** The identity a claim was created with, or None if unreadable /
-    * not yet written. */
-  private def claimOwner(spark: SparkSession, cp: Path): Option[String] = {
-    val f = fs(spark, cp)
-    try {
-      val in = f.open(cp)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    } catch { case _: java.io.IOException => None }
-  }
-
-  /** BREAK an orphaned claim by atomically RENAMING it to a tombstone —
-    * exactly one of N concurrent breakers succeeds (rename of a missing
-    * source fails), so a broken-and-re-claimed fresh claim can never be
-    * deleted by a straggler holding a stale lease observation (the
-    * check-then-DELETE form had exactly that race). Tombstones are tiny
-    * and reclaimed by [[vacuum]]. */
-  private def breakClaim(spark: SparkSession, root: String, v: Long): Boolean = {
-    val cp = claimPath(root, v)
-    val tomb = new Path(cp.toString + s".broken-$uuid8")
-    try fs(spark, cp).rename(cp, tomb)
-    catch { case _: java.io.IOException => false }
-  }
-
-  /** Optimistic publication loop shared by every commit kind: claim
-    * `current+1`, build the new manifest from the carried lines, rename
-    * it visible. `build` receives the version it will publish as plus
-    * the carried entries (empty for version 1). */
-  private def claimPath(root: String, v: Long) =
-    new Path(manifestDir(root), f"v$v%05d.claim")
-
-  /** Claim lease in ms (default 30 s): a claim older than this whose
-    * manifest never appeared is an orphan of a crashed writer and may
-    * be BROKEN by a competitor. Tunable via
-    * `spark.graft.snapshots.claimLeaseMs` (tests shrink it). */
-  private def leaseMs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.snapshots.claimLeaseMs")
-      .map(_.toLong).getOrElse(30000L)
-
-  /** How long [[publish]] keeps retrying before giving up, DERIVED from
-    * the lease (round 14, ADVICE r12 low #3: a fixed 60 s deadline with
-    * a configurable lease let `claimLeaseMs >= ~60 s` make orphan
-    * takeover impossible — the watcher needs a full locally-observed
-    * lease before it may break a crashed writer's claim, so the retry
-    * budget must always exceed it): max(60 s, 2 × lease), saturating
-    * rather than overflowing on absurd lease configs. */
-  private[graft] def publishDeadlineMs(leaseMs: Long): Long =
-    math.max(60000L,
-      if (leaseMs > (Long.MaxValue - 1) / 2) Long.MaxValue / 2 else 2 * leaseMs)
-
-  private def publish(spark: SparkSession, root: String)(
-      build: (Long, Seq[Entry]) => Seq[String]): Long = {
-    val startNs = System.nanoTime
-    val budgetMs = publishDeadlineMs(leaseMs(spark))
-    def withinBudget: Boolean = (System.nanoTime - startNs) / 1000000L < budgetMs
-    val me = s"writer-$uuid8-${Thread.currentThread().getId}"
-    var attempt = 0
-    // first-seen watch for lease expiry (ADVICE r11: mtime-based aging
-    // trusted the filesystem's timestamp authority against the local
-    // clock — skew on NFS/HDFS/object stores could make a FRESH claim
-    // look expired). A claim is broken only after it has been observed
-    // UNCHANGED (same version, same owner bytes) by THIS writer's own
-    // monotonic clock for a full lease — no cross-host clock enters the
-    // decision. Cost: a takeover waits at most one extra lease from
-    // when this writer starts watching, instead of reacting to an
-    // already-aged mtime; the claim file's timestamp is never read.
-    var watchV = -1L
-    var watchSig: Option[String] = None
-    var watchSince = 0L
-    while (withinBudget) {
-      val cur = currentVersion(spark, root)
-      val v = cur + 1
-      if (tryClaim(spark, root, v, me)) {
-        val carried = if (cur == 0) Seq.empty else entries(spark, root, cur)
-        // validation inside `build` (schema checks, empty-table guards)
-        // fails BEFORE any manifest is visible — release the claim so a
-        // rejected write does not wedge the version number. Release is
-        // OWNERSHIP-CHECKED and then an atomic RENAME-TO-TOMBSTONE
-        // (ADVICE r11: the delete form could remove a competitor's
-        // FRESH claim after a break+re-claim landed between the check
-        // and the delete, reopening the duplicate-claim race). The
-        // rename fails harmlessly if the claim was already broken; the
-        // residual check-then-rename sliver (break + re-claim between
-        // our ownership read and our rename) degrades to a DUPLICATE
-        // CLAIM, which the atomic no-clobber publish in writeManifest
-        // arbitrates — one loud retry, never a lost commit.
-        val lines =
-          try build(v, carried)
-          catch { case e: Throwable =>
-            if (claimOwner(spark, claimPath(root, v)).contains(me))
-              breakClaim(spark, root, v)
-            throw e
-          }
-        // TWO-LIVE-WRITER CONTRACT (round 12, VERDICT r11 ask #4): if
-        // this writer stalled past its lease, a competitor may have
-        // taken the claim over and published v first. The atomic
-        // publish fence detects that LOSSLESSLY (nothing of ours became
-        // visible) — so rebase: fall through, re-read the new current
-        // version, re-claim, re-build on the fresh carried entries. The
-        // data files are commit-private and reusable; every racing
-        // commit therefore lands exactly once, at SOME version, in
-        // claim-serialized order.
-        try { writeManifest(spark, root, v, lines); return v }
-        catch { case _: CommitLostException =>
-          watchV = -1L; watchSig = None
-        }
-      }
-      // LEASE TAKEOVER (round 11, VERDICT r10 ask #5 — closing the
-      // orphan-claim ACID hole): the claim we lost to may belong to a
-      // writer that CRASHED between claim and publish. If its manifest
-      // still hasn't appeared after a full locally-observed lease (the
-      // first-seen watch above — never the file's mtime), BREAK it by an
-      // atomic rename-to-tombstone — of N concurrent breakers exactly
-      // one rename succeeds and a broken-then-re-claimed FRESH claim can
-      // never be removed by a straggler (a delete-based break could
-      // remove it). A zombie original waking later is fenced by
-      // writeManifest's no-clobber check. No committed state is ever at
-      // risk: only claims WITHOUT a published manifest are broken.
-      val cp = claimPath(root, v)
-      val f = fs(spark, cp)
-      val live =
-        try !f.exists(manifestPath(root, v)) && f.exists(cp)
-        catch { case _: java.io.FileNotFoundException => false }
-      if (!live) { watchV = -1L; watchSig = None }
-      else {
-        val sig = claimOwner(spark, cp)
-        if (watchV != v || watchSig != sig) {
-          // new claim under watch (or the one we watched was replaced):
-          // restart the first-seen clock — a broken-and-re-claimed
-          // fresh claim is never broken on the old claim's age
-          watchV = v; watchSig = sig; watchSince = System.nanoTime
-        } else if ((System.nanoTime - watchSince) / 1000000L > leaseMs(spark)) {
-          breakClaim(spark, root, v)
-          watchV = -1L; watchSig = None
-        }
-      }
-      attempt += 1
-      Thread.sleep(math.min(200L, 5L * attempt))
-    }
-    throw new IllegalStateException(
-      s"commit on $root could not claim a version for ${budgetMs / 1000} s — a " +
-        "live writer is holding the claim within its lease (crashed writers' " +
-        "claims are broken automatically after spark.graft.snapshots.claimLeaseMs)")
-  }
-
-  private def uuid8 = java.util.UUID.randomUUID.toString.take(8)
+  /** Highest committed version, or 0 when the table has none. */
+  def currentVersion(spark: SparkSession, root: String): Long =
+    Manifest.currentVersion(spark, root)
 
   // ---------------------------------------------------------------------
   // Commits. Every commit writes its files through the lake's one writer
@@ -663,8 +65,8 @@ object Snapshots {
     * footer), other empty tasks write none, and a frame with no
     * partitions runs one empty task. Returns the files sorted by path. */
   private def writeFiles(spark: SparkSession, root: String, dir: String,
-      df: DataFrame): Seq[graft.sources.v2.WrittenFile] = {
-    val writer = graft.sources.v2.SnapshotFileWriter(spark, s"$root/$dir/c-$uuid8", df.schema)
+      df: DataFrame): Seq[WrittenFile] = {
+    val writer = graft.sources.v2.SnapshotFileWriter(spark, Commit.privateDir(root, dir), df.schema)
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(df.queryExecution,
         Some("snapshot commit")) {
       val rows = df.queryExecution.toRdd
@@ -676,27 +78,23 @@ object Snapshots {
     }
   }
 
-  /** The manifest line of data file `f` committed at version `v`. */
-  private def dataLine(v: Long, carried: Seq[Entry])(f: graft.sources.v2.WrittenFile): String = {
-    val schema = currentSchema(carried)
-    Entry("A", v, f.path, schema.map(_._1).getOrElse(0L),
-      encodeStats(f.stats, statKeyer(schema))).line
+  /** The manifest line of data file `f` committed at version `v`: the
+    * current schema version and the file's statistics, keyed as a read
+    * of that version keys them ([[FileStats.keyer]]). */
+  private def dataLine(v: Long, carried: Seq[Entry])(f: WrittenFile): String = {
+    val e = Entry("A", v, f.path, Manifest.currentSchema(carried).map(_._1).getOrElse(0L))
+    e.copy(stats = FileStats.encodeStats(f.stats, FileStats.keyer(carried)(e))).line
   }
 
-  /** Latest tracked schema among `carried`'s S entries, if any. */
-  private[graft] def currentSchema(carried: Seq[Entry]): Option[(Long, Seq[SchemaCol])] =
-    carried.filter(_.kind == "S").sortBy(_.ver).lastOption
-      .map(e => e.ver -> decodeSchema(e.path))
-
   /** Loud name AND type check for writes into a schema-tracked table:
-    * new data must carry EXACTLY the current column names with the
+    * new data must carry exactly the current column names with the
     * tracked DDL types (the writer-side half of the column-ID contract
     * — the read side resolves by id and groups same-sid files into one
     * scan, so a name- or type-mismatched write would silently bind
-    * wrong columns or corrupt the group's scan). */
+    * wrong columns). */
   private def checkWriteSchema(carried: Seq[Entry],
       written: org.apache.spark.sql.types.StructType, what: String): Unit =
-    currentSchema(carried).foreach { case (_, cur) =>
+    Manifest.currentSchema(carried).foreach { case (_, cur) =>
       val got = written.fields.map(f => f.name -> f.dataType).toMap
       require(got.keySet == cur.map(_.name).toSet,
         s"$what columns ${got.keySet.toSeq.sorted.mkString(",")} must match the " +
@@ -712,93 +110,33 @@ object Snapshots {
     }
 
   /** APPEND commit: new version = previous version's entries + `df`'s
-    * files. Safe under concurrent writers (see the protocol above).
-    * On a schema-tracked table the new files are stamped with the
-    * current schema version and the column names are checked loudly.
-    * Returns the committed version number. */
+    * files. On a schema-tracked table the new files are stamped with the
+    * current schema version and the columns are checked loudly. Returns
+    * the committed version number. */
   def commitAppend(spark: SparkSession, root: String, df: DataFrame): Long =
     commitAppendFiles(spark, root, writeFiles(spark, root, "data", df), df.schema)
 
-  /** APPEND of written files (the DSv2 write path and [[commitAppend]]):
-    * the claim-serialized manifest publish. `written` is the files'
-    * schema, checked loudly against a tracked binding. */
+  /** APPEND of written files (the DSv2 write path and [[commitAppend]]);
+    * `written` is the files' schema, checked against a tracked binding. */
   private[graft] def commitAppendFiles(spark: SparkSession, root: String,
-      mine: Seq[graft.sources.v2.WrittenFile],
-      written: org.apache.spark.sql.types.StructType): Long =
-    publish(spark, root) { (v, carried) =>
-      checkWriteSchema(carried, written, "commitAppend")
-      carried.map(_.line) ++ mine.map(dataLine(v, carried))
-    }
+      mine: Seq[WrittenFile], written: org.apache.spark.sql.types.StructType): Long =
+    appendFiles(spark, root, mine, written, None)
 
-  /** [[commitAppendFiles]] with an ATOMIC idempotence marker (the
-    * streaming sink's exactly-once handshake): the transaction id
-    * is committed as a `T` manifest entry IN THE SAME atomic version as
-    * the data files, so there is no marker-after-commit crash window
-    * (the [[commitMergeOnce]] side-file design has one; merge semantics
-    * make it benign there — append semantics would not). A replayed
-    * epoch whose id is already carried returns the current version and
-    * publishes nothing. Markers are carried by EVERY commit kind —
-    * appends, deletes, rewrites AND replaces (a compaction running
-    * concurrently with a live stream must not reopen the exactly-once
-    * window) — and die only with the table.
-    *
-    * Marker GROWTH is bounded to ONE PER WRITER (the Delta
-    * `SetTransaction` model): ids of the shape
-    * `<writer>-e<epoch>` (the streaming sink's `sq-<queryId>-e<n>`) are
-    * parsed, the dedupe check is `carried epoch >= this epoch` (epochs
-    * are monotone per writer), and publishing DROPS the writer's older
-    * marker — so a long-lived stream holds one manifest line, not one
-    * per trigger, and manifest IO stays O(files), not O(epochs²). Ids
-    * without the suffix keep exact-match semantics and are never
-    * pruned (they cannot be safely ordered). */
-  private def parseTxnId(id: String): Option[(String, Long)] = {
-    val i = id.lastIndexOf("-e")
-    if (i <= 0) None
-    else {
-      val suffix = id.substring(i + 2)
-      if (suffix.nonEmpty && suffix.forall(_.isDigit))
-        try Some((id.substring(0, i), suffix.toLong))
-        catch { case _: NumberFormatException => None }
-      else None
-    }
-  }
-
-  /** Is `txnId` already covered by a carried marker? Exact match, or —
-    * for `<writer>-e<epoch>` ids — a marker of the SAME writer with an
-    * equal-or-later epoch (`>=`: replays of any older epoch dedupe
-    * against the single latest marker). */
-  private def txnCommitted(carried: Seq[Entry], txnId: String): Boolean = {
-    val mine = parseTxnId(txnId)
-    carried.exists { e =>
-      e.kind == "T" && (e.path == txnId || ((mine, parseTxnId(e.path)) match {
-        case (Some((w, ep)), Some((we, epe))) => we == w && epe >= ep
-        case _ => false
-      }))
-    }
-  }
-
+  /** [[commitAppendFiles]] exactly once per `txnId` (the streaming
+    * sink's epoch commit): a replayed id returns the current version and
+    * publishes nothing ([[Commit.publishAdding]]). */
   private[graft] def commitAppendFilesOnce(spark: SparkSession, root: String,
-      mine: Seq[graft.sources.v2.WrittenFile],
-      written: org.apache.spark.sql.types.StructType, txnId: String): Long = {
-    require(txnId.matches("[A-Za-z0-9._-]+"), s"unsafe txn id: $txnId")
-    val writer = parseTxnId(txnId).map(_._1)
-    val cur = currentVersion(spark, root)
-    if (cur > 0 && txnCommitted(entries(spark, root, cur), txnId)) return cur
-    final class AlreadyCommitted extends RuntimeException
-    try publish(spark, root) { (v, carried) =>
-      // re-check under the claim (the marker may have landed between the
-      // fast-path check and the claim); the build-failure path releases
-      // the claim and we answer with the committed version
-      if (txnCommitted(carried, txnId)) throw new AlreadyCommitted
+      mine: Seq[WrittenFile], written: org.apache.spark.sql.types.StructType,
+      txnId: String): Long =
+    Commit.committed(spark, root, txnId).getOrElse(
+      appendFiles(spark, root, mine, written, Some(txnId)))
+
+  private def appendFiles(spark: SparkSession, root: String, mine: Seq[WrittenFile],
+      written: org.apache.spark.sql.types.StructType, txnId: Option[String]): Long =
+    Commit.publishAdding(spark, root, txnId) { (v, carried) =>
       checkWriteSchema(carried, written, "commitAppend")
-      // one marker per writer: this epoch's marker REPLACES the writer's
-      // previous one (strictly older — the committed check above threw
-      // otherwise); foreign writers' markers are untouched
-      val kept = carried.filterNot(e => e.kind == "T" &&
-        writer.exists(w => parseTxnId(e.path).exists(_._1 == w)))
-      kept.map(_.line) ++ (Entry("T", v, txnId).line +: mine.map(dataLine(v, carried)))
-    } catch { case _: AlreadyCommitted => currentVersion(spark, root) }
-  }
+      mine.map(dataLine(v, carried))
+    }
 
   /** A read-modify-write commit (clustering, UPDATE/MERGE rewrites)
     * found that the table changed between its read and its claim —
@@ -810,35 +148,24 @@ object Snapshots {
         "rewrite must re-read and retry (its commit-private files are unused)")
 
   /** REPLACE with written files (INSERT OVERWRITE and [[commitReplace]]):
-    * one atomic version listing only the new files, schema entries and
-    * idempotence markers carried, pending deletes materialized away. */
+    * one atomic version listing only the new files; schema entries and
+    * idempotence markers are carried, pending deletes materialized away.
+    * With `expectCarried` (the data/delete lines a rewrite read) the
+    * publish aborts with [[ConcurrentTableChangeException]] when the
+    * table changed since that read. */
   private[graft] def commitReplaceFiles(spark: SparkSession, root: String,
-      mine: Seq[graft.sources.v2.WrittenFile],
+      mine: Seq[WrittenFile],
       written: org.apache.spark.sql.types.StructType,
       expectCarried: Option[Set[String]] = None): Long =
-    publish(spark, root) { (v, carried) =>
-      // READ-SET VALIDATION: a REPLACE whose content was DERIVED from a
-      // read of the table (clustering compaction) is a read-modify-write
-      // — an append/merge that committed between the read and this
-      // claim is present in
-      // `carried` but would be dropped by the replace, a silent lost
-      // update. When the caller passes the data/delete entry lines its
-      // read consumed, any difference aborts the publish (the claim is
-      // released by the build-failure path) and the caller retries
-      // against the fresh state — Iceberg's rewrite_data_files
-      // validate-and-retry posture.
+    Commit.publish(spark, root) { (v, carried) =>
       expectCarried.foreach { exp =>
         val now = carried.filter(e => e.kind == "A" || e.kind == "D")
           .map(_.line).toSet
         if (now != exp) throw new ConcurrentTableChangeException(root)
       }
       checkWriteSchema(carried, written, "commitReplace")
-      // T idempotence markers are CARRIED through a replace: a
-      // compaction/INSERT OVERWRITE that lands between a streaming
-      // epoch's commit and its checkpoint write must
-      // not reopen the exactly-once window — markers are metadata lines,
-      // not data files, and cost nothing to keep. They die only with the
-      // table (DROP) — there is no separate truncate verb.
+      // markers are carried: a replace landing between a streaming
+      // epoch's commit and its checkpoint must not reopen the replay
       carried.filter(e => e.kind == "S" || e.kind == "T").map(_.line) ++
         mine.map(dataLine(v, carried))
     }
@@ -852,54 +179,29 @@ object Snapshots {
   def commitReplace(spark: SparkSession, root: String, df: DataFrame): Long =
     commitReplaceFiles(spark, root, writeFiles(spark, root, "data", df), df.schema)
 
-  /** CLUSTERING compaction: a REPLACE commit that RE-SORTS the table
-    * by `sortCols` into `numFiles` range-partitioned, internally-sorted
-    * files and regenerates the
-    * manifest statistics — the snapshot-native form of
-    * `OPTIMIZE … ZORDER`/`rewrite_data_files(sort)`. On a table whose
-    * ingest order scatters values across every file, per-file min/max
-    * ranges all span the whole domain and [[readSnapshotPruned]] can
-    * skip nothing; after clustering the files hold DISJOINT ranges in
-    * the sort key, so a selective predicate prunes to the few files
-    * whose range it intersects — this is what makes the manifest stats
-    * actually bite on real (non-sorted-ingest) tables. Pending deletes
-    * are materialized away and prior versions keep reading their own
-    * files, like any REPLACE. `repartitionByRange` is one full shuffle
-    * of the table — the honest cost of a rewrite, paid once and
-    * amortized over every selective read after it; at 100 TB this is
-    * the background maintenance job table formats schedule off-peak.
-    * Multi-column `sortCols` gives hierarchical locality (range-
-    * partition by the leading column, co-sort the rest); a space-
-    * filling-curve layout for equal two-key selectivity is the
-    * existing `sink_parquet_zordered` kernel composed with
-    * [[commitReplace]] by the caller. */
+  /** CLUSTERING compaction: a REPLACE that re-sorts the table by
+    * `sortCols` into `numFiles` range-partitioned, internally sorted
+    * files with fresh manifest statistics — the snapshot-native
+    * `OPTIMIZE … ZORDER` / `rewrite_data_files(sort)`. After clustering
+    * the files hold disjoint ranges of the sort key, so a selective
+    * predicate prunes to the few files it intersects. One full shuffle
+    * (`repartitionByRange`); multi-column `sortCols` range-partitions by
+    * the leading column and co-sorts the rest. A validated
+    * read-modify-write ([[commitReplaceRewrite]]). */
   def commitReplaceClustered(spark: SparkSession, root: String,
       sortCols: Seq[String], numFiles: Int): Long = {
     require(sortCols.nonEmpty, "clustering needs at least one sort column")
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val cols = sortCols.map(col)
-    // VALIDATED read-modify-write: pin the version the rewrite reads,
-    // remember exactly the data/delete entries it consumed, and let
-    // commitReplaceFiles abort the publish
-    // if the table changed in between — then re-read and retry, so a
-    // concurrent append/merge is never silently dropped by the replace.
-    // Retries are bounded: each one consumes a full re-read + re-sort,
-    // and a table hot enough to conflict five times in a row should
-    // cluster off-peak (the loud error says so).
     commitReplaceRewrite(spark, root)(cur =>
       cur.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*))
   }
 
-  /** Z-ORDER clustering compaction: a REPLACE that re-lays
-    * the table on the MORTON interleave of two keys
-    * ([[FileView.zOrdered]] — min-max-normalized bit interleave, pure
-    * codegen'd arithmetic), so each rewritten file covers a compact
-    * RECTANGLE of the 2-D key space and the manifest min/max stats
-    * prune on EITHER key's predicate — the `OPTIMIZE … ZORDER BY`
-    * capability, where single-key clustering
-    * ([[commitReplaceClustered]]) prunes one dimension and scatters the
-    * other. Same validated read-modify-write loop: a concurrent commit
-    * aborts the publish and the rewrite retries on fresh state. */
+  /** Z-ORDER clustering compaction: a REPLACE that lays the table out on
+    * the Morton interleave of two keys ([[FileView.zOrdered]]), so each
+    * file covers a compact rectangle of the key space and manifest
+    * statistics prune on either key's predicate. A validated
+    * read-modify-write ([[commitReplaceRewrite]]). */
   def commitReplaceZOrdered(spark: SparkSession, root: String,
       keyA: String, keyB: String, numFiles: Int, bits: Int = 16): Long = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
@@ -907,20 +209,18 @@ object Snapshots {
       FileView.zOrdered(cur, keyA, keyB, numFiles, bits))
   }
 
-  /** The VALIDATED read-modify-write REPLACE loop shared by the layout
-    * rewrites: pin the version the rewrite
-    * reads, remember exactly the data/delete entries it consumed, let
-    * [[commitReplaceFiles]] abort the publish if the table changed in
-    * between — then re-read and retry, so a concurrent append/merge is
-    * never silently dropped. Retries are bounded: each consumes a full
-    * re-read + re-sort, and a table hot enough to conflict five times
-    * in a row should run its maintenance off-peak. */
+  /** The validated read-modify-write REPLACE loop of the layout
+    * rewrites: pin the version the rewrite reads, remember the
+    * data/delete entries it consumed, let [[commitReplaceFiles]] abort
+    * if the table changed in between, then re-read and retry, so a
+    * concurrent append or merge is never dropped. At most five retries:
+    * a table that hot should run its maintenance off-peak. */
   private def commitReplaceRewrite(spark: SparkSession, root: String)(
       xform: DataFrame => DataFrame): Long = {
     var attempt = 0
     while (true) {
       val v0 = currentVersion(spark, root)
-      val consumed = entries(spark, root, v0)
+      val consumed = Manifest.entries(spark, root, v0)
         .filter(e => e.kind == "A" || e.kind == "D").map(_.line).toSet
       val cur = readSnapshot(spark, root, v0)
       val mine = writeFiles(spark, root, "data", xform(cur))
@@ -929,12 +229,10 @@ object Snapshots {
           expectCarried = Some(consumed))
       } catch {
         case _: ConcurrentTableChangeException if attempt < 5 =>
-          // the losing attempt's commit-private files are unreferenced
-          // by any manifest — reclaim them now rather than waiting for
-          // the orphan sweep
+          // the losing attempt's files are in no manifest: reclaim them
           mine.headOption.foreach { f =>
             val dir = new Path(f.path).getParent
-            fs(spark, dir).delete(dir, true)
+            Manifest.fs(spark, dir).delete(dir, true)
           }
           attempt += 1
       }
@@ -943,39 +241,32 @@ object Snapshots {
   }
 
   /** REWRITE commit — the storage half of copy-on-write SQL UPDATE /
-    * MERGE INTO / non-equality DELETE:
-    * atomically swap exactly `removed` data files for `added` ones, in
-    * ONE version. Everything else is carried: untouched data files,
-    * schema entries, and delete entries up to `readVersion` (they still
-    * scope the remaining OLD files; the new files' version exceeds them,
-    * which is correct — the rewrite already materialized their effect).
+    * MERGE INTO / non-equality DELETE: atomically swap exactly
+    * `removed` data files for `added` ones in one version. Untouched
+    * data files, schema entries and delete entries up to `readVersion`
+    * are carried (the new files' version exceeds those deletes, whose
+    * effect the rewrite already applied).
     *
-    * VALIDATED read-modify-write, like [[commitReplaceFiles]]'s
-    * clustering path: the publish aborts with
-    * [[ConcurrentTableChangeException]] when (a) any removed path is no
-    * longer listed (a concurrent rewrite/replace touched it), or (b) a
-    * delete or schema entry landed AFTER `readVersion` (it would apply
-    * to the pre-image this rewrite consumed — publishing would
-    * resurrect deleted rows or bind stale columns). Concurrent APPENDS
-    * are carried through untouched — they cannot conflict with a swap
-    * of other files (snapshot-isolation semantics, the Iceberg
-    * validate-and-retry posture). */
+    * Validated read-modify-write: the publish aborts with
+    * [[ConcurrentTableChangeException]] when a removed path is no longer
+    * listed (a concurrent rewrite or replace touched it) or a delete or
+    * schema entry landed after `readVersion` (it would apply to the
+    * pre-image this rewrite consumed). Concurrent appends are carried
+    * through untouched. */
   private[graft] def commitRewriteFiles(spark: SparkSession, root: String,
-      removed: Seq[String], added: Seq[graft.sources.v2.WrittenFile],
+      removed: Seq[String], added: Seq[WrittenFile],
       written: org.apache.spark.sql.types.StructType, readVersion: Long): Long =
-    publish(spark, root) { (v, carried) =>
+    Commit.publish(spark, root) { (v, carried) =>
       val dataPaths = carried.filter(_.kind == "A").map(_.path).toSet
       val removedSet = removed.toSet
       if (!removedSet.subsetOf(dataPaths) ||
           carried.exists(e => (e.kind == "D" || e.kind == "S") && e.ver > readVersion))
         throw new ConcurrentTableChangeException(root)
       checkWriteSchema(carried, written, "commitRewrite")
-      // a SCHEMA-TRACKED table may legally end up with zero data files —
-      // readSnapshot serves it as an empty frame with the tracked schema
-      // (an all-rows rewrite DELETE on a tracked table is valid).
-      // Untracked tables keep >= 1 file: their
-      // schema lives only in their data files' footers.
-      require(currentSchema(carried).isDefined ||
+      // a schema-tracked table may end with zero data files (it reads as
+      // an empty frame of its tracked schema); an untracked table's
+      // schema lives only in its files' footers
+      require(Manifest.currentSchema(carried).isDefined ||
           carried.count(_.kind == "A") - removedSet.size + added.size > 0,
         s"rewrite would leave UNTRACKED table $root with no data files (its " +
           "schema lives in the files) — an all-rows DELETE on an untracked " +
@@ -1007,15 +298,13 @@ object Snapshots {
   def commitDelete(spark: SparkSession, root: String, keys: DataFrame): Long = {
     checkDeleteKeyTypes(keys.schema, "commitDelete")
     val mine = writeFiles(spark, root, "deletes", keys.dropDuplicates())
-    publish(spark, root) { (v, carried) =>
+    Commit.publishAdding(spark, root, None) { (v, carried) =>
       require(carried.exists(_.kind == "A"), s"cannot delete from an empty table $root")
-      // keys must name current columns AND carry the current TYPES — both
-      // read paths compare key tuples in the current type domain, and a
-      // narrower/wider key file would silently match nothing. UNTRACKED
-      // tables get the same check against the first data file's footer
-      // (the natural Scala-literal shape `Seq(3L).toDF` against an INT
-      // column).
-      val curTypes: Map[String, String] = currentSchema(carried) match {
+      // keys must name current columns with the current TYPES: both read
+      // paths compare key tuples in the current type domain, and a
+      // narrower or wider key file would silently match nothing.
+      // Untracked tables check against the first data file's footer.
+      val curTypes: Map[String, String] = Manifest.currentSchema(carried) match {
         case Some((_, cur)) => cur.map(c => c.name -> c.typ).toMap
         case None =>
           ParquetFooters.schema(spark, carried.find(_.kind == "A").get.path)
@@ -1029,7 +318,7 @@ object Snapshots {
           s"delete key '${f.name}' has type ${f.dataType.sql} but the table " +
             s"column is ${curTypes(f.name)}")
       }
-      carried.map(_.line) ++ mine.map(f => Entry("D", v, f.path).line)
+      mine.map(f => Entry("D", v, f.path).line)
     }
   }
 
@@ -1041,91 +330,76 @@ object Snapshots {
     * survive: latest-wins upsert, no read-modify-write of any data
     * file, and a reader either sees the whole merge or none of it. */
   def commitMerge(spark: SparkSession, root: String, updates: DataFrame,
-      keyCols: Seq[String]): Long = {
+      keyCols: Seq[String]): Long =
+    merge(spark, root, updates, keyCols, None)
+
+  /** [[commitMerge]] exactly once per `txnId` (the `foreachBatch`
+    * streaming upsert): the id is committed as a marker in the merge's
+    * own version, so a replayed id returns the current version and
+    * publishes nothing, with no crash window. Ids of the form
+    * `<writer>-e<epoch>` keep one marker per writer. An id recorded
+    * nowhere re-merges; re-merging the same updates is idempotent under
+    * latest-wins (the replay's delete kills the first attempt's copies
+    * and re-inserts identical rows), so a replay costs at most a
+    * duplicate version, never wrong data. Returns the committed (or
+    * already-committed) version. */
+  def commitMergeOnce(spark: SparkSession, root: String, updates: DataFrame,
+      keyCols: Seq[String], txnId: String): Long =
+    Commit.committed(spark, root, txnId).getOrElse(
+      merge(spark, root, updates, keyCols, Some(txnId)))
+
+  private def merge(spark: SparkSession, root: String, updates: DataFrame,
+      keyCols: Seq[String], txnId: Option[String]): Long = {
     checkDeleteKeyTypes(org.apache.spark.sql.types.StructType(
       keyCols.map(k => updates.schema(k))), "commitMerge")
     val adds = writeFiles(spark, root, "data", updates)
     val dels = writeFiles(spark, root, "deletes",
       updates.select(keyCols.map(col): _*).dropDuplicates())
-    publish(spark, root) { (v, carried) =>
+    Commit.publishAdding(spark, root, txnId) { (v, carried) =>
       require(carried.exists(_.kind == "A"), s"cannot merge into an empty table $root")
       checkWriteSchema(carried, updates.schema, "commitMerge")
-      carried.map(_.line) ++ dels.map(f => Entry("D", v, f.path).line) ++
-        adds.map(dataLine(v, carried))
+      dels.map(f => Entry("D", v, f.path).line) ++ adds.map(dataLine(v, carried))
     }
   }
 
-  /** [[commitMerge]] with an IDEMPOTENCE MARKER — the streaming-sink
-    * form for `foreachBatch` (exactly-once upserts into the lake): the
-    * caller passes a stable transaction id (epoch id / app + batch id);
-    * a replayed batch whose marker exists is SKIPPED, so checkpoint
-    * replays don't inflate the version history. Correctness does not
-    * hinge on the marker: re-merging the SAME updates is semantically
-    * idempotent under latest-wins (the replay's delete kills the first
-    * attempt's copies and re-inserts identical rows — same visible
-    * state), so a crash between commit and marker degrades to a
-    * duplicate version, never to wrong data. Returns the committed (or
-    * already-committed) current version. */
-  def commitMergeOnce(spark: SparkSession, root: String, updates: DataFrame,
-      keyCols: Seq[String], txnId: String): Long = {
-    require(txnId.matches("[A-Za-z0-9._-]+"), s"unsafe txn id: $txnId")
-    val marker = new Path(manifestDir(root), s"txn-$txnId")
-    val f = fs(spark, marker)
-    if (f.exists(marker)) return currentVersion(spark, root)
-    val v = commitMerge(spark, root, updates, keyCols)
-    f.create(marker, true).close()
-    v
-  }
-
   // ---------------------------------------------------------------------
-  // Column-ID schema evolution (round 11, VERDICT r10 ask #3)
-  //
-  // Iceberg's core schema idea, minimally: every column gets a STABLE
-  // integer id at tracking time; renames change only the (id → name)
-  // binding, drops remove the binding, adds mint a NEVER-REUSED fresh
-  // id. Data files remember the schema VERSION they were written under
-  // (the sid field of their manifest lines), and the read path resolves
-  // each file's columns BY ID against the current binding — so a rename
-  // survives reads across commits, a dropped-then-re-added name reads
-  // NULL from old files (the old data does NOT resurface under the new
-  // same-named column), and a type widen is one cast at read. Schema
-  // changes are ordinary commits: time travel to a pre-rename version
-  // reads the old names, because that version's manifest carries the
-  // old S entry as its latest.
+  // Column-ID schema evolution (Iceberg's schema model): every column
+  // gets a stable integer id when tracking begins; a rename changes only
+  // the (id → name) binding, a drop removes it and an add mints a
+  // never-reused id. Data files record the schema version they were
+  // written under and reads resolve their columns by id, so a rename
+  // survives, a dropped-then-re-added name reads NULL from old files and
+  // a re-type is one cast at read. Schema changes are ordinary commits:
+  // time travel below a rename reads the old names.
   // ---------------------------------------------------------------------
 
-  /** CREATE a new, EMPTY, schema-tracked table (round 14 — the SQL DDL
-    * lifecycle's first verb): version 1 is a single S entry carrying
-    * the declared column-ID binding (ids 1..n in declaration order), no
-    * data files. Reads of the empty table return an empty frame with
-    * the tracked schema; the first INSERT/append is an ordinary
-    * schema-checked commit. Loud if the root already holds a table. */
+  /** CREATE a new, empty, schema-tracked table: version 1 is a single S
+    * entry binding the declared columns to ids 1..n. Reads of the empty
+    * table return an empty frame of the tracked schema. Loud if the
+    * root already holds a table. */
   def createTable(spark: SparkSession, root: String,
       cols: Seq[(String, String)]): Long = {
     require(cols.nonEmpty, "a table needs at least one column")
-    publish(spark, root) { (v, carried) =>
+    Commit.publish(spark, root) { (v, carried) =>
       require(carried.isEmpty && v == 1,
         s"$root already holds a snapshot table — drop it first")
       val sc = cols.zipWithIndex.map { case ((n, t), i) =>
         // normalize through catalyst so the stored DDL round-trips
         SchemaCol(i + 1, n, org.apache.spark.sql.types.DataType.fromDDL(t).sql)
       }
-      Seq(Entry("S", v, encodeSchema(sc)).line)
+      Seq(Entry("S", v, Manifest.encodeSchema(sc)).line)
     }
   }
 
   /** Begin schema tracking: capture the table's current parquet schema
     * as the initial column-ID binding (ids 1..n in field order), as its
-    * own commit. Files committed BEFORE this version (sid 0) resolve
-    * against exactly this initial binding — which is only sound when
-    * every pre-tracking file SHARES one schema, so that is CHECKED
-    * (one driver-side footer per commit, paid once at init): a table grown through
-    * the additive mergeSchema tier must be REPLACE-compacted first, or
-    * the early files' missing columns would fail (or silently NULL)
-    * under the single binding. Idempotent by failure: a second init
-    * fails loudly. */
+    * own commit. Files committed before it (sid 0) resolve against this
+    * binding, which is sound only when every pre-tracking file shares
+    * one schema: that is checked (one footer per commit), so a table
+    * grown through the additive mergeSchema tier must be REPLACE-
+    * compacted first. A second init fails loudly. */
   def initSchema(spark: SparkSession, root: String): Long =
-    publish(spark, root) { (v, carried) =>
+    Commit.publish(spark, root) { (v, carried) =>
       require(carried.forall(_.kind != "S"), s"$root already tracks a schema")
       val data = carried.filter(_.kind == "A")
       require(data.nonEmpty, s"cannot init schema on empty table $root")
@@ -1139,7 +413,7 @@ object Snapshots {
       val cols = one.fields.zipWithIndex.map {
         case (f, i) => SchemaCol(i + 1, f.name, f.dataType.sql)
       }
-      carried.map(_.line) :+ Entry("S", v, encodeSchema(cols.toSeq)).line
+      carried.map(_.line) :+ Entry("S", v, Manifest.encodeSchema(cols.toSeq)).line
     }
 
   /** Shared alter-commit: publish a new S entry derived from the
@@ -1147,19 +421,19 @@ object Snapshots {
     * never-used id (max over ALL history — ids are never recycled, even
     * across drops). Pending equality deletes block ALL schema changes
     * (delete files store key columns by NAME; a REPLACE materializes
-    * them away first) — the loud, honest scope edge. */
+    * them away first). */
   private def alterSchema(spark: SparkSession, root: String, what: String)(
       xform: (Seq[SchemaCol], Int) => Seq[SchemaCol]): Long =
-    publish(spark, root) { (v, carried) =>
-      val (_, cur) = currentSchema(carried).getOrElse(
+    Commit.publish(spark, root) { (v, carried) =>
+      val (_, cur) = Manifest.currentSchema(carried).getOrElse(
         throw new IllegalStateException(
           s"$root does not track a schema — call initSchema first"))
       require(carried.forall(_.kind != "D"),
         s"$what: materialize pending deletes (commitReplace) before schema " +
           "evolution — delete files store key columns by name")
       val nextId = (carried.filter(_.kind == "S")
-        .flatMap(e => decodeSchema(e.path)).map(_.id) :+ 0).max + 1
-      carried.map(_.line) :+ Entry("S", v, encodeSchema(xform(cur, nextId))).line
+        .flatMap(e => Manifest.decodeSchema(e.path)).map(_.id) :+ 0).max + 1
+      carried.map(_.line) :+ Entry("S", v, Manifest.encodeSchema(xform(cur, nextId))).line
     }
 
   /** RENAME a column: same id, new name — existing files keep reading
@@ -1204,11 +478,9 @@ object Snapshots {
   /** The tracked schema visible at version `v` (None before
     * [[initSchema]]) — (id, name, type) triples in column order. */
   def trackedSchema(spark: SparkSession, root: String,
-      v: Long = -1L): Option[Seq[(Int, String, String)]] = {
-    val ver = if (v >= 0) v else currentVersion(spark, root)
-    currentSchema(entries(spark, root, ver))
+      v: Long = -1L): Option[Seq[(Int, String, String)]] =
+    Manifest.currentSchema(Manifest.at(spark, root, v))
       .map(_._2.map(c => (c.id, c.name, c.typ)))
-  }
 
   /** Scheme-and-authority stripper for manifest paths: `file:/x`,
     * `file:///x`, `hdfs://host:9000/x` and `s3a://bucket/x` all
@@ -1221,6 +493,10 @@ object Snapshots {
 
   private[graft] def normPath(p: String): String =
     p.replaceFirst(SchemeAuthorityRe, "")
+
+  // ---------------------------------------------------------------------
+  // Reads
+  // ---------------------------------------------------------------------
 
   /** Read the table AT a version (time travel); defaults to the current
     * version. The returned frame's file list is frozen at call time —
@@ -1270,337 +546,64 @@ object Snapshots {
     * string compares and no data IO for skipped files. */
   def readSnapshotPruned(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
-      version: Long = -1L, mergeSchema: Boolean = false): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    SnapshotRead.frame(spark, root, entries(spark, root, v), filters, mergeSchema)
-  }
+      version: Long = -1L, mergeSchema: Boolean = false): DataFrame =
+    SnapshotRead.frame(spark, root, Manifest.at(spark, root, version), filters, mergeSchema)
 
   /** (files kept, files total) that [[readSnapshotPruned]] would scan —
     * the observable the gate and specs pin. */
   def pruneCounts(spark: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter],
       version: Long = -1L): (Long, Long) = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
+    val es = Manifest.at(spark, root, version)
     (SnapshotRead.prune(es, filters, keepAnchor = true).size.toLong,
       es.count(_.kind == "A").toLong)
-  }
-
-  /** Per-data-file facts of a version for the `$files` METADATA TABLE
-    * (round 13 — Iceberg's `table.files` inspection surface): (path,
-    * committing version, schema version, row count, on-disk bytes),
-    * the last two None when the file was published without stats.
-    * O(files) manifest text, zero data IO. */
-  private[graft] def fileInfos(spark: SparkSession, root: String,
-      version: Long): Seq[(String, Long, Long, Option[Long], Option[Long])] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    entries(spark, root, v).filter(_.kind == "A").map { e =>
-      val st = decodeStats(e.stats)
-      (e.path, e.ver, e.sid,
-        st.get("__rows").map(_.lo.toLong), st.get("__bytes").map(_.lo.toLong))
-    }
-  }
-
-  /** Per-version facts for the `$history` METADATA TABLE (round 13):
-    * (version, data files listed, delete files listed, schema entries,
-    * data files ADDED vs the previous version). O(versions) manifest
-    * reads, zero data IO — the commit-log audit surface. `upTo` < 0
-    * means the whole history. */
-  private[graft] def historyInfos(spark: SparkSession, root: String,
-      upTo: Long): Seq[(Long, Long, Long, Long, Long)] = {
-    val cur = currentVersion(spark, root)
-    val hi = if (upTo >= 0) math.min(upTo, cur) else cur
-    // VACUUMED history (round-14 self-review find): expired versions'
-    // manifests are gone — serve the SURVIVING suffix instead of
-    // throwing on v1 (the pre-fix behavior broke $history and
-    // TIMESTAMP AS OF on any vacuumed table). The first surviving
-    // version's `added` is its full listed count — its true delta is
-    // unknowable once the predecessor manifest is expired, and "what
-    // this version makes visible" is the honest reading.
-    var prev = Set.empty[String]
-    survivingVersions(spark, root, hi).map { v =>
-      val lines = readManifest(spark, root, v)
-      val es = lines.map(parseEntry)
-      val added = lines.filterNot(prev).map(parseEntry).count(_.kind == "A").toLong
-      prev = lines.toSet
-      (v, es.count(_.kind == "A").toLong, es.count(_.kind == "D").toLong,
-        es.count(_.kind == "S").toLong, added)
-    }
-  }
-
-  /** Versions in [1, hi] whose manifest still exists (vacuum deletes
-    * expired ones) — always a contiguous SUFFIX by the vacuum contract,
-    * but computed by existence so a partial sweep degrades gracefully. */
-  private def survivingVersions(spark: SparkSession, root: String,
-      hi: Long): Seq[Long] = {
-    val f = fs(spark, manifestDir(root))
-    (1L to hi).filter(v => f.exists(manifestPath(root, v)))
-  }
-
-  /** MONOTONIC commit wall-clocks, one per version 1..current (round
-    * 14, VERDICT r13 ask #6): the manifest FILE's filesystem
-    * modification time, adjusted Delta-style — each version's timestamp
-    * is forced at least 1 ms past its predecessor's, so the sequence is
-    * strictly increasing even when two commits land in one millisecond
-    * or a clock stumbles. This is exactly how Delta Lake serves
-    * `timestampAsOf` (commit-file modTimes + monotonic adjustment): the
-    * manifest format itself deliberately records no wall-clock (clock
-    * authority is what the claim protocol avoids), so the filesystem's
-    * observation is the honest, zero-format-change source. O(versions)
-    * file-status calls, zero data IO. */
-  private[graft] def commitTimesMillis(spark: SparkSession, root: String,
-      upTo: Long = -1L): Seq[(Long, Long)] = {
-    val cur = currentVersion(spark, root)
-    val hi = if (upTo >= 0) math.min(upTo, cur) else cur
-    val f = fs(spark, manifestDir(root))
-    var last = Long.MinValue
-    // SURVIVING versions only (round-14 self-review find — vacuumed
-    // manifests are gone; the walk must not throw on them)
-    survivingVersions(spark, root, hi).map { v =>
-      val raw = f.getFileStatus(manifestPath(root, v)).getModificationTime
-      last = if (last == Long.MinValue) raw else math.max(raw, last + 1)
-      (v, last)
-    }
-  }
-
-  /** The last version committed at-or-before `tsMillis` (adjusted
-    * commit clocks, [[commitTimesMillis]]) — the `TIMESTAMP AS OF`
-    * resolution. Boundary semantics: a timestamp EQUAL to a commit's
-    * instant includes that commit; between two commits resolves to the
-    * earlier; BEFORE the first SURVIVING commit is a loud error (the
-    * table did not exist yet — or its history below that point was
-    * vacuumed away; time travel ends where vacuum ended it). */
-  def versionAtTimestamp(spark: SparkSession, root: String,
-      tsMillis: Long): Long = {
-    val times = commitTimesMillis(spark, root)
-    require(times.nonEmpty, s"snapshot table $root has no committed version")
-    require(tsMillis >= times.head._2,
-      s"timestamp $tsMillis predates $root's first surviving commit " +
-        s"(${times.head._2}) — the table did not exist yet, or that history " +
-        "was vacuumed")
-    times.filter(_._2 <= tsMillis).last._1
-  }
-
-  /** METADATA-ONLY aggregates — answered from the manifest alone, zero
-    * data IO (the Iceberg "metadata table" capability: a 100 TB
-    * count(*) or min/max in one manifest read). Defined only when EVERY
-    * data file carries the needed stat; any gap (stats-less files,
-    * unsupported type, over-long string bounds) returns None — a caller
-    * falls back to the scan, never to a wrong answer. All-NULL files
-    * (tag 'n') are known to contribute no values and don't break
-    * min/max; a table whose column is entirely NULL yields None (SQL
-    * min/max would be NULL — the caller's fallback handles it). */
-  def metadataRowCount(spark: SparkSession, root: String,
-      version: Long = -1L): Option[Long] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    // merge-on-read deletes make file-level counts an OVER-count (a
-    // deleted row still sits in its immutable file) — decline, never
-    // report the pre-delete number (round-12 self-review find)
-    if (es.exists(_.kind == "D")) return None
-    val rows = es.filter(_.kind == "A").map { e =>
-      decodeStats(e.stats).get("__rows").map(_.lo.toLong)
-    }
-    if (rows.exists(_.isEmpty)) None else Some(rows.flatten.sum)
-  }
-
-  /** Manifest-only (min, max) of an integral column (tag 'l'). A
-    * re-typed column's stats stay in the write-time integral domain —
-    * values are numerically exact, the caller gets longs either way. */
-  def metadataMinMaxLong(spark: SparkSession, root: String, column: String,
-      version: Long = -1L): Option[(Long, Long)] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    // same delete guard as the row count: a delete may have removed
-    // exactly the extreme row, so file ranges no longer bound the table
-    if (es.exists(_.kind == "D")) return None
-    val keyFor = SnapshotRead.entryKeyer(es)
-    val perFile = es.filter(_.kind == "A").map { e =>
-      keyFor(e)(column).flatMap(decodeStats(e.stats).get)
-    }
-    if (perFile.exists(_.isEmpty)) None // some file: unknown → no answer
-    else if (perFile.exists(_.exists(cs => cs.tag != 'l' && cs.tag != 'n'))) None
-    else {
-      val ranges = perFile.flatten.filter(_.tag == 'l')
-        .map(cs => (cs.lo.toLong, cs.hi.toLong))
-      if (ranges.isEmpty) None // entirely NULL: SQL min/max is NULL
-      else Some((ranges.map(_._1).min, ranges.map(_._2).max))
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // GROUPED metadata aggregates (round 13, VERDICT r12 ask #3): when the
-  // group column is SINGLE-VALUED in every data file (manifest lo == hi
-  // — exactly what a partition-shaped ingest produces), "rows per
-  // day/source/shard" is answerable from the manifest alone, the common
-  // dashboard query Iceberg serves from manifests. Declines loudly-by-
-  // None on ANY information gap: a multi-valued file, a missing stat, a
-  // pending delete — a caller falls back to the scan, never to a wrong
-  // answer.
-  // ---------------------------------------------------------------------
-
-  /** Per data file: (group key, its stats map) when `groupCol` is
-    * single-valued ('l'/'s'/'t' with lo==hi, or 'n' = the NULL group) in
-    * EVERY file; None otherwise. Key is the encoded bound string (the
-    * caller types it); None key = the SQL NULL group. */
-  private def singleValuedFiles(spark: SparkSession, root: String,
-      groupCol: String, v: Long): Option[Seq[(Option[String], Map[String, ColStats])]] = {
-    val es = entries(spark, root, v)
-    // same delete guard as the ungrouped forms: merge-on-read deletes
-    // make every file-level fact an over-count / stale bound
-    if (es.exists(_.kind == "D")) return None
-    val keyFor = SnapshotRead.entryKeyer(es)
-    val perFile = es.filter(_.kind == "A").map { e =>
-      val st = decodeStats(e.stats)
-      keyFor(e)(groupCol).flatMap(st.get) match {
-        case Some(cs) if cs.tag == 'n' => Some((Option.empty[String], st))
-        case Some(cs) if (cs.tag == 'l' || cs.tag == 's' || cs.tag == 't') &&
-          cs.lo == cs.hi => Some((Some(cs.lo), st))
-        case _ => None // missing, multi-valued, or un-modeled tag
-      }
-    }
-    if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten)
-  }
-
-  /** Manifest-only `SELECT groupCol, count(*) … GROUP BY groupCol`:
-    * one (key, rows) pair per distinct per-file value, keys as encoded
-    * bound strings (longs render decimal, dates as epoch days), None =
-    * the NULL group. Sorted by key for determinism. */
-  def metadataGroupedRowCount(spark: SparkSession, root: String,
-      groupCol: String, version: Long = -1L): Option[Seq[(Option[String], Long)]] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    singleValuedFiles(spark, root, groupCol, v).flatMap { fs =>
-      val rows = fs.map { case (k, st) => st.get("__rows").map(r => k -> r.lo.toLong) }
-      if (rows.exists(_.isEmpty)) None
-      else Some(rows.flatten.groupBy(_._1).view.mapValues(_.map(_._2).sum)
-        .toSeq.sortBy(_._1))
-    }
-  }
-
-  /** Manifest-only `SELECT groupCol, min(valCol), max(valCol) … GROUP
-    * BY groupCol` for an integral `valCol`. Inner None = the group's
-    * files are all-NULL in `valCol` (SQL min/max would be NULL). */
-  def metadataGroupedMinMaxLong(spark: SparkSession, root: String,
-      groupCol: String, valCol: String, version: Long = -1L)
-      : Option[Seq[(Option[String], Option[(Long, Long)])]] = {
-    val v = if (version >= 0) version else currentVersion(spark, root)
-    val es = entries(spark, root, v)
-    val keyFor = SnapshotRead.entryKeyer(es)
-    singleValuedFiles(spark, root, groupCol, v).flatMap { fs =>
-      // re-walk the SAME files for the value column (fs preserves file
-      // order; re-derive the per-file keyer by zipping against entries)
-      val dataEntries = es.filter(_.kind == "A")
-      val perFile = dataEntries.zip(fs).map { case (e, (k, st)) =>
-        keyFor(e)(valCol).flatMap(st.get) match {
-          case Some(cs) if cs.tag == 'n' => Some((k, Option.empty[(Long, Long)]))
-          case Some(cs) if cs.tag == 'l' =>
-            Some((k, Some((cs.lo.toLong, cs.hi.toLong))))
-          case _ => None
-        }
-      }
-      if (perFile.exists(_.isEmpty)) None
-      else Some(perFile.flatten.groupBy(_._1).view.mapValues { xs =>
-        val rs = xs.flatMap(_._2)
-        if (rs.isEmpty) None else Some((rs.map(_._1).min, rs.map(_._2).max))
-      }.toSeq.sortBy(_._1))
-    }
   }
 
   /** Number of DATA files version `v` lists — the observable the gate
     * pins (file counts are deterministic under explicit coalesce). */
   def fileCount(spark: SparkSession, root: String, v: Long): Long =
-    entries(spark, root, v).count(_.kind == "A").toLong
+    Manifest.entries(spark, root, v).count(_.kind == "A").toLong
 
   /** File-level CDC for APPEND-ONLY history: read exactly the rows
     * committed after `sinceV` up to `toV` (default: current) by
     * diffing the two manifests and scanning ONLY the added files —
     * old data is never touched, which is what makes incremental
-    * consumption (e.g. dedup of newly ingested docs against stored
-    * state) O(|delta|) at 100 TB. ENFORCED contract: `toV`'s manifest
-    * must be a superset of `sinceV`'s with no new DELETE files (a
-    * REPLACE breaks the added-files ≡ added-rows equivalence; a delete
-    * in range means the delta is not pure inserts — for those use
-    * [[snapshotDiff]], the row-level path). */
+    * consumption O(|delta|). ENFORCED contract ([[appendedDataFiles]]):
+    * `toV` lists everything `sinceV` lists, with no new DELETE files
+    * (for replaces and deletes use [[snapshotDiff]], the row-level
+    * path). */
   def readAppendedSince(spark: SparkSession, root: String, sinceV: Long,
       toV: Long = -1L): DataFrame = {
-    val to = if (toV >= 0) toV else currentVersion(spark, root)
+    val to = Manifest.resolve(spark, root, toV)
     val added = appendedDataFiles(spark, root, sinceV, to)
     require(added.nonEmpty, s"no files were appended between $sinceV and $to")
     spark.read.schema(ParquetFooters.schema(spark, added.head)).parquet(added: _*)
   }
 
-  /** Data files appended in `(sinceV, toV]` under the same append-only
-    * / no-deletes contract as [[readAppendedSince]] (which delegates
-    * here); `sinceV = 0` means "from the table's beginning". This is
-    * also the planInputPartitions contract of the streaming source
-    * ([[graft.sources.v2.SnapshotStreamSource]]): each micro-batch is
-    * exactly one version range's added files. May be empty. */
+  /** Data files appended in `(sinceV, toV]` (`sinceV = 0` = from the
+    * table's beginning) — also each streaming micro-batch's files
+    * ([[graft.sources.v2.SnapshotStreamSource]]). Loud unless `toV`
+    * lists every entry `sinceV` lists, adds no delete file, and adds no
+    * schema entry that postdates a data file (a schema CHANGE: files
+    * written under different bindings cannot be read as one; a schema
+    * entry predating all data, i.e. table creation, is fine). May be
+    * empty. */
   private[graft] def appendedDataFiles(spark: SparkSession, root: String,
       sinceV: Long, toV: Long): Seq[String] = {
-    val before =
-      if (sinceV == 0) Set.empty[String] else readManifest(spark, root, sinceV).toSet
-    val after = readManifest(spark, root, toV)
-    require(before.subsetOf(after.toSet),
+    val step = Manifest.walk(spark, root, sinceV, Iterator(toV)).next()
+    require(step.dropped.isEmpty,
       s"versions $sinceV → $toV are not append-only (a REPLACE rewrote files); " +
         "file-diff CDC is only sound over append commits")
-    val added = after.filterNot(before).map(parseEntry)
-    require(!added.exists(_.kind == "D"),
+    require(!step.added.exists(_.kind == "D"),
       s"versions $sinceV → $toV include row deletes; file-diff CDC covers pure " +
         "inserts — use snapshotDiff for the row-level delta")
-    // a schema entry is only a scheme CHANGE when data was written under
-    // an OLDER binding (those files' physical layouts differ — the
-    // positional stream reader cannot span them). An S entry that
-    // PREDATES every data file — a DDL-created table's version 1 — is
-    // safe by construction: all files share the one binding (round-14
-    // self-review find: streaming a CREATE TABLE'd table always failed).
-    val allEs = after.map(parseEntry)
-    require(added.filter(_.kind == "S").forall(se =>
-      allEs.forall(e => e.kind != "A" || e.ver > se.ver)),
+    require(step.added.filter(_.kind == "S").forall(se =>
+      step.entries.forall(e => e.kind != "A" || e.ver > se.ver)),
       s"versions $sinceV → $toV include a schema CHANGE; file-diff CDC does " +
         "not span schema-change commits — restart the consumer from the new " +
         "schema (a schema entry predating all data, i.e. table creation, is fine)")
-    added.filter(_.kind == "A").map(_.path) // T idempotence markers pass through
+    step.added.filter(_.kind == "A").map(_.path)
   }
-
-  /** Per-version appended-data-file counts over `(fromV, toV]`, WITHOUT
-    * the append-only contract checks (admission control needs a cheap
-    * size signal before a batch is planned; the planning path,
-    * [[appendedDataFiles]], still enforces the contract loudly). Each
-    * manifest in the range is read exactly ONCE — a capped catch-up
-    * over a long history is O(range) manifest reads, no data IO. */
-  private[graft] def appendedFileCounts(spark: SparkSession, root: String,
-      fromV: Long, toV: Long): Seq[Long] =
-    appendedFileCountsIter(spark, root, fromV, toV).toSeq
-
-  /** LAZY form of [[appendedFileCounts]] — manifests are read one per
-    * `next()`, nothing ahead of the consumer's position (round 14,
-    * ADVICE r12 low #4: the streaming file-budget admission walked the
-    * WHOLE (start, verCapped] backlog eagerly before admitting a few
-    * versions — O(backlog) manifest IO per trigger for a catching-up
-    * consumer; with this iterator the walk stops at budget exhaustion,
-    * O(admitted) manifest reads per trigger). The base manifest at
-    * `fromV` is read lazily too (on the first `next()`). */
-  private[graft] def appendedFileCountsIter(spark: SparkSession, root: String,
-      fromV: Long, toV: Long): Iterator[Long] = new Iterator[Long] {
-    private var prev: Set[String] = null // null = base not read yet
-    private var v = fromV
-    override def hasNext: Boolean = v < toV
-    override def next(): Long = {
-      if (!hasNext) throw new NoSuchElementException
-      if (prev == null)
-        prev = if (fromV <= 0) Set.empty else readManifest(spark, root, fromV).toSet
-      v += 1
-      val cur = readManifest(spark, root, v)
-      val n = cur.filterNot(prev).map(parseEntry).count(_.kind == "A").toLong
-      prev = cur.toSet
-      n
-    }
-  }
-
-  /** Single-version form of [[appendedFileCounts]]. */
-  private[graft] def appendedFileCountLenient(spark: SparkSession, root: String,
-      v: Long): Long =
-    appendedFileCounts(spark, root, math.max(v - 1, 0), v).head
 
   /** Row-level diff between two versions, the general-commit CDC
     * (handles REPLACE and delete commits, where file-diff is unsound):
@@ -1615,37 +618,183 @@ object Snapshots {
       .unionByName(a.exceptAll(b).withColumn("change", lit("del")))
   }
 
-  /** ORPHAN-FILE cleanup (round 14 — the maintenance op the write path
-    * has always pointed at: a crashed writer's commit-private files, a
-    * speculative task's stray part file, a lost rewrite attempt's
-    * output are invisible to every reader but occupy storage forever):
-    * delete files under `root/data` and `root/deletes` that are
-    * referenced by NO surviving manifest version AND are older than
-    * `graceMs` (default 72 h — Iceberg's remove_orphan_files posture).
-    * The GRACE PERIOD is the safety contract: a live writer's files
-    * exist unreferenced between its write and its publish, so the grace
-    * must exceed the longest conceivable write-to-publish span — never
-    * run with a short grace while writers are active (the test-only
-    * short-grace form exists exactly to prove the age gate). Empty
-    * commit-private directories are swept too. Returns files deleted.
-    * O(all files) listing + O(versions × entries) manifest reads, zero
-    * data IO — the off-peak janitor, like expire-snapshots/vacuum. */
+  // ---------------------------------------------------------------------
+  // Metadata: answered from manifests alone, zero data IO. Each
+  // aggregate is a function of one version's entries; the public forms
+  // read that version once.
+  // ---------------------------------------------------------------------
+
+  /** Per-data-file facts of a version for the `$files` metadata table:
+    * (path, committing version, schema version, row count, on-disk
+    * bytes), the last two None when the file has no stats. */
+  private[graft] def fileInfos(spark: SparkSession, root: String,
+      version: Long): Seq[(String, Long, Long, Option[Long], Option[Long])] =
+    Manifest.at(spark, root, version).filter(_.kind == "A").map { e =>
+      val st = FileStats.decodeStats(e.stats)
+      (e.path, e.ver, e.sid, rowsOf(st), st.get("__bytes").map(_.lo.toLong))
+    }
+
+  /** Per-version facts for the `$history` metadata table: (version,
+    * data files listed, delete files listed, schema entries, data files
+    * added over the previous surviving version) for every surviving
+    * version up to `upTo` (negative = current). The first surviving
+    * version of a vacuumed table counts all it lists as added: its
+    * predecessor's manifest is gone. */
+  private[graft] def historyInfos(spark: SparkSession, root: String,
+      upTo: Long): Seq[(Long, Long, Long, Long, Long)] = {
+    val versions = Manifest.surviving(spark, root, Manifest.resolve(spark, root, upTo))
+    Manifest.walk(spark, root, 0L, versions.iterator).map { s =>
+      def n(es: Seq[Entry], kind: String) = es.count(_.kind == kind).toLong
+      (s.version, n(s.entries, "A"), n(s.entries, "D"), n(s.entries, "S"), n(s.added, "A"))
+    }.toList
+  }
+
+  /** The last version committed at-or-before `tsMillis` (the adjusted
+    * commit clocks of [[Manifest.commitTimesMillis]]) — the `TIMESTAMP
+    * AS OF` resolution. A timestamp equal to a commit's instant includes
+    * that commit; between two commits resolves to the earlier; before
+    * the first surviving commit is a loud error (the table did not
+    * exist yet, or that history was vacuumed). */
+  def versionAtTimestamp(spark: SparkSession, root: String,
+      tsMillis: Long): Long = {
+    val times = Manifest.commitTimesMillis(spark, root)
+    require(times.nonEmpty, s"snapshot table $root has no committed version")
+    require(tsMillis >= times.head._2,
+      s"timestamp $tsMillis predates $root's first surviving commit " +
+        s"(${times.head._2}) — the table did not exist yet, or that history " +
+        "was vacuumed")
+    times.filter(_._2 <= tsMillis).last._1
+  }
+
+  /** The data files of `es` with their decoded statistics, or None when
+    * `es` lists a delete file: a deleted row still sits in its immutable
+    * file, so file-level counts over-count and ranges may bound a
+    * deleted extreme. The one delete guard of the metadata aggregates. */
+  private def factFiles(es: Seq[Entry]): Option[Seq[(Entry, Map[String, ColStats])]] =
+    if (es.exists(_.kind == "D")) None
+    else Some(es.filter(_.kind == "A").map(e => e -> FileStats.decodeStats(e.stats)))
+
+  private def allKnown[A](xs: Seq[Option[A]]): Option[Seq[A]] =
+    if (xs.exists(_.isEmpty)) None else Some(xs.flatten)
+
+  private def rowsOf(st: Map[String, ColStats]): Option[Long] = st.get("__rows").map(_.lo.toLong)
+
+  /** A file's integral range of a column: Some(None) when the column is
+    * all-NULL in it, None when unknown or not integral. */
+  private def longRange(cs: Option[ColStats]): Option[Option[(Long, Long)]] = cs match {
+    case Some(c) if c.tag == 'n' => Some(None)
+    case Some(c) if c.tag == 'l' => Some(Some((c.lo.toLong, c.hi.toLong)))
+    case _ => None
+  }
+
+  /** The (min, max) over ranges; None when there are none (SQL min/max
+    * of only NULLs is NULL). */
+  private def span(rs: Seq[(Long, Long)]): Option[(Long, Long)] =
+    if (rs.isEmpty) None else Some((rs.map(_._1).min, rs.map(_._2).max))
+
+  /** METADATA-ONLY aggregates — the Iceberg "metadata table"
+    * capability: a count(*) or min/max of any size in one manifest read.
+    * Each answers only when every data file carries the needed stat and
+    * the version lists no delete file; any gap returns None, and a
+    * caller falls back to the scan, never to a wrong answer. */
+  def metadataRowCount(spark: SparkSession, root: String,
+      version: Long = -1L): Option[Long] =
+    metadataRowCount(Manifest.at(spark, root, version))
+
+  private[graft] def metadataRowCount(es: Seq[Entry]): Option[Long] =
+    factFiles(es).flatMap(fs => allKnown(fs.map(f => rowsOf(f._2)))).map(_.sum)
+
+  /** Manifest-only (min, max) of an integral column (tag 'l'). A
+    * re-typed column's stats stay in the write-time integral domain —
+    * values are numerically exact, the caller gets longs either way. */
+  def metadataMinMaxLong(spark: SparkSession, root: String, column: String,
+      version: Long = -1L): Option[(Long, Long)] =
+    metadataMinMaxLong(Manifest.at(spark, root, version), column)
+
+  private[graft] def metadataMinMaxLong(es: Seq[Entry], column: String): Option[(Long, Long)] = {
+    val keyFor = FileStats.keyer(es)
+    factFiles(es).flatMap(fs => allKnown(fs.map { case (e, st) =>
+      longRange(keyFor(e)(column).flatMap(st.get))
+    })).flatMap(rs => span(rs.flatten))
+  }
+
+  /** Per data file: (group key, entry, stats) when `groupCol` is
+    * single-valued in EVERY file ('l'/'s'/'t' with lo == hi, or 'n' =
+    * the NULL group, key None) — what a partition-shaped ingest gives,
+    * and what makes "rows per day/source" answerable from the manifest.
+    * None on any gap. Keys are the encoded bound strings. */
+  private def singleValued(es: Seq[Entry],
+      groupCol: String): Option[Seq[(Option[String], Entry, Map[String, ColStats])]] = {
+    val keyFor = FileStats.keyer(es)
+    factFiles(es).flatMap(fs => allKnown(fs.map { case (e, st) =>
+      keyFor(e)(groupCol).flatMap(st.get) match {
+        case Some(cs) if cs.tag == 'n' => Some((None, e, st))
+        case Some(cs) if (cs.tag == 'l' || cs.tag == 's' || cs.tag == 't') &&
+          cs.lo == cs.hi => Some((Some(cs.lo), e, st))
+        case _ => None // missing, multi-valued, or un-modeled tag
+      }
+    }))
+  }
+
+  /** Manifest-only `SELECT groupCol, count(*) … GROUP BY groupCol`:
+    * one (key, rows) pair per distinct per-file value, keys as encoded
+    * bound strings (longs render decimal, dates as epoch days), None =
+    * the NULL group. Sorted by key for determinism. */
+  def metadataGroupedRowCount(spark: SparkSession, root: String,
+      groupCol: String, version: Long = -1L): Option[Seq[(Option[String], Long)]] =
+    metadataGroupedRowCount(Manifest.at(spark, root, version), groupCol)
+
+  private[graft] def metadataGroupedRowCount(es: Seq[Entry],
+      groupCol: String): Option[Seq[(Option[String], Long)]] =
+    singleValued(es, groupCol)
+      .flatMap(fs => allKnown(fs.map { case (k, _, st) => rowsOf(st).map(k -> _) }))
+      .map(_.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1))
+
+  /** Manifest-only `SELECT groupCol, min(valCol), max(valCol) … GROUP
+    * BY groupCol` for an integral `valCol`. Inner None = the group's
+    * files are all-NULL in `valCol` (SQL min/max would be NULL). */
+  def metadataGroupedMinMaxLong(spark: SparkSession, root: String,
+      groupCol: String, valCol: String, version: Long = -1L)
+      : Option[Seq[(Option[String], Option[(Long, Long)])]] =
+    metadataGroupedMinMaxLong(Manifest.at(spark, root, version), groupCol, valCol)
+
+  private[graft] def metadataGroupedMinMaxLong(es: Seq[Entry], groupCol: String,
+      valCol: String): Option[Seq[(Option[String], Option[(Long, Long)])]] = {
+    val keyFor = FileStats.keyer(es)
+    singleValued(es, groupCol).flatMap(fs => allKnown(fs.map { case (k, e, st) =>
+      longRange(keyFor(e)(valCol).flatMap(st.get)).map(k -> _)
+    })).map(_.groupBy(_._1).view.mapValues(xs => span(xs.flatMap(_._2))).toSeq.sortBy(_._1))
+  }
+
+  // ---------------------------------------------------------------------
+  // Maintenance
+  // ---------------------------------------------------------------------
+
+  /** ORPHAN-FILE cleanup: delete files under `root/data` and
+    * `root/deletes` that NO surviving manifest version references AND
+    * that are older than `graceMs` (default 72 h, Iceberg's
+    * remove_orphan_files posture): a crashed writer's commit-private
+    * files, a speculative task's stray part file, a lost rewrite's
+    * output. The grace period is the safety contract: a live writer's
+    * files are unreferenced between its write and its publish, so the
+    * grace must exceed the longest write-to-publish span — never run a
+    * short grace while writers are active. Empty commit-private
+    * directories are swept too. Returns files deleted. */
   def removeOrphanFiles(spark: SparkSession, root: String,
       graceMs: Long = 72L * 3600 * 1000): Long = {
     val cur = currentVersion(spark, root)
     require(cur > 0, s"$root holds no snapshot table")
+    // every entry a surviving version lists was added by it or by a
+    // surviving predecessor
     val referenced: Set[String] =
-      (1L to cur).flatMap { v =>
-        val mp = manifestPath(root, v)
-        if (!fs(spark, mp).exists(mp)) Nil // vacuumed versions
-        else entries(spark, root, v)
-          .filter(e => e.kind == "A" || e.kind == "D").map(e => normPath(e.path))
-      }.toSet
+      Manifest.walk(spark, root, 0L, Manifest.surviving(spark, root, cur).iterator)
+        .flatMap(_.added).filter(e => e.kind == "A" || e.kind == "D")
+        .map(e => normPath(e.path)).toSet
     val now = System.currentTimeMillis
     var deleted = 0L
     for (sub <- Seq("data", "deletes")) {
       val dir = new Path(root, sub)
-      val f = fs(spark, dir)
+      val f = Manifest.fs(spark, dir)
       if (f.exists(dir)) {
         val it = f.listFiles(dir, true)
         val stale = scala.collection.mutable.ArrayBuffer.empty[Path]
@@ -1656,7 +805,6 @@ object Snapshots {
             stale += st.getPath
         }
         stale.foreach { p => if (f.delete(p, false)) deleted += 1 }
-        // sweep now-empty commit-private dirs (pure tidiness)
         f.listStatus(dir).filter(_.isDirectory).foreach { d =>
           if (f.listStatus(d.getPath).isEmpty) f.delete(d.getPath, false)
         }
@@ -1666,31 +814,27 @@ object Snapshots {
   }
 
   /** Reclaim: delete data/delete files referenced ONLY by versions <
-    * `keepFrom` (and their manifests + claim markers). Readers pinned
-    * at kept versions are unaffected; time travel below `keepFrom` ends
-    * here — the explicit, separate destructive step, exactly like a
-    * table format's expire-snapshots. Returns files deleted. */
+    * `keepFrom` (and their manifests, claims and claim tombstones).
+    * Readers pinned at kept versions are unaffected; time travel below
+    * `keepFrom` ends here — the explicit, separate destructive step,
+    * like a table format's expire-snapshots. Returns files deleted. */
   def vacuum(spark: SparkSession, root: String, keepFrom: Long): Long = {
     val cur = currentVersion(spark, root)
     require(keepFrom >= 1 && keepFrom <= cur,
       s"keepFrom $keepFrom out of [1, $cur]")
-    val keep = (keepFrom to cur).flatMap(entries(spark, root, _)).map(_.path).toSet
-    val f = fs(spark, new Path(root))
+    val keep = (keepFrom to cur).flatMap(Manifest.entries(spark, root, _)).map(_.path).toSet
+    val f = Manifest.fs(spark, new Path(root))
     var deleted = 0L
-    for (v <- 1L until keepFrom) {
-      val mp = manifestPath(root, v)
-      if (f.exists(mp)) {
-        entries(spark, root, v) // S payloads / T txn ids are not file paths
-          .filter(e => e.kind == "A" || e.kind == "D")
-          .map(_.path).filterNot(keep).foreach { file =>
-            if (f.delete(new Path(file), false)) deleted += 1
-          }
-        f.delete(mp, false)
-        f.delete(new Path(manifestDir(root), f"v$v%05d.claim"), false)
-        // lease-takeover tombstones for this version (tiny, but finite)
-        f.globStatus(new Path(manifestDir(root), f"v$v%05d.claim.broken-*"))
-          .foreach(st => f.delete(st.getPath, false))
-      }
+    for (v <- Manifest.surviving(spark, root, keepFrom - 1)) {
+      Manifest.entries(spark, root, v) // S payloads / T txn ids are not file paths
+        .filter(e => e.kind == "A" || e.kind == "D")
+        .map(_.path).filterNot(keep).foreach { file =>
+          if (f.delete(new Path(file), false)) deleted += 1
+        }
+      f.delete(Manifest.path(root, v), false)
+      val claim = Manifest.claimPath(root, v)
+      f.delete(claim, false)
+      f.globStatus(claim.suffix(".broken-*")).foreach(st => f.delete(st.getPath, false))
     }
     deleted
   }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{ParquetFooters, SnapshotRead, Snapshots}
+import graft.sources.{Manifest, ParquetFooters, SnapshotRead, Snapshots}
 
 /** BATCH DSv2 read of a snapshot table with pushdown-driven file
   * skipping — the declarative form of `Snapshots.readSnapshotPruned`:
@@ -85,8 +85,7 @@ private[v2] object SnapshotBatchSource {
     * with `mergeSchema`, the schema the scan plans with. */
   private[v2] def inferSchemaAt(spark: SparkSession, root: String,
       version: Long): StructType = {
-    val v = if (version >= 0) version else Snapshots.currentVersion(spark, root)
-    SnapshotRead.readSchema(spark, root, Snapshots.entries(spark, root, v), mergeSchema = true)
+    SnapshotRead.readSchema(spark, root, Manifest.at(spark, root, version), mergeSchema = true)
   }
 }
 
@@ -195,14 +194,12 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
   private var required: StructType = tableSchema
   private var aggValues: Option[(StructType, Seq[Seq[Any]], String)] = None
 
-  // SNAPSHOT PIN for aggregate pushdown: every metadata walk of ONE
-  // compiled aggregation reads ONE version, so a concurrent commit
-  // cannot mix count@v with min/max@v+1 in one pushed result row.
-  // Resolved once, lazily (the non-agg path pins its own version in
-  // SnapshotBatchScan).
-  private lazy val aggVersion: Long =
-    if (version >= 0) version
-    else Snapshots.currentVersion(SparkSession.active, root)
+  // SNAPSHOT PIN for aggregate pushdown: every aggregate of one
+  // compiled aggregation answers from ONE read of ONE version's
+  // manifest, so a concurrent commit cannot mix count@v with
+  // min/max@v+1 in one pushed result row (the non-agg path pins its own
+  // version in SnapshotBatchScan).
+  private lazy val aggEntries = Manifest.at(SparkSession.active, root, version)
   // supportCompletePushDown and pushAggregation both compile the SAME
   // Aggregation — memoize by identity so the push returns exactly what
   // the support check inspected (one compile, one version, even if a
@@ -258,7 +255,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
       : Option[(StructType, Seq[Seq[Any]], String)] = {
     if (rowLevel.isDefined) return None // a rewrite scan serves whole groups
     if (agg eq compiledFor) return compiledResult
-    val r = compileAggAt(agg, aggVersion)
+    val r = compileAggAt(agg, aggEntries)
     compiledFor = agg
     compiledResult = r
     r
@@ -266,12 +263,11 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
 
   private def compileAggAt(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      pinnedVersion: Long)
+      es: Seq[Manifest.Entry])
       : Option[(StructType, Seq[Seq[Any]], String)] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     if (pushed.nonEmpty) return None
-    val spark = SparkSession.active
     def intCol(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case f: NamedReference if f.fieldNames.length == 1 &&
@@ -295,16 +291,16 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
           Option((Vector.empty[org.apache.spark.sql.types.StructField],
             Vector.empty[Any], Vector.empty[String]))) {
           case (Some((fs, vs, ds)), _: CountStar) =>
-            Snapshots.metadataRowCount(spark, root, pinnedVersion).map(n =>
+            Snapshots.metadataRowCount(es).map(n =>
               (fs :+ org.apache.spark.sql.types.StructField("count",
                 org.apache.spark.sql.types.LongType, nullable = false),
                 vs :+ (n: Any), ds :+ "COUNT(*)"))
           case (Some((fs, vs, ds)), m: Min) => intCol(m.column).flatMap { c =>
-            Snapshots.metadataMinMaxLong(spark, root, c, pinnedVersion).map { case (lo, _) =>
+            Snapshots.metadataMinMaxLong(es, c).map { case (lo, _) =>
               (fs :+ field(s"min($c)", c), vs :+ typed(c, lo), ds :+ s"MIN($c)") }
           }
           case (Some((fs, vs, ds)), m: Max) => intCol(m.column).flatMap { c =>
-            Snapshots.metadataMinMaxLong(spark, root, c, pinnedVersion).map { case (_, hi) =>
+            Snapshots.metadataMinMaxLong(es, c).map { case (_, hi) =>
               (fs :+ field(s"max($c)", c), vs :+ typed(c, hi), ds :+ s"MAX($c)") }
           }
           case _ => None
@@ -338,7 +334,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
               case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
             }
           }
-          Snapshots.metadataGroupedRowCount(spark, root, gName, pinnedVersion)
+          Snapshots.metadataGroupedRowCount(es, gName)
             .flatMap { counts =>
               val keys = counts.map(_._1)
               val countOf = counts.toMap
@@ -352,7 +348,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
                     vs :+ countOf.view.mapValues(n => n: Any).toMap,
                     ds :+ "COUNT(*)"))
                 case (Some((fs, vs, ds)), m: Min) => intCol(m.column).flatMap { c =>
-                  Snapshots.metadataGroupedMinMaxLong(spark, root, gName, c, pinnedVersion)
+                  Snapshots.metadataGroupedMinMaxLong(es, gName, c)
                     .map { mm =>
                       (fs :+ field(s"min($c)", c).copy(nullable = true),
                         vs :+ mm.map { case (k, r) =>
@@ -361,7 +357,7 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
                     }
                 }
                 case (Some((fs, vs, ds)), m: Max) => intCol(m.column).flatMap { c =>
-                  Snapshots.metadataGroupedMinMaxLong(spark, root, gName, c, pinnedVersion)
+                  Snapshots.metadataGroupedMinMaxLong(es, gName, c)
                     .map { mm =>
                       (fs :+ field(s"max($c)", c).copy(nullable = true),
                         vs :+ mm.map { case (k, r) =>
@@ -388,22 +384,21 @@ private[v2] class SnapshotScanBuilder(root: String, version: Long,
 
   override def build(): Scan = aggValues match {
     case Some((schema, rows, desc)) =>
-      new SnapshotAggScan(root, schema, rows, desc)
+      new SnapshotAggScan(schema, rows, s"snapshot($root) PushedAggregates: [$desc] (manifest-only)")
     case None => new SnapshotBatchScan(root, version, tableSchema, required,
       pushed, maxVersionsPerTrigger, maxFilesPerTrigger, rowLevel)
   }
 }
 
-/** The metadata-rows scan a completely-pushed aggregation plans: a
-  * single partition emitting the final rows (one for ungrouped, one per
-  * group for GROUP BY), computed from the manifest at push time — no
-  * data file is ever opened. */
-private[graft] class SnapshotAggScan(root: String, schema: StructType,
-    rows: Seq[Seq[Any]], desc: String) extends Scan with Batch {
+/** A scan of rows computed on the driver at planning: a single
+  * partition emitting them, no data file opened. Serves a completely
+  * pushed aggregation (one row ungrouped, one per group) and the
+  * `$files` / `$history` metadata tables. */
+private[graft] class SnapshotAggScan(schema: StructType, rows: Seq[Seq[Any]],
+    desc: String) extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
-  override def description(): String =
-    s"snapshot($root) PushedAggregates: [$desc] (manifest-only)"
+  override def description(): String = desc
   override def planInputPartitions(): Array[InputPartition] =
     Array(SnapshotAggPartition(rows))
   override def createReaderFactory(): PartitionReaderFactory =
@@ -435,10 +430,9 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
   // createReaderFactory are separate calls, and a concurrent commit
   // between them must not skew the two (snapshot isolation holds per
   // scan, exactly like readSnapshot's frozen file list)
-  private lazy val resolvedVersion: Long =
-    if (version >= 0) version else Snapshots.currentVersion(spark, root)
+  private lazy val resolvedVersion: Long = Manifest.resolve(spark, root, version)
   // the pinned version's manifest, read once for every planning call
-  private lazy val entries = Snapshots.entries(spark, root, resolvedVersion)
+  private lazy val entries = Manifest.entries(spark, root, resolvedVersion)
   // RUNTIME file pruning (dynamic-partition-pruning shape): when this
   // scan is the fact side of a join, Spark delivers the dim side's key
   // set as an In filter AT EXECUTION — files whose ranges miss every
@@ -447,13 +441,11 @@ private[graft] class SnapshotBatchScan(root: String, version: Long,
   // keys, scan only yesterday's files" with zero user hints.
   private var runtime: Array[Filter] = Array.empty
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // advertise only what runtime pruning can actually act on: TOP-LEVEL
-    // PRIMITIVE columns (the manifest-stats domain). Advertising nested
-    // columns invited Spark's runtime-group-filtering rule to build IN
-    // subqueries over map/struct values — an invalid plan (round-14
-    // review find); and a ROW-LEVEL rewrite scan advertises NOTHING, so
-    // the group-filtering rule never fires on it (its filters are
-    // ignored there anyway — group completeness).
+    // advertise only what runtime pruning can act on: TOP-LEVEL
+    // PRIMITIVE columns (the manifest-stats domain; a nested column
+    // would invite runtime group filtering to build an invalid IN
+    // subquery over map/struct values). A ROW-LEVEL rewrite scan
+    // advertises nothing, so group filtering never fires on it.
     if (rowLevel.isDefined) Array.empty
     else required.fields
       .filter(f => SnapshotDeleteSets.PrimitiveDdl.contains(f.dataType.sql))

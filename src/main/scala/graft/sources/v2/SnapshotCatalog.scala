@@ -9,9 +9,9 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.Snapshots
+import graft.sources.{Manifest, Snapshots}
 
-/** Snapshot tables as a SQL CATALOG (round 13, VERDICT r12 ask #2):
+/** Snapshot tables as a SQL CATALOG:
   * registering this class as `spark.sql.catalog.<name>` lets plain
   * `spark.sql` name a snapshot table and plan it through the SAME
   * pushdown-driven DSv2 scan as the DataFrame path —
@@ -29,11 +29,11 @@ import graft.sources.Snapshots
   * resolved as `warehouse/<name>`. `VERSION AS OF n` time travel maps
   * onto the manifest versions — the catalog resolves the identifier,
   * [[SnapshotBatchTable]] pins the version, and snapshot isolation is
-  * the ordinary frozen-file-list story. DML WRITES are served (round
-  * 13, [[SnapshotWriteBuilder]]): `INSERT INTO` lands as an append
+  * the ordinary frozen-file-list story. DML WRITES are served
+  * ([[SnapshotWriteBuilder]]): `INSERT INTO` lands as an append
   * commit and `INSERT OVERWRITE` as an atomic replace, both through
   * the claim-serialized publish — SQL writers and API writers share
-  * one arbiter. DDL is served too (round 14): CREATE / ALTER / DROP
+  * one arbiter. DDL is served too: CREATE / ALTER / DROP
   * TABLE map onto the commit protocol's empty-table creation and
   * column-ID evolution commits (see the DDL section below); only
   * RENAME TABLE stays loud — a path-addressed table's name IS its
@@ -111,8 +111,8 @@ class SnapshotCatalog extends TableCatalog
     val root = rootOf(base)
     requireTable(root, base)
     meta match {
-      case Some("$files") => new SnapshotFilesTable(root, v)
-      case Some("$history") => new SnapshotHistoryTable(root, v)
+      case Some("$files") => SnapshotMetaTable.files(root, v)
+      case Some("$history") => SnapshotMetaTable.history(root, v)
       case _ =>
         // schema AT the pinned version — time travel below a rename
         // reads the old names, exactly like readSnapshot
@@ -121,7 +121,7 @@ class SnapshotCatalog extends TableCatalog
     }
   }
 
-  /** `TIMESTAMP AS OF` (round 14, VERDICT r13 ask #6): Spark passes the
+  /** `TIMESTAMP AS OF`: Spark passes the
     * instant in MICROSECONDS; it resolves to the last version committed
     * at-or-before it via the monotonically-adjusted commit-file
     * modification times ([[graft.sources.Snapshots.versionAtTimestamp]]
@@ -143,7 +143,7 @@ class SnapshotCatalog extends TableCatalog
         Seq(catalogName, ident.name))
 
   /** Table roots directly under the warehouse (one filesystem listing;
-    * a table is a directory with a `_manifests` child). */
+    * a table is a directory holding a manifest log). */
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     require(namespace.isEmpty, "snapshot catalog has no namespaces")
     warehouse.fold(Array.empty[Identifier]) { w =>
@@ -151,13 +151,13 @@ class SnapshotCatalog extends TableCatalog
       val fs = wp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(wp)) Array.empty
       else fs.listStatus(wp).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new Path(p, "_manifests")))
+        .filter(p => Manifest.isTable(spark, p.toString))
         .map(p => Identifier.of(Array.empty, p.getName))
     }
   }
 
   // ---------------------------------------------------------------------
-  // DDL (round 14 — the last missing piece of the one-name lifecycle:
+  // DDL (the one-name lifecycle:
   // CREATE TABLE → INSERT → SELECT/UPDATE/MERGE/DELETE → ALTER → DROP,
   // all through one catalog name). CREATE publishes an empty
   // schema-tracked version-1 manifest; ALTER maps Spark's TableChange
@@ -179,7 +179,7 @@ class SnapshotCatalog extends TableCatalog
         "op (Snapshots.commitReplaceClustered), and manifest stats already give " +
         "partition-grade pruning on any sorted ingest")
     // silently dropping a declared constraint or redirecting a declared
-    // location would be a quiet lie — loud instead (round 14 review)
+    // location would be a quiet lie — loud instead
     require(schema.fields.forall(_.nullable),
       "snapshot tables do not enforce NOT NULL constraints — declare the " +
         "columns nullable (validation belongs in the pipeline's dq checks)")
@@ -208,7 +208,7 @@ class SnapshotCatalog extends TableCatalog
       case c: AddColumn =>
         require(c.fieldNames.length == 1, "nested column DDL is not supported")
         require(c.position == null, "ADD COLUMN position hints are not supported")
-        // mirror createTable (round 15, ADVICE r14): silently adding a
+        // mirror createTable: silently adding a
         // nullable column where NOT NULL was declared — pre-existing rows
         // necessarily read NULL — would be a quietly-dropped constraint
         require(c.isNullable,
@@ -234,8 +234,7 @@ class SnapshotCatalog extends TableCatalog
     require(meta.isEmpty, "cannot DROP a $files/$history metadata table")
     val root = rootOf(base)
     val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(p, "_manifests")) && fs.delete(p, true)
+    Manifest.isTable(spark, root) && Manifest.fs(spark, p).delete(p, true)
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
@@ -244,7 +243,7 @@ class SnapshotCatalog extends TableCatalog
         "directory (or commitReplace into a new root) instead of RENAME TABLE")
 
   // ---------------------------------------------------------------------
-  // MAINTENANCE PROCEDURES (round 15, VERDICT r14 ask #3): the Iceberg
+  // MAINTENANCE PROCEDURES: the Iceberg
   // `CALL <catalog>.system.<verb>(...)` surface over the existing
   // engine maintenance calls — see [[SnapshotProcedures]]. Table
   // arguments resolve with the same path/warehouse rules as table
@@ -278,126 +277,61 @@ class SnapshotCatalog extends TableCatalog
   }
 }
 
-/** The `$files` metadata table: one row per data file of a version,
-  * straight from the manifest — path, the version that committed the
-  * file, the schema version it was written under, and the reserved
-  * `__rows`/`__bytes` stats (NULL where a commit predates stats or had
-  * them disabled). O(files) driver rows, one partition, zero data IO —
-  * the audit surface behind small-file monitoring, per-version growth
-  * dashboards and stats-coverage checks. */
-private[v2] class SnapshotFilesTable(root: String, version: Long)
-    extends org.apache.spark.sql.connector.catalog.Table
+/** A metadata table of a snapshot table: rows computed from the
+  * manifests on the driver when the scan is planned (pinned then, so a
+  * concurrent commit between plan and execute cannot skew them), one
+  * partition, zero data IO. */
+private[v2] class SnapshotMetaTable(root: String, kind: String, tableSchema: StructType,
+    rows: () => Seq[Seq[Any]]) extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.read._
-  import org.apache.spark.sql.types._
-
-  private val filesSchema = StructType(Seq(
-    StructField("file_path", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("schema_version", LongType, nullable = false),
-    StructField("row_count", LongType, nullable = true),
-    StructField("size_bytes", LongType, nullable = true)))
-
-  override def name(): String = s"snapshot($root).files"
-  override def schema(): StructType = filesSchema
+  override def name(): String = s"snapshot($root).${kind.stripPrefix("$")}"
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
     util.EnumSet.of(org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        // rows materialize at PLANNING, on the driver, from one
-        // manifest read — pinned here so a concurrent commit between
-        // plan and execute cannot skew the listing (snapshot isolation,
-        // same discipline as the data scan)
-        private val rows: Seq[Seq[Any]] =
-          graft.sources.Snapshots.fileInfos(SparkSession.active, root, version)
-            .map { case (p, v, sid, nRows, nBytes) =>
-              Seq(org.apache.spark.unsafe.types.UTF8String.fromString(p),
-                v, sid, nRows.orNull, nBytes.orNull)
-            }
-        override def readSchema(): StructType = filesSchema
-        override def toBatch: Batch = this
-        override def description(): String = s"snapshot($root) $$files (manifest-only)"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(SnapshotAggPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(p: InputPartition)
-                : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-              new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-                private val it = p.asInstanceOf[SnapshotAggPartition].rows.iterator
-                private var cur: Seq[Any] = _
-                override def next(): Boolean = it.hasNext && { cur = it.next(); true }
-                override def get(): org.apache.spark.sql.catalyst.InternalRow =
-                  org.apache.spark.sql.catalyst.InternalRow.fromSeq(cur)
-                override def close(): Unit = ()
-              }
-          }
-      }
-    }
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : org.apache.spark.sql.connector.read.ScanBuilder =
+    () => new SnapshotAggScan(tableSchema, rows(), s"snapshot($root) $kind (manifest-only)")
 }
 
-/** The `$history` metadata table: one row per committed version — how
-  * many data/delete/schema entries its manifest lists and how many
-  * data files it ADDED over the previous version. A REPLACE shows as
-  * added > 0 with the listed count dropping; a delete commit as
-  * n_delete_files rising with added = 0 — commit forensics in plain
-  * SQL, O(versions) manifest reads, zero data IO. `VERSION AS OF v`
-  * truncates the listing at v. */
-private[v2] class SnapshotHistoryTable(root: String, version: Long)
-    extends org.apache.spark.sql.connector.catalog.Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
-  import org.apache.spark.sql.connector.read._
+private[v2] object SnapshotMetaTable {
   import org.apache.spark.sql.types._
 
-  private val historySchema = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("n_data_files", LongType, nullable = false),
-    StructField("n_delete_files", LongType, nullable = false),
-    StructField("n_schema_entries", LongType, nullable = false),
-    StructField("added_files", LongType, nullable = false),
-    // the monotonically-adjusted commit wall-clock (round 14) — the
-    // same clock TIMESTAMP AS OF resolves against, so "which version
-    // was live at T" is answerable in plain SQL over this table
-    StructField("commit_ts", TimestampType, nullable = false)))
+  /** `$files`: one row per data file of a version — path, the version
+    * that committed it, the schema version it was written under, and
+    * the reserved `__rows`/`__bytes` stats (NULL where a file has no
+    * stats): small-file audits and stats-coverage checks. */
+  def files(root: String, version: Long): SnapshotMetaTable =
+    new SnapshotMetaTable(root, "$files", StructType(Seq(
+      StructField("file_path", StringType, nullable = false),
+      StructField("version", LongType, nullable = false),
+      StructField("schema_version", LongType, nullable = false),
+      StructField("row_count", LongType, nullable = true),
+      StructField("size_bytes", LongType, nullable = true))), () =>
+      Snapshots.fileInfos(SparkSession.active, root, version).map {
+        case (p, v, sid, nRows, nBytes) =>
+          Seq(org.apache.spark.unsafe.types.UTF8String.fromString(p),
+            v, sid, nRows.orNull, nBytes.orNull)
+      })
 
-  override def name(): String = s"snapshot($root).history"
-  override def schema(): StructType = historySchema
-  override def capabilities(): util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    util.EnumSet.of(org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Seq[Any]] = {
-          val spark = SparkSession.active
-          // keyed by version, not zipped by position — both walks serve
-          // only SURVIVING (non-vacuumed) versions and must stay aligned
-          val timeOf = graft.sources.Snapshots.commitTimesMillis(spark, root, version).toMap
-          graft.sources.Snapshots.historyInfos(spark, root, version)
-            .map { case (v, a, d, s, add) =>
-              Seq[Any](v, a, d, s, add, timeOf(v) * 1000L) // catalyst micros
-            }
-        }
-        override def readSchema(): StructType = historySchema
-        override def toBatch: Batch = this
-        override def description(): String = s"snapshot($root) $$history (manifest-only)"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(SnapshotAggPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(p: InputPartition)
-                : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-              new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-                private val it = p.asInstanceOf[SnapshotAggPartition].rows.iterator
-                private var cur: Seq[Any] = _
-                override def next(): Boolean = it.hasNext && { cur = it.next(); true }
-                override def get(): org.apache.spark.sql.catalyst.InternalRow =
-                  org.apache.spark.sql.catalyst.InternalRow.fromSeq(cur)
-                override def close(): Unit = ()
-              }
-          }
+  /** `$history`: one row per surviving version up to `version` — how
+    * many data/delete/schema entries its manifest lists, how many data
+    * files it added over the previous version, and its commit
+    * wall-clock, the one `TIMESTAMP AS OF` resolves against. A REPLACE
+    * shows as added > 0 with the listed count dropping, a delete commit
+    * as n_delete_files rising with added = 0. */
+  def history(root: String, version: Long): SnapshotMetaTable =
+    new SnapshotMetaTable(root, "$history", StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("n_data_files", LongType, nullable = false),
+      StructField("n_delete_files", LongType, nullable = false),
+      StructField("n_schema_entries", LongType, nullable = false),
+      StructField("added_files", LongType, nullable = false),
+      StructField("commit_ts", TimestampType, nullable = false))), () => {
+      val spark = SparkSession.active
+      // keyed by version: both walks serve only surviving versions
+      val timeOf = Manifest.commitTimesMillis(spark, root, version).toMap
+      Snapshots.historyInfos(spark, root, version).map { case (v, a, d, s, add) =>
+        Seq[Any](v, a, d, s, add, timeOf(v) * 1000L) // catalyst micros
       }
-    }
+    })
 }

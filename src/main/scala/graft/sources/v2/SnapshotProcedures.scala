@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.sources.Snapshots
 
-/** SQL-reachable lake MAINTENANCE (round 15, VERDICT r14 ask #3): the
+/** SQL-reachable lake MAINTENANCE: the
   * Spark 4 procedure-catalog hook, the Iceberg `CALL system.*`
   * convention — a SQL-only consumer (the reference's dashboard persona,
   * synapseformation_templates/default.yaml:5-10, which owns no

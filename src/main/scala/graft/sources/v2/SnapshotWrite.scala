@@ -11,10 +11,10 @@ import org.apache.spark.sql.execution.datasources.{DataSourceUtils, OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.Snapshots
+import graft.sources.{FileStats, Snapshots}
 
 /** One parquet file a write task closed, with the manifest statistics
-  * of its footer ([[graft.sources.Snapshots.statsOfOneFooter]]; `Nil`
+  * of its footer ([[graft.sources.FileStats.statsOfOneFooter]]; `Nil`
   * = no stats, which only ever keeps the file in pruning). */
 private[graft] final case class WrittenFile(path: String,
     stats: Seq[(String, Char, String, String)])
@@ -76,7 +76,7 @@ private[graft] final class SnapshotFileWriter private (dir: String,
       * opened one. */
     def commit(): Option[WrittenFile] = Option(out).map { o =>
       o.close()
-      WrittenFile(o.path, Snapshots.statsOfOneFooter(o.path, confEntries))
+      WrittenFile(o.path, FileStats.statsOfOneFooter(o.path, confEntries))
     }
 
     def abort(): Unit = if (out != null) {

@@ -374,7 +374,9 @@ class PropertySpec extends SparkTestBase {
       val n = nodes.size
       def r8d(x: Double) = math.floor(x * 1e8 + 0.5) / 1e8
       var ranks = nodes.map(_ -> r8d(1.0 / n)).toMap
-      val base = (1.0 - 0.85) / n
+      // the teleport 1 - d as SQL's decimal subtraction gives it (0.15),
+      // as Graph.pagerank and the DuckDB oracle compute it
+      val base = 0.15 / n
       for (_ <- 1 to 6) {
         // contributions quantized to the 1e-8 grid BEFORE the sum and
         // summed as longs — the operator's exact arithmetic (ADVICE r8),

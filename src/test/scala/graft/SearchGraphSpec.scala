@@ -155,6 +155,28 @@ class SearchGraphSpec extends SparkTestBase {
     assert(ppr === pr, "all-node seed set must degenerate to global pagerank")
   }
 
+  test("personalized pagerank teleport is the decimal 1 - d, exact at an r8 half step") {
+    // seeds {1, 2, 3}: in round 2 node 3's rank·1e8 lands on a .5 grid
+    // step, where a one-ulp larger teleport ((1.0 - 0.85) in double)
+    // would round it up to 0.13185186
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 1L), (2L, 3L), (2L, 4L))
+    val seeds = Set(1L, 2L, 3L)
+    val out = Graph.personalizedPagerank(edges.toDF("src", "dst"), seeds.toSeq.sorted, iters = 2)
+      .as[(Long, Double)].collect().toMap
+    // hand replay with the oracle's teleport: DECIMAL 0.15 divided in DOUBLE
+    def g(x: Double) = math.floor(x * 1e8 + 0.5) / 1e8
+    val outdeg = edges.groupBy(_._1).view.mapValues(_.size).toMap
+    var r = (1L to 4L).map(v => v -> (if (seeds(v)) g(1.0 / 3) else 0.0)).toMap
+    for (_ <- 1 to 2) {
+      val wq = edges.groupBy(_._2).view.mapValues(_.map { case (u, _) =>
+        math.floor(r(u) * 100000000L / outdeg(u) + 0.5).toLong }.sum).toMap
+      r = r.keys.map(v => v -> g((if (seeds(v)) 0.15 / 3 else 0.0) +
+        0.85 * (wq(v).toDouble / 100000000.0))).toMap
+    }
+    assert(r(3L) == 0.13185185)
+    assert(out == r, s"want $r got $out")
+  }
+
   test("katz centrality: hand replay on a star; center dominates; pure integer chain") {
     // undirected star: center 0 <-> leaves 1..4, α = 1/64, 2 rounds
     val leaves = (1L to 4L)

@@ -54,7 +54,7 @@ class SnapshotCatalogSpec extends SparkTestBase {
     // TIMESTAMP AS OF (round 14): the adjusted commit clocks resolve —
     // exact instant includes the commit, between-commits resolves to the
     // earlier, pre-table throws loudly (Delta's timestampAsOf contract)
-    val times = Snapshots.commitTimesMillis(spark, root).map(_._2)
+    val times = graft.sources.Manifest.commitTimesMillis(spark, root).map(_._2)
     assert(times.length == 2 && times(1) > times(0), "adjusted clocks increase")
     def fmt(ms: Long): String =
       java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
@@ -94,7 +94,7 @@ class SnapshotCatalogSpec extends SparkTestBase {
     assert(Snapshots.versionAtTimestamp(spark, root,
       System.currentTimeMillis + 60000) == 4L)
     // a timestamp below the surviving history is loud, naming vacuum
-    val times = Snapshots.commitTimesMillis(spark, root)
+    val times = graft.sources.Manifest.commitTimesMillis(spark, root)
     assert(times.map(_._1) == Seq(3L, 4L), "clocks cover surviving versions only")
     val e = intercept[IllegalArgumentException] {
       Snapshots.versionAtTimestamp(spark, root, times.head._2 - 1)

@@ -47,10 +47,10 @@ class SnapshotHardeningSpec extends SparkTestBase {
   }
 
   test("publish retry budget derives from the lease") {
-    assert(Snapshots.publishDeadlineMs(30000L) == 60000L)
-    assert(Snapshots.publishDeadlineMs(45000L) == 90000L)
-    assert(Snapshots.publishDeadlineMs(10L * 60 * 1000) == 20L * 60 * 1000)
-    val huge = Snapshots.publishDeadlineMs(Long.MaxValue)
+    assert(graft.sources.Commit.publishDeadlineMs(30000L) == 60000L)
+    assert(graft.sources.Commit.publishDeadlineMs(45000L) == 90000L)
+    assert(graft.sources.Commit.publishDeadlineMs(10L * 60 * 1000) == 20L * 60 * 1000)
+    val huge = graft.sources.Commit.publishDeadlineMs(Long.MaxValue)
     assert(huge > 0 && huge == Long.MaxValue / 2, "must saturate, not overflow")
   }
 
@@ -63,7 +63,8 @@ class SnapshotHardeningSpec extends SparkTestBase {
     // when the consumer actually reaches v4
     val m4 = new Path(root, "_manifests/v00004.list")
     m4.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(m4, false)
-    val it = Snapshots.appendedFileCountsIter(spark, root, 0L, 4L)
+    val it = graft.sources.Manifest.walk(spark, root, 0L, (1L to 4L).iterator)
+      .map(_.added.count(_.kind == "A").toLong)
     assert(it.next() == 1L && it.next() == 1L && it.next() == 1L)
     intercept[IllegalArgumentException] { it.next() }
   }
@@ -136,7 +137,7 @@ class SnapshotHardeningSpec extends SparkTestBase {
     // a pre-fix manifest stored DECIMAL bounds UNSCALED under tag 'l';
     // the pushed predicate value for a decimal column is a BigDecimal —
     // the pair is now incomparable by decree (keep)
-    val stale = Map("d" -> Snapshots.ColStats('l', "12345", "12345"))
+    val stale = Map("d" -> graft.sources.FileStats.ColStats('l', "12345", "12345"))
     val keyer: String => Option[String] = n => Some(n)
     assert(SnapshotRead.mayMatch(stale, keyer, EqualTo("d", new java.math.BigDecimal("1.2345"))),
       "a decimal predicate against 'l' bounds must KEEP the file")
@@ -145,7 +146,7 @@ class SnapshotHardeningSpec extends SparkTestBase {
     assert(!SnapshotRead.mayMatch(stale, keyer, EqualTo("d", 999L)))
     assert(SnapshotRead.mayMatch(stale, keyer, EqualTo("d", 12345L)))
     // fresh 'm' stats compare decimals in value space
-    val fresh = Map("d" -> Snapshots.ColStats('m', "1.10", "2.20"))
+    val fresh = Map("d" -> graft.sources.FileStats.ColStats('m', "1.10", "2.20"))
     assert(SnapshotRead.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("1.50"))))
     assert(!SnapshotRead.mayMatch(fresh, keyer, EqualTo("d", new java.math.BigDecimal("9.99"))))
   }

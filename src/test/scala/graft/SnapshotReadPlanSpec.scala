@@ -146,6 +146,29 @@ class SnapshotReadPlanSpec extends SparkTestBase {
     }
   }
 
+  test("a pushed-down aggregate reads its pinned manifest once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[ManifestCountingFs].getName)
+    // delete-free, one file per commit, `grp` single-valued per file
+    val r = freshRoot("aggs")
+    for (b <- 0 until 3)
+      Snapshots.commitAppend(spark, r, (1 to 50).map(i => (b * 50L + i, b))
+        .toDF("id", "grp").coalesce(1))
+    val aggs = Seq[(String, DataFrame => DataFrame)](
+      "ungrouped" -> (_.agg(count(lit(1)), min("id"), max("id"))),
+      "grouped" -> (_.groupBy("grp").agg(count(lit(1)), min("id"), max("id"))))
+    for ((name, agg) <- aggs) {
+      val q = agg(dsv2(s"countfs://$r"))
+      ManifestCountingFs.opens.set(0)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(ManifestCountingFs.opens.get == 1,
+        s"$name: ${ManifestCountingFs.opens.get} manifest opens at planning")
+      assert(plan.contains("PushedAggregates"), s"$name: not pushed down\n$plan")
+      assert(q.collect().map(_.toString).sorted.toSeq ==
+        agg(Snapshots.readSnapshot(spark, r)).collect().map(_.toString).sorted.toSeq, name)
+    }
+  }
+
   test("inputFiles lists exactly the live data files") {
     for (v <- Seq(3L, 5L)) {
       val live = Snapshots.fileInfos(spark, root, v).map(f => Snapshots.normPath(f._1)).toSet

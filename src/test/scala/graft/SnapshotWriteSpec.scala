@@ -59,20 +59,20 @@ class SnapshotWriteSpec extends SparkTestBase {
   }
 
   /** Each `A` entry of `root`'s current manifest: (path, its stats). */
-  private def manifestStats(root: String): Seq[(String, Map[String, Snapshots.ColStats])] = {
+  private def manifestStats(root: String): Seq[(String, Map[String, graft.sources.FileStats.ColStats])] = {
     val v = Snapshots.currentVersion(spark, root)
-    Snapshots.entries(spark, root, v).filter(_.kind == "A")
-      .map(e => e.path -> Snapshots.decodeStats(e.stats))
+    graft.sources.Manifest.entries(spark, root, v).filter(_.kind == "A")
+      .map(e => e.path -> graft.sources.FileStats.decodeStats(e.stats))
   }
 
   /** `path`'s stats re-derived from its footer, keyed as a commit keys
     * them (column name, or "#id" on a tracked table). */
-  private def footerStats(root: String, path: String): Map[String, Snapshots.ColStats] = {
+  private def footerStats(root: String, path: String): Map[String, graft.sources.FileStats.ColStats] = {
     val ids = Snapshots.trackedSchema(spark, root).map(_.map(c => c._2 -> s"#${c._1}").toMap)
     val conf = SnapshotReaderFactory.confToMap(spark.sessionState.newHadoopConf())
-    Snapshots.statsOfOneFooter(path, conf).map { case (n, tag, lo, hi) =>
+    graft.sources.FileStats.statsOfOneFooter(path, conf).map { case (n, tag, lo, hi) =>
       val key = if (n.startsWith("__")) n else ids.fold(n)(_(n))
-      key -> Snapshots.ColStats(tag, lo, hi)
+      key -> graft.sources.FileStats.ColStats(tag, lo, hi)
     }.toMap
   }
 

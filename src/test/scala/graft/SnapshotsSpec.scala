@@ -211,6 +211,29 @@ class SnapshotsSpec extends SparkTestBase {
     assert(rows == (1 to writers).map(w => s"w$w").toSet, "no append may be lost")
   }
 
+  test("commitMergeOnce commits its marker in its own version; epoch ids keep one marker per writer") {
+    val root = freshRoot("once_atomic")
+    Snapshots.commitAppend(spark, root, table(4, "orig").coalesce(1))
+    val up = Seq((2L, "new")).toDF("id", "tag").coalesce(1)
+    val v2 = Snapshots.commitMergeOnce(spark, root, up, Seq("id"), "m-0")
+    assert(graft.sources.Manifest.entries(spark, root, v2)
+      .exists(e => e.kind == "T" && e.ver == v2 && e.path == "m-0"), "marker in the merge's version")
+    val dir = new Path(root, "_manifests")
+    val names = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).map(_.getPath.getName)
+    assert(!names.exists(_.startsWith("txn-")), s"no side file: ${names.mkString(",")}")
+    assert(Snapshots.commitMergeOnce(spark, root, up, Seq("id"), "m-0") == v2)
+    assert(Snapshots.currentVersion(spark, root) == v2)
+    for (e <- 1 to 3) Snapshots.commitMergeOnce(spark, root, up, Seq("id"), s"upsert-e$e")
+    val cur = Snapshots.currentVersion(spark, root)
+    assert(cur == v2 + 3)
+    assert(graft.sources.Manifest.entries(spark, root, cur).filter(_.kind == "T").map(_.path)
+      .sorted == Seq("m-0", "upsert-e3"), "one marker per writer")
+    assert(Snapshots.commitMergeOnce(spark, root, up, Seq("id"), "upsert-e2") == cur,
+      "an older epoch of the same writer is already committed")
+    assert(Snapshots.readSnapshot(spark, root).count() == 4L)
+  }
+
   test("commitMergeOnce: a replayed txn id is skipped; an unmarked replay still converges (idempotent merge)") {
     val root = freshRoot("once")
     Snapshots.commitAppend(spark, root, table(4, "orig").coalesce(1))

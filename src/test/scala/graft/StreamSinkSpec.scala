@@ -10,7 +10,7 @@ import graft.sources.v2.WrittenFile
   * `df.writeStream.toTable("snap.`root`")` — one atomic append commit
   * per micro-batch, exactly-once via a `T` idempotence marker committed
   * IN the same manifest version as the files (no marker-vs-commit crash
-  * window, unlike the side-file design of commitMergeOnce). */
+  * window; commitMergeOnce commits its marker the same way). */
 class StreamSinkSpec extends SparkTestBase {
   import spark.implicits._
 
